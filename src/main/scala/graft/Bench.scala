@@ -197,7 +197,8 @@ object Bench {
     // "n_shown"/"omitted_sec" reconcile the shown subset against the
     // total. Nothing is removed: the full short-key map still prints
     // FIRST, and BENCH_LOCAL.json keeps full names and precision.
-    val byTime = ordered.sortBy { case (k, v) => (-v, k) }
+    val slowestFirst = ordered.sortBy { case (k, v) => (-v, k) }
+    val byTime = slowestFirst
       .map { case (k, v) => s"${jstr(k.takeWhile(_ != '_'))}:${f"$v%.3f"}" }
     val head =
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","runs":$runs,""" +
@@ -208,11 +209,12 @@ object Bench {
     // ~1900 chars so the driver's 2000-char capture can never truncate it
     val reserve = 48 + sfDir.length
     val budget = 1900 - head.length - reserve
-    val shown = scala.collection.mutable.ArrayBuffer[String]()
-    var used = 0
-    for (e <- byTime if used + e.length + 1 <= budget) { shown += e; used += e.length + 1 }
-    val shownTotal = ordered.sortBy { case (k, v) => (-v, k) }
-      .take(shown.size).map(_._2).sum
+    // the longest slowest-first PREFIX within budget: stop at the first
+    // entry that does not fit, so the map stays strictly slowest-first
+    // and `omitted_sec` is exactly the time of the unshown tail
+    val nShown = byTime.scanLeft(0)(_ + _.length + 1).tail.takeWhile(_ <= budget).size
+    val shown = byTime.take(nShown)
+    val shownTotal = slowestFirst.take(nShown).map(_._2).sum
     println(head + shown.mkString(",") +
       s"""},"n_shown":${shown.size},"omitted_sec":${f"${total - shownTotal}%.3f"},""" +
       s""""sf":"$sfDir"}""")

@@ -333,11 +333,7 @@ object SparkEntry {
     // (TakeOrderedAndProject).
     "q226_maxsim_colbert" -> { (s, dir) =>
       val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => (conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % 32)
-            .cast("int"))
-          .as("tok_ids"))
+        Tok.ids(col("text"), 32).cast("array<int>").as("tok_ids"))
       graft.operators.Retrieval.maxSimTopK(toks, "doc_id", "tok_ids",
           maxSimEmb, maxSimQueryIds, k = 10)
         .orderBy(col("maxsim").desc, col("doc_id"))
@@ -355,11 +351,7 @@ object SparkEntry {
     // exact MaxSim chain; pruning a true winner hash-mismatches.
     "q233_maxsim_ann" -> { (s, dir) =>
       val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => (conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % 32)
-            .cast("int"))
-          .as("tok_ids"))
+        Tok.ids(col("text"), 32).cast("array<int>").as("tok_ids"))
       graft.operators.Retrieval.maxSimTopKAnn(toks, "doc_id", "tok_ids",
           maxSimEmb, maxSimQueryIds, k = 10,
           r = 8, nlist = 8, m = 2, ksub = 16, nprobe = 6)
@@ -1029,11 +1021,8 @@ object SparkEntry {
       val vocab = genModel.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(genModel)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(genModel, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val drafted = Torch.generateGreedy(toks, "tok_ids", "draft", bcD,
         steps = 2, batchSize = 256)
       val withSeqs = drafted
@@ -1070,11 +1059,8 @@ object SparkEntry {
       val vocab = fp.seqHead.get.vocab
       val bcF = s.sparkContext.broadcast(fp)
       val bcQ = s.sparkContext.broadcast(qz)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val f = Torch.inferBatched(toks, "tok_ids", "fp_logits", bcF, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("fp_logits")).as("fp_class"))
@@ -1100,11 +1086,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.beamSearch(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256,
           lengthPenalty = 0.5, eosId = 1)
@@ -1127,11 +1110,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.beamSearch(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1175,11 +1155,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, repetitionPenalty = 1.25, noRepeatNgram = 2)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1200,11 +1177,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256,
           bannedPhrases = Seq(Seq(4, 4), Seq(0, 4), Seq(1, 1, 1)))
@@ -1222,11 +1196,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, banned = Set(1, 4))
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1247,11 +1218,8 @@ object SparkEntry {
       val m = alibiLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
           col("gen")(1).as("gen2"), col("gen")(2).as("gen3"))
@@ -1269,11 +1237,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
           col("gen")(1).as("gen2"), col("gen")(2).as("gen3"))
@@ -1294,11 +1259,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, forcedTokens = Map(1 -> 5),
           beginSuppress = Set(1, 2))
@@ -1318,11 +1280,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, watermarkDelta = 2.0)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1340,12 +1299,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       graft.operators.Watermark.greenFractionZ(
-          t(s, dir, "documents").select(col("doc_id"),
-            transform(
-              call_function("regexp_extract_all", col("text"),
-                lit(graft.Tok.Pattern), lit(0)),
-              tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-              .as("tok_ids")),
+          t(s, dir, "documents").select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids")),
           "doc_id", col("tok_ids"))
         .select(col("doc_id"), col("t_pairs"), col("greens"),
           col("z6"), col("wm_flag"))
@@ -1363,11 +1317,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, watermarkDelta = 2.0, watermarkGamma = (1, 4))
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1384,12 +1335,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       graft.operators.Watermark.greenFractionZ(
-          t(s, dir, "documents").select(col("doc_id"),
-            transform(
-              call_function("regexp_extract_all", col("text"),
-                lit(graft.Tok.Pattern), lit(0)),
-              tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-              .as("tok_ids")),
+          t(s, dir, "documents").select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids")),
           "doc_id", col("tok_ids"), gamma = (1, 4))
         .select(col("doc_id"), col("t_pairs"), col("greens"),
           col("z6"), col("wm_flag"))
@@ -1408,11 +1354,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcE = s.sparkContext.broadcast(m)
       val bcA = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateContrastiveDecoding(toks, "tok_ids", "gen", bcE, bcA,
           steps = 2, plausibilityAlpha = 0.125, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1432,11 +1375,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcE = s.sparkContext.broadcast(m)
       val bcA = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       // a doc whose step-1 plausibility head is a SINGLE token keeps
       // one beam (the head IS the candidate set — CD never fabricates
       // a second hypothesis); beam-2 columns go null, like the
@@ -1462,11 +1402,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampled(toks, "doc_id", "tok_ids", bcT, bcD,
           batchSize = 256)
         .select(col("doc_id"), col("draft_tok"), col("accepted"),
@@ -1490,11 +1427,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1520,11 +1454,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
       toks.select(explode(zip_with(
             slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
@@ -1552,11 +1483,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.beamSearch(toks, "tok_ids", "beams", bc, steps = 2, width = 2,
           batchSize = 256, watermarkDelta = 2.0)
         .select(col("doc_id"),
@@ -1578,11 +1506,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256)
         .groupBy(col("n_accepted").as("n_acc"))
@@ -1603,11 +1528,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1633,11 +1555,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1658,11 +1577,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val b = Torch.beamSearchDiverse(toks, "tok_ids", "beams", bc,
         steps = 2, width = 2, groups = 2, diversityPenalty = 0.5,
         batchSize = 256, lengthPenalty = 0.5, eosId = 1)
@@ -1732,9 +1648,7 @@ object SparkEntry {
         .filter(col("rk") === 1)
         .select(col("q_id"), col("vec_id").as("r_id"))
       val toks6 = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, 6),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("t6"))
+        Tok.ids(col("text"), vocab, 6).as("t6"))
       val prompts = nb
         .join(toks6.select(col("doc_id").as("r_id"), col("t6").as("rt")), "r_id")
         .join(toks6.select(col("doc_id").as("q_id"), col("t6").as("qt")), "q_id")
@@ -1760,11 +1674,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 1, temperature = 0.8, topP = 0.9,
           numReturnSequences = 5, batchSize = 256)
@@ -1792,11 +1703,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val gens = Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 2, temperature = 0.5, topP = 0.9,
           numReturnSequences = 3, batchSize = 256)
@@ -1829,11 +1737,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           watermarkDelta = 2.0)
@@ -1852,14 +1757,12 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(sequence(lit(0), lit(2)),
-          i => conv(substring(md5(concat(col("lang"), i.cast("string"))), 1, 8),
-            16, 10).cast("long") % vocab).as("pfx_ids"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen - 3),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"),
+          transform(sequence(lit(0), lit(2)),
+            i => conv(substring(md5(concat(col("lang"), i.cast("string"))), 1, 8),
+              16, 10).cast("long") % vocab).as("pfx_ids"),
+          Tok.ids(col("text"), vocab, EncMaxLen - 3).as("tok_ids"))
       Torch.generateGreedySharedPrefix(toks, "pfx_ids", "tok_ids", "gen", bc,
           steps = 2, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1879,11 +1782,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateContrastive(toks, "tok_ids", "gen", bc, steps = 2,
           topK = 3, alpha = 0.5, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1904,15 +1804,10 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.generateGreedyPair(toks, "d_ids", "s_ids", "gen", bc,
           steps = 2, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"), col("gen")(1).as("gen2"))
@@ -1930,15 +1825,10 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.beamSearchPair(toks, "d_ids", "s_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1966,15 +1856,10 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       val drafted = Torch.generateGreedyPair(toks, "d_ids", "s_ids", "draft",
         bcD, steps = 2, batchSize = 256)
       val withSeqs = drafted
@@ -2013,15 +1898,10 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.speculativeSampledPair(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, batchSize = 256)
         .select(col("doc_id"), col("draft_tok"), col("accepted"),
@@ -2041,15 +1921,10 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.speculativeSampledPairGamma(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2074,11 +1949,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generatePromptLookup(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2107,11 +1979,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftGreedy(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2140,11 +2009,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftGreedyLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2166,11 +2032,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
       toks.select(explode(zip_with(
             slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
@@ -2203,11 +2066,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledMultiDraftLoop(toks, "doc_id", "tok_ids",
           bcT, bcD, numDrafts = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2228,11 +2088,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.promptLookupSampled(toks, "doc_id", "tok_ids", bc, ngram = 2,
           maxDraft = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2261,11 +2118,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftTypical(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, posteriorEps = 0.25, posteriorAlpha = 0.5,
           batchSize = 256)
@@ -2297,11 +2151,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftStochastic(toks, "doc_id", "tok_ids", bcT, bcD,
           branch = 2, depth = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2332,11 +2183,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256, watermarkDelta = 2.0)
         .select(col("doc_id"),
@@ -2363,15 +2211,10 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.speculativeSampledPairLoop(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2395,11 +2238,8 @@ object SparkEntry {
       val m = alibiLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc, steps = 3,
           nSink = 1, nWindow = 4, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -2420,11 +2260,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.autoGammaYield(toks, "doc_id", "tok_ids", bcT, bcD,
           maxGamma = 2, batchSize = 256)
         .orderBy("gamma")
@@ -2444,11 +2281,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -2471,11 +2305,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           watermarkDelta = 2.0)
@@ -2499,15 +2330,10 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.speculativeSampledPairGamma(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, batchSize = 256)
         .groupBy(col("n_accepted").as("n_acc"))
@@ -2533,11 +2359,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftStochasticLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           branch = 2, depth = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2559,11 +2382,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           watermarkDelta = 2.0, nSink = 1, nWindow = 4)
@@ -2587,11 +2407,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       def leg(delta: Double, label: String) = {
         val gen = Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids",
             bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256,
@@ -2628,15 +2445,10 @@ object SparkEntry {
       val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.speculativeSampledPairLoop(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 0, nWindow = 2)
@@ -2660,11 +2472,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftTypicalLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, posteriorEps = 0.25, posteriorAlpha = 0.5,
           maxNewTokens = 2, batchSize = 256)
@@ -2687,11 +2496,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.autoBranchYield(toks, "doc_id", "tok_ids", bcT, bcD,
           branches = Seq(1, 2), depth = 2, batchSize = 256)
         .orderBy("branch")
@@ -2709,11 +2515,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), col("source"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val perDoc = Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids",
           bcT, bcD, gamma = 2, batchSize = 256)
         .select(col("source"), col("n_accepted").cast("long").as("n_acc"))
@@ -2790,11 +2593,8 @@ object SparkEntry {
       val m = alibiRelLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc, steps = 3,
           nSink = 1, nWindow = 4, batchSize = 256, relPos = true)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -2818,11 +2618,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4, relPos = true)
@@ -2851,11 +2648,8 @@ object SparkEntry {
       val m = alibiLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.autoKvWindow(toks, "tok_ids", bc, steps = 3, nSink = 1,
         windows = Seq(2, 3, 4, 8, 16), divNum = 7, divDen = 20,
         batchSize = 256)
@@ -2875,11 +2669,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftGreedy(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2904,11 +2695,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftGreedy(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, batchSize = 256)
         .groupBy(col("n_accepted").as("n_acc"))
@@ -2929,11 +2717,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
       toks.select(explode(zip_with(
             slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
@@ -2965,11 +2750,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.speculativeSampledMultiDraft(toks, "doc_id", "tok_ids", bcT, bcD,
           numDrafts = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2989,11 +2771,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
       toks.select(explode(zip_with(
             slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
@@ -3024,11 +2803,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generatePromptLookupLoop(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -3053,11 +2829,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generatePromptLookupLoop(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -3083,11 +2856,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftStochasticLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           branch = 2, depth = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -3133,11 +2903,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftGreedyLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -3162,11 +2929,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftTypicalLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, posteriorEps = 0.25, posteriorAlpha = 0.5,
           maxNewTokens = 2, batchSize = 256, nSink = 1, nWindow = 4)
@@ -3188,11 +2952,8 @@ object SparkEntry {
       val m = alibiRelLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generatePromptLookupLoop(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4, relPos = true)
@@ -3216,11 +2977,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.treeDraftGreedyLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4, relPos = true)
@@ -3242,11 +3000,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generatePromptLookup(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, batchSize = 256)
         .groupBy(col("n_drafted").as("n_drf"), col("n_accepted").as("n_acc"))
@@ -3270,11 +3025,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
       toks.select(explode(zip_with(
             slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
@@ -3305,11 +3057,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.beamSearchDiverse(toks, "tok_ids", "beams", bc, steps = 2,
           width = 2, groups = 2, diversityPenalty = 0.5, batchSize = 256,
           watermarkDelta = 2.0)
@@ -3333,15 +3082,10 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 2)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 6),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
-        .filter(size(col("d_ids")) >= 2)
+          Tok.ids(col("text"), dvocab, 6).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.scoreSeq2SeqBatched(toks, "d_ids", "s_ids", "nll", bc)
         .select(col("doc_id"),
           (size(col("d_ids")) - 1).cast("long").as("n_scored"),
@@ -3358,15 +3102,10 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.generateSampledPair(toks, "doc_id", "d_ids", "s_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("sm1"), col("gen")(1).as("sm2"))
@@ -3384,15 +3123,10 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.generateSampledPair(toks, "doc_id", "d_ids", "s_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           topK = 3, repetitionPenalty = 1.25, noRepeatNgram = 2)
@@ -3409,15 +3143,10 @@ object SparkEntry {
       val dvocab = m.seqHead.get.vocab
       val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0))
-          .as("words"))
-        .filter(size(col("words")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
         .select(col("doc_id"),
-          transform(slice(col("words"), 1, 2),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % dvocab).as("d_ids"),
-          transform(slice(col("words"), 1, EncMaxLen),
-            tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab).as("s_ids"))
+          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
       Torch.generateGreedyPair(toks, "d_ids", "s_ids", "gen", bc,
           steps = 2, batchSize = 256, eosId = 5)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3436,11 +3165,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("sm1"), col("gen")(1).as("sm2"))
@@ -3459,11 +3185,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 2, temperature = 0.5, topP = 0.9,
           numReturnSequences = 3, batchSize = 256)
@@ -3486,11 +3209,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 2, temperature = 0.5, topP = 0.9,
           numReturnSequences = 3, batchSize = 256)
@@ -3513,11 +3233,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           repetitionPenalty = 1.25, noRepeatNgram = 2)
@@ -3534,11 +3251,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, eosId = 1)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3557,11 +3271,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 4,
           batchSize = 256, eosId = 1, minNewTokens = 2)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3585,11 +3296,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.beamSearch(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256, eosId = 1,
           repetitionPenalty = 1.5, noRepeatNgram = 2,
@@ -3613,11 +3321,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.beamSearchDiverse(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, groups = 2, diversityPenalty = 0.5,
           batchSize = 256)
@@ -3640,11 +3345,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 1.0, batchSize = 256,
           minP = 0.25)
@@ -3666,11 +3368,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 1.0, batchSize = 256,
           typicalP = 0.8)
@@ -3689,11 +3388,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, dfaTrans = decodeDfaTrans)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3712,11 +3408,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           topK = 3)
@@ -3733,11 +3426,8 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           banned = Set(1, 4))
@@ -4658,17 +4348,13 @@ object SparkEntry {
       val m = embedClassModel
       val vocab = m.embedHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
-        // token-less docs (empty/whitespace/null text) have no pooled
-        // embedding — the oracle's JOIN drops them, and classifying a
-        // doc with zero evidence is meaningless; exclude explicitly on
-        // both sides (size() is -1 for a null array, so this also
-        // removes null-text rows)
-        .filter(size(col("tok_ids")) > 0)
+      // token-less docs (empty/whitespace/null text) have no pooled
+      // embedding — the oracle's JOIN drops them, and classifying a
+      // doc with zero evidence is meaningless; exclude explicitly on
+      // both sides (tok_count is null for null text, so this also
+      // removes null-text rows)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) > 0)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("lang_class"))
@@ -4797,12 +4483,8 @@ object SparkEntry {
       val m = textCnnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 2)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 2)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("text_class"))
@@ -4811,7 +4493,7 @@ object SparkEntry {
 
     // Model-scored domain caps: keep each source's 20 docs with the
     // highest TextCNN class-2 logit — the double-scored top-k
-    // Aggregator (NaN-never-wins total order) over a genuinely
+    // Aggregator (NaN-greatest total order) over a genuinely
     // model-produced score. The logit is bit-exact across f32/f64
     // (dyadic weights, see textCnnModel), so the DuckDB window oracle
     // ranks identically — including exact ties, which both sides break
@@ -4820,12 +4502,8 @@ object SparkEntry {
       val m = textCnnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 2)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 2)
+        .select(col("doc_id"), col("source"), Tok.ids(col("text"), vocab).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("source"),
           element_at(col("logits"), 3).cast("double").as("score"),
@@ -5017,11 +4695,8 @@ object SparkEntry {
       val m = attnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("attn_class"))
@@ -5039,11 +4714,8 @@ object SparkEntry {
       val m = alibiModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("alibi_class"))
@@ -5059,11 +4731,8 @@ object SparkEntry {
       val m = localAttnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("local_class"))
@@ -5079,11 +4748,8 @@ object SparkEntry {
       val m = ropeModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("rope_class"))
@@ -5101,11 +4767,8 @@ object SparkEntry {
       val m = attnPoolModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("pool_class"))
@@ -5121,11 +4784,8 @@ object SparkEntry {
       val m = gruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("gru_class"))
@@ -5137,11 +4797,8 @@ object SparkEntry {
       val m = lstmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("lstm_class"))
@@ -5158,11 +4815,8 @@ object SparkEntry {
       val m = gruLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 2)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 2)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
       Torch.scoreLmBatched(toks, "tok_ids", "mean_nll", bc)
         .select(col("doc_id"),
           (size(col("tok_ids")) - 1).cast("long").as("n_scored"),
@@ -5269,12 +4923,8 @@ object SparkEntry {
       val m = tcnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("text_class"))
@@ -5291,12 +4941,8 @@ object SparkEntry {
       val m = causalTcnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("text_class"))
@@ -5311,12 +4957,8 @@ object SparkEntry {
       val m = gluRmsModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab)
-          .as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("gated_class"))
@@ -5431,11 +5073,8 @@ object SparkEntry {
       val m = gqaModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("gqa_class"))
@@ -5450,11 +5089,8 @@ object SparkEntry {
       val m = encModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("enc_class"))
@@ -5474,11 +5110,8 @@ object SparkEntry {
       val m = crossModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("k_ids"))
-        .filter(size(col("k_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("k_ids"))
         .select(col("doc_id"), slice(col("k_ids"), 1, CrossQLen).as("q_ids"),
           col("k_ids"))
       Torch.inferPairBatched(toks, "q_ids", "k_ids", "logits", bc, batchSize = 256)
@@ -5498,11 +5131,8 @@ object SparkEntry {
       val m = loraEncModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("lora_class"))
@@ -5520,11 +5150,8 @@ object SparkEntry {
       val m = encClsModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen - 1),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("word_ids"))
-        .filter(size(col("word_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen - 1).as("word_ids"))
         .select(col("doc_id"),
           concat(array(lit(0L)), col("word_ids")).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
@@ -5544,11 +5171,8 @@ object SparkEntry {
       val m = decModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("dec_class"))
@@ -5566,11 +5190,8 @@ object SparkEntry {
       val m = sinPeModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, AttnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("sinpe_class"))
@@ -5668,11 +5289,8 @@ object SparkEntry {
       val m = stackedGruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("sgru_class"))
@@ -5689,11 +5307,8 @@ object SparkEntry {
       val m = biGruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("bigru_class"))
@@ -5708,11 +5323,8 @@ object SparkEntry {
       val m = biLstmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("bilstm_class"))
@@ -5728,11 +5340,8 @@ object SparkEntry {
       val m = meanGruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, RnnMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("mgru_class"))
@@ -5761,11 +5370,9 @@ object SparkEntry {
       val pairs = docs.join(broadcast(cand), "doc_id")
         .select(col("doc_id"), col("t_rank"),
           concat(lit("spark join dup "), col("text")).as("pair_text"))
-      val toks = pairs.select(col("doc_id"), col("t_rank"),
-        transform(
-          slice(call_function("regexp_extract_all", col("pair_text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = pairs.filter(Tok.count(col("pair_text")) >= 1)
+        .select(col("doc_id"), col("t_rank"),
+          Tok.ids(col("pair_text"), vocab, EncMaxLen).as("tok_ids"))
       // global window is safe: the input is the k=20 candidate set —
       // join-fed, so Spread's exchange-bearing skip passes it through
       // untouched (r20 — the hand label retired)
@@ -5980,11 +5587,8 @@ object SparkEntry {
       val m = encPadModel
       val hashMod = m.seqHead.get.vocab - 1 // 32: top row is the pad id
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % hashMod).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), hashMod, EncMaxLen).as("tok_ids"))
         .select(col("doc_id"),
           concat(col("tok_ids"), array_repeat(lit(hashMod.toLong),
             lit(EncMaxLen) - size(col("tok_ids")))).as("tok_ids"))
@@ -6004,11 +5608,8 @@ object SparkEntry {
       val m = mhaModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").select(col("doc_id"),
-        transform(
-          slice(call_function("regexp_extract_all", col("text"), lit(graft.Tok.Pattern), lit(0)), 1, EncMaxLen),
-          tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab).as("tok_ids"))
-        .filter(size(col("tok_ids")) >= 1)
+      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("mha_class"))

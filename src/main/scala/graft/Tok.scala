@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumns.{column, expression}
+import graft.functions.{TokCount, TokIds}
+
 /** The ONE cross-engine tokenizer definition (ADVICE r9).
   *
   * Tokens are maximal runs of non-(ASCII-whitespace), with whitespace
@@ -36,4 +40,16 @@ object Tok {
     * splicing into DuckDB oracle text (interpolated builders only —
     * stripMargin oracles carry the class spelled out inline). */
   val SqlLit: String = "'[^ \\t\\n\\x0B\\f\\r]+'"
+
+  /** Model token ids of `text`: the md5 id of each of its first
+    * `maxTokens` tokens, mod `mod` ([[graft.functions.TokIds]]) — the
+    * engine side of the oracle's
+    * `CAST('0x' || substring(md5(w), 1, 8) AS BIGINT) % mod`. */
+  def ids(text: Column, mod: Long, maxTokens: Int = Int.MaxValue): Column =
+    column(TokIds(expression(text), mod, maxTokens))
+
+  /** Token count of `text` without hashing ([[graft.functions.TokCount]]):
+    * filter rows on it, not on `size(ids(...))`, so each row is hashed
+    * once. */
+  def count(text: Column): Column = column(TokCount(expression(text)))
 }

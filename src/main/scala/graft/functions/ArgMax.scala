@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
@@ -124,16 +125,21 @@ object ArgMax {
   }
 
   /** Register `argmax` in the session function registry (SQL-callable),
-    * mirroring the reference's `configure_context` (reference src/lib.rs:131-135). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax", (exprs: Seq[Expression]) => ArgMax(exprs.head), "built-in")
+    * mirroring the reference's `configure_context` (reference src/lib.rs:131-135).
+    * Idempotent: a query build calls it every time, and re-registering
+    * would replace the function and log a WARN on each call. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("argmax")))
+      registry.createOrReplaceTempFunction(
+        "argmax", (exprs: Seq[Expression]) => ArgMax(exprs.head), "built-in")
+  }
 
   /** Injection descriptor for `SparkSessionExtensions.injectFunction`. */
-  def descriptor: (org.apache.spark.sql.catalyst.FunctionIdentifier,
+  def descriptor: (FunctionIdentifier,
       org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
       Seq[Expression] => Expression) =
-    (org.apache.spark.sql.catalyst.FunctionIdentifier("argmax"),
+    (FunctionIdentifier("argmax"),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
         classOf[ArgMax].getCanonicalName, "argmax"),
       (exprs: Seq[Expression]) => ArgMax(exprs.head))

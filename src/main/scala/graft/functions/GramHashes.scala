@@ -47,7 +47,7 @@ case class GramHashes(child: Expression, k: Int)
   @transient private lazy val tr = new HashExprs.TokenRanges
 
   override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
+    val bytes = HashExprs.utf8Bytes(input.asInstanceOf[UTF8String])
     HashExprs.tokenizeBytes(bytes, tr)
     val n = tr.n - k + 1
     if (n <= 0) return new GenericArrayData(Array.empty[Long])

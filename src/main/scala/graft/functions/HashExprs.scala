@@ -86,7 +86,7 @@ case class ShingleHashes(child: Expression, n: Int)
   @transient private lazy val tr = new HashExprs.TokenRanges
 
   override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
+    val bytes = HashExprs.utf8Bytes(input.asInstanceOf[UTF8String])
     HashExprs.tokenizeBytes(bytes, tr)
     if (tr.n < n)
       return org.apache.spark.sql.catalyst.util.ArrayData
@@ -157,12 +157,13 @@ private[graft] object HashExprs {
     * of non-whitespace BYTES are precisely the maximal runs of
     * non-whitespace CHARS (for any valid-UTF-8 input, which is what
     * parquet string columns carry). No string decode, no regex
-    * machinery, no per-token allocation. */
-  def tokenizeBytes(bytes: Array[Byte], tr: TokenRanges): Unit = {
+    * machinery, no per-token allocation. Stops after `limit` tokens.
+    * Invalid UTF-8 goes through [[utf8Bytes]] first. */
+  def tokenizeBytes(bytes: Array[Byte], tr: TokenRanges, limit: Int = Int.MaxValue): Unit = {
     tr.n = 0
     val len = bytes.length
     var i = 0
-    while (i < len) {
+    while (i < len && tr.n < limit) {
       val b = bytes(i)
       if (b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r') {
         i += 1
@@ -182,6 +183,19 @@ private[graft] object HashExprs {
       }
     }
   }
+
+  /** The UTF-8 bytes Spark's string path hashes for `s`: its own bytes
+    * when they are well-formed UTF-8, else the bytes of its decoded
+    * form. `regexp_extract_all` (like every `UTF8String.toString`)
+    * decodes the row with U+FFFD for each malformed sequence, so a
+    * token holding invalid bytes reaches md5/FNV as EF BF BD; hashing
+    * the raw bytes would give different values. Decoding never consumes
+    * an ASCII byte, so the valid tokens' bytes and the token boundaries
+    * stay where they were: only the invalid tokens change.
+    * (`isValid` accepts exactly the byte strings Java's decoder maps
+    * back to themselves.) */
+  def utf8Bytes(s: UTF8String): Array[Byte] =
+    if (s.isValid) s.getBytes else s.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 }
 
 /**
@@ -273,7 +287,7 @@ case class Shingles(child: Expression, n: Int)
   @transient private lazy val tr = new HashExprs.TokenRanges
 
   override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
+    val bytes = HashExprs.utf8Bytes(input.asInstanceOf[UTF8String])
     HashExprs.tokenizeBytes(bytes, tr)
     if (tr.n < n)
       return org.apache.spark.sql.catalyst.util.ArrayData

@@ -138,7 +138,8 @@ object TopKAgg {
   def top_k(score: Column, id: Column, k: Int): Column =
     udaf(new TopKAgg(k), Encoders.product[ScoredId])(score, id)
 
-  /** Double-scored variant (NaN never wins; see [[TopKAggD]]). */
+  /** Double-scored variant (NaN ranks greatest, as in a DESC window;
+    * see [[TopKAggD]]). */
   def top_k_d(score: Column, id: Column, k: Int): Column =
     udaf(new TopKAggD(k), Encoders.product[ScoredIdD])(score, id)
 }

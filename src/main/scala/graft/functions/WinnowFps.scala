@@ -63,7 +63,7 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
+    val bytes = HashExprs.utf8Bytes(input.asInstanceOf[UTF8String])
     HashExprs.tokenizeBytes(bytes, tr)
     val nGrams = tr.n - k + 1
     if (nGrams <= 0) return ArrayData.toArrayData(Array.empty[Long])

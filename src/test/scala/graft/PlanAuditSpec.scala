@@ -657,4 +657,18 @@ class PlanAuditSpec extends AnyFunSuite {
       "Exchange".r.findAllIn(pq).length <= 1,
       s"q182 projection is not scan-side:\n$pq")
   }
+
+  test("torch token ids: one native tok_ids per plan, no md5 idiom on the engine side") {
+    // the cheap tok_count filter sits in front of the projection, so
+    // Catalyst has no `size(tok_ids)` predicate to push through it
+    // with the hashing expression substituted in (a second hash pass)
+    for (q <- Seq("q107_torch_embedding", "q113_torch_textcnn",
+        "q194_torch_generate", "q257_torch_gen_fused")) {
+      val p = plan(q)
+      assert("tok_ids\\(".r.findAllIn(p).length == 1,
+        s"$q must hash each row's tokens exactly once:\n$p")
+      assert(!p.contains("md5") && !p.contains("lambdafunction"),
+        s"$q still carries the md5/transform idiom:\n$p")
+    }
+  }
 }
