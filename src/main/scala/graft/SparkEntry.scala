@@ -52,15 +52,21 @@ object SparkEntry {
   // still scans parquet; nothing about results is cached.
   private val tableCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
+  // Every table reference also makes sure the session plans small
+  // final sorts in one partition ([[SmallSort]]).
+  private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    SmallSort.register(spark)
     tableCache.computeIfAbsent((spark, dir, name),
       _ => spark.read.parquet(s"$dir/$name.parquet"))
+  }
 
   /** [[t]]'s memoization for absolute parquet paths (frozen-artifact
     * tables): same plan-level cache, keyed by the full path. */
-  private def pq(spark: SparkSession, path: String): DataFrame =
+  private def pq(spark: SparkSession, path: String): DataFrame = {
+    SmallSort.register(spark)
     tableCache.computeIfAbsent((spark, path, "__abs__"),
       _ => spark.read.parquet(path))
+  }
 
   /** `events.ts` normalized to TimestampType whatever the fixture
     * generation shipped (nanos-as-long, NTZ micros, or LTZ) — see
@@ -68,6 +74,36 @@ object SparkEntry {
   private def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     EventTime.normalize(t(spark, dir, "events"))
+  }
+
+  /** A cross-attention pair model's input: `d_ids`, the first `dLen`
+    * decoder-vocabulary token ids, and `s_ids`, the source ids in the
+    * encoder's vocabulary, of the documents with at least `minTokens`
+    * tokens, hashed after the spread ([[Tok.spread]]). */
+  private def pairInput(s: SparkSession, dir: String, m: TorchScriptModel, dLen: Int = 2,
+      minTokens: Int = 1): DataFrame =
+    Tok.spread(t(s, dir, "documents"), minTokens).select(col("doc_id"),
+      Tok.ids(col("text"), m.seqHead.get.vocab, dLen).as("d_ids"),
+      Tok.ids(col("text"), m.encHead.get.vocab, EncMaxLen).as("s_ids"))
+
+  /** The shallow-fusion decoders' input: the generator's token ids and
+    * the counts of its add-one bigram prior (vocab² cells, counted over
+    * the same sliced token stream). The count collect and the decode
+    * share one lazy checkpoint of the spread, tokenized documents: the
+    * collect materializes it, the decode reads it back, so the corpus
+    * is scanned and tokenized once per execution. */
+  private def fusedInput(s: SparkSession, dir: String, vocab: Int): (DataFrame, Array[Array[Long]]) = {
+    val toks = graft.operators.Checkpoints.cp(Tok.input(t(s, dir, "documents"), vocab, EncMaxLen))
+    val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
+    toks.select(explode(zip_with(
+          slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
+          slice(col("tok_ids"), lit(2), greatest(size(col("tok_ids")) - 1, lit(0))),
+          (a, b) => struct(a.as("p"), b.as("c")))).as("pc"))
+      .groupBy(col("pc.p").as("p"), col("pc.c").as("c"))
+      .agg(count(lit(1)).as("n"))
+      .collect() // bounded by vocab² = 64 rows
+      .foreach(r => counts(r.getLong(0).toInt)(r.getLong(1).toInt) = r.getLong(2))
+    (toks, counts)
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -1021,8 +1057,7 @@ object SparkEntry {
       val vocab = genModel.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(genModel)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(genModel, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       val drafted = Torch.generateGreedy(toks, "tok_ids", "draft", bcD,
         steps = 2, batchSize = 256)
       val withSeqs = drafted
@@ -1059,8 +1094,7 @@ object SparkEntry {
       val vocab = fp.seqHead.get.vocab
       val bcF = s.sparkContext.broadcast(fp)
       val bcQ = s.sparkContext.broadcast(qz)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       val f = Torch.inferBatched(toks, "tok_ids", "fp_logits", bcF, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("fp_logits")).as("fp_class"))
@@ -1086,8 +1120,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.beamSearch(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256,
           lengthPenalty = 0.5, eosId = 1)
@@ -1110,8 +1143,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.beamSearch(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1155,8 +1187,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, repetitionPenalty = 1.25, noRepeatNgram = 2)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1177,8 +1208,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256,
           bannedPhrases = Seq(Seq(4, 4), Seq(0, 4), Seq(1, 1, 1)))
@@ -1196,8 +1226,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, banned = Set(1, 4))
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1218,8 +1247,7 @@ object SparkEntry {
       val m = alibiLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
           col("gen")(1).as("gen2"), col("gen")(2).as("gen3"))
@@ -1237,8 +1265,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
           col("gen")(1).as("gen2"), col("gen")(2).as("gen3"))
@@ -1259,8 +1286,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, forcedTokens = Map(1 -> 5),
           beginSuppress = Set(1, 2))
@@ -1280,8 +1306,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, watermarkDelta = 2.0)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1317,8 +1342,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, watermarkDelta = 2.0, watermarkGamma = (1, 4))
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1354,8 +1378,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcE = s.sparkContext.broadcast(m)
       val bcA = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateContrastiveDecoding(toks, "tok_ids", "gen", bcE, bcA,
           steps = 2, plausibilityAlpha = 0.125, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1375,8 +1398,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcE = s.sparkContext.broadcast(m)
       val bcA = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       // a doc whose step-1 plausibility head is a SINGLE token keeps
       // one beam (the head IS the candidate set — CD never fabricates
       // a second hypothesis); beam-2 columns go null, like the
@@ -1402,8 +1424,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampled(toks, "doc_id", "tok_ids", bcT, bcD,
           batchSize = 256)
         .select(col("doc_id"), col("draft_tok"), col("accepted"),
@@ -1427,8 +1448,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1454,17 +1474,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
-      val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
-      toks.select(explode(zip_with(
-            slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
-            slice(col("tok_ids"), lit(2), greatest(size(col("tok_ids")) - 1, lit(0))),
-            (a, b) => struct(a.as("p"), b.as("c")))).as("pc"))
-        .groupBy(col("pc.p").as("p"), col("pc.c").as("c"))
-        .agg(count(lit(1)).as("n"))
-        .collect() // bounded by vocab² = 64 rows
-        .foreach(r => counts(r.getLong(0).toInt)(r.getLong(1).toInt) = r.getLong(2))
+      val (toks, counts) = fusedInput(s, dir, vocab)
       Torch.generateGreedyFused(toks, "tok_ids", "gen", bc, steps = 3,
           lmWeight = 0.5, lmCounts = counts, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1483,8 +1493,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.beamSearch(toks, "tok_ids", "beams", bc, steps = 2, width = 2,
           batchSize = 256, watermarkDelta = 2.0)
         .select(col("doc_id"),
@@ -1506,8 +1515,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256)
         .groupBy(col("n_accepted").as("n_acc"))
@@ -1528,8 +1536,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1555,8 +1562,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1577,8 +1583,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       val b = Torch.beamSearchDiverse(toks, "tok_ids", "beams", bc,
         steps = 2, width = 2, groups = 2, diversityPenalty = 0.5,
         batchSize = 256, lengthPenalty = 0.5, eosId = 1)
@@ -1674,8 +1679,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 1, temperature = 0.8, topP = 0.9,
           numReturnSequences = 5, batchSize = 256)
@@ -1703,8 +1707,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       val gens = Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 2, temperature = 0.5, topP = 0.9,
           numReturnSequences = 3, batchSize = 256)
@@ -1737,8 +1740,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           watermarkDelta = 2.0)
@@ -1757,7 +1759,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+      val toks = Tok.spread(t(s, dir, "documents"))
         .select(col("doc_id"),
           transform(sequence(lit(0), lit(2)),
             i => conv(substring(md5(concat(col("lang"), i.cast("string"))), 1, 8),
@@ -1782,8 +1784,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateContrastive(toks, "tok_ids", "gen", bc, steps = 2,
           topK = 3, alpha = 0.5, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -1801,13 +1802,8 @@ object SparkEntry {
     // once outside the step chain (crossGenOracle).
     "q206_torch_cross_gen" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       Torch.generateGreedyPair(toks, "d_ids", "s_ids", "gen", bc,
           steps = 2, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"), col("gen")(1).as("gen2"))
@@ -1822,13 +1818,8 @@ object SparkEntry {
     // duplicated under both beam ids (crossGenOracle beam mode).
     "q208_torch_cross_beam" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       Torch.beamSearchPair(toks, "d_ids", "s_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1852,14 +1843,9 @@ object SparkEntry {
     "q212_torch_cross_spec" -> { (s, dir) =>
       ArgMax.register(s)
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       val drafted = Torch.generateGreedyPair(toks, "d_ids", "s_ids", "draft",
         bcD, steps = 2, batchSize = 256)
       val withSeqs = drafted
@@ -1894,14 +1880,9 @@ object SparkEntry {
     // cross-attentive.
     "q258_torch_cross_spec_sampled" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       Torch.speculativeSampledPair(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, batchSize = 256)
         .select(col("doc_id"), col("draft_tok"), col("accepted"),
@@ -1917,14 +1898,9 @@ object SparkEntry {
     // gamma = 1 replays q258 bit-exactly (shared salts, spec).
     "q261_torch_cross_spec_gamma" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       Torch.speculativeSampledPairGamma(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1949,8 +1925,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generatePromptLookup(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -1979,8 +1954,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftGreedy(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2009,8 +1983,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftGreedyLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2032,17 +2005,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
-      val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
-      toks.select(explode(zip_with(
-            slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
-            slice(col("tok_ids"), lit(2), greatest(size(col("tok_ids")) - 1, lit(0))),
-            (a, b) => struct(a.as("p"), b.as("c")))).as("pc"))
-        .groupBy(col("pc.p").as("p"), col("pc.c").as("c"))
-        .agg(count(lit(1)).as("n"))
-        .collect() // bounded by vocab² = 64 rows
-        .foreach(r => counts(r.getLong(0).toInt)(r.getLong(1).toInt) = r.getLong(2))
+      val (toks, counts) = fusedInput(s, dir, vocab)
       Torch.beamSearchDiverse(toks, "tok_ids", "beams", bc, steps = 2,
           width = 2, groups = 2, diversityPenalty = 0.5, batchSize = 256,
           lmWeight = 0.5, lmCounts = counts)
@@ -2066,8 +2029,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledMultiDraftLoop(toks, "doc_id", "tok_ids",
           bcT, bcD, numDrafts = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2088,8 +2050,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.promptLookupSampled(toks, "doc_id", "tok_ids", bc, ngram = 2,
           maxDraft = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2118,8 +2079,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftTypical(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, posteriorEps = 0.25, posteriorAlpha = 0.5,
           batchSize = 256)
@@ -2151,8 +2111,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftStochastic(toks, "doc_id", "tok_ids", bcT, bcD,
           branch = 2, depth = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2183,8 +2142,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, batchSize = 256, watermarkDelta = 2.0)
         .select(col("doc_id"),
@@ -2207,14 +2165,9 @@ object SparkEntry {
     // decoder prefix (the q254 recipe through the cross forward).
     "q279_torch_cross_spec_loop" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       Torch.speculativeSampledPairLoop(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2238,8 +2191,7 @@ object SparkEntry {
       val m = alibiLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc, steps = 3,
           nSink = 1, nWindow = 4, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -2260,8 +2212,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.autoGammaYield(toks, "doc_id", "tok_ids", bcT, bcD,
           maxGamma = 2, batchSize = 256)
         .orderBy("gamma")
@@ -2281,8 +2232,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -2305,8 +2255,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           watermarkDelta = 2.0)
@@ -2326,14 +2275,9 @@ object SparkEntry {
     // telemetry-exemption plan shape).
     "q286_torch_pair_spec_telemetry" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       Torch.speculativeSampledPairGamma(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, batchSize = 256)
         .groupBy(col("n_accepted").as("n_acc"))
@@ -2359,8 +2303,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftStochasticLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           branch = 2, depth = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2382,8 +2325,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           watermarkDelta = 2.0, nSink = 1, nWindow = 4)
@@ -2407,8 +2349,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       def leg(delta: Double, label: String) = {
         val gen = Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids",
             bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256,
@@ -2441,14 +2382,9 @@ object SparkEntry {
     // window >= length ≡ q279 bit-exact is spec-pinned.
     "q293_torch_pair_loop_kv" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       Torch.speculativeSampledPairLoop(toks, "doc_id", "d_ids", "s_ids",
           bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 0, nWindow = 2)
@@ -2472,8 +2408,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftTypicalLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, posteriorEps = 0.25, posteriorAlpha = 0.5,
           maxNewTokens = 2, batchSize = 256)
@@ -2496,8 +2431,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.autoBranchYield(toks, "doc_id", "tok_ids", bcT, bcD,
           branches = Seq(1, 2), depth = 2, batchSize = 256)
         .orderBy("branch")
@@ -2515,7 +2449,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+      val toks = Tok.spread(t(s, dir, "documents"))
         .select(col("doc_id"), col("source"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
       val perDoc = Torch.speculativeSampledGamma(toks, "doc_id", "tok_ids",
           bcT, bcD, gamma = 2, batchSize = 256)
@@ -2593,8 +2527,7 @@ object SparkEntry {
       val m = alibiRelLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc, steps = 3,
           nSink = 1, nWindow = 4, batchSize = 256, relPos = true)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -2618,8 +2551,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           gamma = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4, relPos = true)
@@ -2648,8 +2580,7 @@ object SparkEntry {
       val m = alibiLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.autoKvWindow(toks, "tok_ids", bc, steps = 3, nSink = 1,
         windows = Seq(2, 3, 4, 8, 16), divNum = 7, divDen = 20,
         batchSize = 256)
@@ -2669,8 +2600,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftGreedy(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2695,8 +2625,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftGreedy(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, batchSize = 256)
         .groupBy(col("n_accepted").as("n_acc"))
@@ -2717,17 +2646,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
-      val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
-      toks.select(explode(zip_with(
-            slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
-            slice(col("tok_ids"), lit(2), greatest(size(col("tok_ids")) - 1, lit(0))),
-            (a, b) => struct(a.as("p"), b.as("c")))).as("pc"))
-        .groupBy(col("pc.p").as("p"), col("pc.c").as("c"))
-        .agg(count(lit(1)).as("n"))
-        .collect() // bounded by vocab² = 64 rows
-        .foreach(r => counts(r.getLong(0).toInt)(r.getLong(1).toInt) = r.getLong(2))
+      val (toks, counts) = fusedInput(s, dir, vocab)
       Torch.beamSearch(toks, "tok_ids", "beams", bc, steps = 2, width = 2,
           batchSize = 256, watermarkDelta = 2.0,
           lmWeight = 0.5, lmCounts = counts)
@@ -2750,8 +2669,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.speculativeSampledMultiDraft(toks, "doc_id", "tok_ids", bcT, bcD,
           numDrafts = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2771,17 +2689,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
-      val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
-      toks.select(explode(zip_with(
-            slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
-            slice(col("tok_ids"), lit(2), greatest(size(col("tok_ids")) - 1, lit(0))),
-            (a, b) => struct(a.as("p"), b.as("c")))).as("pc"))
-        .groupBy(col("pc.p").as("p"), col("pc.c").as("c"))
-        .agg(count(lit(1)).as("n"))
-        .collect() // bounded by vocab² = 64 rows
-        .foreach(r => counts(r.getLong(0).toInt)(r.getLong(1).toInt) = r.getLong(2))
+      val (toks, counts) = fusedInput(s, dir, vocab)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           lmWeight = 0.5, lmCounts = counts)
@@ -2803,8 +2711,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generatePromptLookupLoop(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, maxNewTokens = 2, batchSize = 256)
         .select(col("doc_id"),
@@ -2829,8 +2736,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generatePromptLookupLoop(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -2856,8 +2762,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftStochasticLoop(toks, "doc_id", "tok_ids", bcT, bcD,
           branch = 2, depth = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -2903,8 +2808,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftGreedyLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4)
@@ -2929,8 +2833,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(earlyExitModel)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftTypicalLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, posteriorEps = 0.25, posteriorAlpha = 0.5,
           maxNewTokens = 2, batchSize = 256, nSink = 1, nWindow = 4)
@@ -2952,8 +2855,7 @@ object SparkEntry {
       val m = alibiRelLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generatePromptLookupLoop(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4, relPos = true)
@@ -2977,8 +2879,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.treeDraftGreedyLoop(toks, "tok_ids", bcT, bcD, branch = 2,
           depth = 2, maxNewTokens = 2, batchSize = 256,
           nSink = 1, nWindow = 4, relPos = true)
@@ -3000,8 +2901,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generatePromptLookup(toks, "tok_ids", bc, ngram = 2,
           maxDraft = 2, batchSize = 256)
         .groupBy(col("n_drafted").as("n_drf"), col("n_accepted").as("n_acc"))
@@ -3025,17 +2925,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
-      val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
-      toks.select(explode(zip_with(
-            slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
-            slice(col("tok_ids"), lit(2), greatest(size(col("tok_ids")) - 1, lit(0))),
-            (a, b) => struct(a.as("p"), b.as("c")))).as("pc"))
-        .groupBy(col("pc.p").as("p"), col("pc.c").as("c"))
-        .agg(count(lit(1)).as("n"))
-        .collect() // bounded by vocab² = 64 rows
-        .foreach(r => counts(r.getLong(0).toInt)(r.getLong(1).toInt) = r.getLong(2))
+      val (toks, counts) = fusedInput(s, dir, vocab)
       Torch.beamSearch(toks, "tok_ids", "beams", bc, steps = 2, width = 2,
           batchSize = 256, lmWeight = 0.5, lmCounts = counts)
         .select(col("doc_id"),
@@ -3057,8 +2947,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.beamSearchDiverse(toks, "tok_ids", "beams", bc, steps = 2,
           width = 2, groups = 2, diversityPenalty = 0.5, batchSize = 256,
           watermarkDelta = 2.0)
@@ -3079,13 +2968,8 @@ object SparkEntry {
     // value carries the per-op f32 roundings the f64 oracle lacks).
     "q210_seq2seq_filter" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 2)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 6).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m, dLen = 6, minTokens = 2)
       Torch.scoreSeq2SeqBatched(toks, "d_ids", "s_ids", "nll", bc)
         .select(col("doc_id"),
           (size(col("d_ids")) - 1).cast("long").as("n_scored"),
@@ -3099,13 +2983,8 @@ object SparkEntry {
     // Sampling code path, shared sampledStepChain oracle).
     "q207_torch_cross_sampled" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       Torch.generateSampledPair(toks, "doc_id", "d_ids", "s_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("sm1"), col("gen")(1).as("sm2"))
@@ -3120,13 +2999,8 @@ object SparkEntry {
     // grown DECODER token CTE).
     "q220_torch_cross_knobs" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       Torch.generateSampledPair(toks, "doc_id", "d_ids", "s_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           topK = 3, repetitionPenalty = 1.25, noRepeatNgram = 2)
@@ -3140,13 +3014,8 @@ object SparkEntry {
     // session work. Oracle: crossGenOracle's post-eos NULL trimming.
     "q221_torch_cross_eos" -> { (s, dir) =>
       val m = crossGenModel
-      val dvocab = m.seqHead.get.vocab
-      val kvocab = m.encHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"),
-          Tok.ids(col("text"), dvocab, 2).as("d_ids"),
-          Tok.ids(col("text"), kvocab, EncMaxLen).as("s_ids"))
+      val toks = pairInput(s, dir, m)
       Torch.generateGreedyPair(toks, "d_ids", "s_ids", "gen", bc,
           steps = 2, batchSize = 256, eosId = 5)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3165,8 +3034,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("sm1"), col("gen")(1).as("sm2"))
@@ -3185,8 +3053,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 2, temperature = 0.5, topP = 0.9,
           numReturnSequences = 3, batchSize = 256)
@@ -3209,8 +3076,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateSampledK(toks, "doc_id", "tok_ids", "gens", bc,
           steps = 2, temperature = 0.5, topP = 0.9,
           numReturnSequences = 3, batchSize = 256)
@@ -3233,8 +3099,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           repetitionPenalty = 1.25, noRepeatNgram = 2)
@@ -3251,8 +3116,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, eosId = 1)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3271,8 +3135,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 4,
           batchSize = 256, eosId = 1, minNewTokens = 2)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3296,8 +3159,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.beamSearch(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, batchSize = 256, eosId = 1,
           repetitionPenalty = 1.5, noRepeatNgram = 2,
@@ -3321,8 +3183,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.beamSearchDiverse(toks, "tok_ids", "beams", bc,
           steps = 2, width = 2, groups = 2, diversityPenalty = 0.5,
           batchSize = 256)
@@ -3345,8 +3206,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 1.0, batchSize = 256,
           minP = 0.25)
@@ -3368,8 +3228,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 1.0, batchSize = 256,
           typicalP = 0.8)
@@ -3388,8 +3247,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           batchSize = 256, dfaTrans = decodeDfaTrans)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
@@ -3408,8 +3266,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           topK = 3)
@@ -3426,8 +3283,7 @@ object SparkEntry {
       val m = genModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.generateSampled(toks, "doc_id", "tok_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
           banned = Set(1, 4))
@@ -4353,8 +4209,7 @@ object SparkEntry {
       // doc with zero evidence is meaningless; exclude explicitly on
       // both sides (tok_count is null for null text, so this also
       // removes null-text rows)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) > 0)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("lang_class"))
@@ -4483,8 +4338,7 @@ object SparkEntry {
       val m = textCnnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 2)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, minTokens = 2)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("text_class"))
@@ -4502,7 +4356,7 @@ object SparkEntry {
       val m = textCnnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 2)
+      val toks = Tok.spread(t(s, dir, "documents"), 2)
         .select(col("doc_id"), col("source"), Tok.ids(col("text"), vocab).as("tok_ids"))
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("source"),
@@ -4695,8 +4549,7 @@ object SparkEntry {
       val m = attnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("attn_class"))
@@ -4714,8 +4567,7 @@ object SparkEntry {
       val m = alibiModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("alibi_class"))
@@ -4731,8 +4583,7 @@ object SparkEntry {
       val m = localAttnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("local_class"))
@@ -4748,8 +4599,7 @@ object SparkEntry {
       val m = ropeModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("rope_class"))
@@ -4767,8 +4617,7 @@ object SparkEntry {
       val m = attnPoolModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("pool_class"))
@@ -4784,8 +4633,7 @@ object SparkEntry {
       val m = gruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("gru_class"))
@@ -4797,8 +4645,7 @@ object SparkEntry {
       val m = lstmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("lstm_class"))
@@ -4815,8 +4662,7 @@ object SparkEntry {
       val m = gruLmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 2)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, RnnMaxLen, minTokens = 2)
       Torch.scoreLmBatched(toks, "tok_ids", "mean_nll", bc)
         .select(col("doc_id"),
           (size(col("tok_ids")) - 1).cast("long").as("n_scored"),
@@ -4923,8 +4769,7 @@ object SparkEntry {
       val m = tcnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("text_class"))
@@ -4941,8 +4786,7 @@ object SparkEntry {
       val m = causalTcnModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("text_class"))
@@ -4957,8 +4801,7 @@ object SparkEntry {
       val m = gluRmsModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("gated_class"))
@@ -5073,8 +4916,7 @@ object SparkEntry {
       val m = gqaModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("gqa_class"))
@@ -5089,8 +4931,7 @@ object SparkEntry {
       val m = encModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("enc_class"))
@@ -5110,7 +4951,7 @@ object SparkEntry {
       val m = crossModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+      val toks = Tok.spread(t(s, dir, "documents"))
         .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("k_ids"))
         .select(col("doc_id"), slice(col("k_ids"), 1, CrossQLen).as("q_ids"),
           col("k_ids"))
@@ -5131,8 +4972,7 @@ object SparkEntry {
       val m = loraEncModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("lora_class"))
@@ -5150,7 +4990,7 @@ object SparkEntry {
       val m = encClsModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
+      val toks = Tok.spread(t(s, dir, "documents"))
         .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen - 1).as("word_ids"))
         .select(col("doc_id"),
           concat(array(lit(0L)), col("word_ids")).as("tok_ids"))
@@ -5171,8 +5011,7 @@ object SparkEntry {
       val m = decModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("dec_class"))
@@ -5190,8 +5029,7 @@ object SparkEntry {
       val m = sinPeModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, AttnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, AttnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("sinpe_class"))
@@ -5289,8 +5127,7 @@ object SparkEntry {
       val m = stackedGruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("sgru_class"))
@@ -5307,8 +5144,7 @@ object SparkEntry {
       val m = biGruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("bigru_class"))
@@ -5323,8 +5159,7 @@ object SparkEntry {
       val m = biLstmModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("bilstm_class"))
@@ -5340,8 +5175,7 @@ object SparkEntry {
       val m = meanGruModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, RnnMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, RnnMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("mgru_class"))
@@ -5370,7 +5204,7 @@ object SparkEntry {
       val pairs = docs.join(broadcast(cand), "doc_id")
         .select(col("doc_id"), col("t_rank"),
           concat(lit("spark join dup "), col("text")).as("pair_text"))
-      val toks = pairs.filter(Tok.count(col("pair_text")) >= 1)
+      val toks = pairs.filter(Tok.atLeast(col("pair_text"), 1))
         .select(col("doc_id"), col("t_rank"),
           Tok.ids(col("pair_text"), vocab, EncMaxLen).as("tok_ids"))
       // global window is safe: the input is the k=20 candidate set —
@@ -5587,8 +5421,7 @@ object SparkEntry {
       val m = encPadModel
       val hashMod = m.seqHead.get.vocab - 1 // 32: top row is the pad id
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), hashMod, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), hashMod, EncMaxLen)
         .select(col("doc_id"),
           concat(col("tok_ids"), array_repeat(lit(hashMod.toLong),
             lit(EncMaxLen) - size(col("tok_ids")))).as("tok_ids"))
@@ -5608,8 +5441,7 @@ object SparkEntry {
       val m = mhaModel
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
-      val toks = t(s, dir, "documents").filter(Tok.count(col("text")) >= 1)
-        .select(col("doc_id"), Tok.ids(col("text"), vocab, EncMaxLen).as("tok_ids"))
+      val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
       Torch.inferBatched(toks, "tok_ids", "logits", bc, batchSize = 256)
         .select(col("doc_id"),
           call_function("argmax", col("logits")).as("mha_class"))
@@ -9248,32 +9080,39 @@ object SparkEntry {
     TextOps.alphaWordFrac(col("text")),
     TextOps.stopwordHits(col("text")).cast("double") / lit(10.0))
 
+  /** `name ~> sql`: an [[oracleSql]] entry whose SQL is built on call. */
+  private implicit class OracleEntry(private val name: String) extends AnyVal {
+    def ~>(sql: => String): (String, () => String) = (name, () => sql)
+  }
+
   /** DuckDB oracle SQL per query (same column names + ORDER BY).
     * Approximate ops (LSH/IVF ANN, SimHash) carry in-query accuracy
     * gates instead of SQL oracles; the torch queries are oracled by
     * re-evaluating the network as generated SQL arithmetic
-    * ([[graft.torch.TorchOracle]]). */
+    * ([[graft.torch.TorchOracle]]). Each entry builds its SQL only when
+    * called, so one that cannot be built (a missing model fixture)
+    * fails alone. */
   // r20: built once (see queries) — oracle text blocks are large
-  lazy val oracleSql: Map[String, String] = ListMap(
-    "q01_scan_star" ->
+  lazy val oracleSql: Map[String, () => String] = ListMap(
+    "q01_scan_star" ~>
       "SELECT * FROM region ORDER BY r_regionkey",
 
-    "q02_project_alias_limit" ->
+    "q02_project_alias_limit" ~>
       """SELECT l_orderkey, l_linenumber,
         | round(l_extendedprice * (1.0 - l_discount), 4) AS net_price
         |FROM lineitem ORDER BY l_orderkey, l_linenumber, net_price LIMIT 500""".stripMargin,
 
-    "q03_filter_like" ->
+    "q03_filter_like" ~>
       """SELECT p_partkey, p_name, p_type FROM part
         |WHERE p_name LIKE '%widget%' ORDER BY p_partkey""".stripMargin,
 
-    "q04_array_cast" ->
+    "q04_array_cast" ~>
       """SELECT l_orderkey, l_linenumber,
         | CAST(([l_quantity, l_discount])[1] AS FLOAT) AS qty_f,
         | CAST(l_extendedprice AS FLOAT) AS price_f
         |FROM lineitem ORDER BY l_orderkey, l_linenumber, qty_f, price_f LIMIT 300""".stripMargin,
 
-    "q05_agg_pricing" ->
+    "q05_agg_pricing" ~>
       """SELECT l_returnflag, l_linestatus,
         | sum(l_quantity) AS sum_qty,
         | round(sum(l_extendedprice), 2) AS sum_base,
@@ -9285,7 +9124,7 @@ object SparkEntry {
         |GROUP BY l_returnflag, l_linestatus
         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
 
-    "q06_join_agg_revenue" ->
+    "q06_join_agg_revenue" ~>
       """SELECT n_name, round(sum(o_totalprice), 2) AS revenue,
         | CAST(count(*) AS BIGINT) AS n_orders
         |FROM orders
@@ -9293,65 +9132,65 @@ object SparkEntry {
         |JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY n_name ORDER BY n_name""".stripMargin,
 
-    "q07_topk_customers" ->
+    "q07_topk_customers" ~>
       """SELECT c_custkey, c_name, round(sum(o_totalprice), 2) AS total
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_custkey, c_name
         |ORDER BY total DESC, c_custkey LIMIT 10""".stripMargin,
 
-    "q08_window_rank" ->
+    "q08_window_rank" ~>
       """SELECT o_custkey, o_orderkey, o_totalprice, CAST(rnk AS INT) AS rnk FROM (
         | SELECT o_custkey, o_orderkey, o_totalprice,
         |  rank() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rnk
         | FROM orders)
         |WHERE rnk <= 3 ORDER BY o_custkey, rnk, o_orderkey""".stripMargin,
 
-    "q09_anti_join" ->
+    "q09_anti_join" ~>
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey
         |                    AND o_orderdate < TIMESTAMP '1995-07-01')
         |ORDER BY c_custkey""".stripMargin,
 
-    "q10_rollup" ->
+    "q10_rollup" ~>
       """SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
         | sum(l_quantity) AS sum_qty, CAST(count(*) AS BIGINT) AS n
         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
         |ORDER BY rf, ls""".stripMargin,
 
-    "q11_distinct_agg" ->
+    "q11_distinct_agg" ~>
       """SELECT l_returnflag,
         | CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
         | CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
 
-    "q12_setops" ->
+    "q12_setops" ~>
       """SELECT c_nationkey AS key FROM customer
         |INTERSECT SELECT s_nationkey FROM supplier ORDER BY key""".stripMargin,
 
-    "q48_semi_join" ->
+    "q48_semi_join" ~>
       """SELECT c_custkey, c_name FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |              WHERE o_custkey = c_custkey AND o_totalprice > 200000)
         |ORDER BY c_custkey""".stripMargin,
 
-    "q49_except" ->
+    "q49_except" ~>
       """SELECT o_custkey AS key FROM orders WHERE o_totalprice > 100000
         |EXCEPT
         |SELECT o_custkey FROM orders WHERE o_totalprice > 300000
         |ORDER BY key""".stripMargin,
 
-    "q13_json_extract" ->
+    "q13_json_extract" ~>
       """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         | CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
 
-    "q14_hourly_windows" ->
+    "q14_hourly_windows" ~>
       """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hr, event_type,
         | CAST(count(*) AS BIGINT) AS n, round(sum(value), 2) AS total
         |FROM events GROUP BY 1, 2 ORDER BY hr, event_type""".stripMargin,
 
-    "q15_sessionize" ->
+    "q15_sessionize" ~>
       """WITH e AS (
         |  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec FROM events),
         |g AS (
@@ -9363,7 +9202,7 @@ object SparkEntry {
         | CAST(count(*) AS BIGINT) AS n_events
         |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
 
-    "q31_sliding_windows" ->
+    "q31_sliding_windows" ~>
       """WITH w AS (
         |  SELECT unnest([
         |    CAST(epoch(date_trunc('hour', ts)) AS BIGINT)
@@ -9376,11 +9215,11 @@ object SparkEntry {
         |SELECT wstart, event_type, CAST(count(*) AS BIGINT) AS n, round(sum(value), 2) AS total
         |FROM w GROUP BY wstart, event_type ORDER BY wstart, event_type""".stripMargin,
 
-    "q16_dedup_exact" ->
+    "q16_dedup_exact" ~>
       """SELECT min(doc_id) AS doc_id, md5(text) AS fp FROM documents
         |GROUP BY text ORDER BY doc_id""".stripMargin,
 
-    "q17_text_stats" ->
+    "q17_text_stats" ~>
       """SELECT doc_id,
         | CAST(octet_length(encode(text)) AS INT) AS n_bytes,
         | CAST(len(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS INT) AS n_tokens,
@@ -9395,18 +9234,18 @@ object SparkEntry {
         |              BETWEEN 3 AND 10 THEN 1.0 ELSE 0.5 END * 0.2) AS quality
         |FROM documents ORDER BY doc_id""".stripMargin,
 
-    "q18_lang_profile" ->
+    "q18_lang_profile" ~>
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         | avg(CAST(len(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS DOUBLE)) AS avg_tokens,
         | avg(CASE WHEN text LIKE '%the%' THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
         |   AS share_the
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
 
-    "q20_fingerprint" ->
+    "q20_fingerprint" ~>
       """SELECT doc_id, md5(lower(trim(text))) AS fp FROM documents
         |ORDER BY doc_id""".stripMargin,
 
-    "q47_repetition" ->
+    "q47_repetition" ~>
       """WITH t AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws FROM documents),
         |g AS (
@@ -9422,7 +9261,7 @@ object SparkEntry {
     // Span dedup from the raw gram strings (the Spark side hashes them
     // first — md5-derived, collision odds 2^-60 — so equal results
     // mean the hash marking matched exact string comparison).
-    "q87_span_dedup" ->
+    "q87_span_dedup" ~>
       """WITH toks AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws FROM documents),
         |wins AS (
@@ -9445,7 +9284,7 @@ object SparkEntry {
         |       count(*) AS n_windows
         |FROM isl GROUP BY doc_id, grp ORDER BY doc_id, span_start""".stripMargin,
 
-    "q91_token_budget" ->
+    "q91_token_budget" ~>
       """WITH d AS (
         |  SELECT lang, doc_id,
         |    CAST(len(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS BIGINT) AS toks
@@ -9463,7 +9302,7 @@ object SparkEntry {
 
     // A-ES weighted sampling: same md5 uniform on the 1e6 grid, same
     // -ln(u)/w key rounded to 6dp, same (skey, doc_id) order + LIMIT.
-    "q238_weighted_sample" ->
+    "q238_weighted_sample" ~>
       """WITH d AS (
         |  SELECT doc_id,
         |    CAST(len(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) + 1
@@ -9481,7 +9320,7 @@ object SparkEntry {
     // Same decomposed suffix as the Spark side (chr(769) = U+0301
     // combining acute; chr(1)/chr(11) control debris), same 3-step
     // normalization — DuckDB's nfc_normalize is the independent NFC.
-    "q92_normalize_text" ->
+    "q92_normalize_text" ~>
       """WITH m AS (
         |  SELECT doc_id,
         |    text || '  Cafe' || chr(769) || ' ' || chr(1) || 'x' || chr(11) || 'y' || chr(9) || ' fin ' AS messy
@@ -9498,7 +9337,7 @@ object SparkEntry {
     // q64's exact contamination rule restricted to the flagged slice —
     // the bloom path must reproduce it exactly (no false negatives by
     // construction, false positives culled by the verify join).
-    "q93_bloom_decontam" ->
+    "q93_bloom_decontam" ~>
       """WITH alldocs AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -9516,7 +9355,7 @@ object SparkEntry {
         |HAVING count(*) >= 3
         |ORDER BY doc_id""".stripMargin,
 
-    "q94_train_shuffle" ->
+    "q94_train_shuffle" ~>
       """WITH k AS (
         |  SELECT doc_id, md5('epoch0:' || CAST(doc_id AS VARCHAR)) AS key
         |  FROM documents),
@@ -9528,7 +9367,7 @@ object SparkEntry {
         |  CAST(row_number() OVER (PARTITION BY shard ORDER BY key, doc_id) AS BIGINT) AS pos
         |FROM s ORDER BY shard, pos""".stripMargin,
 
-    "q105_zorder" ->
+    "q105_zorder" ~>
       """WITH a AS (
         |  SELECT o_orderkey,
         |    CAST(o_custkey & 65535 AS BIGINT) AS xd,
@@ -9545,7 +9384,7 @@ object SparkEntry {
         |SELECT o_orderkey, xd, yd, (vx | (vy << 1)) AS zkey
         |FROM s5 ORDER BY zkey, o_orderkey""".stripMargin,
 
-    "q104_window_breadth" ->
+    "q104_window_breadth" ~>
       """WITH rev AS (
         |  SELECT c_nationkey, o_custkey,
         |         round(sum(o_totalprice), 2) AS revenue
@@ -9561,14 +9400,14 @@ object SparkEntry {
         |WINDOW w AS (PARTITION BY c_nationkey ORDER BY revenue, o_custkey)
         |ORDER BY c_nationkey, revenue, o_custkey""".stripMargin,
 
-    "q103_semantic_incremental" ->
+    "q103_semantic_incremental" ~>
       """SELECT 'semantic_incremental_exact' AS gate,
         | CAST(100 AS BIGINT) AS n_new,
         | CAST(50 AS BIGINT) AS n_dropped,
         | CAST(50 AS BIGINT) AS n_global_dropped,
         | CAST(0 AS BIGINT) AS disagreements""".stripMargin,
 
-    "q101_recursive_cte" ->
+    "q101_recursive_cte" ~>
       """WITH RECURSIVE months(m) AS (
         |  SELECT DATE '1995-01-01' AS m
         |  UNION ALL
@@ -9582,7 +9421,7 @@ object SparkEntry {
         |GROUP BY strftime(m, '%Y-%m')
         |ORDER BY month""".stripMargin,
 
-    "q102_exists_subquery" ->
+    "q102_exists_subquery" ~>
       """SELECT c.c_custkey, c.c_name
         |FROM customer c
         |WHERE EXISTS (
@@ -9597,7 +9436,7 @@ object SparkEntry {
     // Every stage re-derived: normalization (nfc + control strip +
     // collapse), the three keep rules, distinct-8-gram contamination
     // vs the bench slice, curriculum phases + md5 ordering.
-    "q100_ingest_pipeline" ->
+    "q100_ingest_pipeline" ~>
       """WITH normed AS (
         |  SELECT doc_id,
         |    trim(regexp_replace(regexp_replace(nfc_normalize(text),
@@ -9643,7 +9482,7 @@ object SparkEntry {
 
     // PQ ANN: same per-SF pinned recall discipline as q25/q39
     // (deterministic: seeded subspace k-means + exact rerank).
-    "q99_ann_pq" ->
+    "q99_ann_pq" ~>
       """SELECT 'pq_recall_at_5' AS metric,
         | (SELECT count(DISTINCT vec_id) FROM embeddings WHERE vec_id < 20) AS n_queries,
         | CAST(CASE (SELECT count(*) FROM embeddings)
@@ -9655,7 +9494,7 @@ object SparkEntry {
     // with avg over md5-hashed token ids, and runs the MLP via
     // TorchOracle — fully independent f64 re-execution, argmax pinned
     // by the runner-up gap (TorchSpec asserts the margin).
-    "q107_torch_embedding" -> {
+    "q107_torch_embedding" ~> {
       val m = embedClassModel
       val e = m.embedHead.get
       def fmtF(f: Float): String = {
@@ -9684,7 +9523,7 @@ object SparkEntry {
           s"AS lang_class FROM ${TorchOracle.lastCte(mlp)} ORDER BY doc_id")
     },
 
-    "q108_unpivot" ->
+    "q108_unpivot" ~>
       """SELECT p_partkey, metric, round(val, 2) AS val
         |FROM (SELECT p_partkey, CAST(p_size AS DOUBLE) AS size_d,
         |             CAST(p_retailprice AS DOUBLE) AS price_d
@@ -9694,7 +9533,7 @@ object SparkEntry {
 
     // Sampled counts pinned per SF (single-partition seed-42 Bernoulli
     // draw — deterministic by construction, certified in-query).
-    "q109_tablesample" ->
+    "q109_tablesample" ~>
       """SELECT 'tablesample_10pct_seed42' AS metric,
         | CAST(CASE (SELECT count(*) FROM orders)
         |   WHEN 15000 THEN 1585 WHEN 150000 THEN 14885 ELSE -1 END AS BIGINT) AS n_sampled,
@@ -9705,7 +9544,7 @@ object SparkEntry {
     // JSON text; the inferred-schema string is pinned (every props row
     // is the single-key {"k": int} object, verified by n_missing = 0
     // coming from a really-absent path).
-    "q110_variant" ->
+    "q110_variant" ~>
       """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         | round(avg(CAST(json_extract_string(props, '$.k') AS INT)), 4) AS avg_k,
         | CAST(max(CAST(json_extract_string(props, '$.k') AS INT)) AS INT) AS max_k,
@@ -9716,7 +9555,7 @@ object SparkEntry {
     // Domain cap: DuckDB's row_number window is the exact spec the
     // bounded top-k Aggregator must reproduce (same deterministic
     // n_chars DESC, doc_id ASC order).
-    "q111_domain_cap" ->
+    "q111_domain_cap" ~>
       """SELECT source, rnk, doc_id, n_chars FROM (
         |  SELECT source, doc_id, n_chars,
         |    CAST(row_number() OVER (PARTITION BY source
@@ -9726,7 +9565,7 @@ object SparkEntry {
 
     // IVFADC: same per-SF pinned recall discipline as q99 (seeded
     // coarse + residual-PQ quantizers, exact rerank — deterministic).
-    "q106_ann_ivfpq" ->
+    "q106_ann_ivfpq" ~>
       """SELECT 'ivfpq_recall_at_5' AS metric,
         | (SELECT count(DISTINCT vec_id) FROM embeddings WHERE vec_id < 20) AS n_queries,
         | CAST(CASE (SELECT count(*) FROM embeddings)
@@ -9735,7 +9574,7 @@ object SparkEntry {
 
     // Batch IVFADC: deterministic (seeded quantizers + exact rerank),
     // so the gauge recall and the all-queries result volume pin per SF.
-    "q112_ann_ivfpq_batch" ->
+    "q112_ann_ivfpq_batch" ~>
       """SELECT 'ivfpq_batch_recall_at_5' AS metric,
         | (SELECT count(*) FROM embeddings WHERE vec_id % 7 = 0) AS n_queries,
         | CAST(CASE (SELECT count(*) FROM embeddings)
@@ -9748,7 +9587,7 @@ object SparkEntry {
     // sf0.001 and sf0.01 both hold 500 embeddings, so the recall CASE
     // discriminates on lineitem's count (6k/60k/600k) instead; the
     // deterministic seeded quantizer makes both values exact constants.
-    "q135_ann_ivf_pruned" ->
+    "q135_ann_ivf_pruned" ~>
       """SELECT 'ivf_pruned_recall_at_5' AS metric,
         | (SELECT count(DISTINCT vec_id) FROM embeddings WHERE vec_id < 20) AS n_queries,
         | CAST(CASE (SELECT count(*) FROM lineitem)
@@ -9762,7 +9601,7 @@ object SparkEntry {
     // are pure functions of seed+values, q135 discipline); the hard
     // invariants are filter_violations = 0 (the predicate ran BELOW
     // the shortlist — post-filtering cannot guarantee this) and pass.
-    "q158_ann_filtered" ->
+    "q158_ann_filtered" ~>
       """SELECT 'ann_filtered_recall_at_5' AS metric,
         | (SELECT count(DISTINCT vec_id) FROM embeddings WHERE vec_id < 20) AS n_queries,
         | CAST(CASE (SELECT count(*) FROM lineitem)
@@ -9777,7 +9616,7 @@ object SparkEntry {
     // via GROUP BY, then the fc+argmax through TorchOracle. All
     // weights are dyadic (1/16 grid), so f64 here equals the engine's
     // f32 bit-for-bit (see textCnnModel) — an EXACT oracle.
-    "q113_torch_textcnn" -> {
+    "q113_torch_textcnn" ~> {
       val tail = new TorchScriptModel(IndexedSeq(textCnnModel.layers.last))
       TorchOracle.mlpArgmaxSql(tail, textCnnPoolSql(withSource = false),
         arms = Seq("a"), carry = Seq("doc_id"),
@@ -9790,7 +9629,7 @@ object SparkEntry {
     // padding taps, then per-channel GREATEST(0, affine), max-pool,
     // fc+argmax through TorchOracle. All weights dyadic — an EXACT
     // oracle (see tcnModel).
-    "q159_torch_tcn" -> {
+    "q159_torch_tcn" ~> {
       val tail = new TorchScriptModel(IndexedSeq(tcnModel.layers.last))
       TorchOracle.mlpArgmaxSql(tail, tcnPoolSql,
         arms = Seq("a"), carry = Seq("doc_id"),
@@ -9802,7 +9641,7 @@ object SparkEntry {
     // pos-4/pos-2/pos LEFT joins with COALESCE-0 pad taps, then
     // GREATEST(0, affine), max-pool, fc+argmax. All weights dyadic —
     // an EXACT oracle (see causalTcnModel).
-    "q161_torch_causal_tcn" -> {
+    "q161_torch_causal_tcn" ~> {
       val tail = new TorchScriptModel(IndexedSeq(causalTcnModel.layers.last))
       TorchOracle.mlpArgmaxSql(tail, causalTcnPoolSql,
         arms = Seq("a"), carry = Seq("doc_id"),
@@ -9815,7 +9654,7 @@ object SparkEntry {
     // halving, and the mean pool; fc+argmax through TorchOracle.
     // Drift = engine's per-op f32 roundings + sigmoid exp ulps,
     // absorbed by the argmax gap (see gluRmsModel / gluRmsPoolSql).
-    "q163_torch_glu_rms" -> {
+    "q163_torch_glu_rms" ~> {
       val tail = new TorchScriptModel(IndexedSeq(gluRmsModel.layers.last))
       TorchOracle.mlpArgmaxSql(tail, gluRmsPoolSql,
         arms = Seq("a"), carry = Seq("doc_id"),
@@ -9827,7 +9666,7 @@ object SparkEntry {
     // and hit grams per doc via a LEFT join, then the fraction rule.
     // frac = n_hits/n_grams is the same integer pair divided in f64 on
     // both engines — bit-identical; 0.25 is dyadic.
-    "q164_decontam_fuzzy" ->
+    "q164_decontam_fuzzy" ~>
       """WITH toks AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws FROM documents),
         |sh AS (
@@ -9856,7 +9695,7 @@ object SparkEntry {
     // Temperature mix: the q63 bucket chain with rates derived as
     // min(sqrt(N))/sqrt(N) — sqrt is correctly rounded on both
     // engines, so the 1e8-grid rates match bit-for-bit.
-    "q165_temperature_mix" ->
+    "q165_temperature_mix" ~>
       """WITH counts AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY source),
         |w AS (SELECT source, n, sqrt(CAST(n AS DOUBLE)) AS w FROM counts),
@@ -9884,7 +9723,7 @@ object SparkEntry {
     // bit-identical across f32/f64 (a raw qualityModel logit is not:
     // measured adjacent-rank gaps at sf0.01 run to 3.5e-4 with exact
     // f32 ties, inside drift range of an f64 oracle).
-    "q114_domain_cap_model" -> {
+    "q114_domain_cap_model" ~> {
       val tail = new TorchScriptModel(IndexedSeq(textCnnModel.layers.last))
       TorchOracle.mlpArgmaxSql(tail, textCnnPoolSql(withSource = true),
         arms = Seq("a"), carry = Seq("doc_id", "source"),
@@ -9900,7 +9739,7 @@ object SparkEntry {
     // HLL estimates aren't DuckDB-reproducible; the exact counts ARE,
     // and the in-query gate (est within 5% of exact, >6-sigma margin
     // at lgK=14) must come out true for every shard and the union.
-    "q115_hll_cardinality" ->
+    "q115_hll_cardinality" ~>
       """SELECT source, CAST(count(DISTINCT text) AS BIGINT) AS n_exact,
         | true AS approx_ok
         |FROM documents GROUP BY source
@@ -9912,7 +9751,7 @@ object SparkEntry {
     // p set {1/4, 1/2, 3/4, 15/16} keeps every interpolation weight
     // dyadic, so int data makes the doubles bit-identical. The approx-
     // median gate (rank within 1% of 0.5) is certified in-query.
-    "q116_quality_quantiles" ->
+    "q116_quality_quantiles" ~>
       """SELECT lang, CAST(count(*) AS BIGINT) AS n,
         | round(quantile_cont(n_chars, 0.25), 4) AS p25,
         | round(quantile_cont(n_chars, 0.5), 4) AS p50,
@@ -9924,7 +9763,7 @@ object SparkEntry {
     // Profiler: DuckDB recomputes every exact stat per column
     // (timestamps as epoch micros — integer-exact doubles); the HLL++
     // gate column must be uniformly true.
-    "q117_profile" -> {
+    "q117_profile" ~> {
       def num(c: String, mn: String, mx: String) =
         s"""SELECT '$c' AS col_name, CAST(count(*) AS BIGINT) AS n,
            | CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
@@ -9951,7 +9790,7 @@ object SparkEntry {
 
     // PSI terms re-derived with the identical dyadic octile bounds,
     // strict-greater bucket rule and half-count smoothing.
-    "q121_drift_psi" ->
+    "q121_drift_psi" ~>
       """WITH a AS (SELECT n_chars FROM documents WHERE doc_id % 2 = 0),
         |bs AS (
         |  SELECT [quantile_cont(n_chars, 0.125), quantile_cont(n_chars, 0.25),
@@ -9983,7 +9822,7 @@ object SparkEntry {
     // layer through the shared mlpArgmaxSql CTE builder. Scores are
     // dyadic-exact on both sides; the argmax gap absorbs the f32
     // roundings (see attnModel).
-    "q122_torch_attention" -> {
+    "q122_torch_attention" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         attnModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, attnPoolSql,
@@ -9995,7 +9834,7 @@ object SparkEntry {
     // Local attention: the q166 bias-join chain — the VALUES table
     // carries only the band's finite entries, so the score join is
     // O(L·w).
-    "q173_torch_local" -> {
+    "q173_torch_local" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         localAttnModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, attnPoolSql(localAttnModel),
@@ -10007,7 +9846,7 @@ object SparkEntry {
     // RoPE: the q122 chain with a per-position rotation CTE between
     // the projections and the score join (exact-double cos/sin
     // literals) plus the causal join restriction.
-    "q169_torch_rope" -> {
+    "q169_torch_rope" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         ropeModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, attnPoolSql(ropeModel),
@@ -10019,7 +9858,7 @@ object SparkEntry {
     // ALiBi: the q122 chain with the finite mask entries joined as a
     // (pa, pb, bv) VALUES table — the inner join IS the -inf mask;
     // bv adds to the scaled score. Dyadic bias keeps scores exact.
-    "q166_torch_alibi" -> {
+    "q166_torch_alibi" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         alibiModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, attnPoolSql(alibiModel),
@@ -10032,7 +9871,7 @@ object SparkEntry {
     // with the q vectors inlined as exact f64 literals (input-
     // independent), per-position scores (no self-join), max-shifted
     // softmax, out-proj, flatten, fc+argmax (see attnPoolLatentSql).
-    "q162_torch_attn_pool" -> {
+    "q162_torch_attn_pool" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         attnPoolModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, attnPoolLatentSql,
@@ -10041,7 +9880,7 @@ object SparkEntry {
           s"AS pool_class FROM ${TorchOracle.lastCte(fc)} ORDER BY doc_id")
     },
 
-    "q123_torch_gru" -> {
+    "q123_torch_gru" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         gruModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, rnnHiddenSql(gruModel),
@@ -10050,7 +9889,7 @@ object SparkEntry {
           s"AS gru_class FROM ${TorchOracle.lastCte(fc)} ORDER BY doc_id")
     },
 
-    "q142_torch_stacked_gru" -> {
+    "q142_torch_stacked_gru" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         stackedGruModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, rnnStackedHiddenSql(stackedGruModel),
@@ -10059,7 +9898,7 @@ object SparkEntry {
           s"AS sgru_class FROM ${TorchOracle.lastCte(fc)} ORDER BY doc_id")
     },
 
-    "q143_torch_bigru" -> {
+    "q143_torch_bigru" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         biGruModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, rnnBiHiddenSql(biGruModel),
@@ -10068,7 +9907,7 @@ object SparkEntry {
           s"AS bigru_class FROM ${TorchOracle.lastCte(fc)} ORDER BY doc_id")
     },
 
-    "q149_torch_bilstm" -> {
+    "q149_torch_bilstm" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         biLstmModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, rnnBiHiddenSql(biLstmModel),
@@ -10077,7 +9916,7 @@ object SparkEntry {
           s"AS bilstm_class FROM ${TorchOracle.lastCte(fc)} ORDER BY doc_id")
     },
 
-    "q144_torch_gru_meanpool" -> {
+    "q144_torch_gru_meanpool" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         meanGruModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, rnnMeanHiddenSql(meanGruModel),
@@ -10090,7 +9929,7 @@ object SparkEntry {
     // both the encoder chain's pair-text source AND the final rerank
     // select can reference tr; the encoder runs over 'spark join dup '
     // || text for the 20 candidates only.
-    "q145_cross_encoder" -> {
+    "q145_cross_encoder" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         encModel.ops.collect { case l: graft.torch.LinearLayer => l }.last))
       val am = TorchOracle.armArgmax(fc, "p")
@@ -10139,7 +9978,7 @@ object SparkEntry {
     // The three stages restated over the same kept set: blocklist
     // replace() arithmetic, the q153 smoothed-count NLL (rounded BEFORE
     // the gate compare), the WordPiece recursive peel over `kept`.
-    "q154_ingest_v2" -> {
+    "q154_ingest_v2" ~> {
       val blRows = BlocklistPhrases.map(p => s"('$p')").mkString(", ")
       s"""WITH RECURSIVE bp(pattern) AS (VALUES $blRows),
          |bl AS (
@@ -10181,7 +10020,7 @@ object SparkEntry {
     // Identical smoothed-probability arithmetic from the same integer
     // counts; ln() and avg() drift at libm/sum-order ulps under the
     // 6-dp rounding.
-    "q153_bigram_lm" ->
+    "q153_bigram_lm" ~>
       """WITH ws AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS a
         |  FROM documents),
@@ -10207,7 +10046,7 @@ object SparkEntry {
     // URL dedup restated: identical synthesis CASEs + the six
     // canonicalization rules in DuckDB string builtins (RE2 patterns,
     // list_filter lambda for the utm_* strip).
-    "q172_url_dedup" ->
+    "q172_url_dedup" ~>
       """WITH u AS (
         |  SELECT doc_id,
         |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END) ||
@@ -10251,7 +10090,7 @@ object SparkEntry {
     // interpolation arithmetic spelled with the IDENTICAL expression
     // tree (and the discount forced through a DOUBLE cast — bare
     // decimals are DECIMAL in DuckDB).
-    "q170_kn_bigram" ->
+    "q170_kn_bigram" ~>
       """WITH ws AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS a
         |  FROM documents),
@@ -10283,7 +10122,7 @@ object SparkEntry {
     // DSIR restated: one conditional-count frequency CTE, one-row
     // totals, ln of exact integer-count ratios (StrictMath.log == ln),
     // avg drift absorbed by the 6-dp rounding.
-    "q168_dsir_select" ->
+    "q168_dsir_select" ~>
       """WITH occ AS (
         |  SELECT doc_id, (lang = 'en') AS t,
         |    unnest(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS w
@@ -10314,7 +10153,7 @@ object SparkEntry {
     // The q153 chain + NTILE(3) per language ordered by the rounded
     // score with the doc_id tiebreak (the same total order the engine
     // ranks by).
-    "q167_ppl_buckets" ->
+    "q167_ppl_buckets" ~>
       """WITH ws AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS a
         |  FROM documents),
@@ -10347,7 +10186,7 @@ object SparkEntry {
     // re-derives every node's rank from r{i-1} through the transition
     // CTE. Constants forced through DOUBLE casts so (1.0 - 0.85)
     // computes in binary floating point on both engines.
-    "q152_pagerank" -> {
+    "q152_pagerank" ~> {
       val iterCtes = (1 to 10).map { i =>
         s"""r$i AS (
            |  SELECT nodes.node,
@@ -10386,7 +10225,7 @@ object SparkEntry {
     // the chain 2^12-fold. Constants through
     // DOUBLE casts; 8-dp rounding absorbs sum-order ulps on the
     // ~6e-5-magnitude ranks.
-    "q160_pagerank_dangling" -> {
+    "q160_pagerank_dangling" ~> {
       // dangling mass DERIVED from the contributions (mass
       // conservation: D = 1 − Σ m), matching the engine's single-read
       // formulation
@@ -10428,7 +10267,7 @@ object SparkEntry {
     // Non-overlapping occurrence arithmetic per (doc, pattern):
     // (len - len(replace))/len(p) — equal to the automaton's count for
     // borderless patterns.
-    "q151_blocklist" -> {
+    "q151_blocklist" ~> {
       val rows = BlocklistPhrases.map(p => s"('$p')").mkString(", ")
       s"""WITH p(pattern) AS (VALUES $rows),
          |hits AS (
@@ -10442,7 +10281,7 @@ object SparkEntry {
     // The identical seeded plane literals as a VALUES table; per-dim
     // dot products as pos-join sums (f64, order ulps under the 6-dp
     // rounding).
-    "q155_jl_project" -> {
+    "q155_jl_project" ~> {
       val ps = Similarity.jlPlanes(64, 8, 7L)
       def fmtD(x: Double): String = {
         val s = x.toString
@@ -10471,7 +10310,7 @@ object SparkEntry {
     // Exact-cosine neighbor ranks (the q24 discipline), majority vote
     // with (count DESC, label) tie-break — the engine window's exact
     // ordering.
-    "q150_knn_classify" ->
+    "q150_knn_classify" ~>
       """WITH q AS (
         |  SELECT vec_id AS q_id, embedding AS qe, label AS qlab
         |  FROM embeddings WHERE vec_id < 20),
@@ -10496,7 +10335,7 @@ object SparkEntry {
     // Centroids restated dimension-wise (unnest + avg), cosine via a
     // pos-join dot product, argmax by (cos DESC, label) — exactly the
     // engine UDF's ascending strict-> scan.
-    "q146_centroid_classify" ->
+    "q146_centroid_classify" ~>
       """WITH d AS (
         |  SELECT vec_id, label, CAST(UNNEST(embedding) AS DOUBLE) AS v,
         |         generate_subscripts(embedding, 1) AS pos
@@ -10518,7 +10357,7 @@ object SparkEntry {
         |SELECT CAST(label AS INT) AS label, CAST(pred AS INT) AS pred, count(*) AS n
         |FROM pr WHERE rn = 1 GROUP BY label, pred ORDER BY label, pred""".stripMargin,
 
-    "q124_torch_lstm" -> {
+    "q124_torch_lstm" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         lstmModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, rnnHiddenSql(lstmModel),
@@ -10527,9 +10366,9 @@ object SparkEntry {
           s"AS lstm_class FROM ${TorchOracle.lastCte(fc)} ORDER BY doc_id")
     },
 
-    "q134_lm_perplexity" -> lmNllSql(gruLmModel, LmKeepBelow),
+    "q134_lm_perplexity" ~> lmNllSql(gruLmModel, LmKeepBelow),
 
-    "q127_torch_encoder" -> {
+    "q127_torch_encoder" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         encModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, encPoolSql,
@@ -10540,7 +10379,7 @@ object SparkEntry {
 
     // LoRA: the oracle reads the MERGED model's weights through the
     // unchanged generators — the fold is pinned by weight reuse.
-    "q204_torch_lora" -> {
+    "q204_torch_lora" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         loraEncModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, encBlockSql(loraEncModel, pool = "mean"),
@@ -10552,7 +10391,7 @@ object SparkEntry {
     // Cross-attention: the q127 score-join recipe with the QUERY-side
     // CTE distinct from the KEY side (two tokenizations, two embedding
     // tables) — see crossBlockSql.
-    "q202_torch_crossattn" -> {
+    "q202_torch_crossattn" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         crossModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, crossBlockSql(crossModel),
@@ -10563,7 +10402,7 @@ object SparkEntry {
 
     // GQA: encBlockSql is head-generic — the shared-kv heads restate
     // as per-head score joins whose k/v affines repeat per group.
-    "q171_torch_gqa" -> {
+    "q171_torch_gqa" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         gqaModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, encBlockSql(gqaModel, pool = "mean"),
@@ -10578,7 +10417,7 @@ object SparkEntry {
     // absent, so the oracle tokenizes only the valid positions
     // (hashMod 32 keeps the reserved pad id 32 unreachable) and the
     // engine's masked-mean pool is the oracle's avg over those rows.
-    "q156_torch_padded" -> {
+    "q156_torch_padded" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         encPadModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc,
@@ -10591,14 +10430,14 @@ object SparkEntry {
 
     // The Viterbi DP as recursive-CTE path enumeration over distinct
     // words with the engine's exact total order (see sentencePieceSql).
-    "q157_sentencepiece" -> sentencePieceSql,
+    "q157_sentencepiece" ~> sentencePieceSql,
 
     // The greedy longest-match scan as a WITH RECURSIVE peel: each
     // iteration consumes the longest vocab piece prefixing the
     // remaining suffix (CASE probing lengths 4..1, '##'-prefixed when
     // mid-word), a null probe marks the word failed, and failed words
     // collapse to one [UNK] in the final assembly.
-    "q148_wordpiece" -> {
+    "q148_wordpiece" ~> {
       s"""WITH RECURSIVE ${wordPieceCtes("documents")},
          |agg AS (
          |  SELECT doc_id, CAST(count(*) AS INT) AS n_pieces,
@@ -10611,7 +10450,7 @@ object SparkEntry {
          |FROM documents d LEFT JOIN agg USING (doc_id) ORDER BY d.doc_id""".stripMargin
     },
 
-    "q147_torch_mha" -> {
+    "q147_torch_mha" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         mhaModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, encBlockSql(mhaModel, pool = "mean"),
@@ -10620,7 +10459,7 @@ object SparkEntry {
           s"AS mha_class FROM ${TorchOracle.lastCte(fc)} ORDER BY doc_id")
     },
 
-    "q136_torch_cls" -> {
+    "q136_torch_cls" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         encClsModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, encBlockSql(encClsModel, pool = "cls"),
@@ -10629,7 +10468,7 @@ object SparkEntry {
           s"AS cls_class FROM ${TorchOracle.lastCte(fc)} ORDER BY doc_id")
     },
 
-    "q138_torch_decoder" -> {
+    "q138_torch_decoder" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         decModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, encBlockSql(decModel, pool = "last"),
@@ -10638,7 +10477,7 @@ object SparkEntry {
           s"AS dec_class FROM ${TorchOracle.lastCte(fc)} ORDER BY doc_id")
     },
 
-    "q139_torch_sinpe" -> {
+    "q139_torch_sinpe" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         sinPeModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, attnPoolSql(sinPeModel),
@@ -10647,7 +10486,7 @@ object SparkEntry {
           s"AS sinpe_class FROM ${TorchOracle.lastCte(fc)} ORDER BY doc_id")
     },
 
-    "q140_torch_depthwise" -> {
+    "q140_torch_depthwise" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         mobileModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, mobilePoolSql,
@@ -10658,7 +10497,7 @@ object SparkEntry {
 
     // The strided stem's taps restated with bounds CASEs per output
     // position (stemPoolSql).
-    "q205_torch_stride_stem" -> {
+    "q205_torch_stride_stem" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         stemModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, stemPoolSql,
@@ -10672,7 +10511,7 @@ object SparkEntry {
     // linear else ((mant<<4)+0x108)<<(seg-1), sign bit SET = positive.
     // Decoded samples are m/32768 (dyadic) -> features carry no
     // rounding budget at all.
-    "q141_audio_g711" ->
+    "q141_audio_g711" ~>
       """WITH codes AS (
         |  SELECT doc_id,
         |         unnest(range(0, 800 + CAST(doc_id % 5 AS INT) * 40)) AS i
@@ -10710,7 +10549,7 @@ object SparkEntry {
         |FROM feat ORDER BY doc_id""".stripMargin,
 
     // The synth MP4's parameters restated in closed form.
-    "q133_video_meta" ->
+    "q133_video_meta" ~>
       """SELECT doc_id,
         |  CASE WHEN doc_id % 3 = 0 THEN 'isom' ELSE 'mp42' END AS brand,
         |  CAST(800 + (doc_id % 7) * 250 AS BIGINT) AS duration_ms,
@@ -10722,7 +10561,7 @@ object SparkEntry {
     // The synth AVI's frame plan in closed form: 2 + doc_id%3 frames,
     // level (doc_id*37 + frame_no*29) % 256 — exact because flat
     // max-quality MJPEG frames are DC-only (VideoAviSpec).
-    "q137_video_frames" ->
+    "q137_video_frames" ~>
       """SELECT doc_id, CAST(frame_no AS INT) AS frame_no,
         |  CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
         |  CAST(1 AS INT) AS channels,
@@ -10734,7 +10573,7 @@ object SparkEntry {
 
     // The q125 BM25 arithmetic with the stats CTEs computed over the
     // even-doc_id shard only, then applied to every doc.
-    "q132_bm25_frozen" ->
+    "q132_bm25_frozen" ~>
       """WITH rtf AS (
         |  SELECT len(tk) AS dl,
         |    len(list_filter(tk, x -> x = 'spark')) AS tf0,
@@ -10764,7 +10603,7 @@ object SparkEntry {
         |      * (tf2*CAST(2.2 AS DOUBLE))/(tf2 + 1.2*(0.25 + 0.75*dl/avgdl)), 6) AS bm25
         |FROM atf, st ORDER BY doc_id""".stripMargin,
 
-    "q131_torch_resnet" -> {
+    "q131_torch_resnet" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         resnetModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, resnetPoolSql,
@@ -10774,7 +10613,7 @@ object SparkEntry {
     },
 
     // DuckDB's comma-LATERAL spelling of the same per-customer top-3.
-    "q130_lateral_topk" ->
+    "q130_lateral_topk" ~>
       """SELECT c_custkey, o.okey, o.price FROM customer c, LATERAL (
         |  SELECT o_orderkey AS okey, o_totalprice AS price FROM orders
         |  WHERE o_custkey = c.c_custkey
@@ -10783,7 +10622,7 @@ object SparkEntry {
 
     // The q21 shingle CTEs plus the planted prefixes, with the ratio
     // asymmetric (i / |S(contained)|) and both directions emitted.
-    "q129_containment" ->
+    "q129_containment" ~>
       """WITH aug0 AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws
         |  FROM documents WHERE doc_id < 20),
@@ -10812,7 +10651,7 @@ object SparkEntry {
         |SELECT contained, container, containment FROM cont
         |WHERE containment >= 0.9 ORDER BY contained, container""".stripMargin,
 
-    "q128_torch_conv2d" -> {
+    "q128_torch_conv2d" ~> {
       val fc = new graft.torch.TorchScriptModel(IndexedSeq(
         convModel.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
       TorchOracle.mlpArgmaxSql(fc, convPoolSql,
@@ -10824,7 +10663,7 @@ object SparkEntry {
     // BM25 restated in full (Lucene idf, k1=1.2, b=0.75; k1+1 spelled
     // 2.2 — the same double both engines produce), the dense leg as in
     // q24, ranks fused by 1/(60+r); the fused score is rank-only.
-    "q125_hybrid_rrf" ->
+    "q125_hybrid_rrf" ~>
       """WITH tf AS (
         |  SELECT doc_id, len(tk) AS dl,
         |    len(list_filter(tk, x -> x = 'spark')) AS tf0,
@@ -10872,7 +10711,7 @@ object SparkEntry {
     // 8 kHz); rms/peak normalize by 2^15, zero-cross is the strict
     // sign-change count. The engine side must reproduce these THROUGH
     // its RIFF encode + parse.
-    "q126_audio_features" ->
+    "q126_audio_features" ~>
       """WITH n AS (
         |  SELECT doc_id, CAST(800 + (doc_id % 5) * 160 AS INT) AS ns FROM documents),
         |s AS (SELECT doc_id, ns, unnest(range(0, ns)) AS i FROM n),
@@ -10899,7 +10738,7 @@ object SparkEntry {
     // empirically: gaps 1799/1800 merge, 1801 splits — the same
     // > rule as q15's hand-rolled sessionize); session end =
     // last event + gap.
-    "q119_session_window" ->
+    "q119_session_window" ~>
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) // 1000000 AS sec, value FROM events),
         |m AS (
@@ -10923,7 +10762,7 @@ object SparkEntry {
     // 4096-word sub-chunks — the operator's maxChunk clamp, stated
     // here too so an adversarial boundary-free run can't diverge the
     // engines (never triggered by organic data: P ~ e^-64).
-    "q120_cdc_chunks" ->
+    "q120_cdc_chunks" ~>
       """WITH w AS (
         |  SELECT doc_id, unnest(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS w,
         |         generate_subscripts(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+'), 1) AS pos
@@ -10957,7 +10796,7 @@ object SparkEntry {
     // Element/ordinal pairs via DuckDB's zipped unnest +
     // generate_subscripts; the moment formulas are stated exactly as
     // the Spark side computes them.
-    "q118_embed_stats" ->
+    "q118_embed_stats" ~>
       """WITH v AS (
         |  SELECT label, CAST(unnest(embedding) AS DOUBLE) AS x,
         |         generate_subscripts(embedding, 1) - 1 AS dim
@@ -10967,7 +10806,7 @@ object SparkEntry {
         | round((sum(x * x) - sum(x) * sum(x) / count(*)) / count(*), 4) AS var_pop
         |FROM v GROUP BY label, dim ORDER BY label, dim""".stripMargin,
 
-    "q98_curriculum" ->
+    "q98_curriculum" ~>
       """WITH d AS (
         |  SELECT doc_id,
         |    len(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS toks,
@@ -10985,7 +10824,7 @@ object SparkEntry {
     // BPE is iterative (not SQL-expressible); the gate pins the
     // deterministic token totals per verified scale plus the in-query
     // lossless-roundtrip count, which must be exactly zero.
-    "q97_bpe_encode" ->
+    "q97_bpe_encode" ~>
       """SELECT 'bpe_roundtrip_lossless' AS gate,
         | (SELECT count(*) FROM documents) AS n_docs,
         | CAST(CASE (SELECT count(*) FROM documents)
@@ -10995,7 +10834,7 @@ object SparkEntry {
 
     // Features via the q89-parity expressions, network via generated
     // SQL arithmetic from the same seeded weights (TorchOracle).
-    "q96_model_quality" -> {
+    "q96_model_quality" ~> {
       val m = qualityModel
       val inpSelect =
         """SELECT doc_id,
@@ -11028,14 +10867,14 @@ object SparkEntry {
     // Pinned constants (see the query comment): 50 planted twins, all
     // caught by the clustered path, zero false drops; n_rows follows
     // the table size.
-    "q95_semantic_dedup" ->
+    "q95_semantic_dedup" ~>
       """SELECT 'semantic_dedup_subset_of_global' AS gate,
         | (SELECT count(*) + 50 FROM embeddings) AS n_rows,
         | CAST(50 AS BIGINT) AS n_dropped,
         | CAST(50 AS BIGINT) AS n_global_dropped,
         | CAST(0 AS BIGINT) AS subset_violations""".stripMargin,
 
-    "q90_pii_scrub" ->
+    "q90_pii_scrub" ~>
       """SELECT doc_id,
         |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
         |  CAST(len(regexp_extract_all(text, '\+?[0-9]{3}[-. ]?[0-9]{3}[-. ]?[0-9]{4}')) AS BIGINT) AS n_phones,
@@ -11046,7 +10885,7 @@ object SparkEntry {
         |    '\+?[0-9]{3}[-. ]?[0-9]{3}[-. ]?[0-9]{4}', '<PHONE>', 'g')) AS scrub_fp
         |FROM documents ORDER BY doc_id""".stripMargin,
 
-    "q89_gopher_rules" ->
+    "q89_gopher_rules" ~>
       """WITH m AS (
         |  SELECT doc_id,
         |    CAST(len(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS BIGINT) AS n_words,
@@ -11080,7 +10919,7 @@ object SparkEntry {
 
     // Excision from raw gram strings; the doc LEFT JOIN keeps
     // token-less docs (Spark's posexplode_outer does the same).
-    "q88_span_excise" ->
+    "q88_span_excise" ~>
       """WITH toks AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws FROM documents),
         |wins AS (
@@ -11118,20 +10957,20 @@ object SparkEntry {
     // Constants measured per verified scale (sf0.01 = the driver's
     // gate, sf0.1 = the local 10x re-check); an unknown scale pins an
     // impossible value so it fails LOUDLY rather than vacuously.
-    "q23_simhash_pairs" ->
+    "q23_simhash_pairs" ~>
       """SELECT 'simhash_h3_subset_of_jaccard05' AS gate,
         | CAST(CASE (SELECT count(*) FROM documents)
         |   WHEN 500 THEN 17 WHEN 5000 THEN 118 ELSE -1 END AS BIGINT) AS n_pairs,
         | CAST(0 AS BIGINT) AS false_positives""".stripMargin,
 
-    "q25_ann_lsh" ->
+    "q25_ann_lsh" ~>
       """SELECT 'lsh_recall_at_5' AS metric,
         | (SELECT count(DISTINCT vec_id) FROM embeddings WHERE vec_id < 20) AS n_queries,
         | CAST(CASE (SELECT count(*) FROM embeddings)
         |   WHEN 500 THEN 0.35 WHEN 2000 THEN 0.45 ELSE -1 END AS DOUBLE) AS recall_floor,
         | true AS pass""".stripMargin,
 
-    "q39_ann_ivf" ->
+    "q39_ann_ivf" ~>
       """SELECT 'ivf_recall_at_5' AS metric,
         | (SELECT count(DISTINCT vec_id) FROM embeddings WHERE vec_id < 20) AS n_queries,
         | CAST(CASE (SELECT count(*) FROM embeddings)
@@ -11143,7 +10982,7 @@ object SparkEntry {
     // via GREATEST, argmax via first-max-wins CASE). Safe because the
     // iris model's smallest runner-up logit gap is 2.42 (measured over
     // all 314 rows), far above f32/f64 drift.
-    "q27_torch_iris" -> {
+    "q27_torch_iris" ~> {
       val m = irisOracleModel
       val fIn = (0 until m.inDim).map(i => s"features[${i + 1}] AS f$i")
       val aIn = Seq("sl", "sw", "pl", "pw").zipWithIndex.map { case (c, i) => s"$c AS a$i" }
@@ -11155,7 +10994,7 @@ object SparkEntry {
           s"${TorchOracle.armArgmax(m, "a")} AS inferred FROM ${TorchOracle.lastCte(m)}")
     },
 
-    "q28_torch_batched" -> {
+    "q28_torch_batched" ~> {
       val m = irisOracleModel
       val aIn = Seq("sl", "sw", "pl", "pw").zipWithIndex.map { case (c, i) => s"$c AS a$i" }
       TorchOracle.mlpArgmaxSql(m,
@@ -11166,14 +11005,14 @@ object SparkEntry {
           s"FROM ${TorchOracle.lastCte(m)} ORDER BY sl, sw, pl, pw")
     },
 
-    "q21_jaccard_pairs" -> jaccardOracle,
+    "q21_jaccard_pairs" ~> jaccardOracle,
     // MinHash-LSH with exact verification reproduces the brute-force
     // result whenever band recall holds (32 bands x 4 rows => a
     // threshold-boundary 0.8-jaccard pair is missed with prob
     // (1 - 0.8^4)^32 ~= 5e-8) -> same oracle as the exact query.
-    "q22_minhash_lsh" -> jaccardOracle,
+    "q22_minhash_lsh" ~> jaccardOracle,
 
-    "q19_langid" ->
+    "q19_langid" ~>
       """WITH t AS (
         |  SELECT doc_id, list_distinct(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS ws
         |  FROM documents),
@@ -11194,7 +11033,7 @@ object SparkEntry {
         |      ELSE 'und' END AS lang_pred
         |FROM s ORDER BY doc_id""".stripMargin,
 
-    "q32_fact_join_monthly" ->
+    "q32_fact_join_monthly" ~>
       """SELECT CAST(epoch(date_trunc('month', o_orderdate)) AS BIGINT) AS month, n_name,
         | round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue,
         | CAST(count(*) AS BIGINT) AS n_items
@@ -11204,7 +11043,7 @@ object SparkEntry {
         |JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY 1, 2 ORDER BY month, n_name""".stripMargin,
 
-    "q50_array_ops" ->
+    "q50_array_ops" ~>
       """SELECT vec_id,
         | round((CAST(embedding AS DOUBLE[]))[1], 6) AS first,
         | round(list_max(CAST(embedding AS DOUBLE[])), 6) AS vmax,
@@ -11213,7 +11052,7 @@ object SparkEntry {
         | round(list_sum(CAST(embedding AS DOUBLE[])), 6) AS vsum
         |FROM embeddings ORDER BY vec_id""".stripMargin,
 
-    "q51_quartile_buckets" ->
+    "q51_quartile_buckets" ~>
       """WITH b AS (
         |  SELECT quantile_cont(o_totalprice, 0.25) AS q1,
         |         quantile_cont(o_totalprice, 0.5) AS q2,
@@ -11225,7 +11064,7 @@ object SparkEntry {
         | round(sum(o_totalprice), 2) AS total, CAST(count(*) AS BIGINT) AS n
         |FROM orders, b GROUP BY 1 ORDER BY quartile""".stripMargin,
 
-    "q33_embed_neardup" ->
+    "q33_embed_neardup" ~>
       """WITH base AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |shifted AS (
@@ -11238,7 +11077,7 @@ object SparkEntry {
         |WHERE list_cosine_similarity(a.e, b.e) >= 0.98
         |ORDER BY a, b""".stripMargin,
 
-    "q34_asof_join" ->
+    "q34_asof_join" ~>
       """WITH u AS (
         |  SELECT user_id, epoch_us(ts) AS tsu, event_id, value, 0 AS side
         |  FROM events WHERE event_type = 'purchase'
@@ -11255,7 +11094,7 @@ object SparkEntry {
         |SELECT event_id, user_id, tsu, p_event, round(p_value, 2) AS p_value
         |FROM w WHERE side = 1 ORDER BY event_id""".stripMargin,
 
-    "q35_hash_split" ->
+    "q35_hash_split" ~>
       """WITH b AS (
         |  SELECT CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER)
         |           % 20 AS bucket,
@@ -11266,14 +11105,14 @@ object SparkEntry {
         | CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(ntok) AS BIGINT) AS n_tokens
         |FROM b GROUP BY 1 ORDER BY split""".stripMargin,
 
-    "q36_cube" ->
+    "q36_cube" ~>
       """SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls,
         | round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue,
         | CAST(count(*) AS BIGINT) AS n
         |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
         |ORDER BY rf, ls""".stripMargin,
 
-    "q37_stats_profile" ->
+    "q37_stats_profile" ~>
       """SELECT l_returnflag,
         | round(corr(l_quantity, l_extendedprice), 6) AS qty_price_corr,
         | round(stddev_samp(l_extendedprice), 4) AS price_sd,
@@ -11282,13 +11121,13 @@ object SparkEntry {
         | round(max(l_extendedprice), 2) AS price_max
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
 
-    "q44_grouping_sets" ->
+    "q44_grouping_sets" ~>
       """SELECT coalesce(l_returnflag, '-') AS rf, coalesce(l_linestatus, '-') AS ls,
         | sum(l_quantity) AS sum_qty, CAST(count(*) AS BIGINT) AS n
         |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
         |ORDER BY rf, ls""".stripMargin,
 
-    "q45_pivot" ->
+    "q45_pivot" ~>
       """SELECT user_id,
         | round(sum(CASE WHEN event_type = 'click' THEN value END), 2) AS click,
         | round(sum(CASE WHEN event_type = 'error' THEN value END), 2) AS error,
@@ -11297,13 +11136,13 @@ object SparkEntry {
         | round(sum(CASE WHEN event_type = 'view' THEN value END), 2) AS view
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
 
-    "q46_moving_avg" ->
+    "q46_moving_avg" ~>
       """SELECT event_id, user_id,
         | round(avg(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
         |   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS mavg
         |FROM events ORDER BY event_id""".stripMargin,
 
-    "q38_vocab_topk" ->
+    "q38_vocab_topk" ~>
       """WITH toks AS (
         |  SELECT unnest(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS token
         |  FROM documents)
@@ -11311,14 +11150,14 @@ object SparkEntry {
         |WHERE len(token) > 0
         |GROUP BY token ORDER BY n DESC, token LIMIT 50""".stripMargin,
 
-    "q40_salted_join" ->
+    "q40_salted_join" ~>
       """SELECT p_type,
         | round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue,
         | CAST(count(*) AS BIGINT) AS n
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |GROUP BY p_type ORDER BY p_type""".stripMargin,
 
-    "q41_approx_distinct" ->
+    "q41_approx_distinct" ~>
       """SELECT l_returnflag,
         | CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_exact,
         | TRUE AS approx_ok
@@ -11327,19 +11166,19 @@ object SparkEntry {
     // MaxSim: per (doc token, query term) cosine from the dyadic
     // VALUES table (exact f64 dots/norms, the engine's exact
     // dot/(sqrt*sqrt) op shape), per-term max, term-order sum, 6dp.
-    "q226_maxsim_colbert" -> maxSimOracle,
+    "q226_maxsim_colbert" ~> maxSimOracle,
 
     // ANN-shortlisted MaxSim: fetch/nprobe sized so the true top-10
     // survives candidate generation (measured at both SFs), so the
     // EXACT full-scan oracle applies — stage-1 overreach would
     // hash-mismatch, not silently degrade.
-    "q233_maxsim_ann" -> maxSimOracle,
+    "q233_maxsim_ann" ~> maxSimOracle,
 
     // Bitext margin: all cross pairs' raw cosine for the ranks (the
     // q24 contract), 6dp values for every arithmetic input, the
     // rank-pivoted neighbor sums in explicit c1+..+c4 order, margin
     // re-quantized before threshold and pick.
-    "q225_bitext_margin" ->
+    "q225_bitext_margin" ~>
       """WITH xe AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e
         |           FROM embeddings WHERE vec_id % 2 = 0),
         |ye AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e
@@ -11394,7 +11233,7 @@ object SparkEntry {
     // is bit-equal exactly when both endpoints' top-4 neighbor sets
     // (forward AND backward) matched brute's, the marginFromTopK
     // shared-arithmetic contract.
-    "q228_bitext_margin_ann" ->
+    "q228_bitext_margin_ann" ~>
       """SELECT 'bitext_margin_ann_vs_brute' AS metric,
         | CAST(CASE (SELECT count(*) FROM embeddings)
         |   WHEN 500 THEN 228 WHEN 2000 THEN 907 ELSE -2 END AS BIGINT) AS n_brute,
@@ -11410,7 +11249,7 @@ object SparkEntry {
     // mismatch counts are STRUCTURAL zeros (append-encode is
     // bit-identical to rebuild under a frozen index — the query
     // computes both and counts divergences).
-    "q255_ann_index_append" ->
+    "q255_ann_index_append" ~>
       """SELECT 'ann_index_append' AS metric,
         | CAST((SELECT count(*) FROM embeddings WHERE vec_id % 10 <> 7)
         |   AS BIGINT) AS n_standing,
@@ -11421,7 +11260,7 @@ object SparkEntry {
         | CAST(0 AS BIGINT) AS n_search_mismatch,
         | true AS pass""".stripMargin,
 
-    "q24_knn_brute" ->
+    "q24_knn_brute" ~>
       """WITH q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings WHERE vec_id < 20),
         |p AS (SELECT q_id, vec_id,
         |       list_cosine_similarity(CAST(qe AS DOUBLE[]), CAST(embedding AS DOUBLE[])) AS cos
@@ -11432,7 +11271,7 @@ object SparkEntry {
         |SELECT q_id, CAST(rank AS INT) AS rank, vec_id, round(cos, 6) AS cos
         |FROM r WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
 
-    "q26_multimodal_meta" ->
+    "q26_multimodal_meta" ~>
       """SELECT doc_id,
         | CAST(32 + octet_length(encode(text)) % 600 AS INT) AS width,
         | CAST(32 + (octet_length(encode(text)) * 7) % 600 AS INT) AS height,
@@ -11441,7 +11280,7 @@ object SparkEntry {
         |   AS format
         |FROM documents ORDER BY doc_id""".stripMargin,
 
-    "q42_frame_sample" ->
+    "q42_frame_sample" ~>
       """WITH f AS (
         |  SELECT doc_id, text,
         |   unnest(range(0, CAST(greatest(floor((length(text) - 1) / 32.0), 0) AS INT) + 1))
@@ -11451,7 +11290,7 @@ object SparkEntry {
         | md5(substring(text, CAST(frame_no * 32 + 1 AS INT), 32)) AS fp
         |FROM f ORDER BY doc_id, frame_no""".stripMargin,
 
-    "q43_pack_bins" ->
+    "q43_pack_bins" ~>
       """WITH t AS (
         |  SELECT doc_id,
         |   CAST(len(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS INT) AS n_tokens
@@ -11461,7 +11300,7 @@ object SparkEntry {
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2048) AS BIGINT) AS bin
         |FROM t ORDER BY doc_id""".stripMargin,
 
-    "q52_training_pipeline" ->
+    "q52_training_pipeline" ~>
       """WITH exact AS (
         |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(lower(trim(text)))),
         |base AS (SELECT d.doc_id, d.text FROM documents d JOIN exact USING (doc_id)),
@@ -11509,14 +11348,14 @@ object SparkEntry {
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2048) AS BIGINT) AS bin
         |FROM s ORDER BY doc_id""".stripMargin,
 
-    "q53_in_subquery" ->
+    "q53_in_subquery" ~>
       """SELECT CAST(year(o_orderdate) AS INT) AS yr,
         | CAST(count(*) AS BIGINT) AS n, round(sum(o_totalprice), 2) AS total
         |FROM orders
         |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_nationkey < 5)
         |GROUP BY year(o_orderdate) ORDER BY yr""".stripMargin,
 
-    "q54_scalar_subquery" ->
+    "q54_scalar_subquery" ~>
       """SELECT o_orderkey, o_custkey, o_totalprice,
         | (SELECT floor(CAST(sum(CAST(o2.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
         |    / count(*) * 100) / 100
@@ -11527,14 +11366,14 @@ object SparkEntry {
         |   FROM orders o3 WHERE o3.o_custkey = o.o_custkey)
         |ORDER BY o_orderkey""".stripMargin,
 
-    "q55_lead_lag" ->
+    "q55_lead_lag" ~>
       """SELECT o_custkey, o_orderkey,
         | CAST(date_diff('day', lag(o_orderdate) OVER w, o_orderdate) AS BIGINT) AS gap_days,
         | lead(o_totalprice) OVER w AS next_price
         |FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
         |ORDER BY o_custkey, o_orderkey""".stripMargin,
 
-    "q56_ntile" ->
+    "q56_ntile" ~>
       """WITH spend AS (
         |  SELECT o_custkey, round(sum(o_totalprice), 2) AS total
         |  FROM orders GROUP BY o_custkey),
@@ -11545,7 +11384,7 @@ object SparkEntry {
         | round(sum(total), 2) AS spend
         |FROM d GROUP BY decile ORDER BY decile""".stripMargin,
 
-    "q57_range_join" ->
+    "q57_range_join" ~>
       """WITH e AS (
         |  SELECT event_id, user_id, event_type,
         |   CAST(floor(epoch(ts)) AS BIGINT) AS sec FROM events),
@@ -11556,13 +11395,13 @@ object SparkEntry {
         |  ON c.user_id = v.user_id AND v.vsec BETWEEN c.sec - 3600 AND c.sec
         |GROUP BY c.event_id, c.user_id ORDER BY event_id""".stripMargin,
 
-    "q58_regex_extract" ->
+    "q58_regex_extract" ~>
       """SELECT doc_id,
         | coalesce(regexp_extract(text, '([A-Za-z]{6,})', 1), '') AS first_long,
         | CAST(len(regexp_extract_all(text, '[aeiou]{2}')) AS INT) AS n_vowel_pairs
         |FROM documents ORDER BY doc_id""".stripMargin,
 
-    "q59_stratified_sample" ->
+    "q59_stratified_sample" ~>
       """WITH b AS (
         |  SELECT doc_id, lang,
         |   CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER)
@@ -11572,7 +11411,7 @@ object SparkEntry {
         |WHERE bucket < CASE WHEN lang = 'en' THEN 50 ELSE 25 END
         |ORDER BY doc_id""".stripMargin,
 
-    "q60_bpe_tokens" ->
+    "q60_bpe_tokens" ~>
       """SELECT lang,
         | CAST(sum(len(regexp_extract_all(text, '[A-Za-z0-9]{1,4}|[^A-Za-z0-9 \t\n\x0B\f\r]')))
         |   AS BIGINT) AS bpe_tokens,
@@ -11587,7 +11426,7 @@ object SparkEntry {
     // for the oracle because the sf0.01 near-dup graph is tiny; the
     // Spark side uses iterative min-label propagation instead (bounded
     // shuffles, no closure materialization).
-    "q61_dedup_clusters" ->
+    "q61_dedup_clusters" ~>
       s"""WITH RECURSIVE $jaccardCtes,
          |p AS (SELECT a, b FROM jac WHERE jaccard >= 0.8),
          |edges AS (SELECT a AS x, b AS y FROM p UNION SELECT b, a FROM p),
@@ -11606,7 +11445,7 @@ object SparkEntry {
     // piece carries its running cumulative length (window sum), so
     // span start = cum − len(content) and end = cum; string_agg in
     // turn order rebuilds the identical rendering and span list.
-    "q188_sft_render" ->
+    "q188_sft_render" ~>
       """WITH toks AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws
         |  FROM documents),
@@ -11652,7 +11491,7 @@ object SparkEntry {
     // pairwise 6-dp sims, takes the max penalty, and argmaxes again
     // (ties → smaller vec_id). All sel_t CTEs MATERIALIZED (each is
     // read by every later step).
-    "q187_mmr_rerank" -> {
+    "q187_mmr_rerank" ~> {
       val steps = (2 to 5).map { t =>
         s"""m$t AS MATERIALIZED (
            |  SELECT c.q_id, c.vec_id, c.rel, max(s.sim) AS ms
@@ -11713,7 +11552,7 @@ object SparkEntry {
 
     // The sorted-runs walk restated as per-char group counts:
     // entropy = (ln N − Σ n_c·ln n_c / N) / ln 2.
-    "q186_char_entropy" ->
+    "q186_char_entropy" ~>
       """WITH ch AS (
         |  SELECT doc_id, unnest(regexp_extract_all(text, '[\s\S]')) AS c
         |  FROM documents),
@@ -11737,7 +11576,7 @@ object SparkEntry {
     // estimate is the min over the 4 bucket counts. Top-20 grams
     // always find all 4 buckets (their own occurrences guarantee
     // non-empty counters).
-    "q185_cms_heavy" ->
+    "q185_cms_heavy" ~>
       """WITH toks AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws
         |  FROM documents),
@@ -11768,7 +11607,7 @@ object SparkEntry {
 
     // The same md5 gate/cut arithmetic and 1-based inclusive list
     // slices; the PSM string is rebuilt verbatim and fingerprinted.
-    "q184_fim" ->
+    "q184_fim" ~>
       """WITH t AS (
         |  SELECT doc_id,
         |    regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS a,
@@ -11800,7 +11639,7 @@ object SparkEntry {
 
     // The struct-ordered min/max picks restated as two ranked windows
     // with the identical tie-breaks.
-    "q183_dpo_pairs" ->
+    "q183_dpo_pairs" ~>
       """WITH d AS (
         |  SELECT doc_id % 50 AS prompt_id, doc_id,
         |    CAST(len(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS BIGINT)
@@ -11829,7 +11668,7 @@ object SparkEntry {
     // division). 6-dp rounding absorbs sum-order ulps — the iteration
     // contracts toward the dominant eigenvector, so they never
     // amplify.
-    "q182_pca_top" ->
+    "q182_pca_top" ~>
       s"""WITH $pcaCtes,
          |proj AS (
          |  SELECT e.vec_id, sum(CAST(e.embedding[v.i] AS DOUBLE) * v.v) AS p
@@ -11840,7 +11679,7 @@ object SparkEntry {
     // The q184 PSM rebuild feeding the same clipped-count arithmetic:
     // per-(doc, gram) counts joined cand-against-ref, least() clipping,
     // brevity penalty and the ln/exp geometric mean restated verbatim.
-    "q196_bleu_fim" ->
+    "q196_bleu_fim" ~>
       """WITH t0 AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS a,
         |    len(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS n
@@ -11920,25 +11759,25 @@ object SparkEntry {
     // generated token joins back in at position max(pos)+1. Three
     // steps, three chained forward passes, one final 3-column row per
     // doc.
-    "q194_torch_generate" -> generateOracle(banned = Nil),
+    "q194_torch_generate" ~> generateOracle(banned = Nil),
 
     // Forced decoder ids + begin-suppress: step 1 restricted to the
     // non-suppressed vocabulary, step 2 a constant CTE, step 3 plain.
-    "q235_torch_gen_forced" -> generateOracle(banned = Nil,
+    "q235_torch_gen_forced" ~> generateOracle(banned = Nil,
       forced = Map(1 -> 5), beginSuppress = Seq(1, 2)),
 
     // Watermarked decode: per-step full logits, +delta on the md5-
     // parity green list, first-max-wins argmax.
-    "q239_torch_gen_watermark" -> watermarkOracle(steps = 3, delta = 2.0),
+    "q239_torch_gen_watermark" ~> watermarkOracle(steps = 3, delta = 2.0),
 
     // gamma = 1/4 watermarked decode: the same chain with the green
     // CASE at mod 4 < 1.
-    "q251_torch_gen_watermark_g4" ->
+    "q251_torch_gen_watermark_g4" ~>
       watermarkOracle(steps = 3, delta = 2.0, num = 1, den = 4),
 
     // gamma = 1/4 detection: D = 4g − T, z = D/sqrt(3T), flag
     // D > 0 ∧ D² > 12T — integer-only at rational gamma.
-    "q252_watermark_detect_g4" -> {
+    "q252_watermark_detect_g4" ~> {
       val vocab = genModel.seqHead.get.vocab
       s"""WITH words AS (
          |  SELECT doc_id, CAST('0x' || substring(md5(w), 1, 8) AS BIGINT)
@@ -11970,12 +11809,12 @@ object SparkEntry {
 
     // Contrastive search: top-3 candidate expansion, per-position
     // hidden read-out, cosine degeneration penalty, (score DESC, tid).
-    "q241_torch_gen_contrastive" -> contrastiveOracle(steps = 2,
+    "q241_torch_gen_contrastive" ~> contrastiveOracle(steps = 2,
       topK = 3, alpha = 0.5),
 
     // Shared-prefix decode: the plain greedy chain over toks0 =
     // 3 lang-derived prefix tokens + the doc's first 9 tokens.
-    "q242_torch_gen_prefix_shared" -> {
+    "q242_torch_gen_prefix_shared" ~> {
       val vocab = genModel.seqHead.get.vocab
       generateOracle(banned = Nil, steps = 2, toks0Sql = Some(
         s"""words AS (
@@ -12002,7 +11841,7 @@ object SparkEntry {
 
     // Watermark detection: adjacent-pair green parity counts and the
     // integer-exact z > 2 flag.
-    "q240_watermark_detect" -> {
+    "q240_watermark_detect" ~> {
       val vocab = genModel.seqHead.get.vocab
       s"""WITH words AS (
          |  SELECT doc_id, CAST('0x' || substring(md5(w), 1, 8) AS BIGINT)
@@ -12035,7 +11874,7 @@ object SparkEntry {
     // The q194 step chain over the bias-masked LM: the ALiBi slope and
     // the causal window restate in closed form inside the score join
     // (exact dyadics on both engines).
-    "q215_torch_alibi_decode" -> generateOracle(banned = Nil,
+    "q215_torch_alibi_decode" ~> generateOracle(banned = Nil,
       m = alibiLmModel, headBias = Some(alibiLmHeadBias)),
 
     // Temperature + top-p sampling with seeded md5 draws and 6-dp
@@ -12043,12 +11882,12 @@ object SparkEntry {
     // (sampledOracle).
     // Multi-return: the q203 chain over (doc, sequence) synthetic ids
     // with the salted seed key; sequence 0 IS q203.
-    "q232_torch_gen_multireturn" -> sampledKOracle(steps = 2,
+    "q232_torch_gen_multireturn" ~> sampledKOracle(steps = 2,
       temperature = 0.5, topP = 0.9, k = 3),
 
     // Self-diversity gate: q232's bit-pinned generation chain wrapped
     // as a CTE, then pure-integer Distinct-n aggregation.
-    "q237_gen_self_diversity" -> {
+    "q237_gen_self_diversity" ~> {
       val vocab = genModel.seqHead.get.vocab
       s"""WITH gens AS MATERIALIZED (
          |${sampledKOracle(steps = 2, temperature = 0.5, topP = 0.9, k = 3)}
@@ -12065,17 +11904,17 @@ object SparkEntry {
          |ORDER BY d1t.doc_id""".stripMargin
     },
 
-    "q203_torch_gen_sampled" -> sampledOracle(steps = 2,
+    "q203_torch_gen_sampled" ~> sampledOracle(steps = 2,
       temperature = 0.5, topP = 0.9),
 
     // Constrained sampling: banned ids omitted from the candidate
     // unpivot — the allowed-set renormalization on both engines.
-    "q209_torch_sampled_banned" -> sampledOracle(steps = 2,
+    "q209_torch_sampled_banned" ~> sampledOracle(steps = 2,
       temperature = 0.5, topP = 0.9, banned = Seq(1, 4)),
 
     // Top-k + top-p composition: the rank cutoff joins the nucleus
     // CTE's WHERE — both prefix filters on the same candidate order.
-    "q211_torch_gen_topk" -> sampledOracle(steps = 2,
+    "q211_torch_gen_topk" ~> sampledOracle(steps = 2,
       temperature = 0.5, topP = 0.9, topK = 3),
 
     // Image dHash near-dup: closed-form pixels (the q128 formula at
@@ -12084,7 +11923,7 @@ object SparkEntry {
     // to HUGEINT and bit 63 overflows signed — halves avoid both),
     // brute-force hamming <= 3 pairs (the oracle may all-pairs; the
     // engine must not).
-    "q223_image_dhash_dedup" ->
+    "q223_image_dhash_dedup" ~>
       """WITH imgs AS (
         |  SELECT doc_id AS id, doc_id AS src, 0 AS pert FROM documents
         |  UNION ALL
@@ -12127,7 +11966,7 @@ object SparkEntry {
     // only CROSS pairs (standing corpus id < 10000, new batch id >=
     // 10000) — the oracle may brute-force the cross product; the
     // engine must ride the banded index probe.
-    "q231_image_index_incremental" ->
+    "q231_image_index_incremental" ~>
       """WITH imgs AS (
         |  SELECT doc_id AS id, doc_id AS src, 0 AS pert FROM documents
         |  UNION ALL
@@ -12169,7 +12008,7 @@ object SparkEntry {
     // Chunk quality gate: the q222 chunk CTEs + the q186 entropy
     // formula per chunk, 6dp-quantized before the keep threshold and
     // the best-chunk pick (idx tiebreak).
-    "q224_chunk_quality_gate" ->
+    "q224_chunk_quality_gate" ~>
       """WITH toks AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws
         |  FROM documents),
@@ -12209,7 +12048,7 @@ object SparkEntry {
     // Token-window chunking: per doc, ceil((L-16)/12)+1 windows at
     // stride 12 (DuckDB list slicing clamps at L exactly like Spark's
     // slice-with-length); chunk text compared as md5 fingerprints.
-    "q222_chunk_windows" ->
+    "q222_chunk_windows" ~>
       """WITH toks AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws
         |  FROM documents),
@@ -12230,66 +12069,66 @@ object SparkEntry {
     // Repetition penalty + no-repeat-bigram: per step, seen tokens
     // rescale in f64 and bigram completions are banned (fallback:
     // n_ok = 0 lifts the ban), then first-max-wins argmax.
-    "q213_torch_gen_norepeat" -> repPenaltyOracle(steps = 3,
+    "q213_torch_gen_norepeat" ~> repPenaltyOracle(steps = 3,
       penalty = 1.25),
 
     // Banned phrases: last-two-token pivot per step, each phrase a
     // NOT(tid = last AND suffix-match) candidate filter, then
     // first-max-wins (bannedPhraseOracle).
-    "q227_torch_gen_badwords" -> bannedPhraseOracle(steps = 3,
+    "q227_torch_gen_badwords" ~> bannedPhraseOracle(steps = 3,
       phrases = Seq(Seq(4, 4), Seq(0, 4), Seq(1, 1, 1))),
 
     // The same controls composed under the nucleus sampler: the
     // candidate unpivot gains the seen-join rescale (before the
     // temperature) and the bigram anti-join with the n_ok = 0 lift.
-    "q216_torch_sampled_norepeat" -> sampledOracle(steps = 2,
+    "q216_torch_sampled_norepeat" ~> sampledOracle(steps = 2,
       temperature = 0.5, topP = 0.9, penalty = Some((1.25, 2))),
 
     // EOS early stop: every step still computed; the final select
     // NULLs the post-eos columns (the engine's short arrays through
     // try_element_at).
-    "q217_torch_gen_eos" -> generateOracle(banned = Nil, eos = Some(1)),
+    "q217_torch_gen_eos" ~> generateOracle(banned = Nil, eos = Some(1)),
 
     // min_new_tokens: steps 1-2 argmax over vocab-minus-eos (the hard
     // floor ban), steps 3-4 the plain eos-stop chain — gen4 NULLs only
     // on an eos at step 3, the first step past the floor.
-    "q230_torch_gen_min_new" -> generateOracle(banned = Nil,
+    "q230_torch_gen_min_new" ~> generateOracle(banned = Nil,
       eos = Some(1), steps = 4, minNew = 2),
 
     // Min-p: the `p6 >= minP * max(p6)` floor joins the nucleus cut
     // (third prefix filter on the same candidate order); topP = 1
     // isolates it.
-    "q218_torch_gen_minp" -> sampledOracle(steps = 2,
+    "q218_torch_gen_minp" ~> sampledOracle(steps = 2,
       temperature = 0.5, topP = 1.0, minP = 0.25),
 
     // Typical sampling: the deviation-ordered keep-set CTE joins the
     // nucleus chain (same shared builder).
-    "q234_torch_gen_typical" -> sampledOracle(steps = 2,
+    "q234_torch_gen_typical" ~> sampledOracle(steps = 2,
       temperature = 0.5, topP = 1.0, typicalP = 0.8),
 
     // Watermarked nucleus sampling: the green CASE joins the
     // candidate unpivot before the temperature (same shared builder).
-    "q243_torch_sampled_watermark" -> sampledOracle(steps = 2,
+    "q243_torch_sampled_watermark" ~> sampledOracle(steps = 2,
       temperature = 0.5, topP = 0.9, watermark = 2.0),
 
     // Best-of-n: the multi-return chain + raw-log-softmax rerank.
-    "q244_torch_best_of_n" -> bestOfNOracle(steps = 2,
+    "q244_torch_best_of_n" ~> bestOfNOracle(steps = 2,
       temperature = 0.5, topP = 0.9, k = 3),
 
     // Contrastive decoding: two forward chains per step, the
     // plausibility head, the (le6 - la6 DESC, tid) pick.
     // Contrastive decoding under beams: the q248 two-model chain on
     // the q197 synthetic-beam-id recipe, per-beam plausibility heads.
-    "q253_torch_cd_beam" -> cdBeamOracle(alpha = 0.125),
+    "q253_torch_cd_beam" ~> cdBeamOracle(alpha = 0.125),
 
-    "q248_torch_contrastive_decoding" -> contrastiveDecodingOracle(
+    "q248_torch_contrastive_decoding" ~> contrastiveDecodingOracle(
       steps = 2, alpha = 0.125),
 
     // Stochastic speculative sampling: both models' softmaxes on the
     // 6dp grid, the three seeded draws restated, the residual walk in
     // (mass DESC, tid) order with the engine's renormalized running
     // cumulative; an all-zero residual keeps the draft token.
-    "q247_torch_spec_sampled" -> {
+    "q247_torch_spec_sampled" ~> {
       def fwdP(model: graft.torch.TorchScriptModel, toksName: String): String = {
         val fc = new graft.torch.TorchScriptModel(IndexedSeq(
           model.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
@@ -12378,38 +12217,38 @@ object SparkEntry {
     // prefix distributions, both acceptance draws, both residual
     // walks and the all-accepted bonus pick — every arm of the
     // prefix-acceptance rule restated as the engine computes it.
-    "q249_torch_spec_gamma" ->
+    "q249_torch_spec_gamma" ~>
       specGammaOracle(graft.torch.TorchQuant.quantize(genModel, 7)),
 
     // Self-speculative: the same gamma=2 chain with the draft
     // forwards generated from the early-exit submodel.
-    "q256_torch_spec_selfdraft" -> specGammaOracle(earlyExitModel),
+    "q256_torch_spec_selfdraft" ~> specGammaOracle(earlyExitModel),
 
     // Prompt-lookup: integer bigram-match self-join + the plain
     // greedy rollout (greedy-equivalence verification emits a
     // rollout prefix — no new numerics).
-    "q262_torch_prompt_lookup" -> promptLookupOracle,
+    "q262_torch_prompt_lookup" ~> promptLookupOracle,
 
     // Tree-draft: draft top-2 chains via the synthetic-id beam
     // recipe, target side = the plain greedy rollout, acceptance as
     // set-membership CASEs.
-    "q263_torch_tree_draft" ->
+    "q263_torch_tree_draft" ~>
       treeDraftOracle(graft.torch.TorchQuant.quantize(genModel, 7)),
 
     // Fused sampling: the q203 chain with the bigram-prior term in
     // the candidate CTE (the watermark's slot, bi/rs at top level).
-    "q268_torch_sampled_fused" ->
+    "q268_torch_sampled_fused" ~>
       sampledOracle(steps = 2, temperature = 0.5, topP = 0.9,
         fusionLam = 0.5),
 
     // Multi-draft stochastic verification: one draft + one target
     // forward, both acceptance rounds, the normalized-residual
     // bridge and the salt-r2 final walk.
-    "q269_torch_spec_multidraft" ->
+    "q269_torch_spec_multidraft" ~>
       multiDraftOracle(graft.torch.TorchQuant.quantize(genModel, 7)),
 
     // Tree telemetry: the full q263 chain wrapped in a GROUP BY.
-    "q270_torch_tree_telemetry" ->
+    "q270_torch_tree_telemetry" ~>
       s"""WITH base AS MATERIALIZED (
          |${treeDraftOracle(graft.torch.TorchQuant.quantize(genModel, 7))}
          |)
@@ -12419,48 +12258,48 @@ object SparkEntry {
          |FROM base GROUP BY n_acc ORDER BY n_acc""".stripMargin,
 
     // Watermarked fused beams: the fused recipe with wadj pre-lse.
-    "q271_torch_beam_fused_watermark" ->
+    "q271_torch_beam_fused_watermark" ~>
       fusedBeamOracle(lam = 0.5, delta = 2.0),
 
     // Tree-draft serving loop: per-cycle tree replays (the q263
     // synthetic-id recipe at toks0, then at the gen1-grown stream)
     // against the greedy chain.
-    "q272_torch_tree_loop" ->
+    "q272_torch_tree_loop" ~>
       treeDraftLoopOracle(graft.torch.TorchQuant.quantize(genModel, 7)),
 
     // Bounded-KV greedy-tree serving (q301): the q272 chain with the
     // windowed visibility in the rollout AND the tree expansions.
-    "q301_torch_tree_greedy_loop_kv" -> treeDraftLoopOracle(
+    "q301_torch_tree_greedy_loop_kv" ~> treeDraftLoopOracle(
       graft.torch.TorchQuant.quantize(genModel, 7),
       kvWindow = Some((1, 4))),
 
     // Self-draft tree: the same recipe with the draft forwards from
     // the early-exit submodel (earlyExitBlockSql arm of fwdP).
-    "q273_torch_tree_selfdraft" -> treeDraftOracle(earlyExitModel),
+    "q273_torch_tree_selfdraft" ~> treeDraftOracle(earlyExitModel),
 
     // Typical-acceptance tree: entropy-scaled thresholds, accepted-
     // children unpivots, picked-child prefix growth, per-arm argmax.
-    "q277_torch_tree_typical" ->
+    "q277_torch_tree_typical" ~>
       treeDraftTypicalOracle(earlyExitModel, eps = 0.25, alpha = 0.5),
 
     // Stochastic tree (SpecInfer proper): two q269 cells chained
     // through the emitted token + the all-accepted bonus pick;
     // level-2 arms NULL below a level-1 stop.
-    "q280_torch_tree_stochastic" ->
+    "q280_torch_tree_stochastic" ~>
       treeStochasticOracle(graft.torch.TorchQuant.quantize(genModel, 7)),
 
     // Stochastic-tree serving loop: three q269 cells — cycle-1
     // level 1 (salts 0), then level 2 and cycle-2 level 1 both over
     // the grown prefix (salts 2 and 4); f2 switches on rnd1.
-    "q287_torch_tree_stochastic_loop" -> treeStochasticLoopOracle(None),
+    "q287_torch_tree_stochastic_loop" ~> treeStochasticLoopOracle(None),
 
     // Bounded-KV stochastic-tree serving (q299): the q287 chain with
     // the windowed visibility threaded through every cell's forwards.
-    "q299_torch_tree_loop_kv" -> treeStochasticLoopOracle(Some((1, 4))),
+    "q299_torch_tree_loop_kv" ~> treeStochasticLoopOracle(Some((1, 4))),
 
     // Serving auto-config (q300): the three knob oracles nested as
     // scoped CTEs, each contributing its picked row.
-    "q300_serving_autoconf" ->
+    "q300_serving_autoconf" ~>
       s"""WITH ag AS MATERIALIZED (
          |$autoGammaOracle
          |),
@@ -12486,22 +12325,22 @@ object SparkEntry {
     // half-chain over the grown prefix for the n_acc = 0 docs'
     // second cycle — early-exit draft top-2, target prob/thr, the
     // typical pick or the argmax fallback.
-        "q292_torch_tree_typical_loop" -> treeTypicalLoopOracle(None),
+    "q292_torch_tree_typical_loop" ~> treeTypicalLoopOracle(None),
 
     // Bounded-KV typical-tree serving (q302): the q292 chain with
     // the windowed visibility in every target forward.
-    "q302_torch_tree_typical_loop_kv" ->
+    "q302_torch_tree_typical_loop_kv" ~>
       treeTypicalLoopOracle(Some((1, 4))),
 
     // Re-rotated prompt-lookup serving (q303): the q298 chain with
     // the relPos target and slot closed forms in the rollout.
-    "q303_torch_lookup_loop_relpos" -> promptLookupLoopOracle(
+    "q303_torch_lookup_loop_relpos" ~> promptLookupLoopOracle(
       kvWindow = Some((1, 4)), m = alibiRelLmModel,
       headBias = Some(alibiRelHeadBias(1, 4))),
 
     // Re-rotated greedy-tree serving (q304): the q301 chain with the
     // relPos pair and slot closed forms in every forward.
-    "q304_torch_tree_loop_relpos" -> treeDraftLoopOracle(
+    "q304_torch_tree_loop_relpos" ~> treeDraftLoopOracle(
       graft.torch.TorchQuant.quantize(alibiRelLmModel, 7),
       kvWindow = Some((1, 4)), m = alibiRelLmModel,
       headBias = Some(alibiRelHeadBias(1, 4))),
@@ -12509,7 +12348,7 @@ object SparkEntry {
     // Auto-branch: the q249 chain (branch = 1 — bit-exact by the
     // spec pin) and the q280 chain (branch = 2) aggregated per
     // candidate, exact integer scores yield·(15 // (2·branch + 1)).
-    "q290_torch_auto_branch" -> {
+    "q290_torch_auto_branch" ~> {
       val dmq = graft.torch.TorchQuant.quantize(genModel, 7)
       s"""WITH g1 AS MATERIALIZED (
          |${specGammaOracle(dmq)}
@@ -12538,7 +12377,7 @@ object SparkEntry {
     // Per-source acceptance drift: the q249 chain joined to each
     // doc's source, per-source yields, and the cross-multiplied
     // below-corpus flag.
-    "q291_torch_spec_drift" -> {
+    "q291_torch_spec_drift" ~> {
       val dmq = graft.torch.TorchQuant.quantize(genModel, 7)
       s"""WITH base AS MATERIALIZED (
          |${specGammaOracle(dmq)}
@@ -12564,14 +12403,14 @@ object SparkEntry {
     // Watermark × speculative: the q249 chain with the three TARGET
     // softmaxes green-biased (+2.0 pre-lse, keyed on each prefix's
     // last token); draft softmaxes unbiased.
-    "q281_torch_spec_watermark" ->
+    "q281_torch_spec_watermark" ~>
       specGammaOracle(graft.torch.TorchQuant.quantize(genModel, 7),
         wmDelta = 2.0),
 
     // Bounded-KV greedy decode: the q215 ALiBi chain with the
     // sink-or-window visibility predicate on every attention join —
     // the batch restatement of the engine's incremental eviction.
-    "q282_torch_kv_window" -> generateOracle(banned = Nil,
+    "q282_torch_kv_window" ~> generateOracle(banned = Nil,
       m = alibiLmModel, headBias = Some(alibiLmHeadBias),
       kvWindow = Some((1, 4))),
 
@@ -12579,36 +12418,36 @@ object SparkEntry {
     // candidate gamma (yield = Σ min(n_acc, g) + 1), ranked by the
     // exact integer score yield·(6 // (g+1)) — integer-only end to
     // end.
-    "q283_torch_auto_gamma" -> autoGammaOracle,
+    "q283_torch_auto_gamma" ~> autoGammaOracle,
 
     // Stochastic prompt-lookup: point-mass-draft acceptance u < p(x),
     // zeroed-token residual walks, per-arm bonus picks.
-    "q274_torch_prompt_lookup_sampled" -> promptLookupSampledOracle,
+    "q274_torch_prompt_lookup_sampled" ~> promptLookupSampledOracle,
 
     // Multi-draft serving loop: two cells chained through the
     // emitted token, position-offset salts.
-    "q275_torch_spec_multidraft_loop" ->
+    "q275_torch_spec_multidraft_loop" ~>
       multiDraftLoopOracle(graft.torch.TorchQuant.quantize(genModel, 7)),
 
     // Fused diverse beams: the two-group recipe over fused candidate
     // scores (bigram-prior joins on each beam's last token).
-    "q276_torch_beam_diverse_fused" ->
+    "q276_torch_beam_diverse_fused" ~>
       diverseFusedBeamOracle(lamLm = 0.5, lamDiv = 0.5),
 
     // Prompt-lookup serving loop: cycle 1's lookup over toks0, cycle
     // 2's over the grown stream, both pure-integer self-joins; the
     // emitted tokens are the greedy rollout truncated to 2.
-    "q266_torch_prompt_lookup_loop" -> promptLookupLoopOracle(),
+    "q266_torch_prompt_lookup_loop" ~> promptLookupLoopOracle(),
 
     // Bounded-KV lookup serving (q298): the q266 chain with the
     // windowed q282 rollout nested — emissions follow the windowed
     // visibility, lookup arms stay full-stream integer self-joins.
-    "q298_torch_lookup_loop_kv" ->
+    "q298_torch_lookup_loop_kv" ~>
       promptLookupLoopOracle(kvWindow = Some((1, 4))),
 
     // Prompt-lookup telemetry: the full q262 chain wrapped in a
     // GROUP BY over (n_drf, n_acc).
-    "q267_torch_prompt_lookup_telemetry" ->
+    "q267_torch_prompt_lookup_telemetry" ~>
       s"""WITH base AS MATERIALIZED (
          |$promptLookupOracle
          |)
@@ -12620,17 +12459,17 @@ object SparkEntry {
 
     // Fused beams: the beam recipe with the frozen bigram-prior term
     // on every candidate, joined on each beam's own last token.
-    "q264_torch_beam_fused" -> fusedBeamOracle(lam = 0.5),
+    "q264_torch_beam_fused" ~> fusedBeamOracle(lam = 0.5),
 
     // Watermarked diverse beams: the two-group recipe over BIASED
     // per-beam log-softmaxes (wadj before every lse).
-    "q265_torch_beam_diverse_watermark" ->
+    "q265_torch_beam_diverse_watermark" ~>
       diverseWatermarkBeamOracle(delta = 2.0, num = 1, den = 2,
         lambda = 0.5),
 
     // Acceptance telemetry: the full q249 chain wrapped in a GROUP BY
     // over the acceptance arm.
-    "q259_torch_spec_telemetry" ->
+    "q259_torch_spec_telemetry" ~>
       s"""WITH base AS MATERIALIZED (
          |${specGammaOracle(graft.torch.TorchQuant.quantize(genModel, 7))}
          |)
@@ -12641,7 +12480,7 @@ object SparkEntry {
 
     // Shallow fusion: the watermark step shape with the frozen
     // bigram-LM term joined on the last token.
-    "q257_torch_gen_fused" -> fusedOracle(steps = 3, lam = 0.5),
+    "q257_torch_gen_fused" ~> fusedOracle(steps = 3, lam = 0.5),
 
     // Speculative serving loop (gamma 2, maxNewTokens 2): the q249
     // cycle-1 chain (no bonus needed — an all-accepted cycle already
@@ -12649,14 +12488,14 @@ object SparkEntry {
     // a SECOND cycle's first-position arm over toks0 + correction:
     // draft pick d3, acceptance a3 against the target's distribution
     // at the grown prefix, residual walk r3.
-    "q254_torch_spec_loop" ->
+    "q254_torch_spec_loop" ~>
       specLoopOracle(graft.torch.TorchQuant.quantize(genModel, 7)),
 
     // Bounded-KV speculative serving (q284): the q254 chain with the
     // sink-or-window visibility predicate on EVERY forward (draft and
     // target alike) — the batch restatement of both sessions' (and
     // their forks') incremental eviction.
-    "q284_torch_spec_loop_kv" ->
+    "q284_torch_spec_loop_kv" ~>
       specLoopOracle(graft.torch.TorchQuant.quantize(genModel, 7),
         kvWindow = Some((1, 4))),
 
@@ -12664,14 +12503,14 @@ object SparkEntry {
     // three TARGET softmaxes green-biased (prev = prompt tail, draft
     // 1, then the cycle-1 emission) — q281's bias cycled through the
     // serving loop.
-    "q285_torch_spec_loop_watermark" ->
+    "q285_torch_spec_loop_watermark" ~>
       specLoopOracle(graft.torch.TorchQuant.quantize(genModel, 7),
         wmDelta = 2.0),
 
     // Watermark × bounded-KV serving (q288): the same chain with BOTH
     // parameters threaded — biased target softmaxes AND the
     // sink-or-window predicate on every forward.
-    "q288_torch_spec_loop_wm_kv" ->
+    "q288_torch_spec_loop_wm_kv" ~>
       specLoopOracle(graft.torch.TorchQuant.quantize(genModel, 7),
         wmDelta = 2.0, kvWindow = Some((1, 4))),
 
@@ -12680,7 +12519,7 @@ object SparkEntry {
     // convention — their internal CTE names never collide), green
     // pairs recounted by the shared md5 predicate over (prompt tail,
     // f1) and (f1, f2), corpus integer totals per path.
-    "q289_torch_wm_accel_detect" -> {
+    "q289_torch_wm_accel_detect" ~> {
       val dmq = graft.torch.TorchQuant.quantize(genModel, 7)
       val vocab = genModel.seqHead.get.vocab
       def grn(a: String, b: String): String =
@@ -12731,7 +12570,7 @@ object SparkEntry {
     // ANN-vs-brute A/B, StressR20), not an algebraic identity. If a
     // NEW fixture/SF ever flips this query while the decode suite
     // stays green, diagnose shortlist RECALL first, not decode drift.
-    "q246_rag_generate" -> {
+    "q246_rag_generate" ~> {
       val vocab = genModel.seqHead.get.vocab
       generateOracle(banned = Nil, steps = 2, toks0Sql = Some(
         s"""nb AS (
@@ -12767,7 +12606,7 @@ object SparkEntry {
 
     // Self-consistency: the k=5 single-step multi-return chain +
     // integer majority (count DESC, tid ASC).
-    "q245_torch_self_consistency" ->
+    "q245_torch_self_consistency" ~>
       s"""WITH gens AS MATERIALIZED (
          |${sampledKOracle(steps = 1, temperature = 0.8, topP = 0.9, k = 5)}
          |),
@@ -12785,71 +12624,71 @@ object SparkEntry {
 
     // Grammar-constrained decoding: per-doc DFA state column, argmax
     // CASE dispatched per state, transitions via a VALUES join.
-    "q219_torch_gen_dfa" -> generateOracle(banned = Nil,
+    "q219_torch_gen_dfa" ~> generateOracle(banned = Nil,
       dfa = Some((DecodeDfaAllowed, decodeDfaNext))),
 
     // Encoder-decoder generation: the source encoding + cross k/v
     // restated once, each step a nested-WITH decoder forward
     // (crossGenOracle).
-    "q206_torch_cross_gen" -> crossGenOracle(steps = 2),
+    "q206_torch_cross_gen" ~> crossGenOracle(steps = 2),
 
     // Cross knob parity: top-k + repetition penalty + bigram ban
     // threaded into the cross sampled chain (same shared builder).
-    "q220_torch_cross_knobs" -> crossGenOracle(steps = 2,
+    "q220_torch_cross_knobs" ~> crossGenOracle(steps = 2,
       sampled = Some((0.5, 0.9)), topK = 3, penalty = Some((1.25, 2))),
 
     // Cross eos: the greedy chain with post-eos columns NULLed.
-    "q221_torch_cross_eos" -> crossGenOracle(steps = 2, eos = Some(5)),
+    "q221_torch_cross_eos" ~> crossGenOracle(steps = 2, eos = Some(5)),
 
     // Sampled cross decode: the q206 step forward with the q203
     // sampled chain over each step's LM-head logits.
-    "q207_torch_cross_sampled" -> crossGenOracle(steps = 2,
+    "q207_torch_cross_sampled" ~> crossGenOracle(steps = 2,
       sampled = Some((0.5, 0.9))),
 
     // Cross beam search: the q197 synthetic-doc-id recipe through the
     // q206 decoder forward, cross k/v duplicated per beam id.
-    "q208_torch_cross_beam" -> crossGenOracle(steps = 2, beam = true),
+    "q208_torch_cross_beam" ~> crossGenOracle(steps = 2, beam = true),
 
     // Seq2seq NLL filter: one all-positions decoder forward, the NLL
     // join against the next token, keep vs the dyadic threshold.
-    "q210_seq2seq_filter" -> crossGenOracle(steps = 1,
+    "q210_seq2seq_filter" ~> crossGenOracle(steps = 1,
       nllKeepBelow = Some(6.4375), promptCap = 6),
 
     // The identical chain with the banned ids omitted from every
     // step's argmax CASE.
-    "q195_torch_gen_banned" -> generateOracle(banned = Seq(1, 4)),
+    "q195_torch_gen_banned" ~> generateOracle(banned = Seq(1, 4)),
 
     // Beam search: two forward passes, synthetic beam ids, joint
     // log-prob ranking (see beamOracle).
-    "q197_torch_beam" -> beamOracle,
+    "q197_torch_beam" ~> beamOracle,
 
     // Watermarked beams: the beamOracle recipe over BIASED logits
     // (green CASE keyed on each beam's last token, applied before
     // the per-beam lse).
-    "q260_torch_beam_watermark" ->
+    "q260_torch_beam_watermark" ~>
       watermarkBeamOracle(delta = 2.0, num = 1, den = 2),
 
     // Length-normalized beam with EOS: the step-2 frontier is live
     // expansions / sqrt(2) UNION the completed step-1 beams at their
     // own length (beamLenNormOracle).
-    "q214_torch_beam_lennorm" -> beamLenNormOracle(eos = 1, alpha = 0.5),
+    "q214_torch_beam_lennorm" ~> beamLenNormOracle(eos = 1, alpha = 0.5),
 
     // Constrained beams: per-beam seen-rescale after the full-vocab
     // lse, hard bans filtered, bigram ban with the n_ok = 0 lift.
-    "q229_torch_beam_constrained" -> constrainedBeamOracle,
+    "q229_torch_beam_constrained" ~> constrainedBeamOracle,
 
     // Diverse beam groups: two beamOracle chains, group B's cand rows
     // joined to group A's per-step pick counts (dyadic 0.5 penalty).
-    "q236_torch_beam_diverse" -> diverseBeamOracle,
+    "q236_torch_beam_diverse" ~> diverseBeamOracle,
 
     // Diverse beams × eos + length penalty: the q236 two-group recipe
     // with q214's completed-beam arm per group; group B's penalty
     // counts only group A's newly-appended tokens.
-    "q250_torch_beam_diverse_eos" -> diverseBeamEosOracle(eos = 1, alpha = 0.5),
+    "q250_torch_beam_diverse_eos" ~> diverseBeamEosOracle(eos = 1, alpha = 0.5),
 
     // q181's corruption chain rebuilds the candidate; the clipped
     // counts divide by the REFERENCE totals.
-    "q201_rouge_corrupt" ->
+    "q201_rouge_corrupt" ~>
       """WITH t AS (
         |  SELECT doc_id,
         |    unnest(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS tk,
@@ -12922,7 +12761,7 @@ object SparkEntry {
     // delta-frozen sketch and rate gate, q186's entropy gate, q184's
     // FIM arithmetic (out length = n + 3 sentinels for psm), q43's
     // exclusive-prefix-sum packing window.
-    "q200_ingest_v4" ->
+    "q200_ingest_v4" ~>
       """WITH v2 AS MATERIALIZED (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 7 = 0 THEN text || ' [v2]' ELSE text END AS text
@@ -13005,7 +12844,7 @@ object SparkEntry {
     // Five scoped forward chains: draft steps 1-2 growing the token
     // CTE, target verdicts at all three prefixes; the acceptance rule
     // is pure integer CASE logic.
-    "q199_torch_spec_decode" -> {
+    "q199_torch_spec_decode" ~> {
       def fwd(model: graft.torch.TorchScriptModel, toksName: String): String = {
         val fc = new graft.torch.TorchScriptModel(IndexedSeq(
           model.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
@@ -13077,11 +12916,11 @@ object SparkEntry {
     // decoder CTE, three target prefix distributions, both residual
     // walks and the bonus pick, all against the shared source
     // encoding prelude.
-    "q261_torch_cross_spec_gamma" -> crossSpecGammaOracle,
+    "q261_torch_cross_spec_gamma" ~> crossSpecGammaOracle,
 
     // Cross-pair acceptance telemetry: the q261 chain wrapped in the
     // q259 GROUP-BY yield histogram.
-    "q286_torch_pair_spec_telemetry" ->
+    "q286_torch_pair_spec_telemetry" ~>
       s"""WITH base AS MATERIALIZED (
          |$crossSpecGammaOracle
          |)
@@ -13096,18 +12935,18 @@ object SparkEntry {
     // grows the decoder prefix by the correction and replays the
     // single-position arm (d3/a3/r3) for the second emitted token;
     // the all-accepted bonus never surfaces at maxNewTokens = 2.
-    "q279_torch_cross_spec_loop" -> crossSpecLoopOracle(),
+    "q279_torch_cross_spec_loop" ~> crossSpecLoopOracle(),
 
     // Bounded-KV pair serving: the q279 chain with the sink-or-window
     // predicate on every decoder self-attention join.
-    "q293_torch_pair_loop_kv" -> crossSpecLoopOracle(Some((0, 2))),
+    "q293_torch_pair_loop_kv" ~> crossSpecLoopOracle(Some((0, 2))),
 
     // Retrieval canary (q278): deterministic end to end (frozen q246
     // index artifacts + exact rerank + brute-force A/B on a pinned
     // slice), so the integer recall numerators pin per SF — the
     // q106/q112 recall-gate pattern; the spec asserts canary ==
     // exhaustive A/B semantics.
-    "q278_ann_recall_canary" ->
+    "q278_ann_recall_canary" ~>
       """SELECT k, n_sampled, hits, expected FROM (VALUES
         | (1,
         |  CAST(20 AS BIGINT),
@@ -13131,7 +12970,7 @@ object SparkEntry {
     // nprobe = 8 everywhere — interior, not forced); only the hits
     // ladder varies. The spec pins rung == standalone canary and the
     // hand-restated pick law.
-    "q294_ann_auto_nprobe" -> autoNprobeOracle,
+    "q294_ann_auto_nprobe" ~> autoNprobeOracle,
 
     // Re-rotated bounded KV (q295): the q282 windowed-attention
     // restatement over the no-PosEmbedOp 6-row-table model, with the
@@ -13140,7 +12979,7 @@ object SparkEntry {
     // count, so the batch restatement equals the incremental eviction
     // exactly (each position's row used its own kept set and slots at
     // its own append time).
-    "q295_torch_kv_relpos" -> generateOracle(banned = Nil,
+    "q295_torch_kv_relpos" ~> generateOracle(banned = Nil,
       m = alibiRelLmModel, headBias = Some(alibiRelHeadBias(1, 4)),
       kvWindow = Some((1, 4))),
 
@@ -13148,7 +12987,7 @@ object SparkEntry {
     // with the bias-position target/draft pair and the slot closed
     // forms in every forward pass — acceptance walk, residuals, and
     // roll-forward restate unchanged over the windowed+slot attention.
-    "q296_torch_spec_loop_relpos" -> specLoopOracle(
+    "q296_torch_spec_loop_relpos" ~> specLoopOracle(
       graft.torch.TorchQuant.quantize(alibiRelLmModel, 7),
       kvWindow = Some((1, 4)), targetModel = alibiRelLmModel,
       headBias = Some(alibiRelHeadBias(1, 4))),
@@ -13158,12 +12997,12 @@ object SparkEntry {
     // MATERIALIZED CTE (the q289 convention — internal CTE names
     // repeat safely), then the divergence counts, the budget check,
     // and the integer pick all DERIVED in SQL — nothing pinned.
-    "q297_torch_auto_window" -> autoWindowOracle,
+    "q297_torch_auto_window" ~> autoWindowOracle,
 
     // Cross stochastic speculative: the q247 softmax/pick/acceptance
     // chain over ONE target + ONE draft cross forward (the
     // CrossOracleGen prelude shared, the draft's kh layered on it).
-    "q258_torch_cross_spec_sampled" -> {
+    "q258_torch_cross_spec_sampled" ~> {
       val gt = new CrossOracleGen(crossGenModel)
       val gd = new CrossOracleGen(
         graft.torch.TorchQuant.quantize(crossGenModel, 7))
@@ -13236,7 +13075,7 @@ object SparkEntry {
          |ORDER BY a.doc_id""".stripMargin
     },
 
-    "q212_torch_cross_spec" -> {
+    "q212_torch_cross_spec" ~> {
       val gt = new CrossOracleGen(crossGenModel)
       val gd = new CrossOracleGen(
         graft.torch.TorchQuant.quantize(crossGenModel, 7))
@@ -13289,7 +13128,7 @@ object SparkEntry {
 
     // Two scoped forward chains — fp32 weights and the dequantized
     // int8 grid — joined per doc.
-    "q198_torch_ptq" -> {
+    "q198_torch_ptq" ~> {
       def chain(m: graft.torch.TorchScriptModel): String = {
         val fc = new graft.torch.TorchScriptModel(IndexedSeq(
           m.ops.collectFirst { case l: graft.torch.LinearLayer => l }.get))
@@ -13312,7 +13151,7 @@ object SparkEntry {
 
     // The same derivation (edit/drop/add rules) and a FULL OUTER JOIN
     // on md5 fingerprints.
-    "q192_corpus_diff" ->
+    "q192_corpus_diff" ~>
       """WITH v1 AS (SELECT doc_id, text FROM documents),
         |v2 AS (
         |  SELECT doc_id,
@@ -13333,7 +13172,7 @@ object SparkEntry {
 
     // The window sums restated verbatim; integer scores keep every
     // sum exact, so z is bit-identical before the 6-dp rounding.
-    "q193_reward_norm" ->
+    "q193_reward_norm" ~>
       """WITH d AS (
         |  SELECT doc_id % 50 AS prompt_id, doc_id,
         |    CAST(len(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS BIGINT)
@@ -13354,7 +13193,7 @@ object SparkEntry {
     // The sketch counters + per-(doc, gram) min-bucket estimates; the
     // 5%-of-docs threshold via integer division, empty-gram docs kept
     // by the LEFT JOIN.
-    "q190_cms_boiler" ->
+    "q190_cms_boiler" ~>
       """WITH toks AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws
         |  FROM documents),
@@ -13393,7 +13232,7 @@ object SparkEntry {
     // one min/max row, per-(shard, dim) centroids, and the cosine
     // restated as d/(√nx·√nc); the global baseline rides a UNION ALL
     // shard −1.
-    "q191_pc1_shards" ->
+    "q191_pc1_shards" ~>
       s"""WITH $pcaCtes,
          |proj AS MATERIALIZED (
          |  SELECT e.vec_id, sum(CAST(e.embedding[v.i] AS DOUBLE) * v.v) AS pr
@@ -13432,7 +13271,7 @@ object SparkEntry {
     // The shared PCA chain plus the element-wise residual: x′ = x −
     // p·v, ‖x′‖ as the per-row sum of squares (the exact expression
     // the engine's residualNorm HOF walks).
-    "q189_abtt_whiten" ->
+    "q189_abtt_whiten" ~>
       s"""WITH $pcaCtes,
          |proj AS MATERIALIZED (
          |  SELECT e.vec_id, sum(CAST(e.embedding[v.i] AS DOUBLE) * v.v) AS pr
@@ -13453,7 +13292,7 @@ object SparkEntry {
     // span starts flag transitions, the running span number names the
     // sentinels, string_agg(ORDER BY pos) rebuilds the identical
     // strings.
-    "q181_span_corrupt" ->
+    "q181_span_corrupt" ~>
       """WITH t AS (
         |  SELECT doc_id,
         |    unnest(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS tk,
@@ -13504,7 +13343,7 @@ object SparkEntry {
 
     // The q89 rule metrics + q90 PII regexes per doc, aggregated per
     // source; integer-sum ratios under 6-dp rounding.
-    "q180_data_card" ->
+    "q180_data_card" ~>
       """WITH m AS (
         |  SELECT source, lang,
         |    CAST(len(regexp_extract_all(text, '[^ \t\n\x0B\f\r]+')) AS BIGINT) AS nw,
@@ -13548,7 +13387,7 @@ object SparkEntry {
     // survivor set -> the q167 bucket window over the selected set ->
     // the q165 temperature rates over the remainder -> the q43
     // packing window over the final kept set.
-    "q179_ingest_v3" ->
+    "q179_ingest_v3" ~>
       """WITH u AS (
         |  SELECT doc_id,
         |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END) ||
@@ -13653,7 +13492,7 @@ object SparkEntry {
 
     // Epochs restated: floor + md5-bucket threshold on the 1e8 grid
     // (the q63 arithmetic).
-    "q178_epoch_upsample" ->
+    "q178_epoch_upsample" ~>
       """WITH e AS (
         |  SELECT doc_id, source,
         |   CAST(CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 1.25
@@ -13672,7 +13511,7 @@ object SparkEntry {
 
     // Both brute-force rankings restated (full dims and the [1:16]
     // prefix slice), recall floored to 0.05 buckets.
-    "q177_matryoshka_recall" ->
+    "q177_matryoshka_recall" ~>
       """WITH q AS (SELECT vec_id AS q_id, embedding AS qe
         |           FROM embeddings WHERE vec_id < 20),
         |fullp AS (SELECT q_id, vec_id,
@@ -13700,7 +13539,7 @@ object SparkEntry {
 
     // q43's packing window + a per-bin start-offset window, grouped
     // to ordered member/offset lists.
-    "q176_pack_boundaries" ->
+    "q176_pack_boundaries" ~>
       """WITH t AS (
         |  SELECT doc_id,
         |   CAST(len(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS INT) AS n_tokens
@@ -13721,7 +13560,7 @@ object SparkEntry {
         |FROM s GROUP BY bin ORDER BY bin""".stripMargin,
 
     // q24's brute-force chain + the label-mismatch join predicate.
-    "q175_hard_negatives" ->
+    "q175_hard_negatives" ~>
       """WITH q AS (SELECT vec_id AS q_id, embedding AS qe, label AS q_label
         |           FROM embeddings WHERE vec_id < 20),
         |p AS (SELECT q_id, q_label, vec_id, label AS neg_label,
@@ -13736,7 +13575,7 @@ object SparkEntry {
 
     // q61's recursive-CC oracle + a quality window: survivor = rank 1
     // by (n_chars DESC, doc_id) within the cluster.
-    "q174_dedup_best" ->
+    "q174_dedup_best" ~>
       s"""WITH RECURSIVE $jaccardCtes,
          |p AS (SELECT a, b FROM jac WHERE jaccard >= 0.8),
          |edges AS (SELECT a AS x, b AS y FROM p UNION SELECT b, a FROM p),
@@ -13759,7 +13598,7 @@ object SparkEntry {
     // non-empty docs — a trailing window fully inside the previous
     // chunk's overlap would duplicate that suffix verbatim; 0 chunks
     // for token-less docs
-    "q62_chunk" ->
+    "q62_chunk" ~>
       """WITH t AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws FROM documents),
         |c AS (
@@ -13773,7 +13612,7 @@ object SparkEntry {
         | CAST(len(ws[chunk_no * 48 + 1 : chunk_no * 48 + 64]) AS INT) AS chunk_tokens
         |FROM c ORDER BY doc_id, chunk_no""".stripMargin,
 
-    "q63_mix_rebalance" ->
+    "q63_mix_rebalance" ~>
       """WITH counts AS (
         |  SELECT lang, CAST(count(*) AS BIGINT) AS n,
         |   CAST(CASE lang WHEN 'en' THEN 0.40 ELSE 0.15 END AS DOUBLE) AS p
@@ -13792,7 +13631,7 @@ object SparkEntry {
         |SELECT lang, CAST(count(*) AS BIGINT) AS n_kept FROM b
         |WHERE bucket < rate_b GROUP BY lang ORDER BY lang""".stripMargin,
 
-    "q64_decontam" ->
+    "q64_decontam" ~>
       """WITH toks AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws FROM documents),
         |sh AS (
@@ -13810,7 +13649,7 @@ object SparkEntry {
         |FROM corpus c LEFT JOIN hits h USING (doc_id)
         |ORDER BY doc_id""".stripMargin,
 
-    "q65_rarity_score" ->
+    "q65_rarity_score" ~>
       """WITH t AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+') AS ws FROM documents),
         |occ AS (
@@ -13830,7 +13669,7 @@ object SparkEntry {
         |FROM documents d LEFT JOIN pd USING (doc_id)
         |ORDER BY doc_id""".stripMargin,
 
-    "q66_quantize" ->
+    "q66_quantize" ~>
       """WITH b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |s AS (
         |  SELECT vec_id, e,
@@ -13846,7 +13685,7 @@ object SparkEntry {
         |   'string_agg', ',')) AS qfp
         |FROM q ORDER BY vec_id""".stripMargin,
 
-    "q67_tfidf_topterms" ->
+    "q67_tfidf_topterms" ~>
       """WITH terms AS (
         |  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS term
         |  FROM documents),
@@ -13868,13 +13707,13 @@ object SparkEntry {
         | floor(score * 1000000) / 1000000 AS score
         |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
 
-    "q68_approx_quantile" ->
+    "q68_approx_quantile" ~>
       """SELECT l_linestatus,
         | round(quantile_cont(l_extendedprice, 0.5), 4) AS exact_med,
         | TRUE AS approx_ok
         |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
 
-    "q69_winnow_pairs" ->
+    "q69_winnow_pairs" ~>
       """WITH t AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws FROM documents),
         |grams AS (
@@ -13898,7 +13737,7 @@ object SparkEntry {
         |  GROUP BY 1, 2)
         |SELECT a, b, shared FROM pairs WHERE shared >= 2 ORDER BY a, b""".stripMargin,
 
-    "q70_funnel" ->
+    "q70_funnel" ~>
       """WITH e AS (
         |  SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS sec
         |  FROM events),
@@ -13918,7 +13757,7 @@ object SparkEntry {
         |LEFT JOIN p USING (user_id)
         |ORDER BY user_id""".stripMargin,
 
-    "q71_incremental_dedup" ->
+    "q71_incremental_dedup" ~>
       s"""WITH $jaccardCtes
          |SELECT CASE WHEN a < 250 THEN a ELSE b END AS corpus_id,
          |       CASE WHEN a < 250 THEN b ELSE a END AS new_id, jaccard
@@ -13926,7 +13765,7 @@ object SparkEntry {
          |WHERE jaccard >= 0.8 AND ((a < 250) <> (b < 250))
          |ORDER BY corpus_id, new_id""".stripMargin,
 
-    "q72_lateral" ->
+    "q72_lateral" ~>
       """SELECT c_custkey, t.o_orderkey, t.o_totalprice
         |FROM customer,
         |LATERAL (SELECT o_orderkey, o_totalprice FROM orders
@@ -13934,14 +13773,14 @@ object SparkEntry {
         |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
         |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin,
 
-    "q73_decimal_exact" ->
+    "q73_decimal_exact" ~>
       """SELECT o_orderpriority,
         | CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
         |   AS VARCHAR) AS total_exact,
         | CAST(count(*) AS BIGINT) AS n
         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
 
-    "q74_source_profile" ->
+    "q74_source_profile" ~>
       """WITH d AS (
         |  SELECT source, lang,
         |   CAST(len(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS BIGINT) AS ntok,
@@ -13969,7 +13808,7 @@ object SparkEntry {
         | CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
         |FROM d GROUP BY source ORDER BY source""".stripMargin,
 
-    "q75_retrieval_prep" ->
+    "q75_retrieval_prep" ~>
       """WITH toksd AS (
         |  SELECT doc_id, regexp_extract_all(text, '[^ \t\n\x0B\f\r]+') AS ws FROM documents),
         |sh8 AS (
@@ -14008,7 +13847,7 @@ object SparkEntry {
         | CAST(len(ws[chunk_no * 48 + 1 : chunk_no * 48 + 64]) AS INT) AS chunk_tokens
         |FROM ch ORDER BY doc_id, chunk_no""".stripMargin,
 
-    "q76_range_frame" ->
+    "q76_range_frame" ~>
       """SELECT event_id, user_id,
         | CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (
         |   PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
@@ -14016,7 +13855,7 @@ object SparkEntry {
         |   AS VARCHAR) AS trailing_hour
         |FROM events ORDER BY event_id""".stripMargin,
 
-    "q77_join_hint" ->
+    "q77_join_hint" ~>
       """SELECT n_name, round(sum(o_totalprice), 2) AS revenue,
         | CAST(count(*) AS BIGINT) AS n_orders
         |FROM orders o
@@ -14024,7 +13863,7 @@ object SparkEntry {
         |JOIN nation n ON c_nationkey = n_nationkey
         |GROUP BY n_name ORDER BY n_name""".stripMargin,
 
-    "q78_embed_incremental" ->
+    "q78_embed_incremental" ~>
       """WITH base AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |fresh AS (
@@ -14035,7 +13874,7 @@ object SparkEntry {
         |FROM base c JOIN fresh f ON list_cosine_similarity(c.e, f.e) >= 0.98
         |ORDER BY corpus_id, new_id""".stripMargin,
 
-    "q79_setops_all" ->
+    "q79_setops_all" ~>
       """WITH i AS (
         |  SELECT key, CAST(count(*) AS BIGINT) AS n_inter FROM (
         |    SELECT c_nationkey AS key FROM customer
@@ -14050,7 +13889,7 @@ object SparkEntry {
         | coalesce(n_inter, 0) AS n_inter, coalesce(n_except, 0) AS n_except
         |FROM i FULL JOIN e ON i.key = e.key ORDER BY key""".stripMargin,
 
-    "q80_heavy_hitters" ->
+    "q80_heavy_hitters" ~>
       """WITH toks AS (
         |  SELECT unnest(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS token
         |  FROM documents)
@@ -14058,14 +13897,14 @@ object SparkEntry {
         |FROM toks WHERE len(token) > 0
         |GROUP BY token ORDER BY n DESC, token LIMIT 10""".stripMargin,
 
-    "q81_agg_filter" ->
+    "q81_agg_filter" ~>
       """SELECT l_returnflag,
         | CAST(count(*) FILTER (WHERE l_quantity > 25) AS BIGINT) AS n_bulk,
         | CAST(count(*) FILTER (WHERE l_discount > 0.05) AS BIGINT) AS n_discounted,
         | round(sum(l_extendedprice) FILTER (WHERE l_tax > 0.04), 2) AS taxed_base
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
 
-    "q82_array_agg" ->
+    "q82_array_agg" ~>
       """WITH g AS (
         |  SELECT o_custkey, list_sort(list(o_orderkey)) AS ks
         |  FROM orders GROUP BY o_custkey)
@@ -14074,7 +13913,7 @@ object SparkEntry {
         |   'string_agg', ',')) AS ks_fp
         |FROM g ORDER BY o_custkey""".stripMargin,
 
-    "q83_map_type" ->
+    "q83_map_type" ~>
       """WITH pt AS (
         |  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
         |  FROM events GROUP BY user_id, event_type)
@@ -14084,12 +13923,12 @@ object SparkEntry {
         | CAST(count(*) AS INT) AS n_types
         |FROM pt GROUP BY user_id ORDER BY user_id""".stripMargin,
 
-    "q84_null_ordering" ->
+    "q84_null_ordering" ~>
       """SELECT o_orderkey, nullif(o_orderpriority, '1-URGENT') AS prio
         |FROM orders
         |ORDER BY prio ASC NULLS FIRST, o_orderkey LIMIT 200""".stripMargin,
 
-    "q85_session_sequences" ->
+    "q85_session_sequences" ~>
       """WITH e AS (
         |  SELECT user_id, event_id, event_type,
         |   CAST(floor(epoch(ts)) AS BIGINT) AS sec FROM events),
@@ -14113,7 +13952,7 @@ object SparkEntry {
         |FROM sessions GROUP BY user_id, sess_no
         |ORDER BY user_id, sess_no""".stripMargin,
 
-    "q86_date_arithmetic" ->
+    "q86_date_arithmetic" ~>
       """WITH d AS (
         |  SELECT CAST(epoch(date_trunc('quarter', o_orderdate)) AS BIGINT) AS qtr,
         |   CAST(date_diff('day', o_orderdate, l_shipdate) AS INT) AS delay
@@ -14124,14 +13963,14 @@ object SparkEntry {
         | CAST(count(*) AS BIGINT) AS n, CAST(max(delay) AS INT) AS max_delay
         |FROM d GROUP BY 1, 2 ORDER BY qtr, bucket""".stripMargin,
 
-    "q29_settings" ->
+    "q29_settings" ~>
       """SELECT * FROM (VALUES
         | ('torchfusion.batch_size', '1', 'Batch size to be used when processing rows'),
         | ('torchfusion.cuda_device', '0', 'CUDA device to use'),
         | ('torchfusion.device', 'cpu', 'Device to run model on (cpu, cuda, mps, vulkan)'))
         | AS t(name, value, description) ORDER BY name""".stripMargin,
 
-    "q30_set_statement" ->
+    "q30_set_statement" ~>
       "SELECT 'torchfusion.batch_size' AS name, '8' AS value"
   )
 

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Join,
   LocalRelation, LogicalPlan, RepartitionOperation, Sort, Window}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Scale-adaptive input spread for single-`mapPartitions` kernels
   * (decode loops, batched inference, codecs).
@@ -13,9 +14,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * count: a small single-file parquet scan plans as ONE task, so the
   * whole kernel serializes on one core while the rest of the cluster
   * idles (opt guide §2.5 "input skew: one huge unsplittable file …
-  * repartition immediately after the read"). When the input has fewer
-  * partitions than the session's default parallelism, round-robin
-  * repartition up to it; otherwise pass the frame through untouched.
+  * repartition immediately after the read"). When the input has at
+  * least two partitions fewer than the session's default parallelism,
+  * round-robin repartition up to it; otherwise pass the frame through
+  * untouched.
   *
   * Scale behaviour: at real scale the scan already carries >= the
   * cluster's parallelism in partitions, so the guard makes this a
@@ -66,42 +68,66 @@ object Spread {
     //     exists for cannot occur, so there is nothing to fix.
     // This retires the per-site noSpread labels the r19 rowCount-only
     // guard needed (stats lose rowCount through joins).
-    val hasExchange = plan.exists {
-      case _: Join | _: Aggregate | _: Window | _: Sort |
-           _: RepartitionOperation | _: GlobalLimit => true
-      case _ => false
-    }
-    if (hasExchange) return df
-    // Exchange-free scan-shaped plan: estimate the scan's partition
-    // count from the LEAVES, without toRdd (round-20: physically
-    // planning the subtree cost ~50 ms of driver time per kernel
-    // construction — ~20 s across a bench — for a yes/no decision).
-    //  - file scans: Spark's own split math (maxPartitionBytes /
-    //    openCostInBytes / bytesPerCore) over the relation's cached
-    //    file listing;
-    //  - checkpointed RDDs: the RDD's real partition count;
-    //  - anything else: fall back to planning (safe — exchange-free).
-    val conf = df.sparkSession.sessionState.conf
-    val leaves = plan.collectLeaves()
-    val estimated: Option[Long] = leaves.foldLeft(Option(0L)) {
+    if (!exchangeFree(plan)) return df
+    // anything the leaf estimate cannot size: fall back to planning
+    // (safe — exchange-free)
+    val parts = leafPartitions(plan, df.sparkSession)
+      .getOrElse(df.queryExecution.toRdd.getNumPartitions.toLong)
+    // spread only when at least two cores would idle: one idle core does
+    // not pay for the extra stage (q100's one-partition scan on two
+    // cores ran 0.12 s slower per execution spread than not)
+    if (parts < target - 1) df.repartition(target) else df
+  }
+
+  /** No operator in `plan` needs a shuffle (joins, aggregates, windows,
+    * sorts, repartitions and global limits all may). */
+  def exchangeFree(plan: LogicalPlan): Boolean = !plan.exists {
+    case _: Join | _: Aggregate | _: Window | _: Sort |
+         _: RepartitionOperation | _: GlobalLimit => true
+    case _ => false
+  }
+
+  /** The partition count of an exchange-free plan, estimated from its
+    * LEAVES without physical planning (round-20: planning the subtree
+    * cost ~50 ms per kernel construction — ~20 s across a bench — for a
+    * yes/no decision):
+    *  - file scans: Spark's own split and packing math
+    *    (FilePartition.maxSplitBytes / getFilePartitions) over the
+    *    relation's cached file listing;
+    *  - checkpointed RDDs: the RDD's real partition count;
+    *  - local relations: one.
+    * None when any other leaf is present. */
+  def leafPartitions(plan: LogicalPlan, spark: SparkSession): Option[Long] = {
+    val conf = spark.sessionState.conf
+    val minParts = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(spark.sparkContext.defaultParallelism)).max(1)
+    plan.collectLeaves().foldLeft(Option(0L)) {
       case (Some(acc), l: LogicalRelation) => l.relation match {
-        case fs: HadoopFsRelation =>
-          val total = fs.location.sizeInBytes
-          val nFiles = fs.location.inputFiles.length.max(1).toLong
-          val openCost = conf.filesOpenCostInBytes
-          val bytesPerCore = (total + nFiles * openCost) /
-            df.sparkSession.sparkContext.defaultParallelism.max(1)
-          val maxSplit = math.min(conf.filesMaxPartitionBytes,
-            math.max(openCost, bytesPerCore)).max(1L)
-          Some(acc + ((total + nFiles * openCost + maxSplit - 1) / maxSplit))
+        case fs: HadoopFsRelation => Some(acc + filePartitions(fs, conf, minParts))
         case _ => None
       }
       case (Some(acc), r: LogicalRDD) => Some(acc + r.rdd.getNumPartitions)
       case (Some(acc), _: LocalRelation) => Some(acc + 1L)
       case _ => None
     }
-    val parts = estimated.getOrElse(df.queryExecution.toRdd.getNumPartitions.toLong)
-    if (parts < target) df.repartition(target) else df
+  }
+
+  private def filePartitions(fs: HadoopFsRelation, conf: SQLConf, minParts: Int): Long = {
+    val openCost = conf.filesOpenCostInBytes
+    val lens = fs.location.listFiles(Nil, Nil).flatMap(_.files.map(_.getLen))
+    val maxSplit = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, lens.map(_ + openCost).sum / minParts)).max(1L)
+    // every file cut at maxSplit, the pieces packed largest first into
+    // partitions of at most maxSplit bytes, each piece costing openCost
+    val pieces = lens.flatMap(l => (0L until l by maxSplit).map(o => math.min(maxSplit, l - o)))
+    var parts = 0L
+    var filled = -1L
+    for (p <- pieces.sorted(Ordering[Long].reverse)) {
+      if (filled < 0 || filled + p > maxSplit) { parts += 1; filled = 0L }
+      filled += p + openCost
+    }
+    parts
   }
 
   // LogicalPlan.exists by predicate (TreeNode.find) — local helper so

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftColumns.{column, expression}
+import org.apache.spark.sql.functions.col
 import graft.functions.{TokCount, TokIds}
 
 /** The ONE cross-engine tokenizer definition (ADVICE r9).
@@ -48,8 +49,25 @@ object Tok {
   def ids(text: Column, mod: Long, maxTokens: Int = Int.MaxValue): Column =
     column(TokIds(expression(text), mod, maxTokens))
 
-  /** Token count of `text` without hashing ([[graft.functions.TokCount]]):
-    * filter rows on it, not on `size(ids(...))`, so each row is hashed
-    * once. */
+  /** Token count of `text` without hashing ([[graft.functions.TokCount]]). */
   def count(text: Column): Column = column(TokCount(expression(text)))
+
+  /** `count(text) >= n`, scanning each row only up to its n-th token.
+    * Filter rows on it, not on `size(ids(...))`, so each row is hashed
+    * once. */
+  def atLeast(text: Column, n: Int): Column = column(TokCount(expression(text), n)) >= n
+
+  /** The `docs` whose `text` has at least `minTokens` tokens, spread over
+    * the session's cores ([[Spread]]) before any tokenizing projection:
+    * a small document table scans as one task, and ids selected before
+    * the spread would all be hashed in that task. */
+  def spread(docs: DataFrame, minTokens: Int = 1): DataFrame =
+    Spread(docs.filter(atLeast(col("text"), minTokens)))
+
+  /** A torch model's input: `doc_id` and the `tok_ids` of the first
+    * `maxLen` tokens of `text`, mod `vocab`, for the documents with at
+    * least `minTokens` tokens, hashed after the [[spread]]. */
+  def input(docs: DataFrame, vocab: Long, maxLen: Int = Int.MaxValue,
+      minTokens: Int = 1): DataFrame =
+    spread(docs, minTokens).select(col("doc_id"), ids(col("text"), vocab, maxLen).as("tok_ids"))
 }

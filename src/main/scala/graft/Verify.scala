@@ -52,21 +52,33 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // each oracle string is built on its own: one that throws (a missing
+    // model fixture) is recorded as `oracle:<query>` and the rest are
+    // still written
+    val oracleFailed = scala.collection.mutable.LinkedHashMap[String, String]()
+    val json = SparkEntry.oracleSql.flatMap { case (k, sql) =>
+      try Some(s"${q(k)}: ${q(sql())}")
+      catch { case e: Throwable =>
+        oracleFailed(s"oracle:$k") = Option(e.getMessage).getOrElse(e.getClass.getName)
+        System.err.println(s"[verify] oracle for $k failed: ${e.getMessage}")
+        None
+      }
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // A query that throws must surface as an explicit failure, never as a
     // silently-missing report entry (ADVICE r8): dump every error to a
     // sidecar the judge can read, print a prominent summary, and exit
     // nonzero so the runner records the run itself as failed.
-    val errJson = failed
+    val errors = failed ++ oracleFailed
+    val errJson = errors
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
     spark.stop()
-    if (failed.nonEmpty) {
+    if (errors.nonEmpty) {
       System.err.println(
-        s"[verify] ${failed.size}/${SparkEntry.queries.size} queries FAILED: " +
-          failed.keys.mkString(", "))
+        s"[verify] ${failed.size}/${SparkEntry.queries.size} queries and " +
+          s"${oracleFailed.size}/${SparkEntry.oracleSql.size} oracles FAILED: " +
+          errors.keys.mkString(", "))
       sys.exit(1)
     }
   }

@@ -126,14 +126,9 @@ object ArgMax {
 
   /** Register `argmax` in the session function registry (SQL-callable),
     * mirroring the reference's `configure_context` (reference src/lib.rs:131-135).
-    * Idempotent: a query build calls it every time, and re-registering
-    * would replace the function and log a WARN on each call. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("argmax")))
-      registry.createOrReplaceTempFunction(
-        "argmax", (exprs: Seq[Expression]) => ArgMax(exprs.head), "built-in")
-  }
+    * Idempotent ([[SessionFunctions.registerOnce]]). */
+  def register(spark: SparkSession): Unit =
+    SessionFunctions.registerOnce(spark, "argmax")(exprs => ArgMax(exprs.head))
 
   /** Injection descriptor for `SparkSessionExtensions.injectFunction`. */
   def descriptor: (FunctionIdentifier,

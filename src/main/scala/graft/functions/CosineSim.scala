@@ -90,8 +90,7 @@ case class CosineSim(left: Expression, right: Expression)
 
 object CosineSim {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1)), "built-in")
+    SessionFunctions.registerOnce(spark, "cosine_sim")(exprs => CosineSim(exprs(0), exprs(1)))
 
   def cosine_sim(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)
@@ -159,8 +158,7 @@ case class DotProduct(left: Expression, right: Expression)
 
 object DotProduct {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)), "built-in")
+    SessionFunctions.registerOnce(spark, "dot_product")(exprs => DotProduct(exprs(0), exprs(1)))
 
   def dot_product(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)

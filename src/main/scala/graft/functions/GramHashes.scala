@@ -77,11 +77,8 @@ case class GramHashes(child: Expression, k: Int)
 
 object GramHashes {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_hashes",
-      (exprs: Seq[Expression]) =>
-        GramHashes(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+    SessionFunctions.registerOnce(spark, "gram_hashes") { exprs =>
+      GramHashes(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()) }
 
   def gram_hashes(spark: SparkSession, c: Column, k: Int): Column = {
     register(spark)

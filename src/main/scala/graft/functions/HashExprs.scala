@@ -110,11 +110,8 @@ case class ShingleHashes(child: Expression, n: Int)
 
 object ShingleHashes {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      (exprs: Seq[Expression]) =>
-        ShingleHashes(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+    SessionFunctions.registerOnce(spark, "shingle_hashes") { exprs =>
+      ShingleHashes(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()) }
 
   def shingle_hashes(spark: SparkSession, c: Column, n: Int): Column = {
     register(spark)
@@ -252,8 +249,7 @@ case class SimHash64(child: Expression) extends UnaryExpression with CodegenFall
 
 object SimHash64 {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", (exprs: Seq[Expression]) => SimHash64(exprs.head), "built-in")
+    SessionFunctions.registerOnce(spark, "simhash64")(exprs => SimHash64(exprs.head))
   def simhash64(c: Column): Column = call_function("simhash64", c)
 }
 
@@ -324,11 +320,8 @@ case class Shingles(child: Expression, n: Int)
 
 object Shingles {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles",
-      (exprs: Seq[Expression]) =>
-        Shingles(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+    SessionFunctions.registerOnce(spark, "shingles") { exprs =>
+      Shingles(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()) }
 
   def shingles(spark: SparkSession, c: Column, n: Int): Column = {
     register(spark)
@@ -434,14 +427,11 @@ case class MinHashBuckets(child: Expression, bands: Int, rowsPerBand: Int)
 
 object MinHashBuckets {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_buckets",
-      (exprs: Seq[Expression]) =>
-        MinHashBuckets(
-          exprs.head,
-          exprs(1).eval().asInstanceOf[Number].intValue(),
-          exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+    SessionFunctions.registerOnce(spark, "minhash_buckets") { exprs =>
+      MinHashBuckets(
+        exprs.head,
+        exprs(1).eval().asInstanceOf[Number].intValue(),
+        exprs(2).eval().asInstanceOf[Number].intValue()) }
 
   def minhash_buckets(
       spark: SparkSession, c: Column, bands: Int, rowsPerBand: Int): Column = {
@@ -491,11 +481,8 @@ object MinHashSig {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      (exprs: Seq[Expression]) =>
-        MinHashSig(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+    SessionFunctions.registerOnce(spark, "minhash_sig") { exprs =>
+      MinHashSig(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()) }
 
   def minhash_sig(spark: SparkSession, c: Column, numHashes: Int): Column = {
     register(spark)
@@ -528,7 +515,6 @@ case class RollingHash64(child: Expression) extends UnaryExpression with Codegen
 
 object RollingHash64 {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash64", (exprs: Seq[Expression]) => RollingHash64(exprs.head), "built-in")
+    SessionFunctions.registerOnce(spark, "rolling_hash64")(exprs => RollingHash64(exprs.head))
   def rolling_hash64(c: Column): Column = call_function("rolling_hash64", c)
 }

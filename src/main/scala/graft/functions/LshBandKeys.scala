@@ -119,16 +119,13 @@ case class LshBandKeys(
 
 object LshBandKeys {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_band_keys",
-      (exprs: Seq[Expression]) =>
-        LshBandKeys(
-          exprs.head,
-          exprs(1).eval().asInstanceOf[Number].intValue(),
-          exprs(2).eval().asInstanceOf[Number].intValue(),
-          exprs(3).eval().asInstanceOf[Number].longValue(),
-          if (exprs.length > 4) exprs(4).eval().asInstanceOf[Number].intValue() else -1),
-      "built-in")
+    SessionFunctions.registerOnce(spark, "lsh_band_keys") { exprs =>
+      LshBandKeys(
+        exprs.head,
+        exprs(1).eval().asInstanceOf[Number].intValue(),
+        exprs(2).eval().asInstanceOf[Number].intValue(),
+        exprs(3).eval().asInstanceOf[Number].longValue(),
+        if (exprs.length > 4) exprs(4).eval().asInstanceOf[Number].intValue() else -1) }
 
   def lsh_band_keys(
       spark: SparkSession, c: Column, numPlanes: Int, bands: Int,

@@ -52,10 +52,7 @@ object NfcNormalize {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      (exprs: Seq[Expression]) => NfcNormalize(exprs.head),
-      "built-in")
+    SessionFunctions.registerOnce(spark, "nfc_normalize")(exprs => NfcNormalize(exprs.head))
 
   def nfc_normalize(spark: SparkSession, c: Column): Column = {
     register(spark)

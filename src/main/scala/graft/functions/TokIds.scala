@@ -67,15 +67,19 @@ case class TokIds(child: Expression, mod: Long, maxTokens: Int)
 }
 
 /**
- * `tok_count(text) -> int`: the number of `Tok.Pattern` tokens, i.e.
- * `size(regexp_extract_all(text, Tok.Pattern, 0))`, by a byte scan with
- * no hashing. The cheap row filter in front of [[TokIds]]: a
- * `size(tok_ids) >= n` filter would be pushed through the projection
- * with the whole hashing expression substituted in, hashing every row
- * twice. Re-encoding invalid UTF-8 never moves a whitespace byte, so
- * the raw bytes give the same count. Null text gives null.
+ * `tok_count(text, cap) -> int`: the number of `Tok.Pattern` tokens,
+ * i.e. `size(regexp_extract_all(text, Tok.Pattern, 0))`, by a byte scan
+ * with no hashing, stopping at `cap` tokens (so `min(count, cap)`).
+ * The cheap row filter in front of [[TokIds]]: a `size(tok_ids) >= n`
+ * filter would be pushed through the projection with the whole hashing
+ * expression substituted in, hashing every row twice; `cap = n` makes
+ * the `>= n` test stop scanning a row at its n-th token. Re-encoding
+ * invalid UTF-8 never moves a whitespace byte, so the raw bytes give
+ * the same count. Null text gives null.
  */
-case class TokCount(child: Expression) extends UnaryExpression with CodegenFallback {
+case class TokCount(child: Expression, cap: Int = Int.MaxValue)
+    extends UnaryExpression with CodegenFallback {
+  require(cap >= 0, "cap must be >= 0")
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
   override def prettyName: String = "tok_count"
@@ -89,7 +93,7 @@ case class TokCount(child: Expression) extends UnaryExpression with CodegenFallb
   @transient private lazy val tr = new HashExprs.TokenRanges
 
   override def nullSafeEval(input: Any): Any = {
-    HashExprs.tokenizeBytes(input.asInstanceOf[UTF8String].getBytes, tr)
+    HashExprs.tokenizeBytes(input.asInstanceOf[UTF8String].getBytes, tr, cap)
     tr.n
   }
 

@@ -68,8 +68,7 @@ case class VecUnit(child: Expression)
 
 object VecUnit {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_unit", (exprs: Seq[Expression]) => VecUnit(exprs.head), "built-in")
+    SessionFunctions.registerOnce(spark, "vec_unit")(exprs => VecUnit(exprs.head))
 
   def vec_unit(spark: SparkSession, c: Column): Column = {
     register(spark)

@@ -97,14 +97,11 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
 
 object WinnowFps {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps",
-      (exprs: Seq[Expression]) =>
-        WinnowFps(
-          exprs.head,
-          exprs(1).eval().asInstanceOf[Number].intValue(),
-          exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+    SessionFunctions.registerOnce(spark, "winnow_fps") { exprs =>
+      WinnowFps(
+        exprs.head,
+        exprs(1).eval().asInstanceOf[Number].intValue(),
+        exprs(2).eval().asInstanceOf[Number].intValue()) }
 
   def winnow_fps(spark: SparkSession, c: Column, k: Int, w: Int): Column = {
     register(spark)

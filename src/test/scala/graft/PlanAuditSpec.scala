@@ -1,5 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -345,7 +350,9 @@ class PlanAuditSpec extends AnyFunSuite {
     // scan-side HOF projections — ANY exchange is a regression
     for (q <- Seq("q184_fim", "q186_char_entropy", "q188_sft_render")) {
       val p = plan(q)
-      // the final orderBy is allowed its sort exchange; nothing else
+      // the final orderBy is allowed its one exchange (a range
+      // partitioning, or a single-partition shuffle when SmallSort plans
+      // it in one task); nothing else
       val ex = dataExchanges(p)
       assert(ex <= 1, s"$q: map-stage op shuffled beyond the output sort ($ex):\n$p")
       assert(!p.contains("CartesianProduct"), s"$q cartesian:\n$p")
@@ -366,9 +373,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // cross-attention inference (q202), sampled decoding (q203), LoRA
     // classifier (q204), encoder-decoder generation (q206): one
     // broadcast-weights mapPartitions over the documents scan; the
-    // ONLY exchange is the final orderBy's range partitioning — any
-    // other shuffle (or a second scan / rescan boundary) is a
-    // regression of the batched-inference shape
+    // ONLY exchange is the final orderBy's (a single-partition shuffle
+    // when SmallSort plans the small sort in one task, otherwise a
+    // range partitioning) — any other shuffle (or a second scan /
+    // rescan boundary) is a regression of the batched-inference shape
     for (q <- Seq("q202_torch_crossattn", "q203_torch_gen_sampled",
         "q204_torch_lora", "q206_torch_cross_gen", "q210_seq2seq_filter")) {
       val p = plan(q)
@@ -386,7 +394,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // shuffle), norepeat greedy (q213), length-normalized EOS beams
     // (q214), banded-bias KV-session decode (q215): the k-step loops
     // and chained verifications live inside scan-side mapPartitions;
-    // the only exchange is the final orderBy's range partitioning
+    // the only exchange is the final orderBy's (single-partition or range)
     for (q <- Seq("q211_torch_gen_topk", "q212_torch_cross_spec",
         "q213_torch_gen_norepeat", "q214_torch_beam_lennorm",
         "q215_torch_alibi_decode", "q216_torch_sampled_norepeat",
@@ -662,13 +670,45 @@ class PlanAuditSpec extends AnyFunSuite {
     // the cheap tok_count filter sits in front of the projection, so
     // Catalyst has no `size(tok_ids)` predicate to push through it
     // with the hashing expression substituted in (a second hash pass)
-    for (q <- Seq("q107_torch_embedding", "q113_torch_textcnn",
-        "q194_torch_generate", "q257_torch_gen_fused")) {
+    for (q <- Seq("q107_torch_embedding", "q113_torch_textcnn", "q194_torch_generate")) {
       val p = plan(q)
       assert("tok_ids\\(".r.findAllIn(p).length == 1,
         s"$q must hash each row's tokens exactly once:\n$p")
       assert(!p.contains("md5") && !p.contains("lambdafunction"),
         s"$q still carries the md5/transform idiom:\n$p")
     }
+    // q257 decodes from the checkpoint its bigram-count collect fills, so
+    // its hashing sits in the plan that fills the checkpoint: across
+    // every plan that building and collecting q257 executes, still
+    // exactly one tok_ids
+    val ps = executedPlans(SparkEntry.queries("q257_torch_gen_fused")(spark, sfDir))
+    assert(ps.length >= 3, s"q257: expected checkpoint, count and decode plans:\n${ps.mkString("\n\n")}")
+    assert(ps.map("tok_ids\\(".r.findAllIn(_).length).sum == 1,
+      s"q257 must hash each row's tokens exactly once:\n${ps.mkString("\n\n")}")
+    // (the count plan's one lambda is the zip_with that pairs adjacent ids)
+    assert(!ps.exists(_.contains("md5")) &&
+      !ps.filterNot(_.contains("zip_with")).exists(_.contains("lambdafunction")),
+      s"q257 still carries the md5/transform idiom:\n${ps.mkString("\n\n")}")
+  }
+
+  /** The optimized plan of every query execution that building `df`
+    * (the `=> DataFrame`) and collecting it runs, in order. */
+  private def executedPlans(df: => DataFrame): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val d = df
+      d.collect()
+      // listener events are delivered in order: once the final collect's
+      // arrives, every earlier execution's has
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.asScala.exists(_ eq d.queryExecution) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      seen.asScala.toSeq.map(_.optimizedPlan.toString)
+    } finally spark.listenerManager.unregister(listener)
   }
 }

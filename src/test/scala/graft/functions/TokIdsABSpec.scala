@@ -18,7 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * rows, and null / empty / whitespace-only text, for every
  * maxTokens in {1, 12, > token count, unbounded} and mod in
  * {8, 32, 64, 2^31-1}. `Tok.count` is checked against
- * `size(regexp_extract_all(...))` on the same rows.
+ * `size(regexp_extract_all(...))` on the same rows, and the early-stop
+ * `Tok.atLeast(text, n)` against the full `Tok.count(text) >= n` for
+ * n in {1, 2, 10}.
  */
 class TokIdsABSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -71,5 +73,18 @@ class TokIdsABSpec extends AnyFunSuite {
       }
     }
     assert(tokens > 100000, s"too few tokens checked: $tokens")
+  }
+
+  test("Tok.atLeast(text, n) == (Tok.count(text) >= n) on every input, n in {1, 2, 10}") {
+    val ns = Seq(1, 2, 10)
+    val rows = inputs.select(col("id") +: ns.flatMap(n =>
+      Seq(Tok.atLeast(col("text"), n), Tok.count(col("text")) >= n)): _*).collect()
+    assert(rows.length > 5000, s"fixture unexpectedly small: ${rows.length} rows")
+    for ((n, j) <- ns.zipWithIndex) {
+      for (r <- rows) assert(r.get(1 + 2 * j) == r.get(2 + 2 * j),
+        s"atLeast(n=$n) diverged on row ${r.getLong(0)}: ${r.get(1 + 2 * j)} vs ${r.get(2 + 2 * j)}")
+      val outcomes = rows.map(r => Option(r.get(1 + 2 * j))).toSet
+      assert(outcomes == Set(Some(true), Some(false), None), s"n=$n does not split the rows: $outcomes")
+    }
   }
 }
