@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.internal.SQLConf
 
 /** Scale-adaptive input spread for single-`mapPartitions` kernels
-  * (decode loops, batched inference, codecs).
+  * (decode loops, batched inference, codecs — [[Kernel]] applies it).
   *
   * Those kernels' parallelism is EXACTLY their input's partition
   * count: a small single-file parquet scan plans as ONE task, so the
@@ -32,21 +32,7 @@ import org.apache.spark.sql.internal.SQLConf
   * session / one decode per row), so row order never reaches results.
   */
 object Spread {
-  // scoped opt-out for call sites whose kernel input is a PROVABLY tiny
-  // slice the guards below cannot see (none remain in-tree — the
-  // round-20 exchange-bearing skip covers the former join-fed users —
-  // but the escape hatch stays for library callers)
-  private val disabled = new ThreadLocal[Boolean] {
-    override def initialValue: Boolean = false
-  }
-  def noSpread[T](f: => T): T = {
-    val prev = disabled.get
-    disabled.set(true)
-    try f finally disabled.set(prev)
-  }
-
   def apply(df: DataFrame): DataFrame = {
-    if (disabled.get) return df
     if (df.isStreaming) return df // micro-batch partitioning is the source's
     val target = df.sparkSession.sparkContext.defaultParallelism
     val plan = df.queryExecution.optimizedPlan
@@ -66,8 +52,6 @@ object Spread {
     //  2. a post-shuffle frame already runs at the session's shuffle
     //     width — the one-task single-file-scan pathology this helper
     //     exists for cannot occur, so there is nothing to fix.
-    // This retires the per-site noSpread labels the r19 rowCount-only
-    // guard needed (stats lose rowCount through joins).
     if (!exchangeFree(plan)) return df
     // anything the leaf estimate cannot size: fall back to planning
     // (safe — exchange-free)

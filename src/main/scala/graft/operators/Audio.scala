@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Kernel
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
@@ -185,15 +186,13 @@ object Audio {
     * (`s_i · s_{i-1} < 0`). Null payload / corrupt bytes / compressed
     * codec -> null struct. */
   def withWavFeatures(df: DataFrame, binCol: String, outCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outCol, featureSchema, nullable = true))
     val binIdx = df.schema.fieldIndex(binCol)
-    graft.Spread(df).mapPartitions { it => // typed, single-plan — see Multimodal.withDecodedMeta
-      it.map { r =>
+    Kernel(df, Seq(StructField(outCol, featureSchema))) { () =>
+      _.iterator.map { r =>
         val bytes = r.getAs[Array[Byte]](binIdx)
         val decoded = if (bytes == null) None else WavDecoder.decode(bytes)
         decoded match {
-          case None => Row.fromSeq(r.toSeq :+ null)
+          case None => null
           case Some(w) =>
             val s = w.samples(0)
             var ss = 0.0
@@ -210,11 +209,11 @@ object Audio {
             }
             val n = s.length
             val rms = if (n == 0) 0.0 else math.sqrt(ss / n)
-            Row.fromSeq(r.toSeq :+ Row(w.sampleRate, w.channels, w.bits, n,
-              n.toDouble / w.sampleRate, rms, peak, zc))
+            Row(w.sampleRate, w.channels, w.bits, n,
+              n.toDouble / w.sampleRate, rms, peak, zc)
         }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Frame-level energies over channel 0 (window `frameLen`, stride

@@ -5,7 +5,8 @@ import org.apache.spark.sql.DataFrame
 /**
  * One checkpoint policy for every iterative/multi-consumer operator.
  *
- * Default: lazy `localCheckpoint` — blocks live on executors, are freed
+ * Default: `localCheckpoint(eager = false)` (see [[cp]] for when that
+ * is lazy) — blocks live on executors, are freed
  * by the ContextCleaner when the DataFrame is dropped, and cost no
  * distributed-FS round trip. Caveat (documented on [[Dedup]]): losing
  * an executor (dynamic allocation, spot kill) loses its blocks and
@@ -26,8 +27,12 @@ object Checkpoints {
   // guard must compare against what WE last set, not what Spark reports.
   private val lastSet = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Lazy checkpoint under the session's policy (see object doc).
-    * Streaming frames pass through untouched: checkpoint() is illegal
+  /** Checkpoint under the session's policy (see object doc). Lazy over
+    * an exchange-free input: no job runs until the checkpoint is read.
+    * Under AQE an input that holds an exchange is not lazy: building its
+    * RDD materializes every upstream shuffle stage, so those map jobs run
+    * when `cp` is called (the later read reuses their output; nothing
+    * runs twice). Streaming frames pass through untouched: checkpoint() is illegal
     * on them, and the multi-consumer reuse it buys is a batch-plan
     * concern — each micro-batch is small by construction. This is
     * what lets batch operators (incremental dedup probes, chunkers)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Kernel
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -678,26 +679,21 @@ object Multimodal {
 
   /**
    * Append a `metaCol: struct<width,height,channels,format>` decoded
-   * from `binCol`. Runs as `mapPartitions` over the row iterator —
-   * streaming, no partition materialization — the same batch shape a
-   * real decoder (which wants batched I/O) needs.
+   * from `binCol`. Runs through [[graft.Kernel]] over the row iterator
+   * — streaming, no partition materialization, one logical plan.
    */
   def withDecodedMeta(df: DataFrame, binCol: String, metaCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField(metaCol, metaSchema, nullable = true))
     val binIdx = df.schema.fieldIndex(binCol)
-    // Dataset-typed mapPartitions (NOT df.rdd + createDataFrame): stays
-    // one logical plan — no ExistingRDD rescan, no separate job, and
-    // upstream filters/projections still optimize around it.
-    graft.Spread(df).mapPartitions { it =>
-      it.map { r =>
+    Kernel(df, Seq(StructField(metaCol, metaSchema))) { () =>
+      _.iterator.map { r =>
         val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Row.fromSeq(r.toSeq :+ null) // null payload -> null meta
+        if (bytes == null) null // null payload -> null meta
         else {
           val (w, h, c, f) = decodeMeta(bytes)
-          Row.fromSeq(r.toSeq :+ Row(w, h, c, f))
+          Row(w, h, c, f)
         }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /**
@@ -705,26 +701,24 @@ object Multimodal {
    * L1-normalized, as `array<float>` — a legitimate content signature
    * for opaque binaries (format detection, corruption triage, and
    * near-dup candidate generation via the embedding operators:
-   * histogram vectors feed [[Similarity]] unchanged). mapPartitions
-   * over the row iterator, one pass per payload.
+   * histogram vectors feed [[Similarity]] unchanged). One
+   * [[graft.Kernel]] pass per payload.
    */
   def byteHistogramFeatures(df: DataFrame, binCol: String, outCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outCol, ArrayType(FloatType, containsNull = false), nullable = true))
     val binIdx = df.schema.fieldIndex(binCol)
-    graft.Spread(df).mapPartitions { it => // typed, single-plan — see withDecodedMeta
-      it.map { r =>
+    Kernel(df, Seq(StructField(outCol, ArrayType(FloatType, containsNull = false)))) { () =>
+      _.iterator.map { r =>
         val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null || bytes.isEmpty) Row.fromSeq(r.toSeq :+ null)
+        if (bytes == null || bytes.isEmpty) null
         else {
           val counts = new Array[Int](256)
           var i = 0
           while (i < bytes.length) { counts(bytes(i) & 0xff) += 1; i += 1 }
           val n = bytes.length.toFloat
-          Row.fromSeq(r.toSeq :+ counts.map(_ / n).toSeq)
+          counts.map(_ / n).toSeq
         }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /**
@@ -733,7 +727,7 @@ object Multimodal {
    * emits `struct<width,height,channels,pixels>` (top-down interleaved
    * RGB(A)/gray). Payloads the pure-JVM decoder cannot handle
    * (compressed formats) yield null — callers keep them via the
-   * original column. mapPartitions over the row iterator, one plan.
+   * original column. One [[graft.Kernel]] pass, one plan.
    */
   def resizeImage(
       df: DataFrame, binCol: String, outCol: String,
@@ -744,22 +738,19 @@ object Multimodal {
       StructField("height", IntegerType, nullable = false),
       StructField("channels", IntegerType, nullable = false),
       StructField("pixels", BinaryType, nullable = false)))
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outCol, pixSchema, nullable = true))
     val binIdx = df.schema.fieldIndex(binCol)
-    graft.Spread(df).mapPartitions { it => // typed, single-plan — see withDecodedMeta
-      it.map { r =>
+    Kernel(df, Seq(StructField(outCol, pixSchema))) { () =>
+      _.iterator.map { r =>
         val bytes = r.getAs[Array[Byte]](binIdx)
         // Try: one corrupt payload must degrade to null, not fail the job —
         // decode validates headers but defense-in-depth costs nothing here.
-        val resized = Option(bytes)
+        Option(bytes)
           .flatMap(bs => scala.util.Try(PixelDecoder.decode(bs)).toOption.flatten)
           .map { case (w, h, c, px) =>
             Row(targetW, targetH, c, PixelDecoder.resize(px, w, h, c, targetW, targetH))
           }.orNull
-        Row.fromSeq(r.toSeq :+ resized)
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /**
@@ -772,21 +763,17 @@ object Multimodal {
    */
   def resizeStub(df: DataFrame, binCol: String, outCol: String, targetBytes: Int): DataFrame = {
     require(targetBytes >= 1, "targetBytes must be >= 1")
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outCol, BinaryType, nullable = true))
     val binIdx = df.schema.fieldIndex(binCol)
-    graft.Spread(df).mapPartitions { it => // typed, single-plan — see withDecodedMeta
-      it.map { r =>
+    Kernel(df, Seq(StructField(outCol, BinaryType))) { () =>
+      _.iterator.map { r =>
         val bytes = r.getAs[Array[Byte]](binIdx)
-        if (bytes == null) Row.fromSeq(r.toSeq :+ null)
-        else if (bytes.length <= targetBytes) Row.fromSeq(r.toSeq :+ bytes)
+        if (bytes == null || bytes.length <= targetBytes) bytes
         else {
           val stride = math.ceil(bytes.length.toDouble / targetBytes).toInt
-          val out = Array.range(0, bytes.length, stride).map(bytes(_))
-          Row.fromSeq(r.toSeq :+ out)
+          Array.range(0, bytes.length, stride).map(bytes(_))
         }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /**
@@ -830,7 +817,7 @@ object Multimodal {
       StructField("pixels", BinaryType, nullable = false)))
     val idIdx = df.schema.fieldIndex(idCol)
     val binIdx = df.schema.fieldIndex(binCol)
-    graft.Spread(df).mapPartitions { it => // typed, single-plan — see withDecodedMeta
+    graft.Spread(df).mapPartitions { it => // typed, single-plan — one row per frame
       it.flatMap { r =>
         val bytes = r.getAs[Array[Byte]](binIdx)
         val id = r.get(idIdx)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Kernel
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
@@ -304,23 +305,17 @@ object Video {
   /** Typed AVI metadata per payload (fps reported as milli-fps for an
     * exact integer column); null for non-AVI payloads. Scan-side. */
   def withAviMeta(df: DataFrame, binCol: String, outCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outCol, aviMetaSchema, nullable = true))
     val binIdx = df.schema.fieldIndex(binCol)
-    graft.Spread(df).mapPartitions { it => // typed, single-plan — see Multimodal.withDecodedMeta
-      it.map { r =>
+    Kernel(df, Seq(StructField(outCol, aviMetaSchema))) { () =>
+      _.iterator.map { r =>
         val bytes = r.getAs[Array[Byte]](binIdx)
         val decoded =
           if (bytes == null) None
           else scala.util.Try(AviParser.decode(bytes)).toOption.flatten
-        decoded match {
-          case None => Row.fromSeq(r.toSeq :+ null)
-          case Some(m) => Row.fromSeq(r.toSeq :+
-            Row(m.handler, math.round(m.fps * 1000), m.totalFrames,
-              m.nStreams, m.width, m.height))
-        }
+        decoded.map(m => Row(m.handler, math.round(m.fps * 1000), m.totalFrames,
+          m.nStreams, m.width, m.height)).orNull
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /**
@@ -347,7 +342,7 @@ object Video {
       StructField("pixels", BinaryType, nullable = false)))
     val idIdx = df.schema.fieldIndex(idCol)
     val binIdx = df.schema.fieldIndex(binCol)
-    graft.Spread(df).mapPartitions { it => // typed, single-plan — see Multimodal.withDecodedMeta
+    graft.Spread(df).mapPartitions { it => // typed, single-plan — one row per frame
       it.flatMap { r =>
         val bytes = r.getAs[Array[Byte]](binIdx)
         val id = r.get(idIdx)
@@ -367,23 +362,17 @@ object Video {
   }
 
   /** Typed MP4 container metadata per payload; null for anything the
-    * parser rejects. One scan-side `mapPartitions` pass. */
+    * parser rejects. One scan-side [[graft.Kernel]] pass. */
   def withMp4Meta(df: DataFrame, binCol: String, outCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outCol, metaSchema, nullable = true))
     val binIdx = df.schema.fieldIndex(binCol)
-    graft.Spread(df).mapPartitions { it => // typed, single-plan — see Multimodal.withDecodedMeta
-      it.map { r =>
+    Kernel(df, Seq(StructField(outCol, metaSchema))) { () =>
+      _.iterator.map { r =>
         val bytes = r.getAs[Array[Byte]](binIdx)
         val decoded =
           if (bytes == null) None
           else scala.util.Try(Mp4Parser.decode(bytes)).toOption.flatten
-        decoded match {
-          case None => Row.fromSeq(r.toSeq :+ null)
-          case Some(m) => Row.fromSeq(r.toSeq :+
-            Row(m.brand, m.durationMs, m.nTracks, m.width, m.height))
-        }
+        decoded.map(m => Row(m.brand, m.durationMs, m.nTracks, m.width, m.height)).orNull
       }
-    }(Encoders.row(outSchema))
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.torch
 
+import graft.Kernel
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, min, sum, when}
@@ -350,6 +351,52 @@ object Torch {
     }
   }
 
+  /** Output fields for [[Kernel]], nullable. */
+  private def fields(cols: (String, DataType)*): Seq[StructField] =
+    cols.map { case (n, t) => StructField(n, t) }
+  private val Ints = ArrayType(IntegerType)
+  // the column sets several decoders append
+  private val SpecOut = fields("draft_tok" -> IntegerType, "accepted" -> BooleanType,
+    "final_tok" -> IntegerType)
+  private val GammaOut = fields("draft_toks" -> Ints, "n_accepted" -> IntegerType, "out_toks" -> Ints)
+  private val LoopOut = fields("out_toks" -> Ints, "n_cycles" -> IntegerType,
+    "n_acc_total" -> IntegerType)
+  private val LookupOut = fields("draft_toks" -> Ints, "n_drafted" -> IntegerType,
+    "n_accepted" -> IntegerType, "out_toks" -> Ints)
+  private val TreeOut = fields("tree" -> ArrayType(Ints), "n_accepted" -> IntegerType,
+    "out_toks" -> Ints)
+
+  /** The greedy pick over the `vocab` logits at `off`: NaN never wins and
+    * strict `>` keeps the first max. `allowed`, when given, masks the
+    * candidates (banned ids, an eos before the minimum length). */
+  private def argmaxFirst(out: Array[Float], vocab: Int, off: Int = 0,
+      allowed: Int => Boolean = null): Int = {
+    var best = -1
+    var bv = Float.NaN
+    var j = 0
+    while (j < vocab) {
+      val v = out(off + j)
+      if ((allowed == null || allowed(j)) && !v.isNaN && (best < 0 || v > bv)) {
+        best = j; bv = v
+      }
+      j += 1
+    }
+    require(best >= 0, "all-NaN logits")
+    best
+  }
+
+  /** The KV-session decoders' model check: token ids in, a cacheable
+    * session, and cross-attention exactly when `cross`. */
+  private def requireTokenDecoder(model: Broadcast[TorchScriptModel], what: String,
+      cross: Boolean = false): Unit = {
+    val m = model.value
+    require(m.inDim == -1, s"$what needs a token-input model")
+    require(m.isCross == cross,
+      if (cross) s"$what needs a cross-attention model"
+      else s"$what: cross-attention model not supported")
+    require(m.cacheable, s"$what needs the KV-session path (cacheable model)")
+  }
+
   /**
    * Programmatic equivalent of
    * `CREATE FUNCTION name(IN[]) RETURNS OUT[] LANGUAGE TORCH AS 'url'`
@@ -472,8 +519,8 @@ object Torch {
    * semantics per udf.rs:202-204). `batchSize <= 0` reads
    * `torchfusion.batch_size` from the session.
    *
-   * Uses `mapPartitions` over the row iterator: streaming, no
-   * per-partition materialization beyond one batch.
+   * Runs through [[graft.Kernel]]: streaming, no per-partition
+   * materialization beyond one batch.
    */
   def inferBatched(
       df: DataFrame,
@@ -481,81 +528,42 @@ object Torch {
       outputCol: String,
       model: Broadcast[TorchScriptModel],
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs =
-      if (batchSize > 0) batchSize
-      else TorchConf.get(spark).batchSize
     // token-input (embedding-head) models read int token ids; feature
     // models read f32 vectors (pixel models go through inferImageBatched)
     require(model.value.imageHead.isEmpty,
       "pixel-input model: use Torch.inferImageBatched")
     val tokenInput = model.value.inDim == -1
-    val withFloats = graft.Spread(df).withColumn(inputCol, col(inputCol).cast(
-      if (tokenInput) ArrayType(IntegerType) else ArrayType(FloatType)))
-    val schema = StructType(withFloats.schema.fields :+
-      StructField(outputCol, ArrayType(FloatType), nullable = true))
-    val inIdx = withFloats.schema.fieldIndex(inputCol)
-    // Dataset-typed mapPartitions (NOT df.rdd + createDataFrame): one
-    // logical plan, no ExistingRDD rescan or extra job boundary; the
-    // grouped(bs) GEMM batching below is unchanged
-    withFloats.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, fields(outputCol -> ArrayType(FloatType)),
+        ints = if (tokenInput) Seq(inputCol) else Nil,
+        floats = if (tokenInput) Nil else Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val inDim = m.inDim
       val outDim = m.outDim
-      it.grouped(bs).flatMap { rows =>
-        // null inputs (null array or any null element) stay out of the
-        // GEMM batch and yield null output
-        def floats(r: Row): Array[Float] = {
-          if (r.isNullAt(inIdx)) return null
-          val xs = r.getSeq[Any](inIdx)
-          require(xs.length == inDim, s"expected $inDim features, got ${xs.length}")
-          val a = new Array[Float](inDim)
-          var j = 0
-          while (j < inDim) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.floatValue()
-            }
-            j += 1
-          }
-          a
-        }
-        // variable-length token rows: no length requirement — pooling
-        // is per-row, the GEMM batch is the pooled (n, embDim) matrix
-        def tokens(r: Row): Array[Int] = {
-          if (r.isNullAt(inIdx)) return null
-          val xs = r.getSeq[Any](inIdx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          while (j < a.length) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.intValue()
-            }
-            j += 1
-          }
-          a
-        }
-        // null inputs stay null in the output; live rows take their
-        // forward-pass slice in order (one shared assembly for both
-        // input shapes)
-        def emit(inputs: Seq[AnyRef], out: Array[Float]): Iterator[Row] = {
-          var k = -1
-          rows.iterator.zip(inputs.iterator).map { case (r, in) =>
-            if (in == null) Row.fromSeq(r.toSeq :+ null)
-            else {
-              k += 1
-              Row.fromSeq(r.toSeq :+ out.slice(k * outDim, (k + 1) * outDim).toSeq)
-            }
+      // null inputs (null array or any null element) stay out of the
+      // GEMM batch and yield null output; live rows take their
+      // forward-pass slice in order (one shared assembly for both input
+      // shapes)
+      def emit(inputs: Seq[AnyRef], out: Array[Float]): Iterator[Any] = {
+        var k = -1
+        inputs.iterator.map { in =>
+          if (in == null) null
+          else {
+            k += 1
+            out.slice(k * outDim, (k + 1) * outDim).toSeq
           }
         }
+      }
+      rows =>
         if (tokenInput) {
-          val inputs = rows.map(tokens)
+          // variable-length token rows: no length requirement — pooling
+          // is per-row, the GEMM batch is the pooled (n, embDim) matrix
+          val inputs = rows.map(Kernel.ints(_, inIdx))
           val live = inputs.filter(_ != null).toArray
           val out = if (live.nonEmpty) m.forwardTokensBatch(live) else Array.empty[Float]
           emit(inputs, out)
         } else {
-          val inputs = rows.map(floats)
+          val inputs = rows.map(Kernel.floats(_, inIdx, inDim))
           val live = inputs.filter(_ != null)
           val n = live.size
           val flat = new Array[Float](n * inDim)
@@ -567,8 +575,7 @@ object Torch {
           val out = if (n > 0) m.forwardBatch(flat, n) else Array.empty[Float]
           emit(inputs, out)
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -589,53 +596,29 @@ object Torch {
       outputCol: String,
       model: Broadcast[TorchScriptModel],
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs =
-      if (batchSize > 0) batchSize
-      else TorchConf.get(spark).batchSize
     require(model.value.isCross, "not a cross-attention model: use inferBatched")
-    val withInts = graft.Spread(df)
-      .withColumn(queryCol, col(queryCol).cast(ArrayType(IntegerType)))
-      .withColumn(keyCol, col(keyCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outputCol, ArrayType(FloatType), nullable = true))
-    val qIdx = withInts.schema.fieldIndex(queryCol)
-    val kIdx = withInts.schema.fieldIndex(keyCol)
-    withInts.mapPartitions { it =>
+    val qIdx = df.schema.fieldIndex(queryCol)
+    val kIdx = df.schema.fieldIndex(keyCol)
+    Kernel(df, fields(outputCol -> ArrayType(FloatType)),
+        ints = Seq(queryCol, keyCol), batchSize = batchSize) { () =>
       val m = model.value
       val outDim = m.outDim
-      it.grouped(bs).flatMap { rows =>
-        def tokens(r: Row, idx: Int): Array[Int] = {
-          if (r.isNullAt(idx)) return null
-          val xs = r.getSeq[Any](idx)
-          if (xs.isEmpty) return null
-          val a = new Array[Int](xs.length)
-          var j = 0
-          while (j < a.length) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.intValue()
-            }
-            j += 1
-          }
-          a
-        }
-        val pairs = rows.map(r => (tokens(r, qIdx), tokens(r, kIdx)))
+      rows =>
+        val pairs = rows.map(r => (Kernel.nonEmptyInts(r, qIdx), Kernel.nonEmptyInts(r, kIdx)))
         val live = pairs.filter(p => p._1 != null && p._2 != null).toArray
         val out =
           if (live.nonEmpty)
             m.forwardTokensPairBatch(live.map(_._1), live.map(_._2))
           else Array.empty[Float]
         var k = -1
-        rows.iterator.zip(pairs.iterator).map { case (r, (q0, k0)) =>
-          if (q0 == null || k0 == null) Row.fromSeq(r.toSeq :+ null)
+        pairs.iterator.map { case (q0, k0) =>
+          if (q0 == null || k0 == null) null
           else {
             k += 1
-            Row.fromSeq(r.toSeq :+ out.slice(k * outDim, (k + 1) * outDim).toSeq)
+            out.slice(k * outDim, (k + 1) * outDim).toSeq
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -655,18 +638,12 @@ object Torch {
       model: Broadcast[TorchScriptModel],
       c: Int, h: Int, w: Int,
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs =
-      if (batchSize > 0) batchSize
-      else TorchConf.get(spark).batchSize
     require(model.value.imageHead.isDefined, "not a pixel-input model")
-    val schema = StructType(df.schema.fields :+
-      StructField(outputCol, ArrayType(FloatType), nullable = true))
     val inIdx = df.schema.fieldIndex(inputCol)
-    graft.Spread(df).mapPartitions { it =>
+    Kernel(df, fields(outputCol -> ArrayType(FloatType)), batchSize = batchSize) { () =>
       val m = model.value
       val outDim = m.outDim
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         def pixels(r: Row): Array[Float] = {
           if (r.isNullAt(inIdx)) return null
           val bytes = r.getAs[Array[Byte]](inIdx)
@@ -680,15 +657,14 @@ object Torch {
         val live = inputs.filter(_ != null).toArray
         val out = if (live.nonEmpty) m.forwardImageBatch(live, c, h, w) else Array.empty[Float]
         var k = -1
-        rows.iterator.zip(inputs.iterator).map { case (r, in) =>
-          if (in == null) Row.fromSeq(r.toSeq :+ null)
+        inputs.iterator.map { in =>
+          if (in == null) null
           else {
             k += 1
-            Row.fromSeq(r.toSeq :+ out.slice(k * outDim, (k + 1) * outDim).toSeq)
+            out.slice(k * outDim, (k + 1) * outDim).toSeq
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -699,7 +675,7 @@ object Torch {
    * perplexity). Rows with a null input, a null element, or fewer than
    * 2 tokens (no prediction to score) yield null. Stateless scan-side
    * projection over the broadcast weights — the same one-plan
-   * `mapPartitions` shape as [[inferBatched]], so it runs unchanged on
+   * [[graft.Kernel]] shape as [[inferBatched]], so it runs unchanged on
    * a streaming frame and shuffles nothing at any corpus size.
    */
   def scoreLmBatched(
@@ -707,32 +683,15 @@ object Torch {
       inputCol: String,
       outputCol: String,
       model: Broadcast[TorchScriptModel]): DataFrame = {
-    val withInts = graft.Spread(df).withColumn(inputCol, col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outputCol, DoubleType, nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, fields(outputCol -> DoubleType), ints = Seq(inputCol)) { () =>
       val m = model.value
-      it.map { r =>
-        val toks: Array[Int] =
-          if (r.isNullAt(inIdx)) null
-          else {
-            val xs = r.getSeq[Any](inIdx)
-            val a = new Array[Int](xs.length)
-            var j = 0
-            var ok = true
-            while (ok && j < a.length) {
-              xs(j) match {
-                case null => ok = false
-                case f: java.lang.Number => a(j) = f.intValue(); j += 1
-              }
-            }
-            if (ok) a else null
-          }
-        if (toks == null || toks.length < 2) Row.fromSeq(r.toSeq :+ null)
-        else Row.fromSeq(r.toSeq :+ m.lmMeanNll(toks))
+      _.iterator.map { r =>
+        val toks = Kernel.ints(r, inIdx)
+        if (toks == null || toks.length < 2) null
+        else m.lmMeanNll(toks)
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -741,7 +700,7 @@ object Torch {
    * next-token NLL of the decoder tokens given the source), the
    * parallel-corpus noisy-pair filter. Rows with a null input, a null
    * element, or fewer than 2 decoder tokens yield null. Stateless
-   * scan-side `mapPartitions` over broadcast weights — the
+   * scan-side [[graft.Kernel]] over broadcast weights — the
    * [[scoreLmBatched]] shape, shuffle-free at any corpus size.
    */
   def scoreSeq2SeqBatched(
@@ -750,37 +709,17 @@ object Torch {
       keyCol: String,
       outputCol: String,
       model: Broadcast[TorchScriptModel]): DataFrame = {
-    val withInts = graft.Spread(df)
-      .withColumn(queryCol, col(queryCol).cast(ArrayType(IntegerType)))
-      .withColumn(keyCol, col(keyCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outputCol, DoubleType, nullable = true))
-    val qIdx = withInts.schema.fieldIndex(queryCol)
-    val kIdx = withInts.schema.fieldIndex(keyCol)
-    withInts.mapPartitions { it =>
+    val qIdx = df.schema.fieldIndex(queryCol)
+    val kIdx = df.schema.fieldIndex(keyCol)
+    Kernel(df, fields(outputCol -> DoubleType), ints = Seq(queryCol, keyCol)) { () =>
       val m = model.value
-      def toks(r: Row, idx: Int): Array[Int] = {
-        if (r.isNullAt(idx)) return null
-        val xs = r.getSeq[Any](idx)
-        val a = new Array[Int](xs.length)
-        var j = 0
-        while (j < a.length) {
-          xs(j) match {
-            case null => return null
-            case f: java.lang.Number => a(j) = f.intValue()
-          }
-          j += 1
-        }
-        a
+      _.iterator.map { r =>
+        val d = Kernel.ints(r, qIdx)
+        val k = Kernel.ints(r, kIdx)
+        if (d == null || k == null || d.length < 2 || k.isEmpty) null
+        else m.seq2seqMeanNll(d, k)
       }
-      it.map { r =>
-        val d = toks(r, qIdx)
-        val k = toks(r, kIdx)
-        if (d == null || k == null || d.length < 2 || k.isEmpty)
-          Row.fromSeq(r.toSeq :+ null)
-        else Row.fromSeq(r.toSeq :+ m.seq2seqMeanNll(d, k))
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -837,7 +776,6 @@ object Torch {
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
       "watermarkGamma must be a fraction num/den with 0 < num < den")
     val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
     require(model.value.inDim == -1, "beamSearch needs a token-input model")
     require(!model.value.isCross, "cross-attention model: use beamSearchPair")
     require(width <= model.value.outDim, "width exceeds the vocabulary")
@@ -888,12 +826,9 @@ object Torch {
     val bcLm: Broadcast[(Array[Array[Long]], Array[Long])] =
       if (lmWeight == 0.0) null
       else spark.sparkContext.broadcast((lmCounts, lmCounts.map(_.sum)))
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(ArrayType(IntegerType)), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, fields(outCol -> ArrayType(Ints)),
+        ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
       val lm = if (bcLm == null) null else bcLm.value
@@ -939,31 +874,16 @@ object Torch {
         val lse = math.log(z) + mx
         Array.tabulate(vocab)(k => adj(k) - lse)
       }
-      it.grouped(bs).flatMap { rows =>
-        val prompts: Array[Array[Int]] = rows.map { r =>
-          if (r.isNullAt(inIdx)) null
-          else {
-            val xs = r.getSeq[Any](inIdx)
-            val a = new Array[Int](xs.length)
-            var j = 0
-            var ok = true
-            while (ok && j < a.length) {
-              xs(j) match {
-                case null => ok = false
-                case f: java.lang.Number => a(j) = f.intValue(); j += 1
-              }
-            }
-            if (ok && a.nonEmpty) a else null
-          }
-        }.toArray
+      rows =>
+        val prompts: Array[Array[Int]] = rows.map(Kernel.nonEmptyInts(_, inIdx)).toArray
         if (m.cacheable && !m.isCross) {
           // KV-cache beams: each beam owns a decode session; expansion
           // FORKS the parent (O(L) pointer copy, no prompt replay).
           // Logits are bit-identical to the recompute path, so beam
           // identity and ranking are unchanged (TorchGenerateSpec).
           // Beam state: (generated, RAW joint log-prob, session, done).
-          rows.iterator.zip(prompts.iterator).map { case (r, p) =>
-            if (p == null) Row.fromSeq(r.toSeq :+ null)
+          prompts.iterator.map { p =>
+            if (p == null) null
             else {
               var beams: Seq[(Vector[Int], Double, m.DecodeSession, Boolean)] =
                 Seq((Vector.empty[Int], 0.0, m.decodeSession(p), false))
@@ -1028,7 +948,7 @@ object Torch {
                   }
                 t += 1
               }
-              Row.fromSeq(r.toSeq :+ beams.map(_._1.toSeq))
+              beams.map(_._1.toSeq)
             }
           }
         } else {
@@ -1070,13 +990,12 @@ object Torch {
           }
             t += 1
           }
-          rows.iterator.zipWithIndex.map { case (r, ri) =>
-            if (beams(ri) == null) Row.fromSeq(r.toSeq :+ null)
-            else Row.fromSeq(r.toSeq :+ beams(ri).map(_._1.toSeq))
+          beams.indices.iterator.map { ri =>
+            if (beams(ri) == null) null
+            else beams(ri).map(_._1.toSeq)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1174,19 +1093,11 @@ object Torch {
     require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
       "watermarkGamma must be a fraction num/den with 0 < num < den")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.inDim == -1, "beamSearchDiverse needs a token-input model")
-    require(!model.value.isCross, "cross-attention model: use beamSearchPair")
+    requireTokenDecoder(model, "beamSearchDiverse")
     require(width <= model.value.outDim, "width exceeds the vocabulary")
-    require(model.value.cacheable,
-      "diverse beam search needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(ArrayType(IntegerType)), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, fields(outCol -> ArrayType(Ints)),
+        ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
       val lm = if (bcLm == null) null else bcLm.value
@@ -1226,24 +1137,10 @@ object Torch {
         val lse = math.log(z) + mx
         Array.tabulate(vocab)(k => adj(k) - lse)
       }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq :+ null)
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             // per group: ranked beams (generated, running score,
             // session, done) — done beams' sessions are never read
@@ -1310,12 +1207,10 @@ object Torch {
               }
               t += 1
             }
-            Row.fromSeq(r.toSeq :+
-              frontiers.toSeq.flatMap(_.map(_._1.toSeq)))
+            frontiers.toSeq.flatMap(_.map(_._1.toSeq))
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1351,25 +1246,13 @@ object Torch {
       target: Broadcast[TorchScriptModel],
       draft: Broadcast[TorchScriptModel],
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "speculativeSampled needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross models: use the pair speculative path")
+    requireTokenDecoder(target, "speculativeSampled")
+    requireTokenDecoder(draft, "speculativeSampled")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_tok", IntegerType, nullable = true),
-      StructField("accepted", BooleanType, nullable = true),
-      StructField("final_tok", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, SpecOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1380,24 +1263,10 @@ object Torch {
       // (mass DESC, tid ASC) — exactly the q203 nucleus walk at
       // topP = 1 (so every positive-mass candidate is kept)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             val qp = probs6(dm.decodeSession(p).logits())
@@ -1413,11 +1282,10 @@ object Torch {
                 if (resid.forall(_ == 0.0)) dx // p == q on the grid
                 else pick(resid, draw(id, "r1"))
               }
-            Row.fromSeq(r.toSeq ++ Seq(dx, accepted, fx))
+            (dx, accepted, fx)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1484,26 +1352,14 @@ object Torch {
     require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
       "watermarkGamma must be a fraction num/den with 0 < num < den")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "speculativeSampledGamma needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross models: use the pair speculative path")
+    requireTokenDecoder(target, "speculativeSampledGamma")
+    requireTokenDecoder(draft, "speculativeSampledGamma")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val idIdx = df.schema.fieldIndex(idCol)
     val (wmNum, wmDen) = watermarkGamma
-    withInts.mapPartitions { it =>
+    Kernel(df, GammaOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1534,24 +1390,10 @@ object Torch {
           while (j < vocab) { z += math.exp(bl(j) - mx); j += 1 }
           Array.tabulate(vocab)(k => q6(math.exp(bl(k) - mx) / z))
         }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             val sd = dm.decodeSession(p)
@@ -1596,11 +1438,10 @@ object Torch {
                   else pick(resid, draw(id, s"r${k + 1}"))
                 drafts.take(k).toSeq :+ corr
               }
-            Row.fromSeq(r.toSeq ++ Seq(drafts.toSeq, n, out))
+            (drafts.toSeq, n, out)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1679,26 +1520,14 @@ object Torch {
     val windowed = nWindow > 0
     require(!windowed || nSink >= 0,
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "speculativeSampledLoop needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross models: use the pair speculative path")
+    requireTokenDecoder(target, "speculativeSampledLoop")
+    requireTokenDecoder(draft, "speculativeSampledLoop")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val idIdx = df.schema.fieldIndex(idCol)
     val (wmNum, wmDen) = watermarkGamma
-    withInts.mapPartitions { it =>
+    Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1726,24 +1555,10 @@ object Torch {
           while (j < vocab) { z += math.exp(bl(j) - mx); j += 1 }
           Array.tabulate(vocab)(k => q6(math.exp(bl(k) - mx) / z))
         }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             // target/draft @ accepted prefix (bounded caches when the
@@ -1811,12 +1626,10 @@ object Torch {
                 val sd1 = sd0.fork(); cycleOut.foreach(sd1.append); sd0 = sd1
               }
             }
-            Row.fromSeq(r.toSeq ++
-              Seq(emitted.take(maxNewTokens).toSeq, cycles, accTotal))
+            (emitted.take(maxNewTokens).toSeq, cycles, accTotal)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1843,27 +1656,14 @@ object Torch {
       target: Broadcast[TorchScriptModel],
       draft: Broadcast[TorchScriptModel],
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "speculativeSampledPair needs token-input models")
-    require(target.value.isCross && draft.value.isCross,
-      "single-stream models: use speculativeSampled")
+    requireTokenDecoder(target, "speculativeSampledPair", cross = true)
+    requireTokenDecoder(draft, "speculativeSampledPair", cross = true)
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df)
-      .withColumn(decCol, col(decCol).cast(ArrayType(IntegerType)))
-      .withColumn(encCol, col(encCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_tok", IntegerType, nullable = true),
-      StructField("accepted", BooleanType, nullable = true),
-      StructField("final_tok", IntegerType, nullable = true)))
-    val dIdx = withInts.schema.fieldIndex(decCol)
-    val eIdx = withInts.schema.fieldIndex(encCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val dIdx = df.schema.fieldIndex(decCol)
+    val eIdx = df.schema.fieldIndex(encCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, SpecOut, ints = Seq(decCol, encCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1871,27 +1671,12 @@ object Torch {
       def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      def ints(r: Row, idx: Int): Array[Int] =
-        if (r.isNullAt(idx)) null
-        else {
-          val xs = r.getSeq[Any](idx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          var ok = true
-          while (ok && j < a.length) {
-            xs(j) match {
-              case null => ok = false
-              case f: java.lang.Number => a(j) = f.intValue(); j += 1
-            }
-          }
-          if (ok && a.nonEmpty) a else null
-        }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p = ints(r, dIdx)
-          val src = ints(r, eIdx)
+          val p = Kernel.nonEmptyInts(r, dIdx)
+          val src = Kernel.nonEmptyInts(r, eIdx)
           if (p == null || src == null || r.isNullAt(idIdx))
-            Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+            null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             val qp = probs6(dm.decodeSession(p, src).logits())
@@ -1907,11 +1692,10 @@ object Torch {
                 if (resid.forall(_ == 0.0)) dx
                 else pick(resid, draw(id, "r1"))
               }
-            Row.fromSeq(r.toSeq ++ Seq(dx, accepted, fx))
+            (dx, accepted, fx)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -1940,27 +1724,14 @@ object Torch {
       gamma: Int,
       batchSize: Int = -1): DataFrame = {
     require(gamma >= 1, "gamma must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "speculativeSampledPairGamma needs token-input models")
-    require(target.value.isCross && draft.value.isCross,
-      "single-stream models: use speculativeSampledGamma")
+    requireTokenDecoder(target, "speculativeSampledPairGamma", cross = true)
+    requireTokenDecoder(draft, "speculativeSampledPairGamma", cross = true)
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df)
-      .withColumn(decCol, col(decCol).cast(ArrayType(IntegerType)))
-      .withColumn(encCol, col(encCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val dIdx = withInts.schema.fieldIndex(decCol)
-    val eIdx = withInts.schema.fieldIndex(encCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val dIdx = df.schema.fieldIndex(decCol)
+    val eIdx = df.schema.fieldIndex(encCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, GammaOut, ints = Seq(decCol, encCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1968,27 +1739,12 @@ object Torch {
       def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      def ints(r: Row, idx: Int): Array[Int] =
-        if (r.isNullAt(idx)) null
-        else {
-          val xs = r.getSeq[Any](idx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          var ok = true
-          while (ok && j < a.length) {
-            xs(j) match {
-              case null => ok = false
-              case f: java.lang.Number => a(j) = f.intValue(); j += 1
-            }
-          }
-          if (ok && a.nonEmpty) a else null
-        }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p = ints(r, dIdx)
-          val src = ints(r, eIdx)
+          val p = Kernel.nonEmptyInts(r, dIdx)
+          val src = Kernel.nonEmptyInts(r, eIdx)
           if (p == null || src == null || r.isNullAt(idIdx))
-            Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+            null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             val sd = dm.decodeSession(p, src)
@@ -2030,11 +1786,10 @@ object Torch {
                   else pick(resid, draw(id, s"r${k + 1}"))
                 drafts.take(k).toSeq :+ corr
               }
-            Row.fromSeq(r.toSeq ++ Seq(drafts.toSeq, n, out))
+            (drafts.toSeq, n, out)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2083,27 +1838,14 @@ object Torch {
     val windowed = nWindow > 0
     require(!windowed || nSink >= 0,
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "speculativeSampledPairLoop needs token-input models")
-    require(target.value.isCross && draft.value.isCross,
-      "single-stream models: use speculativeSampledLoop")
+    requireTokenDecoder(target, "speculativeSampledPairLoop", cross = true)
+    requireTokenDecoder(draft, "speculativeSampledPairLoop", cross = true)
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df)
-      .withColumn(decCol, col(decCol).cast(ArrayType(IntegerType)))
-      .withColumn(encCol, col(encCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val dIdx = withInts.schema.fieldIndex(decCol)
-    val eIdx = withInts.schema.fieldIndex(encCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val dIdx = df.schema.fieldIndex(decCol)
+    val eIdx = df.schema.fieldIndex(encCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, LoopOut, ints = Seq(decCol, encCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -2111,27 +1853,12 @@ object Torch {
       def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      def ints(r: Row, idx: Int): Array[Int] =
-        if (r.isNullAt(idx)) null
-        else {
-          val xs = r.getSeq[Any](idx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          var ok = true
-          while (ok && j < a.length) {
-            xs(j) match {
-              case null => ok = false
-              case f: java.lang.Number => a(j) = f.intValue(); j += 1
-            }
-          }
-          if (ok && a.nonEmpty) a else null
-        }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p = ints(r, dIdx)
-          val src = ints(r, eIdx)
+          val p = Kernel.nonEmptyInts(r, dIdx)
+          val src = Kernel.nonEmptyInts(r, eIdx)
           if (p == null || src == null || r.isNullAt(idIdx))
-            Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+            null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             // target/draft @ accepted prefix (decoder caches bounded
@@ -2194,12 +1921,10 @@ object Torch {
                 val sd1 = sd0.fork(); cycleOut.foreach(sd1.append); sd0 = sd1
               }
             }
-            Row.fromSeq(r.toSeq ++
-              Seq(emitted.take(maxNewTokens).toSeq, cycles, accTotal))
+            (emitted.take(maxNewTokens).toSeq, cycles, accTotal)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2232,22 +1957,12 @@ object Torch {
     require(steps >= 1, "steps must be >= 1")
     require(plausibilityAlpha > 0.0 && plausibilityAlpha <= 1.0,
       "plausibilityAlpha must be in (0, 1]")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(expert.value.inDim == -1 && amateur.value.inDim == -1,
-      "contrastive decoding needs token-input models")
-    require(!expert.value.isCross && !amateur.value.isCross,
-      "cross models not supported here")
+    requireTokenDecoder(expert, "generateContrastiveDecoding")
+    requireTokenDecoder(amateur, "generateContrastiveDecoding")
     require(expert.value.outDim == amateur.value.outDim,
       "expert and amateur must share the vocabulary")
-    require(expert.value.cacheable && amateur.value.cacheable,
-      "contrastive decoding needs the KV-session path")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
       val em = expert.value
       val am = amateur.value
       val vocab = em.outDim
@@ -2269,24 +1984,10 @@ object Torch {
         (Array.tabulate(vocab)(k => q6(math.exp(lg(k).toDouble - mx) / z)),
           Array.tabulate(vocab)(k => q6(lg(k).toDouble - lse)))
       }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq :+ null)
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val se = em.decodeSession(p)
             val sa = am.decodeSession(p)
@@ -2305,11 +2006,10 @@ object Torch {
               sa.append(tok)
               t += 1
             }
-            Row.fromSeq(r.toSeq :+ gen.toSeq)
+            gen.toSeq
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2355,23 +2055,14 @@ object Torch {
     require(steps >= 1 && width >= 1, "steps and width must be >= 1")
     require(plausibilityAlpha > 0.0 && plausibilityAlpha <= 1.0,
       "plausibilityAlpha must be in (0, 1]")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(expert.value.inDim == -1 && amateur.value.inDim == -1,
-      "contrastive beam decoding needs token-input models")
-    require(!expert.value.isCross && !amateur.value.isCross,
-      "cross models not supported here")
+    requireTokenDecoder(expert, "beamSearchContrastiveDecoding")
+    requireTokenDecoder(amateur, "beamSearchContrastiveDecoding")
     require(expert.value.outDim == amateur.value.outDim,
       "expert and amateur must share the vocabulary")
     require(width <= expert.value.outDim, "width exceeds the vocabulary")
-    require(expert.value.cacheable && amateur.value.cacheable,
-      "contrastive beam decoding needs the KV-session path")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(ArrayType(IntegerType)), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, fields(outCol -> ArrayType(Ints)),
+        ints = Seq(inputCol), batchSize = batchSize) { () =>
       val em = expert.value
       val am = amateur.value
       val vocab = em.outDim
@@ -2392,24 +2083,10 @@ object Torch {
         (Array.tabulate(vocab)(k => q6(math.exp(lg(k).toDouble - mx) / z)),
           Array.tabulate(vocab)(k => q6(lg(k).toDouble - lse)))
       }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq :+ null)
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             // beam state: (generated, CD running score, expert
             // session, amateur session)
@@ -2439,11 +2116,10 @@ object Torch {
                 }
               t += 1
             }
-            Row.fromSeq(r.toSeq :+ beams.map(_._1.toSeq))
+            beams.map(_._1.toSeq)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2470,44 +2146,19 @@ object Torch {
       outCol: String,
       model: Broadcast[TorchScriptModel],
       batchSize: Int = -1): DataFrame = {
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.inDim == -1,
-      "scoreContinuationBatched needs a token-input model")
-    require(!model.value.isCross, "cross model: use scoreSeq2SeqBatched")
-    require(model.value.cacheable,
-      "continuation scoring needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df)
-      .withColumn(inputCol, col(inputCol).cast(ArrayType(IntegerType)))
-      .withColumn(contCol, col(contCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, DoubleType, nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val cIdx = withInts.schema.fieldIndex(contCol)
-    withInts.mapPartitions { it =>
+    requireTokenDecoder(model, "scoreContinuationBatched")
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val cIdx = df.schema.fieldIndex(contCol)
+    Kernel(df, fields(outCol -> DoubleType),
+        ints = Seq(inputCol, contCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      def ints(r: Row, idx: Int): Array[Int] =
-        if (r.isNullAt(idx)) null
-        else {
-          val xs = r.getSeq[Any](idx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          var ok = true
-          while (ok && j < a.length) {
-            xs(j) match {
-              case null => ok = false
-              case f: java.lang.Number => a(j) = f.intValue(); j += 1
-            }
-          }
-          if (ok) a else null
-        }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p = ints(r, inIdx)
-          val c = ints(r, cIdx)
+          val p = Kernel.ints(r, inIdx)
+          val c = Kernel.ints(r, cIdx)
           if (p == null || p.isEmpty || c == null || c.isEmpty)
-            Row.fromSeq(r.toSeq :+ null)
+            null
           else {
             val sess = m.decodeSession(p)
             var sum = 0.0
@@ -2526,11 +2177,10 @@ object Torch {
               sum += lg(tok).toDouble - (math.log(z) + mx)
               sess.append(tok)
             }
-            Row.fromSeq(r.toSeq :+ (-sum / c.length))
+            (-sum / c.length)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2564,59 +2214,22 @@ object Torch {
       steps: Int,
       batchSize: Int = -1): DataFrame = {
     require(steps >= 1, "steps must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.inDim == -1,
-      "generateGreedySharedPrefix needs a token-input model")
-    require(!model.value.isCross, "cross-attention model not supported here")
-    require(model.value.cacheable,
-      "prefix sharing needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df)
-      .withColumn(prefixCol, col(prefixCol).cast(ArrayType(IntegerType)))
-      .withColumn(inputCol, col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val pIdx = withInts.schema.fieldIndex(prefixCol)
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    requireTokenDecoder(model, "generateGreedySharedPrefix")
+    val pIdx = df.schema.fieldIndex(prefixCol)
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, fields(outCol -> Ints),
+        ints = Seq(prefixCol, inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      def ints(r: Row, idx: Int): Array[Int] =
-        if (r.isNullAt(idx)) null
-        else {
-          val xs = r.getSeq[Any](idx)
-          val a = new Array[Int](xs.length)
-          var j = 0
-          var ok = true
-          while (ok && j < a.length) {
-            xs(j) match {
-              case null => ok = false
-              case f: java.lang.Number => a(j) = f.intValue(); j += 1
-            }
-          }
-          if (ok) a else null
-        }
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         // one session per DISTINCT prefix in this batch; immutable
         // after open — every row forks it
         val cache = scala.collection.mutable.Map.empty[Vector[Int], m.DecodeSession]
         rows.iterator.map { r =>
-          val p = ints(r, pIdx)
-          val s = ints(r, inIdx)
+          val p = Kernel.ints(r, pIdx)
+          val s = Kernel.ints(r, inIdx)
           if (p == null || s == null || p.length + s.length == 0)
-            Row.fromSeq(r.toSeq :+ null)
+            null
           else {
             val sess =
               if (p.isEmpty) null
@@ -2631,16 +2244,15 @@ object Torch {
             val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
             var t = 0
             while (t < steps) {
-              val tid = argmaxFirst(child.logits())
+              val tid = argmaxFirst(child.logits(), vocab)
               gen += tid
               child.append(tid)
               t += 1
             }
-            Row.fromSeq(r.toSeq :+ gen.toSeq)
+            gen.toSeq
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2677,11 +2289,7 @@ object Torch {
     require(steps >= 1, "steps must be >= 1")
     require(lmWeight >= 0.0, "lmWeight must be >= 0")
     val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.inDim == -1, "generateGreedyFused needs a token-input model")
-    require(!model.value.isCross, "cross-attention model not supported here")
-    require(model.value.cacheable,
-      "fused decoding needs the KV-session path (cacheable model)")
+    requireTokenDecoder(model, "generateGreedyFused")
     val vocabN = model.value.outDim
     require(lmCounts.length == vocabN && lmCounts.forall(_.length == vocabN),
       "lmCounts must be vocab x vocab")
@@ -2691,12 +2299,8 @@ object Torch {
     // material even though the fixture vocab is 8
     val bcLm: Broadcast[(Array[Array[Long]], Array[Long])] =
       spark.sparkContext.broadcast((lmCounts, lmCounts.map(_.sum)))
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
       val (cnts, rsums) = bcLm.value
@@ -2717,24 +2321,10 @@ object Torch {
         require(best >= 0, "all-NaN logits")
         best
       }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq :+ null)
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val sess = m.decodeSession(p)
             var prev = p.last
@@ -2747,11 +2337,10 @@ object Torch {
               prev = tid
               t += 1
             }
-            Row.fromSeq(r.toSeq :+ gen.toSeq)
+            gen.toSeq
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2790,19 +2379,10 @@ object Torch {
     require(steps >= 1, "steps must be >= 1")
     require(topK >= 1, "topK must be >= 1")
     require(alpha >= 0.0 && alpha <= 1.0, "alpha must be in [0, 1]")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.inDim == -1, "generateContrastive needs a token-input model")
-    require(!model.value.isCross, "cross-attention model not supported here")
-    require(model.value.cacheable,
-      "contrastive search needs the KV-session path (cacheable model)")
+    requireTokenDecoder(model, "generateContrastive")
     require(topK <= model.value.outDim, "topK exceeds the vocabulary")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
       def q6(x: Double): Double =
@@ -2817,24 +2397,10 @@ object Torch {
         }
         q6(dot / (math.sqrt(na) * math.sqrt(nb)))
       }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq :+ null)
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             // token-at-a-time prompt ingest records EVERY position's
             // hidden state (the penalty compares against all of them)
@@ -2878,11 +2444,10 @@ object Torch {
               hiddens += hv
               t += 1
             }
-            Row.fromSeq(r.toSeq :+ gen.toSeq)
+            gen.toSeq
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -2930,79 +2495,41 @@ object Torch {
       eosId: Int = -1,
       minNewTokens: Int = 0): DataFrame = {
     require(steps >= 1, "steps must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.isCross && model.value.cacheable,
-      "generateGreedyPair needs a cacheable cross-attention model " +
-        "(causal decoder self-attention + last-position pool)")
+    requireTokenDecoder(model, "generateGreedyPair", cross = true)
     require(eosId < model.value.outDim, "eosId exceeds the vocabulary")
     require(minNewTokens >= 0, "minNewTokens must be >= 0")
     require(minNewTokens == 0 || eosId >= 0,
       "minNewTokens needs an eosId to suppress")
-    val withInts = graft.Spread(df)
-      .withColumn(queryCol, col(queryCol).cast(ArrayType(IntegerType)))
-      .withColumn(keyCol, col(keyCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val qIdx = withInts.schema.fieldIndex(queryCol)
-    val kIdx = withInts.schema.fieldIndex(keyCol)
-    withInts.mapPartitions { it =>
+    val qIdx = df.schema.fieldIndex(queryCol)
+    val kIdx = df.schema.fieldIndex(keyCol)
+    Kernel(df, fields(outCol -> Ints), ints = Seq(queryCol, keyCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      // genLen gates the min-new-tokens eos suppression: while fewer
-      // than minNewTokens tokens are generated, eos never becomes a
-      // candidate (minNewTokens = 0 makes the guard dead code — the
-      // un-floored path is byte-identical)
-      def argmaxFirst(l: Array[Float], genLen: Int): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          if (!(eosId >= 0 && j == eosId && genLen < minNewTokens) &&
-              !l(j).isNaN && (best < 0 || l(j) > bv)) { best = j; bv = l(j) }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
-      it.grouped(bs).flatMap { rows =>
-        def tokens(r: Row, idx: Int): Array[Int] = {
-          if (r.isNullAt(idx)) return null
-          val xs = r.getSeq[Any](idx)
-          if (xs.isEmpty) return null
-          val a = new Array[Int](xs.length)
-          var j = 0
-          while (j < a.length) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.intValue()
-            }
-            j += 1
-          }
-          a
-        }
+      rows =>
         rows.iterator.map { r =>
-          val q0 = tokens(r, qIdx)
-          val k0 = tokens(r, kIdx)
-          if (q0 == null || k0 == null) Row.fromSeq(r.toSeq :+ null)
+          val q0 = Kernel.nonEmptyInts(r, qIdx)
+          val k0 = Kernel.nonEmptyInts(r, kIdx)
+          if (q0 == null || k0 == null) null
           else {
             val sess = m.decodeSession(q0, k0)
             val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
             var t = 0
             var stopped = false
             while (t < steps && !stopped) {
-              val tid = argmaxFirst(sess.logits(), gen.length)
+              // while fewer than minNewTokens tokens are generated, eos
+              // is never a candidate (minNewTokens = 0: no mask at all)
+              val tid = argmaxFirst(sess.logits(), vocab, allowed =
+                if (eosId >= 0 && gen.length < minNewTokens) (_ != eosId) else null)
               gen += tid
               // eos stops the row (the eos itself is emitted; no
               // further session work — the serving early-exit)
               if (tid == eosId) stopped = true else sess.append(tid)
               t += 1
             }
-            Row.fromSeq(r.toSeq :+ gen.toSeq)
+            gen.toSeq
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -3032,10 +2559,7 @@ object Torch {
       bannedPhrases: Seq[Seq[Int]] = Nil,
       minNewTokens: Int = 0): DataFrame = {
     require(steps >= 1 && width >= 1, "steps and width must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.isCross && model.value.cacheable,
-      "beamSearchPair needs a cacheable cross-attention model")
+    requireTokenDecoder(model, "beamSearchPair", cross = true)
     require(width <= model.value.outDim, "width exceeds the vocabulary")
     require(lengthPenalty >= 0.0, "lengthPenalty must be >= 0")
     require(eosId < model.value.outDim, "eosId exceeds the vocabulary")
@@ -3050,14 +2574,10 @@ object Torch {
       "minNewTokens needs an eosId to suppress")
     val plainKnobs = banned.isEmpty && repetitionPenalty == 1.0 &&
       noRepeatNgram == 0 && bannedPhrases.isEmpty && minNewTokens == 0
-    val withInts = graft.Spread(df)
-      .withColumn(queryCol, col(queryCol).cast(ArrayType(IntegerType)))
-      .withColumn(keyCol, col(keyCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(ArrayType(IntegerType)), nullable = true))
-    val qIdx = withInts.schema.fieldIndex(queryCol)
-    val kIdx = withInts.schema.fieldIndex(keyCol)
-    withInts.mapPartitions { it =>
+    val qIdx = df.schema.fieldIndex(queryCol)
+    val kIdx = df.schema.fieldIndex(keyCol)
+    Kernel(df, fields(outCol -> ArrayType(Ints)),
+        ints = Seq(queryCol, keyCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
       def logProbs(out: Array[Float]): Array[Double] = {
@@ -3074,26 +2594,11 @@ object Torch {
         val lse = math.log(z) + mx
         Array.tabulate(vocab)(k => out(k).toDouble - lse)
       }
-      it.grouped(bs).flatMap { rows =>
-        def tokens(r: Row, idx: Int): Array[Int] = {
-          if (r.isNullAt(idx)) return null
-          val xs = r.getSeq[Any](idx)
-          if (xs.isEmpty) return null
-          val a = new Array[Int](xs.length)
-          var j = 0
-          while (j < a.length) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.intValue()
-            }
-            j += 1
-          }
-          a
-        }
+      rows =>
         rows.iterator.map { r =>
-          val q0 = tokens(r, qIdx)
-          val k0 = tokens(r, kIdx)
-          if (q0 == null || k0 == null) Row.fromSeq(r.toSeq :+ null)
+          val q0 = Kernel.nonEmptyInts(r, qIdx)
+          val k0 = Kernel.nonEmptyInts(r, kIdx)
+          if (q0 == null || k0 == null) null
           else {
             // (generated, RAW joint log-prob, session, done) — the
             // beamSearch variable-length rules over cross sessions
@@ -3142,11 +2647,10 @@ object Torch {
                 }
               t += 1
             }
-            Row.fromSeq(r.toSeq :+ beams.map(_._1.toSeq))
+            beams.map(_._1.toSeq)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -3188,42 +2692,19 @@ object Torch {
     require(noRepeatNgram == 0 || noRepeatNgram >= 2,
       "noRepeatNgram must be 0 (off) or >= 2")
     require(minP >= 0.0 && minP <= 1.0, "minP must be in [0, 1]")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.isCross && model.value.cacheable,
-      "generateSampledPair needs a cacheable cross-attention model")
-    val withInts = graft.Spread(df)
-      .withColumn(queryCol, col(queryCol).cast(ArrayType(IntegerType)))
-      .withColumn(keyCol, col(keyCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val qIdx = withInts.schema.fieldIndex(queryCol)
-    val kIdx = withInts.schema.fieldIndex(keyCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    requireTokenDecoder(model, "generateSampledPair", cross = true)
+    val qIdx = df.schema.fieldIndex(queryCol)
+    val kIdx = df.schema.fieldIndex(keyCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, fields(outCol -> Ints), ints = Seq(queryCol, keyCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      it.grouped(bs).flatMap { rows =>
-        def tokens(r: Row, idx: Int): Array[Int] = {
-          if (r.isNullAt(idx)) return null
-          val xs = r.getSeq[Any](idx)
-          if (xs.isEmpty) return null
-          val a = new Array[Int](xs.length)
-          var j = 0
-          while (j < a.length) {
-            xs(j) match {
-              case null => return null
-              case f: java.lang.Number => a(j) = f.intValue()
-            }
-            j += 1
-          }
-          a
-        }
+      rows =>
         rows.iterator.map { r =>
-          val q0 = tokens(r, qIdx)
-          val k0 = tokens(r, kIdx)
+          val q0 = Kernel.nonEmptyInts(r, qIdx)
+          val k0 = Kernel.nonEmptyInts(r, kIdx)
           if (q0 == null || k0 == null || r.isNullAt(idIdx))
-            Row.fromSeq(r.toSeq :+ null)
+            null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             val sess = m.decodeSession(q0, k0)
@@ -3255,11 +2736,10 @@ object Torch {
               full += tid
               t += 1
             }
-            Row.fromSeq(r.toSeq :+ gen.toSeq)
+            gen.toSeq
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -3356,19 +2836,13 @@ object Torch {
     // belong to the other warper chain.
     require(typicalP >= 1.0 || (topK == Int.MaxValue && minP == 0.0),
       "typicalP composes with topP only (not topK/minP)")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
     require(model.value.inDim == -1, "generateSampled needs a token-input model")
     require(!model.value.isCross,
       "cross-attention model: use generateGreedyPair")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val idIdx = df.schema.fieldIndex(idCol)
     val plain = repetitionPenalty == 1.0 && noRepeatNgram == 0
-    withInts.mapPartitions { it =>
+    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
       def draw(id: Long, step: Int): Double = Sampling.draw(id, step)
@@ -3404,23 +2878,9 @@ object Torch {
           fuseCnts = if (bcLm == null) null else bcLm.value._1,
           fuseRows = if (bcLm == null) null else bcLm.value._2)
       }
-      it.grouped(bs).flatMap { rows =>
-        val seqs: Array[Array[Int]] = rows.map { r =>
-          if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-          else {
-            val xs = r.getSeq[Any](inIdx)
-            val a = new Array[Int](xs.length)
-            var j = 0
-            var ok = true
-            while (ok && j < a.length) {
-              xs(j) match {
-                case null => ok = false
-                case f: java.lang.Number => a(j) = f.intValue(); j += 1
-              }
-            }
-            if (ok && a.nonEmpty) a else null
-          }
-        }.toArray
+      rows =>
+        val seqs: Array[Array[Int]] =
+          rows.map(r => if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)).toArray
         val ids: Array[Long] = rows.map(r =>
           if (r.isNullAt(idIdx)) 0L else r.getAs[Number](idIdx).longValue()).toArray
         val gen = Array.fill(seqs.length)(
@@ -3460,12 +2920,11 @@ object Torch {
             t += 1
           }
         }
-        rows.iterator.zipWithIndex.map { case (r, ri) =>
-          if (seqs(ri) == null) Row.fromSeq(r.toSeq :+ null)
-          else Row.fromSeq(r.toSeq :+ gen(ri).toSeq)
+        seqs.indices.iterator.map { ri =>
+          if (seqs(ri) == null) null
+          else gen(ri).toSeq
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -3505,38 +2964,19 @@ object Torch {
     require(numReturnSequences >= 1, "numReturnSequences must be >= 1")
     require(temperature > 0.0, "temperature must be > 0 (greedy is generateGreedy)")
     require(topP > 0.0 && topP <= 1.0, "topP must be in (0, 1]")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
     require(model.value.inDim == -1, "generateSampledK needs a token-input model")
     require(!model.value.isCross,
       "cross-attention model: use generateSampledPair")
     val k = numReturnSequences
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(ArrayType(IntegerType)), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, fields(outCol -> ArrayType(Ints)),
+        ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      it.grouped(bs).flatMap { rows =>
-        val seqs: Array[Array[Int]] = rows.map { r =>
-          if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-          else {
-            val xs = r.getSeq[Any](inIdx)
-            val a = new Array[Int](xs.length)
-            var j = 0
-            var ok = true
-            while (ok && j < a.length) {
-              xs(j) match {
-                case null => ok = false
-                case f: java.lang.Number => a(j) = f.intValue(); j += 1
-              }
-            }
-            if (ok && a.nonEmpty) a else null
-          }
-        }.toArray
+      rows =>
+        val seqs: Array[Array[Int]] =
+          rows.map(r => if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)).toArray
         val ids: Array[Long] = rows.map(r =>
           if (r.isNullAt(idIdx)) 0L else r.getAs[Number](idIdx).longValue()).toArray
         val gen = Array.fill(seqs.length, k)(
@@ -3584,12 +3024,11 @@ object Torch {
             t += 1
           }
         }
-        rows.iterator.zipWithIndex.map { case (r, ri) =>
-          if (seqs(ri) == null) Row.fromSeq(r.toSeq :+ null)
-          else Row.fromSeq(r.toSeq :+ gen(ri).toSeq.map(_.toSeq))
+        seqs.indices.iterator.map { ri =>
+          if (seqs(ri) == null) null
+          else gen(ri).toSeq.map(_.toSeq)
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /** Anti-degeneration decoding controls (Keskar et al. 2019's CTRL
@@ -3675,67 +3114,30 @@ object Torch {
     require(steps >= 1, "steps must be >= 1")
     require(nSink >= 0, "nSink must be >= 0")
     require(nWindow >= 1, "nWindow must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.inDim == -1,
-      "generateGreedyWindowed needs a token-input model")
-    require(!model.value.isCross, "cross-attention model not supported here")
-    require(model.value.cacheable,
-      "windowed decoding needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    requireTokenDecoder(model, "generateGreedyWindowed")
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq :+ null)
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val sess = if (relPos) m.decodeSessionRelPos(p, nSink, nWindow)
                        else m.decodeSessionWindowed(p, nSink, nWindow)
             val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
             var t = 0
             while (t < steps) {
-              val tok = argmaxFirst(sess.logits())
+              val tok = argmaxFirst(sess.logits(), vocab)
               gen += tok
               sess.append(tok)
               t += 1
             }
-            Row.fromSeq(r.toSeq :+ gen.toSeq)
+            gen.toSeq
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -3780,12 +3182,8 @@ object Torch {
       "windows must be strictly ascending")
     require(windows.forall(_ >= 1), "every nWindow must be >= 1")
     require(divNum >= 0 && divDen >= 1, "divergence budget must be a fraction")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.inDim == -1, "autoKvWindow needs a token-input model")
-    require(!model.value.isCross, "cross-attention model not supported here")
-    require(model.value.cacheable,
-      "windowed decoding needs the KV-session path (cacheable model)")
+    val bs = Kernel.batchSize(df.sparkSession, batchSize)
+    requireTokenDecoder(model, "autoKvWindow")
     val withInts = graft.Spread(df).select(col(inputCol).cast(ArrayType(IntegerType))
       .as(inputCol))
     val pairSchema = StructType(Seq(
@@ -3795,23 +3193,11 @@ object Torch {
     val pairs = withInts.mapPartitions { it =>
       val m = model.value
       val vocab = m.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       def gens(sess: TorchScriptModel#DecodeSession): Array[Int] = {
         val g = new Array[Int](steps)
         var t = 0
         while (t < steps) {
-          val tok = argmaxFirst(sess.logits())
+          val tok = argmaxFirst(sess.logits(), vocab)
           g(t) = tok
           sess.append(tok)
           t += 1
@@ -3820,21 +3206,7 @@ object Torch {
       }
       it.grouped(bs).flatMap { rows =>
         rows.iterator.flatMap { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(0)) null
-            else {
-              val xs = r.getSeq[Any](0)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
+          val p: Array[Int] = Kernel.nonEmptyInts(r, 0)
           if (p == null) Iterator.empty
           else {
             val base = gens(m.decodeSession(p))
@@ -3909,8 +3281,6 @@ object Torch {
     require(forcedTokens.contains(0) ||
       (banned ++ beginSuppress).size < model.value.outDim,
       "beginSuppress + banned cover the whole vocabulary at step 0")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
     require(model.value.inDim == -1, "generateGreedy needs a token-input model")
     require(!model.value.isCross,
       "cross-attention model: use generateGreedyPair")
@@ -3931,34 +3301,16 @@ object Torch {
         require(row.exists(_ != -1), s"DFA state $st allows no token")
       }
     }
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields :+
-      StructField(outCol, ArrayType(IntegerType), nullable = true))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
+    val inIdx = df.schema.fieldIndex(inputCol)
     val plain = repetitionPenalty == 1.0 && noRepeatNgram == 0 &&
       eosId < 0 && dfaTrans == null && bannedPhrases.isEmpty &&
       minNewTokens == 0 && forcedTokens.isEmpty && beginSuppress.isEmpty &&
       watermarkDelta == 0.0
-    withInts.mapPartitions { it =>
+    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      def argmaxFirst(out: Array[Float], off: Int): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(off + j)
-          // NaN never wins; strict > keeps the FIRST max; banned ids
-          // are simply never candidates (constrained decoding)
-          if (!banned.contains(j) && !v.isNaN && (best < 0 || v > bv)) {
-            best = j; bv = v
-          }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
+      // banned ids are simply never candidates (constrained decoding)
+      val allowed: Int => Boolean = if (banned.isEmpty) null else j => !banned.contains(j)
       // the knobbed pick: seen-token logits rescale in f64, n-gram
       // completions of the CURRENT (prompt + generated) sequence are
       // banned unless that would empty the vocabulary (then the ban
@@ -4029,23 +3381,8 @@ object Torch {
           " all remaining logits are NaN")
         best
       }
-      it.grouped(bs).flatMap { rows =>
-        val seqs: Array[Array[Int]] = rows.map { r =>
-          if (r.isNullAt(inIdx)) null
-          else {
-            val xs = r.getSeq[Any](inIdx)
-            val a = new Array[Int](xs.length)
-            var j = 0
-            var ok = true
-            while (ok && j < a.length) {
-              xs(j) match {
-                case null => ok = false
-                case f: java.lang.Number => a(j) = f.intValue(); j += 1
-              }
-            }
-            if (ok && a.nonEmpty) a else null
-          }
-        }.toArray
+      rows =>
+        val seqs: Array[Array[Int]] = rows.map(Kernel.nonEmptyInts(_, inIdx)).toArray
         val gen = Array.fill(seqs.length)(
           scala.collection.mutable.ArrayBuffer.empty[Int])
         if (m.cacheable) {
@@ -4069,7 +3406,7 @@ object Torch {
                   case Some(f) => f
                   case None =>
                     val lg = sess.logits()
-                    if (plain) argmaxFirst(lg, 0)
+                    if (plain) argmaxFirst(lg, vocab, 0, allowed)
                     else argmaxAdjusted(lg, 0, full, state, gen(ri).length)
                 }
                 gen(ri) += tid
@@ -4097,7 +3434,7 @@ object Torch {
                 val tid = forcedTokens.get(gen(ri).length) match {
                   case Some(f) => f
                   case None =>
-                    if (plain) argmaxFirst(out, k * vocab)
+                    if (plain) argmaxFirst(out, vocab, k * vocab, allowed)
                     else argmaxAdjusted(out, k * vocab,
                       scala.collection.immutable.ArraySeq.unsafeWrapArray(cur(ri)),
                       states(ri), gen(ri).length)
@@ -4114,12 +3451,11 @@ object Torch {
             t += 1
           }
         }
-        rows.iterator.zipWithIndex.map { case (r, ri) =>
-          if (seqs(ri) == null) Row.fromSeq(r.toSeq :+ null)
-          else Row.fromSeq(r.toSeq :+ gen(ri).toSeq)
+        seqs.indices.iterator.map { ri =>
+          if (seqs(ri) == null) null
+          else gen(ri).toSeq
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4173,54 +3509,15 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(ngram >= 1, "ngram must be >= 1")
     require(maxDraft >= 1, "maxDraft must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.inDim == -1,
-      "generatePromptLookup needs a token-input model")
-    require(!model.value.isCross, "cross-attention model not supported here")
-    require(model.value.cacheable,
-      "prompt-lookup decoding needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_drafted", IntegerType, nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    requireTokenDecoder(model, "generatePromptLookup")
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, LookupOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null, null))
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val drafts = lookupDraft(
               scala.collection.immutable.ArraySeq.unsafeWrapArray(p),
@@ -4230,18 +3527,16 @@ object Torch {
             var n = 0
             var rejected = false
             while (n < drafts.length && !rejected) {
-              val t = argmaxFirst(sess.logits())
+              val t = argmaxFirst(sess.logits(), vocab)
               out += t
               if (t == drafts(n)) { sess.append(t); n += 1 }
               else rejected = true // the argmax IS the correction
             }
-            if (!rejected) out += argmaxFirst(sess.logits()) // bonus
-            Row.fromSeq(r.toSeq ++
-              Seq(drafts.toSeq, drafts.length, n, out.toSeq))
+            if (!rejected) out += argmaxFirst(sess.logits(), vocab) // bonus
+            (drafts.toSeq, drafts.length, n, out.toSeq)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4273,24 +3568,14 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(numDrafts >= 1, "numDrafts must be >= 1")
     require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "speculativeSampledMultiDraftLoop needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross models: use the pair speculative path")
+    requireTokenDecoder(target, "speculativeSampledMultiDraftLoop")
+    requireTokenDecoder(draft, "speculativeSampledMultiDraftLoop")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("acc_rounds", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, fields("out_toks" -> Ints, "acc_rounds" -> Ints),
+        ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -4298,24 +3583,10 @@ object Torch {
       def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null))
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             val st = tm.decodeSession(p)
@@ -4337,11 +3608,10 @@ object Torch {
               sd.append(finalTok)
               c += 1
             }
-            Row.fromSeq(r.toSeq ++ Seq(out.toSeq, rounds.toSeq))
+            (out.toSeq, rounds.toSeq)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4375,47 +3645,20 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(ngram >= 1, "ngram must be >= 1")
     require(maxDraft >= 1, "maxDraft must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.inDim == -1,
-      "promptLookupSampled needs a token-input model")
-    require(!model.value.isCross, "cross-attention model not supported here")
-    require(model.value.cacheable,
-      "prompt-lookup decoding needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_drafted", IntegerType, nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    requireTokenDecoder(model, "promptLookupSampled")
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, LookupOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
       def q6(x: Double): Double = Spec.q6(x)
       def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null, null))
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             val drafts = lookupDraft(
@@ -4443,12 +3686,10 @@ object Torch {
             }
             if (!rejected) // no drafts, or all accepted → bonus sample
               out += pick(probs6(sess.logits()), draw(id, "b1"))
-            Row.fromSeq(r.toSeq ++
-              Seq(drafts.toSeq, drafts.length, n, out.toSeq))
+            (drafts.toSeq, drafts.length, n, out.toSeq)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4497,42 +3738,18 @@ object Torch {
     require(posteriorEps > 0.0 && posteriorEps <= 1.0,
       "posteriorEps must be in (0, 1]")
     require(posteriorAlpha > 0.0, "posteriorAlpha must be > 0")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "treeDraftTypical needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross-attention models not supported here")
+    requireTokenDecoder(target, "treeDraftTypical")
+    requireTokenDecoder(draft, "treeDraftTypical")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
     require(branch <= target.value.outDim, "branch exceeds the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("tree", ArrayType(ArrayType(IntegerType)), nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, TreeOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
       def q6(x: Double): Double = Spec.q6(x)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       def topBranch(lg: Array[Float]): Array[Int] = {
         val p6 = probs6(lg)
         (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
@@ -4548,24 +3765,10 @@ object Torch {
         }
         q6(math.min(posteriorEps, posteriorAlpha * StrictMath.exp(-h)))
       }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             // the draft tree: treeDraftGreedy's BFS build verbatim
             val tree = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
@@ -4609,12 +3812,11 @@ object Torch {
                 n += 1
               }
             }
-            out += argmaxFirst(st.logits()) // the deterministic continuation
-            Row.fromSeq(r.toSeq ++ Seq(tree.toSeq, n, out.toSeq))
+            out += argmaxFirst(st.logits(), vocab) // the deterministic continuation
+            (tree.toSeq, n, out.toSeq)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4662,42 +3864,18 @@ object Torch {
     val windowed = nWindow > 0
     require(!windowed || nSink >= 0,
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "treeDraftTypicalLoop needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross-attention models not supported here")
+    requireTokenDecoder(target, "treeDraftTypicalLoop")
+    requireTokenDecoder(draft, "treeDraftTypicalLoop")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
     require(branch <= target.value.outDim, "branch exceeds the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
       def q6(x: Double): Double = Spec.q6(x)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       def topBranch(lg: Array[Float]): Array[Int] = {
         val p6 = probs6(lg)
         (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
@@ -4714,24 +3892,10 @@ object Torch {
         }
         q6(math.min(posteriorEps, posteriorAlpha * StrictMath.exp(-h)))
       }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val st = if (windowed) tm.decodeSessionWindowed(p, nSink, nWindow)
                      else tm.decodeSession(p)
@@ -4783,14 +3947,12 @@ object Torch {
                   accTotal += 1
                 }
               }
-              emit(argmaxFirst(st.logits())) // the argmax continuation
+              emit(argmaxFirst(st.logits(), vocab)) // the argmax continuation
             }
-            Row.fromSeq(r.toSeq ++
-              Seq(out.take(maxNewTokens).toSeq, cycles, accTotal))
+            (out.take(maxNewTokens).toSeq, cycles, accTotal)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4840,62 +4002,24 @@ object Torch {
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
     require(!relPos || windowed,
       "relPos is a dial on the bounded-KV sessions (needs nWindow >= 1)")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "treeDraftGreedyLoop needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross-attention models not supported here")
+    requireTokenDecoder(target, "treeDraftGreedyLoop")
+    requireTokenDecoder(draft, "treeDraftGreedyLoop")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
     require(branch <= target.value.outDim, "branch exceeds the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       def topBranch(lg: Array[Float]): Array[Int] = {
         val p6 = Spec.probs6(lg, vocab)
         (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
       }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             // the DRAFT session tracks the accepted prefix too — each
             // cycle's tree roots at a fork of it (O(L) copy), so
@@ -4941,20 +4065,18 @@ object Torch {
                 val nd = sd.fork(); nd.append(t); sd = nd
               }
               while (n < depth && !rejected) {
-                val t = argmaxFirst(st.logits())
+                val t = argmaxFirst(st.logits(), vocab)
                 emit(t)
                 if (childrenOf(path).contains(t)) {
                   path :+= t; n += 1; accTotal += 1
                 } else rejected = true
               }
-              if (!rejected) emit(argmaxFirst(st.logits())) // bonus
+              if (!rejected) emit(argmaxFirst(st.logits(), vocab)) // bonus
             }
-            Row.fromSeq(r.toSeq ++
-              Seq(out.take(maxNewTokens).toSeq, cycles, accTotal))
+            (out.take(maxNewTokens).toSeq, cycles, accTotal)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -4999,25 +4121,14 @@ object Torch {
       numDrafts: Int,
       batchSize: Int = -1): DataFrame = {
     require(numDrafts >= 1, "numDrafts must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "speculativeSampledMultiDraft needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross models: use the pair speculative path")
+    requireTokenDecoder(target, "speculativeSampledMultiDraft")
+    requireTokenDecoder(draft, "speculativeSampledMultiDraft")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "speculative sampling needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("draft_toks", ArrayType(IntegerType), nullable = true),
-      StructField("acc_round", IntegerType, nullable = true),
-      StructField("final_tok", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, fields("draft_toks" -> Ints, "acc_round" -> IntegerType, "final_tok" -> IntegerType),
+        ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -5027,24 +4138,10 @@ object Torch {
       // residual/normalization discipline lives in Spec.multiRoundWalk
       // (normalize ONLY where a later round's ratio needs it; the
       // final pick walks the RAW masses — numDrafts = 1 IS q247)
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             val qp = probs6(dm.decodeSession(p).logits())
@@ -5053,11 +4150,10 @@ object Torch {
               pick(qp, draw(id, s"d${i + 1}")))
             val (accRound, finalTok) =
               Spec.multiRoundWalk(drafts, qp, pp, vocab, id, 0)
-            Row.fromSeq(r.toSeq ++ Seq(drafts.toSeq, accRound, finalTok))
+            (drafts.toSeq, accRound, finalTok)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -5114,50 +4210,25 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(branch >= 1, "branch must be >= 1")
     require(depth >= 1, "depth must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "treeDraftStochastic needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross-attention models not supported here")
+    requireTokenDecoder(target, "treeDraftStochastic")
+    requireTokenDecoder(draft, "treeDraftStochastic")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("tree", ArrayType(ArrayType(IntegerType)), nullable = true),
-      StructField("acc_rounds", ArrayType(IntegerType), nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, fields("tree" -> ArrayType(Ints), "acc_rounds" -> Ints, "n_accepted" -> IntegerType,
+        "out_toks" -> Ints),
+        ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
       def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null, null))
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             val sd = dm.decodeSession(p)
@@ -5184,12 +4255,10 @@ object Torch {
             }
             if (!stopped) out += pick(probs6(st.logits()), draw(id, "b1"))
             val nAcc = rounds.count(_ > 0)
-            Row.fromSeq(r.toSeq ++
-              Seq(tree.toSeq, rounds.toSeq, nAcc, out.toSeq))
+            (tree.toSeq, rounds.toSeq, nAcc, out.toSeq)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -5239,49 +4308,23 @@ object Torch {
     val windowed = nWindow > 0
     require(!windowed || nSink >= 0,
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "treeDraftStochasticLoop needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross-attention models not supported here")
+    requireTokenDecoder(target, "treeDraftStochasticLoop")
+    requireTokenDecoder(draft, "treeDraftStochasticLoop")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    val idIdx = withInts.schema.fieldIndex(idCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    val idIdx = df.schema.fieldIndex(idCol)
+    Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
       def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
       def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx) || r.isNullAt(idIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
             val sd = if (windowed) dm.decodeSessionWindowed(p, nSink, nWindow)
@@ -5316,12 +4359,10 @@ object Torch {
                 st.append(bonus)
               }
             }
-            Row.fromSeq(r.toSeq ++
-              Seq(emitted.take(maxNewTokens).toSeq, cycles, accTotal))
+            (emitted.take(maxNewTokens).toSeq, cycles, accTotal)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -5506,53 +4547,15 @@ object Torch {
     val windowed = nWindow > 0
     require(!windowed || nSink >= 0,
       "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(model.value.inDim == -1,
-      "generatePromptLookupLoop needs a token-input model")
-    require(!model.value.isCross, "cross-attention model not supported here")
-    require(model.value.cacheable,
-      "prompt-lookup decoding needs the KV-session path (cacheable model)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("out_toks", ArrayType(IntegerType), nullable = true),
-      StructField("n_cycles", IntegerType, nullable = true),
-      StructField("n_acc_total", IntegerType, nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    requireTokenDecoder(model, "generatePromptLookupLoop")
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             val sess = if (relPos) m.decodeSessionRelPos(p, nSink, nWindow)
                        else if (windowed) m.decodeSessionWindowed(p, nSink, nWindow)
@@ -5567,22 +4570,20 @@ object Torch {
               var n = 0
               var rejected = false
               while (n < drafts.length && !rejected) {
-                val t = argmaxFirst(sess.logits())
+                val t = argmaxFirst(sess.logits(), vocab)
                 out += t; sess.append(t); full += t
                 if (t == drafts(n)) { n += 1; accTotal += 1 }
                 else rejected = true // the argmax IS the correction
               }
               if (!rejected) { // no drafts, or all accepted → bonus
-                val t = argmaxFirst(sess.logits())
+                val t = argmaxFirst(sess.logits(), vocab)
                 out += t; sess.append(t); full += t
               }
             }
-            Row.fromSeq(r.toSeq ++
-              Seq(out.take(maxNewTokens).toSeq, cycles, accTotal))
+            (out.take(maxNewTokens).toSeq, cycles, accTotal)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 
   /**
@@ -5636,62 +4637,24 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(branch >= 1, "branch must be >= 1")
     require(depth >= 1, "depth must be >= 1")
-    val spark = df.sparkSession
-    val bs = if (batchSize > 0) batchSize else TorchConf.get(spark).batchSize
-    require(target.value.inDim == -1 && draft.value.inDim == -1,
-      "treeDraftGreedy needs token-input models")
-    require(!target.value.isCross && !draft.value.isCross,
-      "cross-attention models not supported here")
+    requireTokenDecoder(target, "treeDraftGreedy")
+    requireTokenDecoder(draft, "treeDraftGreedy")
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
     require(branch <= target.value.outDim, "branch exceeds the vocabulary")
-    require(target.value.cacheable && draft.value.cacheable,
-      "tree-draft decoding needs the KV-session path (cacheable models)")
-    val withInts = graft.Spread(df).withColumn(inputCol,
-      col(inputCol).cast(ArrayType(IntegerType)))
-    val schema = StructType(withInts.schema.fields ++ Seq(
-      StructField("tree", ArrayType(ArrayType(IntegerType)), nullable = true),
-      StructField("n_accepted", IntegerType, nullable = true),
-      StructField("out_toks", ArrayType(IntegerType), nullable = true)))
-    val inIdx = withInts.schema.fieldIndex(inputCol)
-    withInts.mapPartitions { it =>
+    val inIdx = df.schema.fieldIndex(inputCol)
+    Kernel(df, TreeOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def argmaxFirst(out: Array[Float]): Int = {
-        var best = -1
-        var bv = Float.NaN
-        var j = 0
-        while (j < vocab) {
-          val v = out(j)
-          if (!v.isNaN && (best < 0 || v > bv)) { best = j; bv = v }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
       def topBranch(lg: Array[Float]): Array[Int] = {
         val p6 = Spec.probs6(lg, vocab)
         (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
       }
-      it.grouped(bs).flatMap { rows =>
+      rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] =
-            if (r.isNullAt(inIdx)) null
-            else {
-              val xs = r.getSeq[Any](inIdx)
-              val a = new Array[Int](xs.length)
-              var j = 0
-              var ok = true
-              while (ok && j < a.length) {
-                xs(j) match {
-                  case null => ok = false
-                  case f: java.lang.Number => a(j) = f.intValue(); j += 1
-                }
-              }
-              if (ok && a.nonEmpty) a else null
-            }
-          if (p == null) Row.fromSeq(r.toSeq ++ Seq(null, null, null))
+          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+          if (p == null) null
           else {
             // BFS tree build: each internal node costs one draft logit
             // read on a fork. Children index by PATH (not token —
@@ -5724,17 +4687,16 @@ object Torch {
             var n = 0
             var rejected = false
             while (n < depth && !rejected) {
-              val t = argmaxFirst(st.logits())
+              val t = argmaxFirst(st.logits(), vocab)
               out += t
               if (childrenOf(path).contains(t)) {
                 st.append(t); path :+= t; n += 1
               } else rejected = true // the argmax IS the correction
             }
-            if (!rejected) out += argmaxFirst(st.logits()) // bonus
-            Row.fromSeq(r.toSeq ++ Seq(tree.toSeq, n, out.toSeq))
+            if (!rejected) out += argmaxFirst(st.logits(), vocab) // bonus
+            (tree.toSeq, n, out.toSeq)
           }
         }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    }
   }
 }
