@@ -1,14 +1,20 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit,
-  LeafNode, LogicalPlan, Project, RebalancePartitions, Repartition, RepartitionOperation,
-  Sort, Window}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition,
+  Sort, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.{V1WriteCommand, WriteFiles}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.internal.SQLConf
 
-/** Plans a small final sort in one partition.
+/** Plans the final sort of a query without a stage of its own.
   *
   * Spark plans every global sort as a range exchange. To pick the range
   * bounds it first runs a sampling job over the sort's whole input,
@@ -17,53 +23,88 @@ import org.apache.spark.sql.internal.SQLConf
   * small result AQE then merges the ranges back into one task anyway.
   *
   * This rule finds the plan's root global sort, looking only through
-  * projections, filters, a `coalesce(1)` and a file write. When the
-  * sort's estimated input (`child.stats.sizeInBytes`) is at most
-  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` — the size AQE
-  * would merge it to — the input goes to one partition first: through
-  * `Repartition(1, shuffle = true)`, which runs the input once on all
-  * its partitions and shuffles it without sampling, or, when the input
-  * already comes out of one task (an exchange-free plan over a
-  * one-partition scan, a global aggregate or window), through a
-  * `coalesce(1)` that adds no stage. The sort then runs in that one
-  * partition. Larger inputs, sorts under a limit, offset or tail (the
-  * top-k `TakeOrderedAndProject`), sorts inside a plan and streaming
-  * plans are left to Spark.
+  * projections, filters, a `coalesce(1)` and a file write, and replaces
+  * it with a [[SortedCollect]]: each partition of the sort's input is
+  * sorted in place, in the input's own stage. `collect()` merges those
+  * sorted runs on the driver (one job, no exchange, whatever the input's
+  * size: the driver receives every row either way). Any other use of
+  * the result (a write, `toLocalIterator`, `.rdd`) reads one partition
+  * when the input already comes out of one task. Otherwise it shuffles
+  * the input to one partition when its estimated size
+  * (`child.stats.sizeInBytes`) is at most
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the size AQE would
+  * merge it to, and is Spark's range sort when it is larger. Sorts under
+  * a limit, offset or tail (the top-k `TakeOrderedAndProject`), sorts
+  * inside a plan and streaming plans are left to Spark.
   */
-case class SmallSort(spark: SparkSession) extends Rule[LogicalPlan] {
+object SmallSort extends Rule[LogicalPlan] {
 
   def apply(plan: LogicalPlan): LogicalPlan = if (plan.isStreaming) plan else root(plan)
 
   private def root(p: LogicalPlan): LogicalPlan = p match {
-    case s @ Sort(_, true, child, _) if !child.isInstanceOf[Repartition] &&
-        child.stats.sizeInBytes <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) =>
-      s.copy(child = Repartition(1, shuffle = !onePartition(child), child))
+    case Sort(order, true, child, _) => SortedCollect(order, child)
     case _: Project | _: Filter | Repartition(1, false, _) | _: WriteFiles | _: V1WriteCommand =>
       p.withNewChildren(Seq(root(p.children.head)))
     case _ => p
   }
 
-  /** `p` already comes out of one task: an exchange-free plan over a
-    * one-partition scan, or operators whose inputs all end in a global
-    * aggregate, window or limit (one partition satisfies every
-    * distribution the operators above them require, so Spark adds no
-    * exchange there). */
-  private def onePartition(p: LogicalPlan): Boolean =
-    Spread.exchangeFree(p) && Spread.leafPartitions(p, spark).contains(1L) || single(p)
-
-  private def single(p: LogicalPlan): Boolean = p match {
-    case Aggregate(Nil, _, _, _) | Window(_, Nil, _, _, _) | _: GlobalLimit |
-         Repartition(1, _, _) => true
-    case _: RepartitionOperation | _: RebalancePartitions | _: LeafNode => false
-    case _ => p.children.forall(single)
+  /** Adds the rule and [[GraftStrategy]] to the session once. */
+  def register(spark: SparkSession): Unit = {
+    val extra = spark.experimental
+    if (!extra.extraOptimizations.contains(SmallSort)) extra.extraOptimizations :+= SmallSort
+    if (!extra.extraStrategies.contains(GraftStrategy)) extra.extraStrategies :+= GraftStrategy
   }
 }
 
-object SmallSort {
-  /** Adds the rule to the session's optimizer once. */
-  def register(spark: SparkSession): Unit = {
-    val extra = spark.experimental
-    if (!extra.extraOptimizations.exists(_.isInstanceOf[SmallSort]))
-      extra.extraOptimizations :+= SmallSort(spark)
+/** A global sort whose partitions are merged where the result is used
+  * ([[SmallSort]]). */
+case class SortedCollect(order: Seq[SortOrder], child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output
+  override def maxRows: Option[Long] = child.maxRows
+  override def outputOrdering: Seq[SortOrder] = order
+  override protected def withNewChildInternal(c: LogicalPlan): SortedCollect = copy(child = c)
+}
+
+/** `child` is the sort's input with each partition sorted in place (a
+  * local `SortExec`). `small`: the input's estimate is at most the
+  * advisory partition size. */
+case class SortedCollectExec(order: Seq[SortOrder], small: Boolean, child: SparkPlan)
+    extends UnaryExecNode {
+  override def output: Seq[Attribute] = child.output
+  override def outputOrdering: Seq[SortOrder] = order
+
+  /** The sorted runs, one per partition, merged on the driver. The
+    * collect keeps partition order, and TimSort merges presorted runs in
+    * O(n log runs) comparisons; it is stable, so ties keep partition
+    * order. */
+  override def executeCollect(): Array[InternalRow] = {
+    val rows = child.executeCollect()
+    java.util.Arrays.sort(rows, new LazilyGeneratedOrdering(order, output))
+    rows
+  }
+
+  protected override def doExecute(): RDD[InternalRow] = {
+    val runs = child.execute()
+    if (runs.getNumPartitions <= 1) runs
+    else {
+      val to = if (small) SinglePartition
+        else RangePartitioning(order, conf.numShufflePartitions)
+      SortExec(order, global = true, ShuffleExchangeExec(to, child)).execute()
+    }
+  }
+
+  override protected def withNewChildInternal(c: SparkPlan): SortedCollectExec =
+    copy(child = c)
+}
+
+/** Plans graft's logical nodes: [[Stride]] and [[SortedCollect]]. */
+object GraftStrategy extends SparkStrategy {
+  def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case Stride(n, child) => StrideExec(n, planLater(child)) :: Nil
+    case SortedCollect(order, child) =>
+      val small = child.stats.sizeInBytes <=
+        SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      SortedCollectExec(order, small, SortExec(order, global = false, planLater(child))) :: Nil
+    case _ => Nil
   }
 }

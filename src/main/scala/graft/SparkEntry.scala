@@ -52,8 +52,8 @@ object SparkEntry {
   // still scans parquet; nothing about results is cached.
   private val tableCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-  // Every table reference also makes sure the session plans small
-  // final sorts in one partition ([[SmallSort]]).
+  // Every table reference also makes sure the session merges final
+  // sorts at collect ([[SmallSort]]).
   private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     SmallSort.register(spark)
     tableCache.computeIfAbsent((spark, dir, name),

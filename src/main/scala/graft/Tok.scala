@@ -59,8 +59,9 @@ object Tok {
 
   /** The `docs` whose `text` has at least `minTokens` tokens, spread over
     * the session's cores ([[Spread]]) before any tokenizing projection:
-    * a small document table scans as one task, and ids selected before
-    * the spread would all be hashed in that task. */
+    * a small document table scans as one partition, and when [[Spread]]
+    * has to shuffle it, ids selected before the spread would all be
+    * hashed in the one scan task. */
   def spread(docs: DataFrame, minTokens: Int = 1): DataFrame =
     Spread(docs.filter(atLeast(col("text"), minTokens)))
 

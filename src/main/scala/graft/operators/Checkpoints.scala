@@ -28,7 +28,9 @@ object Checkpoints {
   private val lastSet = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Checkpoint under the session's policy (see object doc). Lazy over
-    * an exchange-free input: no job runs until the checkpoint is read.
+    * an exchange-free input, a strided one ([[graft.Spread]], e.g. a
+    * torch model's `Tok.input`) included: no job runs until the
+    * checkpoint is read.
     * Under AQE an input that holds an exchange is not lazy: building its
     * RDD materializes every upstream shuffle stage, so those map jobs run
     * when `cp` is called (the later read reuses their output; nothing

@@ -520,7 +520,9 @@ object Torch {
    * `torchfusion.batch_size` from the session.
    *
    * Runs through [[graft.Kernel]]: streaming, no per-partition
-   * materialization beyond one batch.
+   * materialization beyond one batch. A null token row, one with a null
+   * id, and one shorter than the model's conv/pool kernels
+   * ([[TorchScriptModel.minSeqTokens]]) yield null.
    */
   def inferBatched(
       df: DataFrame,
@@ -540,6 +542,7 @@ object Torch {
       val m = model.value
       val inDim = m.inDim
       val outDim = m.outDim
+      val minLen = m.minSeqTokens
       // null inputs (null array or any null element) stay out of the
       // GEMM batch and yield null output; live rows take their
       // forward-pass slice in order (one shared assembly for both input
@@ -556,9 +559,13 @@ object Torch {
       }
       rows =>
         if (tokenInput) {
-          // variable-length token rows: no length requirement — pooling
-          // is per-row, the GEMM batch is the pooled (n, embDim) matrix
-          val inputs = rows.map(Kernel.ints(_, inIdx))
+          // variable-length token rows: pooling is per-row, the GEMM
+          // batch is the pooled (n, embDim) matrix; a row too short for
+          // the model's conv/pool kernels is null, like a null row
+          val inputs = rows.map { r =>
+            val a = Kernel.ints(r, inIdx)
+            if (a != null && a.length < minLen) null else a
+          }
           val live = inputs.filter(_ != null).toArray
           val out = if (live.nonEmpty) m.forwardTokensBatch(live) else Array.empty[Float]
           emit(inputs, out)

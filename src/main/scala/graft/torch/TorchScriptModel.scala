@@ -880,6 +880,25 @@ final class TorchScriptModel(val ops: IndexedSeq[TorchOp],
       (pool, width)
   }
 
+  /** The fewest tokens a sequence-head row needs: a shorter row leaves
+    * a conv or pool kernel no window (torch's output-size check), so
+    * [[Torch.inferBatched]] reads it as null. 0 when no op shortens the
+    * sequence. Conv, pool, pad and chomp all act on the `(ch, L)`
+    * layout's length axis (checked above). */
+  lazy val minSeqTokens: Int = {
+    def lenAfter(l0: Int): Int = ops.slice(1, poolIdx).foldLeft(l0) {
+      case (l, _) if l < 0 => l
+      case (l, cv: Conv1dOp) =>
+        if (l + 2 * cv.pad >= cv.kSpan) (l + 2 * cv.pad - cv.kSpan) / cv.stride + 1 else -1
+      case (l, MaxPool1dOp(k, s)) => if (l >= k) (l - k) / s + 1 else -1
+      case (l, AvgPool1dOp(k, s)) => if (l >= k) (l - k) / s + 1 else -1
+      case (l, Pad1dOp(a, b)) => l + a + b
+      case (l, Chomp1dOp(c)) => if (l > c) l - c else -1
+      case (l, _) => l
+    }
+    if (poolIdx < 0) 0 else Iterator.from(0).find(lenAfter(_) >= 0).get
+  }
+
   /** PIXEL-input (vision) models start with a 2-D convolution that
     * consumes the raw `(inCh, H, W)` image — use
     * [[forwardImageBatch]]. */

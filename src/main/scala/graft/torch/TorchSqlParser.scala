@@ -89,11 +89,13 @@ class TorchSqlParser(delegate: ParserInterface) extends ParserInterface {
 /** `spark.sql.extensions` entry point. Also registers `argmax` so an
   * extension-configured session matches the reference's
   * `configure_context` bootstrap (reference src/lib.rs:118-137), and
-  * plans small final sorts in one partition ([[graft.SmallSort]]). */
+  * plans final sorts without a stage of their own ([[graft.SmallSort]])
+  * and graft's logical nodes ([[graft.GraftStrategy]]). */
 class TorchExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectParser((_, delegate) => new TorchSqlParser(delegate))
     ext.injectFunction(graft.functions.ArgMax.descriptor)
-    ext.injectOptimizerRule(graft.SmallSort(_))
+    ext.injectOptimizerRule(_ => graft.SmallSort)
+    ext.injectPlannerStrategy(_ => graft.GraftStrategy)
   }
 }

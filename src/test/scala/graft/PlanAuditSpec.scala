@@ -20,15 +20,10 @@ class PlanAuditSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
-  /** Exchanges that move DATA for the query's own logic. The round-19
-    * adaptive input spread (graft.Spread) adds one
-    * `Exchange roundrobinpartitioning` when a below-parallelism scan
-    * feeds a single-mapPartitions kernel — a deliberate, scale-guarded
-    * spread that disappears at real scale, not a decode-plan
-    * regression — so it is excluded from the decode-contract counts. */
-  private def dataExchanges(p: String): Int =
-    "Exchange".r.findAllIn(p).length -
-      "(?i)Exchange roundrobinpartitioning".r.findAllIn(p).length
+  /** Every exchange in the plan. The input spread (graft.Spread)
+    * strides a below-parallelism scan without a shuffle, and the final
+    * sort merges at collect (graft.SmallSort), so neither adds one. */
+  private def dataExchanges(p: String): Int = "Exchange".r.findAllIn(p).length
 
   test("q03 LIKE filter is pushed to the parquet scan") {
     val p = plan("q03_filter_like")
@@ -350,15 +345,13 @@ class PlanAuditSpec extends AnyFunSuite {
     // scan-side HOF projections — ANY exchange is a regression
     for (q <- Seq("q184_fim", "q186_char_entropy", "q188_sft_render")) {
       val p = plan(q)
-      // the final orderBy is allowed its one exchange (a range
-      // partitioning, or a single-partition shuffle when SmallSort plans
-      // it in one task); nothing else
+      // the final orderBy merges at collect: no exchange at all
       val ex = dataExchanges(p)
-      assert(ex <= 1, s"$q: map-stage op shuffled beyond the output sort ($ex):\n$p")
+      assert(ex == 0, s"$q: map-stage op shuffled ($ex):\n$p")
       assert(!p.contains("CartesianProduct"), s"$q cartesian:\n$p")
     }
     // preference pairs: ONE hash-partitioning exchange on the prompt
-    // key (plus the output sort); the struct min/max must partial-agg
+    // key (the output sort merges at collect); the struct min/max must partial-agg
     val pp = plan("q183_dpo_pairs")
     assert("Exchange hashpartitioning".r.findAllIn(pp).length == 1,
       s"q183: expected one keyed exchange:\n$pp")
@@ -372,16 +365,15 @@ class PlanAuditSpec extends AnyFunSuite {
   test("round-14 decode/cross family: scan-side mapPartitions, the output sort the only exchange") {
     // cross-attention inference (q202), sampled decoding (q203), LoRA
     // classifier (q204), encoder-decoder generation (q206): one
-    // broadcast-weights mapPartitions over the documents scan; the
-    // ONLY exchange is the final orderBy's (a single-partition shuffle
-    // when SmallSort plans the small sort in one task, otherwise a
-    // range partitioning) — any other shuffle (or a second scan /
-    // rescan boundary) is a regression of the batched-inference shape
+    // broadcast-weights mapPartitions over the strided documents scan,
+    // and the final orderBy merges at collect: no exchange at all — any
+    // shuffle (or a second scan / rescan boundary) is a regression of
+    // the batched-inference shape
     for (q <- Seq("q202_torch_crossattn", "q203_torch_gen_sampled",
         "q204_torch_lora", "q206_torch_cross_gen", "q210_seq2seq_filter")) {
       val p = plan(q)
       val ex = dataExchanges(p)
-      assert(ex <= 1, s"$q: decode op shuffled beyond the output sort ($ex):\n$p")
+      assert(ex == 0, s"$q: decode op shuffled ($ex):\n$p")
       assert(!p.contains("CartesianProduct"), s"$q cartesian:\n$p")
       assert("Scan parquet".r.findAllIn(p).length <= 1,
         s"$q: expected at most one parquet scan:\n$p")
@@ -394,7 +386,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // shuffle), norepeat greedy (q213), length-normalized EOS beams
     // (q214), banded-bias KV-session decode (q215): the k-step loops
     // and chained verifications live inside scan-side mapPartitions;
-    // the only exchange is the final orderBy's (single-partition or range)
+    // nothing exchanges: the final orderBy merges at collect
     for (q <- Seq("q211_torch_gen_topk", "q212_torch_cross_spec",
         "q213_torch_gen_norepeat", "q214_torch_beam_lennorm",
         "q215_torch_alibi_decode", "q216_torch_sampled_norepeat",
@@ -403,7 +395,7 @@ class PlanAuditSpec extends AnyFunSuite {
         "q221_torch_cross_eos", "q227_torch_gen_badwords")) {
       val p = plan(q)
       val ex = dataExchanges(p)
-      assert(ex <= 1, s"$q: decode op shuffled beyond the output sort ($ex):\n$p")
+      assert(ex == 0, s"$q: decode op shuffled ($ex):\n$p")
       assert(!p.contains("CartesianProduct"), s"$q cartesian:\n$p")
       assert("Scan parquet".r.findAllIn(p).length <= 1,
         s"$q: expected at most one parquet scan:\n$p")
@@ -415,7 +407,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // beam groups (q236 — groups×width KV sessions still ONE
     // mapPartitions, groups exchange nothing), the Distinct-n
     // self-diversity gate (q237 — the aggregation is per-row over the
-    // k generations, no keyed shuffle): same ≤1-exchange contract as
+    // k generations, no keyed shuffle): same no-exchange contract as
     // the round-15 knob wave
     // q239 watermarked decode and q240 detection share the contract:
     // q240's pair walk is a scan-side zip_with (no self-join — the
@@ -430,22 +422,22 @@ class PlanAuditSpec extends AnyFunSuite {
         "q247_torch_spec_sampled", "q248_torch_contrastive_decoding")) {
       val p = plan(q)
       val ex = dataExchanges(p)
-      assert(ex <= 1, s"$q: decode op shuffled beyond the output sort ($ex):\n$p")
+      assert(ex == 0, s"$q: decode op shuffled ($ex):\n$p")
       assert(!p.contains("CartesianProduct"), s"$q cartesian:\n$p")
       assert("Scan parquet".r.findAllIn(p).length <= 1,
         s"$q: expected at most one parquet scan:\n$p")
     }
     // q244 best-of-n: generation + rescoring are scan-side; the ONLY
-    // data-shaped exchange is the per-doc ranking window (plus the
-    // output sort) — never a cartesian, one parquet scan
+    // exchange is the per-doc ranking window — never a cartesian, one
+    // parquet scan
     val p244 = plan("q244_torch_best_of_n")
     assert(!p244.contains("CartesianProduct"), s"q244 cartesian:\n$p244")
     assert(p244.contains("Window") && p244.contains("row_number"),
       s"q244 lost its ranking window:\n$p244")
     assert("Scan parquet".r.findAllIn(p244).length <= 1,
       s"q244: expected at most one parquet scan:\n$p244")
-    assert(dataExchanges(p244) <= 3,
-      s"q244 shuffled beyond window + sort:\n$p244")
+    assert(dataExchanges(p244) <= 2,
+      s"q244 shuffled beyond its window:\n$p244")
     // q238 A-ES weighted sampling: the pick must be a per-partition
     // top-n (TakeOrderedAndProject), never a full global sort of the
     // corpus by key
@@ -456,11 +448,11 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("round-15 ingestion ops: chunking is scan-side; the dHash join is banded, never a product") {
-    // q222: tokenize + ONE posexplode + the output sort — any other
-    // exchange means the chunker started shuffling text
+    // q222: tokenize + ONE posexplode, the output sort merged at
+    // collect — any exchange means the chunker started shuffling text
     val p222 = plan("q222_chunk_windows")
-    assert(dataExchanges(p222) <= 1,
-      s"q222 chunker shuffled beyond the output sort:\n$p222")
+    assert(dataExchanges(p222) == 0,
+      s"q222 chunker shuffled:\n$p222")
     assert("Generate".r.findAllIn(p222).length == 1,
       s"q222: expected exactly one explode:\n$p222")
     // q223: the hamming-banded self-join — keyed exchanges are the
@@ -483,7 +475,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // (q250), watermark gamma=1/4 generate+detect (q251/q252),
     // contrastive beam decoding (q253), the speculative serving loop
     // (q254): all KV-session work inside ONE mapPartitions — the
-    // same ≤1-exchange / ≤1-scan / no-cartesian contract as every
+    // same no-exchange / ≤1-scan / no-cartesian contract as every
     // decode wave before them
     for (q <- Seq("q249_torch_spec_gamma", "q250_torch_beam_diverse_eos",
         "q251_torch_gen_watermark_g4", "q252_watermark_detect_g4",
@@ -492,7 +484,7 @@ class PlanAuditSpec extends AnyFunSuite {
         "q260_torch_beam_watermark", "q261_torch_cross_spec_gamma")) {
       val p = plan(q)
       val ex = dataExchanges(p)
-      assert(ex <= 1, s"$q: decode op shuffled beyond the output sort ($ex):\n$p")
+      assert(ex == 0, s"$q: decode op shuffled ($ex):\n$p")
       assert(!p.contains("CartesianProduct"), s"$q cartesian:\n$p")
       assert("Scan parquet".r.findAllIn(p).length <= 1,
         s"$q: expected at most one parquet scan:\n$p")
@@ -508,7 +500,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // prompt-lookup decoding (q262) and tree-draft speculative
     // decoding (q263): the lookup is an in-row integer scan and the
     // tree is session forks — everything inside ONE mapPartitions,
-    // same ≤1-exchange / ≤1-scan / no-cartesian contract
+    // same no-exchange / ≤1-scan / no-cartesian contract
     // fused beams (q264) and watermarked diverse beams (q265) join
     // the same contract: the bigram collect is vocab²-bounded and
     // the beam work is session forks in one mapPartitions
@@ -522,12 +514,12 @@ class PlanAuditSpec extends AnyFunSuite {
         "q276_torch_beam_diverse_fused", "q277_torch_tree_typical")) {
       val p = plan(q)
       val ex = dataExchanges(p)
-      assert(ex <= 1, s"$q: decode op shuffled beyond the output sort ($ex):\n$p")
+      assert(ex == 0, s"$q: decode op shuffled ($ex):\n$p")
       assert(!p.contains("CartesianProduct"), s"$q cartesian:\n$p")
       assert("Scan parquet".r.findAllIn(p).length <= 1,
         s"$q: expected at most one parquet scan:\n$p")
     }
-    // DELIBERATELY EXEMPT from the ≤1-exchange bound: the telemetry
+    // DELIBERATELY EXEMPT from the no-exchange bound: the telemetry
     // queries q259/q267/q270 (and round-19's q283) GROUP BY over the
     // decode output — the aggregation exchange is inherent to a
     // corpus-level histogram, not a decode-plan regression. If a
@@ -539,10 +531,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // cross-pair speculative loop (q279), stochastic tree (q280),
     // watermarked speculative (q281), bounded-KV greedy (q282): all
     // KV-session work inside ONE mapPartitions — the standing
-    // ≤1-exchange / ≤1-scan / no-cartesian decode contract. q283
+    // no-exchange / ≤1-scan / no-cartesian decode contract. q283
     // (auto-gamma) is telemetry (GROUP BY over decode output — see
     // the exemption note above): its extra aggregate exchange is
-    // inherent, so it gets the ≤3 bound (partial/final agg + window)
+    // inherent, so it gets the ≤2 bound (partial/final agg + window)
     // and the no-cartesian check only.
     for (q <- Seq("q279_torch_cross_spec_loop", "q280_torch_tree_stochastic",
         "q281_torch_spec_watermark", "q282_torch_kv_window",
@@ -557,27 +549,27 @@ class PlanAuditSpec extends AnyFunSuite {
         "q304_torch_tree_loop_relpos")) {
       val p = plan(q)
       val ex = dataExchanges(p)
-      assert(ex <= 1, s"$q: decode op shuffled beyond the output sort ($ex):\n$p")
+      assert(ex == 0, s"$q: decode op shuffled ($ex):\n$p")
       assert(!p.contains("CartesianProduct"), s"$q cartesian:\n$p")
       assert("Scan parquet".r.findAllIn(p).length <= 1,
         s"$q: expected at most one parquet scan:\n$p")
     }
     val p283 = plan("q283_torch_auto_gamma")
-    assert(dataExchanges(p283) <= 3,
+    assert(dataExchanges(p283) <= 2,
       s"q283: telemetry plan grew beyond agg + pick window:\n$p283")
     assert(!p283.contains("CartesianProduct"), s"q283 cartesian:\n$p283")
     // q286/q289/q290/q291 are telemetry too (GROUP BYs over decode
     // output — q286 one histogram, q289 two corpus aggregates
     // unioned, q290 two sweeps + the pick window, q291 per-source +
     // corpus aggregates with a one-row broadcast combine)
-    for ((q, bound) <- Seq(("q286_torch_pair_spec_telemetry", 2),
-        ("q289_torch_wm_accel_detect", 4),
-        ("q290_torch_auto_branch", 5),
-        ("q291_torch_spec_drift", 5),
+    for ((q, bound) <- Seq(("q286_torch_pair_spec_telemetry", 1),
+        ("q289_torch_wm_accel_detect", 3),
+        ("q290_torch_auto_branch", 4),
+        ("q291_torch_spec_drift", 4),
         // q297 auto-window: ONE scan prices the whole ladder (all
         // rungs decoded per row inside one mapPartitions); the
-        // exchanges are the telemetry aggregate + pick window + sort
-        ("q297_torch_auto_window", 4))) {
+        // exchanges are the telemetry aggregate + pick window
+        ("q297_torch_auto_window", 3))) {
       val p = plan(q)
       assert(dataExchanges(p) <= bound,
         s"$q: telemetry plan grew beyond its aggregates:\n$p")
@@ -659,10 +651,11 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.toLowerCase.contains("explode"), s"Gram pass exploded:\n$p")
     assert("Exchange".r.findAllIn(p).length == 1,
       s"Gram pass: expected one single-partition exchange:\n$p")
-    // the projection query itself: scan-side HOFs + the output sort only
+    // the projection query itself: scan-side HOFs, the output sort
+    // merged at collect
     val pq = plan("q182_pca_top")
     assert(!pq.contains("CartesianProduct") &&
-      "Exchange".r.findAllIn(pq).length <= 1,
+      "Exchange".r.findAllIn(pq).length == 0,
       s"q182 projection is not scan-side:\n$pq")
   }
 

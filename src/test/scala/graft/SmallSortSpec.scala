@@ -6,9 +6,9 @@ import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * [[SmallSort]]: a small root sort is planned in one partition, with
- * the same rows in the same order as Spark's range sort, and every
- * other sort is left to Spark. Queries read the sf0.01 documents and
+ * [[SmallSort]]: a root sort is merged at collect, with the same rows
+ * in the same order as Spark's range sort, and every other sort is left
+ * to Spark. Queries read the sf0.01 documents and
  * embeddings tables as vendored in the checkout for the benchmark.
  */
 class SmallSortSpec extends AnyFunSuite {
@@ -21,7 +21,7 @@ class SmallSortSpec extends AnyFunSuite {
   private def withoutRule[T](build: => DataFrame)(f: DataFrame => T): T = {
     val df = build
     val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved.filterNot(_.isInstanceOf[SmallSort])
+    spark.experimental.extraOptimizations = saved.filterNot(_ == SmallSort)
     try f(df) finally spark.experimental.extraOptimizations = saved
   }
 
@@ -40,9 +40,10 @@ class SmallSortSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
 
-  /** The operators the rule plans: a shuffle or a coalesce to one partition. */
+  /** An operator that puts a sort's input in one task, or merges it there. */
   private def oneTask(line: String): Boolean =
-    line.contains("Exchange SinglePartition, REPARTITION_BY_NUM") || line.contains("Coalesce 1")
+    line.contains("Exchange SinglePartition, REPARTITION_BY_NUM") || line.contains("Coalesce 1") ||
+      line.contains("SortedCollect")
 
   test("results are identical, row for row and in order, with and without the rule") {
     for (q <- Seq("q17_text_stats", "q22_minhash_lsh", "q100_ingest_pipeline",
@@ -71,17 +72,16 @@ class SmallSortSpec extends AnyFunSuite {
     val on = build
     val p = plan(on)
     assert("rangepartitioning".r.findAllIn(p).length == 1, s"mid-plan sort lost its range exchange:\n$p")
-    assert(p.contains("Exchange SinglePartition"), s"root sort not in one partition:\n$p")
+    assert(p.contains("SortedCollect"), s"root sort not merged at collect:\n$p")
     assert(rows(on) == off)
   }
 
-  test("inference queries sort in one partition: no range exchange, one SinglePartition exchange") {
+  test("inference queries collect with no exchange at all") {
     for (q <- Seq("q107_torch_embedding", "q113_torch_textcnn",
         "q194_torch_generate", "q257_torch_gen_fused")) {
       val p = plan(q)
-      assert(!p.contains("rangepartitioning"), s"$q: range exchange left:\n$p")
-      assert("Exchange SinglePartition".r.findAllIn(p).length == 1,
-        s"$q: expected one SinglePartition exchange:\n$p")
+      assert(!p.contains("Exchange"), s"$q: exchange left:\n$p")
+      assert(p.contains("SortedCollect"), s"$q: root sort not merged at collect:\n$p")
     }
   }
 
@@ -109,11 +109,14 @@ class SmallSortSpec extends AnyFunSuite {
     val saved = spark.conf.getOption(key)
     spark.conf.set(key, "1")
     try {
-      for (q <- Seq("q17_text_stats", "q107_torch_embedding")) {
-        val p = plan(q)
-        assert(p.contains("rangepartitioning"), s"$q: large sort lost its range exchange:\n$p")
-        assert(!p.linesIterator.exists(oneTask), s"$q: large sort planned in one partition:\n$p")
-      }
+      // q107's input is spread over every core; the execute path (a
+      // write, `.rdd`) range-sorts it, the collect path merges its runs
+      val df = query("q107_torch_embedding")
+      val rows = df.collect().toSeq
+      val jobs = Jobs.during(spark)(assert(df.rdd.collect().toSeq == rows))
+      assert(jobs.exists(Jobs.samplesRangeBounds), "the execute path ran no range sort")
+      assert(!Jobs.during(spark)(df.collect()).exists(Jobs.samplesRangeBounds),
+        "the collect path ran a range sort")
     } finally saved match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -143,6 +146,6 @@ class SmallSortSpec extends AnyFunSuite {
   test("the rule is registered once per session") {
     SmallSort.register(spark)
     SmallSort.register(spark)
-    assert(spark.experimental.extraOptimizations.count(_.isInstanceOf[SmallSort]) == 1)
+    assert(spark.experimental.extraOptimizations.count(_ == SmallSort) == 1)
   }
 }

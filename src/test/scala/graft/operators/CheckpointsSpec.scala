@@ -1,47 +1,20 @@
 package graft.operators
 
-import graft.SparkTestSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{SparkTestSession, Tok}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * [[Checkpoints.cp]]'s laziness, counted with a job listener: over an
- * exchange-free frame it starts no job until the checkpoint is read;
+ * exchange-free frame (a torch model's token input included: it is
+ * strided, not shuffled) it starts no job until the checkpoint is read;
  * over a frame that holds an exchange, AQE runs the upstream shuffle
  * stages while `cp` is called.
  */
 class CheckpointsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  /** The jobs started while `f` runs. Two marker jobs bracket it; the
-    * listener bus delivers events in order, so once the closing marker
-    * is seen every job `f` started has been seen too. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        seen.add(Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-        ()
-      }
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("cp-open")
-      f
-      marker("cp-close")
-      val events = Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile(e => e != null && e != "cp-close").toVector
-      assert(events.contains("cp-open"), "the opening marker was not seen")
-      events.dropWhile(_ != "cp-open").size - 1
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring(f: => Unit): Int = graft.Jobs.during(spark)(f).size
 
   test("cp over an exchange-free frame starts no job") {
     val df = spark.read.parquet("graftbench/data/sf0.01/documents.parquet")
@@ -49,6 +22,13 @@ class CheckpointsSpec extends AnyFunSuite {
     var cp: org.apache.spark.sql.DataFrame = null
     assert(jobsDuring { cp = Checkpoints.cp(df) } == 0)
     assert(cp.count() == df.count())
+  }
+
+  test("cp over a torch model's token input starts no job") {
+    val docs = spark.read.parquet("graftbench/data/sf0.01/documents.parquet")
+    var cp: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { cp = Checkpoints.cp(Tok.input(docs, 64, 12)) } == 0)
+    assert(cp.count() == Tok.input(docs, 64, 12).count())
   }
 
   test("cp over a frame that holds an exchange runs its shuffle stages at call time (AQE)") {

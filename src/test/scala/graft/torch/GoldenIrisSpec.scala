@@ -73,7 +73,7 @@ class GoldenIrisSpec extends AnyFunSuite {
     val bc = spark.sparkContext.broadcast(model)
     val df = spark.read.parquet(irisParquet)
     // sort by the WHOLE (sl, pred) pair: inferBatched's adaptive input
-    // spread (graft.Spread) round-robins the sub-parallelism scan, so
+    // spread (graft.Spread) strides the sub-parallelism scan, so
     // arrival order among equal-sl rows is not stable — the comparison
     // is a multiset equality, which the full-tuple sort canonicalizes
     val perRow = df.selectExpr("sl", "argmax(iris_b(features)) AS pred")
