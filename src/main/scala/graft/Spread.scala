@@ -24,10 +24,10 @@ import org.apache.spark.sql.internal.SQLConf
   * partition whole and keeps its share of the rows, so the scan, the
   * projections and filters over it and the kernel run in one stage,
   * with no shuffle. The bound is the most a single scan task reads, so
-  * a strided task reads no more than any scan task would. Any other input (a nondeterministic one, whose rows
-  * each task could see differently, or one past the bound) is
-  * round-robin repartitioned, one extra stage and a shuffle, and only
-  * when at least two cores would idle.
+  * a strided task reads no more than any scan task would. Filters a
+  * data source can take move below the stride ([[PushBelowStride]]).
+  * Any other input passes through: a nondeterministic one, whose rows
+  * each task could see differently, or one past the bound.
   *
   * Scale behaviour: at real scale the scan already carries >= the
   * cluster's parallelism in partitions, so the guard makes this a
@@ -36,12 +36,9 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * Determinism: a strided row goes to the task given by its position
   * in its input partition, which a deterministic plan over the same
-  * files reproduces, so retries and reruns see identical batches.
-  * Round-robin repartition sorts each input partition before assigning
-  * rows (spark.sql.execution.sortBeforeRepartition), so its row->task
-  * map is a pure function of the input too. Every kernel fed through
-  * this helper is per-row (one KV session / one decode per row), so row
-  * order never reaches results.
+  * files reproduces, so retries and reruns see identical batches. Every
+  * kernel fed through this helper is per-row (one KV session / one
+  * decode per row), so row order never reaches results.
   */
 object Spread {
   def apply(df: DataFrame): DataFrame = {
@@ -72,21 +69,20 @@ object Spread {
       .getOrElse(df.queryExecution.toRdd.getNumPartitions.toLong)
     // a stride adds no stage, so one idle core pays for it (two cores,
     // the one-partition scans of q100 and of the IVF-PQ search: +5% to
-    // +17% queries/s striding over not spreading); the round-robin
-    // shuffle pays only when at least two cores would idle (q100 on two
-    // cores ran 0.12 s slower per execution shuffled than not)
-    if (parts == 0 || parts >= target) df
-    else if (plan.deterministic &&
-        readBytes(plan) / parts <= spark.sessionState.conf.filesMaxPartitionBytes) {
+    // +17% queries/s striding over not spreading)
+    if (parts == 0 || parts >= target || !plan.deterministic ||
+        readBytes(plan) / parts > spark.sessionState.conf.filesMaxPartitionBytes) df
+    else {
       SmallSort.register(spark)
       GraftColumns.frame(spark, strided(df.queryExecution.analyzed, target))
-    } else if (parts < target - 1) df.repartition(target)
-    else df
+    }
   }
 
   /** `plan` with a [[Stride]] under its top run of projections and
     * filters: they then run once per row, in the task that keeps it, and
-    * every task re-reads only what is below them (the scan). */
+    * every task re-reads only what is below them (the scan). Column
+    * pruning passes the stride; [[PushBelowStride]] moves the filters a
+    * data source can take back below it. */
   private def strided(plan: LogicalPlan, n: Int): LogicalPlan = plan match {
     case _: Project | _: Filter => plan.withNewChildren(Seq(strided(plan.children.head, n)))
     case _ => Stride(n, plan)

@@ -4,10 +4,13 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.GraftColumns
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Expression, PredicateHelper,
+  SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 
 /** Spreads a few-partition input over `n` tasks without a shuffle
@@ -24,12 +27,37 @@ case class Stride(n: Int, child: LogicalPlan) extends UnaryNode {
   override protected def withNewChildInternal(c: LogicalPlan): Stride = copy(child = c)
 }
 
+/** Its task count is the RDD's, max(`n`, the child's partitions), which
+  * is known only once the child is built: the partitioning reports none. */
 case class StrideExec(n: Int, child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
-  override def outputPartitioning: Partitioning = UnknownPartitioning(n)
+  override def outputPartitioning: Partitioning = UnknownPartitioning(0)
   override protected def doExecute(): RDD[InternalRow] =
     new StrideRDD(child.execute(), n)
   override protected def withNewChildInternal(c: SparkPlan): StrideExec = copy(child = c)
+}
+
+/** Moves the conjuncts of a filter over a [[Stride]] that a data source
+  * can take (deterministic, no subquery, translatable to a source
+  * `Filter`) below it, next to the scan, where Spark pushes them into
+  * the file read and prunes partitions by them. Spark's own predicate
+  * pushdown passes only a fixed list of operators. Every strided task
+  * then evaluates them over the whole scan, which costs little next to
+  * decoding it; the other conjuncts (UDFs, regexes) stay above and run
+  * once per row. */
+object PushBelowStride extends Rule[LogicalPlan] with PredicateHelper {
+  def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case f @ Filter(cond, s @ Stride(_, child)) =>
+      val (down, up) = splitConjunctivePredicates(cond).partition(pushable)
+      if (down.isEmpty) f
+      else {
+        val below = s.copy(child = Filter(down.reduce(And), child))
+        up.reduceOption(And).fold[LogicalPlan](below)(Filter(_, below))
+      }
+  }
+
+  private def pushable(e: Expression): Boolean =
+    e.deterministic && !SubqueryExpression.hasSubquery(e) && GraftColumns.sourceFilter(e)
 }
 
 /** Partition `index` keeps the rows `k` of `parent` with

@@ -58,10 +58,8 @@ object Tok {
   def atLeast(text: Column, n: Int): Column = column(TokCount(expression(text), n)) >= n
 
   /** The `docs` whose `text` has at least `minTokens` tokens, spread over
-    * the session's cores ([[Spread]]) before any tokenizing projection:
-    * a small document table scans as one partition, and when [[Spread]]
-    * has to shuffle it, ids selected before the spread would all be
-    * hashed in the one scan task. */
+    * the session's cores ([[Spread]]) before any tokenizing projection,
+    * so that each row is hashed once, in the task that runs its kernel. */
   def spread(docs: DataFrame, minTokens: Int = 1): DataFrame =
     Spread(docs.filter(atLeast(col("text"), minTokens)))
 

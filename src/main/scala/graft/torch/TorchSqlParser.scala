@@ -90,12 +90,14 @@ class TorchSqlParser(delegate: ParserInterface) extends ParserInterface {
   * extension-configured session matches the reference's
   * `configure_context` bootstrap (reference src/lib.rs:118-137), and
   * plans final sorts without a stage of their own ([[graft.SmallSort]])
-  * and graft's logical nodes ([[graft.GraftStrategy]]). */
+  * and graft's logical nodes ([[graft.PushBelowStride]],
+  * [[graft.GraftStrategy]]). */
 class TorchExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectParser((_, delegate) => new TorchSqlParser(delegate))
     ext.injectFunction(graft.functions.ArgMax.descriptor)
     ext.injectOptimizerRule(_ => graft.SmallSort)
+    ext.injectOptimizerRule(_ => graft.PushBelowStride)
     ext.injectPlannerStrategy(_ => graft.GraftStrategy)
   }
 }

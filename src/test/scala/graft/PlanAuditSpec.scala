@@ -4,8 +4,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.TokCount
 
 /**
  * Mechanized `.explain` audit: the plan shapes that matter at 100 TB,
@@ -22,13 +25,30 @@ class PlanAuditSpec extends AnyFunSuite {
 
   /** Every exchange in the plan. The input spread (graft.Spread)
     * strides a below-parallelism scan without a shuffle, and the final
-    * sort merges at collect (graft.SmallSort), so neither adds one. */
+    * sort merges at collect (graft.SmallSort), so neither adds one. The
+    * final sort's execute path (a write, `.rdd`) over a many-partition
+    * input shuffles, but chooses that exchange at run time, outside the
+    * physical plan, so it is not counted here. */
   private def dataExchanges(p: String): Int = "Exchange".r.findAllIn(p).length
 
   test("q03 LIKE filter is pushed to the parquet scan") {
     val p = plan("q03_filter_like")
     assert(p.contains("PushedFilters: [IsNotNull(p_name), StringContains(p_name,widget)]"),
       s"filter not pushed:\n$p")
+  }
+
+  test("a strided kernel input keeps its simple predicates in the parquet scan") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val input = Tok.input(docs.where(col("doc_id") > 10), 256, minTokens = 2)
+    val stride = input.queryExecution.optimizedPlan.collectFirst { case s: Stride => s }
+    assert(stride.isDefined, s"input not strided:\n${input.queryExecution.optimizedPlan}")
+    val p = input.queryExecution.executedPlan.toString
+    val pushed = p.linesIterator.find(_.contains("PushedFilters")).getOrElse("")
+    assert(pushed.contains("GreaterThan(doc_id,10)"), s"predicate not pushed past the stride:\n$p")
+    // the token-count filter is no source filter: it stays above the
+    // stride, evaluated once per row
+    assert(!stride.get.child.exists(_.expressions.exists(_.exists(_.isInstanceOf[TokCount]))),
+      s"token count below the stride:\n${input.queryExecution.optimizedPlan}")
   }
 
   test("q02 scan reads only the projected columns") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -103,6 +104,29 @@ class SortedCollectSpec extends AnyFunSuite {
     for (df <- Seq(none, empty)) {
       assert(df.collect().isEmpty)
       assert(df.rdd.collect().isEmpty)
+    }
+  }
+
+  test("the execute path: one partition when small, else one range per input partition") {
+    SmallSort.register(spark)
+    def sorted: DataFrame = spark.range(0, 1000, 1, 4).select(col("id"), (col("id") % 7).as("k"))
+      .orderBy(col("k"), col("id").desc)
+    val expected = sorted.collect().toSeq
+    assert(sorted.rdd.getNumPartitions == 1)
+    assert(sorted.rdd.collect().toSeq == expected)
+    // over the advisory size, with a shuffle width unlike the input's
+    val keys = Seq(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key -> "1",
+      SQLConf.SHUFFLE_PARTITIONS.key -> "9")
+    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val large = sorted
+      assert(large.rdd.getNumPartitions == 4, "range count is not the input's partition count")
+      assert(large.rdd.collect().toSeq == expected)
+      assert(pathsAgree("range-sorted", large))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

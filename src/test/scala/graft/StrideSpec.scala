@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, GraftColumns, Row}
+import org.apache.spark.sql.catalyst.plans.physical.AllTuples
 import org.apache.spark.sql.functions.{col, monotonically_increasing_id, rand, spark_partition_id,
   uuid}
 import org.scalatest.funsuite.AnyFunSuite
@@ -56,6 +57,20 @@ class StrideSpec extends AnyFunSuite {
       val out = stride(n, input)
       assert(out.rdd.getNumPartitions == math.max(n, 3))
       assert(out.collect().map(_.getLong(0)).sorted.toSeq == (0L until 1000L))
+    }
+  }
+
+  test("the planned stride claims no partition count its RDD may not have") {
+    val input = spark.range(0, 100, 1, 3).toDF("id")
+    for (n <- Seq(1, 2, 7)) {
+      val plan = stride(n, input).queryExecution.executedPlan
+      val exec = plan.collectFirst { case s: StrideExec => s }.get
+      val claimed = exec.outputPartitioning
+      val real = exec.execute().getNumPartitions
+      assert(real == math.max(n, 3))
+      assert(claimed.numPartitions == 0 || claimed.numPartitions == real,
+        s"n=$n: claims ${claimed.numPartitions} partitions, has $real")
+      assert(!claimed.satisfies(AllTuples), s"n=$n: claims one partition")
     }
   }
 
