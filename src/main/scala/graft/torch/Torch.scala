@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
 object Torch {
 
   /** The deterministic sampling kernel shared by [[generateSampled]]
-    * and [[generateSampledPair]] — see generateSampled's scaladoc for
+    * and [[generateSampledK]] — see generateSampled's scaladoc for
     * the full cross-engine contract (seeded md5 draws, 6-dp HALF_UP
     * quantization, order-defined running sums). */
   private object Sampling {
@@ -168,13 +168,12 @@ object Torch {
     }
   }
 
-  /** The SPECULATIVE-decoding kernel quartet shared by every spec*
-    * method ([[speculativeSampled]], [[speculativeSampledGamma]],
-    * [[speculativeSampledLoop]], [[speculativeSampledPair]],
-    * [[speculativeSampledPairGamma]]) — hoisted so a fix to the pick
-    * walk or the salt format lands in ONE place and the
-    * gamma=1-replays-q247 / cycle-1-replays-q249 spec pins cannot
-    * silently diverge across copies. Contract (see
+  /** The SPECULATIVE-decoding kernels shared by every spec* method
+    * ([[speculativeSampled]], [[speculativeSampledGamma]],
+    * [[speculativeSampledLoop]], the multi-draft and tree modes) —
+    * hoisted so a fix to the pick walk, the salt format or the draft/
+    * verify cycle lands in ONE place and the gamma=1-replays-q247 /
+    * cycle-1-replays-q249 spec pins cannot silently diverge. Contract (see
     * speculativeSampled's scaladoc): distributions are full-vocab
     * softmaxes quantized to the 6dp grid; draws are independent md5
     * draws keyed `"<id>:spec:<salt>"` on the 1e-6 grid; the pick is
@@ -266,6 +265,86 @@ object Torch {
       }
       (accRound, finalTok)
     }
+    /** The target's grid distribution under the green-list bias: the
+      * raw logits gain `delta` on the tokens green after `prev`, THEN
+      * the softmax (the lse shifts with the bias — q239's greedy
+      * order). delta = 0 is [[probs6]], bit for bit. */
+    def probs6W(lg: Array[Float], vocab: Int, prev: Int, delta: Double,
+        num: Int, den: Int): Array[Double] =
+      if (delta == 0.0) probs6(lg, vocab)
+      else {
+        val bl = new Array[Double](vocab)
+        var mx = Double.NegativeInfinity
+        var j = 0
+        while (j < vocab) {
+          val v = lg(j).toDouble +
+            (if (Sampling.greenToken(prev, j, num, den)) delta else 0.0)
+          bl(j) = v
+          if (v > mx) mx = v
+          j += 1
+        }
+        var z = 0.0
+        j = 0
+        while (j < vocab) { z += math.exp(bl(j) - mx); j += 1 }
+        Array.tabulate(vocab)(k => q6(math.exp(bl(k) - mx) / z))
+      }
+    /** One chain draft-verify cycle (Leviathan/Chen 2023): the draft
+      * session `sd` samples `gamma` tokens, the target session `st`
+      * scores all `gamma + 1` prefixes (one append per draft; the
+      * watermark keys each prefix on its last token, `prev` for the
+      * first), the prefix walk accepts drafts in order, and the first
+      * rejection emits a residual pick — or, every draft accepted, the
+      * bonus pick. Both sessions are appended to: pass forks to keep
+      * the originals. Salts are global positions — cycle `c` (1-based)
+      * draft/accept/residual i use `(c−1)·gamma + i`, the bonus
+      * `b<c>` — so [[speculativeSampledGamma]] is cycle 1 and
+      * [[speculativeSampledLoop]] runs cycle after cycle.
+      *
+      * @return (the drafts, the accepted count, the emitted tokens:
+      *         the accepted run + correction-or-bonus) */
+    def cycle(sd: TorchScriptModel#DecodeSession, st: TorchScriptModel#DecodeSession,
+        prev: Int, gamma: Int, vocab: Int, id: Long, c: Int,
+        wmDelta: Double, wmNum: Int, wmDen: Int): (Array[Int], Int, Seq[Int]) = {
+      val base = (c - 1) * gamma
+      val drafts = new Array[Int](gamma)
+      val qm = new Array[Array[Double]](gamma)
+      var i = 0
+      while (i < gamma) {
+        qm(i) = probs6(sd.logits(), vocab)
+        drafts(i) = pick(qm(i), draw(id, s"d${base + i + 1}"))
+        sd.append(drafts(i))
+        i += 1
+      }
+      val pm = new Array[Array[Double]](gamma + 1)
+      pm(0) = probs6W(st.logits(), vocab, prev, wmDelta, wmNum, wmDen)
+      i = 0
+      while (i < gamma) {
+        st.append(drafts(i))
+        pm(i + 1) = probs6W(st.logits(), vocab, drafts(i), wmDelta, wmNum, wmDen)
+        i += 1
+      }
+      var n = 0
+      var rejectedAt = -1
+      while (n < gamma && rejectedAt < 0) {
+        val x = drafts(n)
+        val r6 = q6(math.min(1.0, pm(n)(x) / qm(n)(x)))
+        if (draw(id, s"a${base + n + 1}") < r6) n += 1
+        else rejectedAt = n
+      }
+      val out: Seq[Int] =
+        if (rejectedAt < 0)
+          drafts.toSeq :+ pick(pm(gamma), draw(id, s"b$c"))
+        else {
+          val k = rejectedAt
+          val resid = Array.tabulate(vocab)(j =>
+            math.max(0.0, pm(k)(j) - qm(k)(j))) // exact grid differences
+          val corr =
+            if (resid.forall(_ == 0.0)) drafts(k) // p == q on the grid
+            else pick(resid, draw(id, s"r${base + k + 1}"))
+          drafts.take(k).toSeq :+ corr
+        }
+      (drafts, n, out)
+    }
   }
 
   /** The prompt-lookup draft (Saxena 2023, HF `prompt_lookup_num_
@@ -296,8 +375,8 @@ object Torch {
       math.min(maxDraft, L - matchAt - ngram))(k => full(matchAt + ngram + k))
   }
 
-  /** The constrained beam-candidate expansion shared by [[beamSearch]]
-    * and [[beamSearchPair]] — one live beam's candidate rows under the
+  /** The constrained beam-candidate expansion of [[beamSearch]] — one
+    * live beam's candidate rows under the
     * full logit-constraint set, applied in the HF beam-search order:
     * constraints act on the per-beam LOG-SOFTMAX scores `lp` (the
     * full-vocab logsumexp is computed BEFORE any constraint, so the
@@ -386,7 +465,7 @@ object Torch {
   }
 
   /** The KV-session decoders' model check: token ids in, a cacheable
-    * session, and cross-attention exactly when `cross`. */
+    * session, no cross-attention. */
   private def requireTokenDecoder(model: Broadcast[TorchScriptModel], what: String,
       cross: Boolean = false): Unit = {
     val m = model.value
@@ -396,6 +475,57 @@ object Torch {
       else s"$what: cross-attention model not supported")
     require(m.cacheable, s"$what needs the KV-session path (cacheable model)")
   }
+
+  /** How a decoder's rows open their KV sessions, fixed and validated
+    * once on the driver by [[kvPolicy]]: `srcIdx` is a cross model's
+    * source-token column (−1: a single-sequence model); `nWindow > 0`
+    * bounds every causal cache to `nSink` sinks + an `nWindow` window;
+    * `relPos` re-rotates the bounded caches. [[openSession]] is the one
+    * place the choice is acted on. */
+  private final case class Kv(srcIdx: Int, nSink: Int, nWindow: Int, relPos: Boolean) {
+    /** The row's source tokens; null for a single-sequence model, and
+      * for a cross row whose source is null or empty. */
+    def src(r: Row): Array[Int] = if (srcIdx < 0) null else Kernel.nonEmptyInts(r, srcIdx)
+    /** False for a cross row without source tokens: it decodes to a
+      * null row. */
+    def hasSrc(src: Array[Int]): Boolean = srcIdx < 0 || src != null
+  }
+
+  /** Validates a decoder's models and KV knobs once and fixes its
+    * [[Kv]]: the models take token ids and are cross-attention exactly
+    * when `srcCol` names their source tokens; a cross model, a bounded
+    * cache or a caller's `session` need the KV-session path (a
+    * cacheable model); `nWindow > 0` needs `nSink >= 0`, and `relPos`
+    * needs `nWindow > 0`. */
+  private def kvPolicy(df: DataFrame, what: String, models: Seq[Broadcast[TorchScriptModel]],
+      srcCol: String, nSink: Int = -1, nWindow: Int = -1, relPos: Boolean = false,
+      session: Boolean = true): Kv = {
+    require(nWindow <= 0 || nSink >= 0,
+      "a bounded-KV decode needs nSink >= 0 alongside nWindow >= 1")
+    require(!relPos || nWindow > 0,
+      "relPos is a dial on the bounded-KV sessions (needs nWindow >= 1)")
+    val cross = srcCol != null
+    models.foreach { bm =>
+      val m = bm.value
+      require(m.inDim == -1, s"$what needs a token-input model")
+      require(m.isCross == cross,
+        if (cross) s"$what: srcCol needs a cross-attention model"
+        else s"$what: a cross-attention model needs its source tokens as srcCol")
+      require(m.cacheable || !(session || cross || nWindow > 0),
+        s"$what needs the KV-session path (cacheable model)")
+    }
+    Kv(if (cross) df.schema.fieldIndex(srcCol) else -1, nSink, nWindow, relPos)
+  }
+
+  /** The one decode-session opener: a row's session, plain, over the
+    * cross model's `src`, bounded ([[TorchScriptModel.decodeSessionWindowed]])
+    * or re-rotated ([[TorchScriptModel.decodeSessionRelPos]]) as `kv`
+    * says. */
+  private def openSession(m: TorchScriptModel, kv: Kv, p: Array[Int],
+      src: Array[Int]): m.DecodeSession =
+    if (kv.relPos) m.decodeSessionRelPos(p, kv.nSink, kv.nWindow, src)
+    else if (kv.nWindow > 0) m.decodeSessionWindowed(p, kv.nSink, kv.nWindow, src)
+    else m.decodeSession(p, src)
 
   /**
    * Programmatic equivalent of
@@ -752,8 +882,21 @@ object Torch {
    * which beam wins once lengths diverge. Defaults (α = 0, eos −1)
    * reduce BIT-EXACTLY to raw joint ranking: `pow(len, 0) = 1` and
    * `raw / 1.0 == raw` (spec-pinned). The knobs require the KV-session
-   * path (cacheable non-cross models — the serving shapes).
+   * path (cacheable models — the serving shapes).
    *
+   * The constraint knobs (`banned`, `repetitionPenalty`,
+   * `noRepeatNgram`, `bannedPhrases`, `minNewTokens`) act on each
+   * beam's log-softmax scores ([[Beams.expand]]); the watermark
+   * (`watermarkDelta`/`watermarkGamma`) biases the raw logits before
+   * it; shallow fusion (`lmWeight`/`lmCounts`) adds the frozen bigram
+   * prior after it. Fusion and the watermark compose with each other
+   * and with eos/length penalty, not with the constraint knobs.
+   *
+   * @param srcCol a cross (encoder-decoder) model's source tokens — the
+   *        encoder runs once per row and beams fork the cross session;
+   *        the constraints then read the decoder-side sequence. A null
+   *        or empty source gives a null row. Null: a single-sequence
+   *        model.
    * @return input columns + `outCol` = array<array<int>>: the kept
    *         beams' generated tokens in rank order (a completed beam's
    *         array ends at its eos; null input → null)
@@ -776,15 +919,15 @@ object Torch {
       watermarkDelta: Double = 0.0,
       watermarkGamma: (Int, Int) = (1, 2),
       lmWeight: Double = 0.0,
-      lmCounts: Array[Array[Long]] = null): DataFrame = {
+      lmCounts: Array[Array[Long]] = null,
+      srcCol: String = null): DataFrame = {
     require(steps >= 1 && width >= 1, "steps and width must be >= 1")
     require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
     require(lmWeight >= 0.0, "lmWeight must be >= 0")
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
       "watermarkGamma must be a fraction num/den with 0 < num < den")
     val spark = df.sparkSession
-    require(model.value.inDim == -1, "beamSearch needs a token-input model")
-    require(!model.value.isCross, "cross-attention model: use beamSearchPair")
+    val kv = kvPolicy(df, "beamSearch", Seq(model), srcCol, session = false)
     require(width <= model.value.outDim, "width exceeds the vocabulary")
     require(lengthPenalty >= 0.0, "lengthPenalty must be >= 0")
     require(eosId < model.value.outDim, "eosId exceeds the vocabulary")
@@ -813,8 +956,8 @@ object Torch {
     // SHALLOW FUSION under beams (Gulcehre et al. 2015 — where
     // production LM fusion actually rides): each live candidate's
     // log-softmax score gains `lmWeight · ln p_LM(tok | prev)` from
-    // the frozen add-one bigram prior ([[generateGreedyFused]]'s
-    // exact term, prev = the beam's OWN last token), and the fused
+    // the frozen add-one bigram prior ([[generateGreedy]]'s fused
+    // term, prev = the beam's OWN last token), and the fused
     // value accumulates into the running joint — so the prior steers
     // both ranking and which hypotheses survive. Composes with
     // lengthPenalty/eos (downstream normalizations of the fused raw)
@@ -829,7 +972,7 @@ object Torch {
     require(lmWeight == 0.0 || (lmCounts != null &&
       lmCounts.length == vocabN && lmCounts.forall(_.length == vocabN)),
       "lmCounts must be vocab x vocab when lmWeight > 0")
-    // frozen-ingest broadcast convention (see generateGreedyFused)
+    // frozen-ingest broadcast convention (see generateGreedy)
     val bcLm: Broadcast[(Array[Array[Long]], Array[Long])] =
       if (lmWeight == 0.0) null
       else spark.sparkContext.broadcast((lmCounts, lmCounts.map(_.sum)))
@@ -840,8 +983,8 @@ object Torch {
       val vocab = m.outDim
       val lm = if (bcLm == null) null else bcLm.value
       // the fused prior term: lmWeight · ln((cnt+1)/(rowSum+V)) —
-      // generateGreedyFused's exact f64 expression, 0 when fusion is
-      // off (guarded so the unfused path stays bit-exact)
+      // generateGreedy's exact f64 expression, 0 when fusion is off
+      // (guarded so the unfused path stays bit-exact)
       def fused(prev: Int, tok: Int): Double =
         lmWeight * StrictMath.log(
           (lm._1(prev)(tok) + 1L).toDouble /
@@ -882,18 +1025,19 @@ object Torch {
         Array.tabulate(vocab)(k => adj(k) - lse)
       }
       rows =>
-        val prompts: Array[Array[Int]] = rows.map(Kernel.nonEmptyInts(_, inIdx)).toArray
-        if (m.cacheable && !m.isCross) {
+        if (m.cacheable) {
           // KV-cache beams: each beam owns a decode session; expansion
           // FORKS the parent (O(L) pointer copy, no prompt replay).
           // Logits are bit-identical to the recompute path, so beam
           // identity and ranking are unchanged (TorchGenerateSpec).
           // Beam state: (generated, RAW joint log-prob, session, done).
-          prompts.iterator.map { p =>
+          rows.iterator.map { r =>
+            val src = kv.src(r)
+            val p = if (kv.hasSrc(src)) Kernel.nonEmptyInts(r, inIdx) else null
             if (p == null) null
             else {
               var beams: Seq[(Vector[Int], Double, m.DecodeSession, Boolean)] =
-                Seq((Vector.empty[Int], 0.0, m.decodeSession(p), false))
+                Seq((Vector.empty[Int], 0.0, openSession(m, kv, p, src), false))
               var t = 0
               while (t < steps && beams.exists(!_._4)) {
                 // candidates = (norm, parent rank, token, raw, parent):
@@ -961,6 +1105,7 @@ object Torch {
         } else {
           // no-cache batch path: every live beam of every row rides
           // ONE forwardTokensBatch per step
+          val prompts: Array[Array[Int]] = rows.map(Kernel.nonEmptyInts(_, inIdx)).toArray
           // per row: ranked beams as (generated tokens, score)
           var beams: Array[Seq[(Vector[Int], Double)]] = prompts.map { p =>
             if (p == null) null else Seq((Vector.empty[Int], 0.0))
@@ -1243,8 +1388,12 @@ object Torch {
    * Scale shape: two KV sessions per row (draft + target prefix),
    * one step each, inside ONE `mapPartitions`.
    *
+   * @param srcCol cross (encoder-decoder) models' source tokens: both
+   *        sessions open against the row's fixed source encoding (the
+   *        encoder leg runs once per session). A null or empty source
+   *        gives a null row. Null: single-sequence models.
    * @return input columns + `draft_tok` int, `accepted` boolean,
-   *         `final_tok` int (null prompt → all null)
+   *         `final_tok` int (null prompt or id → all null)
    */
   def speculativeSampled(
       df: DataFrame,
@@ -1252,14 +1401,14 @@ object Torch {
       inputCol: String,
       target: Broadcast[TorchScriptModel],
       draft: Broadcast[TorchScriptModel],
-      batchSize: Int = -1): DataFrame = {
-    requireTokenDecoder(target, "speculativeSampled")
-    requireTokenDecoder(draft, "speculativeSampled")
+      batchSize: Int = -1,
+      srcCol: String = null): DataFrame = {
+    val kv = kvPolicy(df, "speculativeSampled", Seq(target, draft), srcCol)
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
-    Kernel(df, SpecOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+    Kernel(df, SpecOut, ints = Seq(inputCol) ++ Option(srcCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
@@ -1272,12 +1421,14 @@ object Torch {
       def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          val src = kv.src(r)
+          val p: Array[Int] =
+            if (r.isNullAt(idIdx) || !kv.hasSrc(src)) null else Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
-            val qp = probs6(dm.decodeSession(p).logits())
-            val pp = probs6(tm.decodeSession(p).logits())
+            val qp = probs6(openSession(dm, kv, p, src).logits())
+            val pp = probs6(openSession(tm, kv, p, src).logits())
             val dx = pick(qp, draw(id, "d1"))
             val r6 = q6(math.min(1.0, pp(dx) / qp(dx)))
             val accepted = draw(id, "a1") < r6
@@ -1326,8 +1477,11 @@ object Torch {
    *
    * Scale shape: two KV sessions per row (draft + target), gamma
    * appends each, inside ONE `mapPartitions` — O(gamma·L·d) per row,
-   * no shuffle at any corpus size.
+   * no shuffle at any corpus size. The cycle is [[Spec.cycle]]'s
+   * cycle 1.
    *
+   * @param srcCol cross models' source tokens (see
+   *        [[speculativeSampled]]); null: single-sequence models
    * @return input columns + `draft_toks` array<int> (the gamma
    *         drafts), `n_accepted` int, `out_toks` array<int> (the
    *         accepted prefix + correction-or-bonus; length
@@ -1342,7 +1496,8 @@ object Torch {
       gamma: Int,
       batchSize: Int = -1,
       watermarkDelta: Double = 0.0,
-      watermarkGamma: (Int, Int) = (1, 2)): DataFrame = {
+      watermarkGamma: (Int, Int) = (1, 2),
+      srcCol: String = null): DataFrame = {
     require(gamma >= 1, "gamma must be >= 1")
     // WATERMARK × SPECULATIVE (Kirchenbauer 2023 × Leviathan 2023):
     // the green-list bias +delta lands on the TARGET's raw logits
@@ -1359,92 +1514,27 @@ object Torch {
     require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
       "watermarkGamma must be a fraction num/den with 0 < num < den")
-    requireTokenDecoder(target, "speculativeSampledGamma")
-    requireTokenDecoder(draft, "speculativeSampledGamma")
+    val kv = kvPolicy(df, "speculativeSampledGamma", Seq(target, draft), srcCol)
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val (wmNum, wmDen) = watermarkGamma
-    Kernel(df, GammaOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+    Kernel(df, GammaOut, ints = Seq(inputCol) ++ Option(srcCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def q6(x: Double): Double = Spec.q6(x)
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      // the target's grid distribution under the green bias: raw
-      // logits + delta on the green set keyed on `prev`, THEN the
-      // softmax (the lse shifts with the bias — q239's greedy order);
-      // delta = 0 routes through the shared probs6 (bit-identical)
-      def probs6W(lg: Array[Float], prev: Int): Array[Double] =
-        if (watermarkDelta == 0.0) probs6(lg)
-        else {
-          val bl = new Array[Double](vocab)
-          var mx = Double.NegativeInfinity
-          var j = 0
-          while (j < vocab) {
-            val v = lg(j).toDouble +
-              (if (Sampling.greenToken(prev, j, wmNum, wmDen)) watermarkDelta
-               else 0.0)
-            bl(j) = v
-            if (v > mx) mx = v
-            j += 1
-          }
-          var z = 0.0
-          j = 0
-          while (j < vocab) { z += math.exp(bl(j) - mx); j += 1 }
-          Array.tabulate(vocab)(k => q6(math.exp(bl(k) - mx) / z))
-        }
       rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          val src = kv.src(r)
+          val p: Array[Int] =
+            if (r.isNullAt(idIdx) || !kv.hasSrc(src)) null else Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
-            val sd = dm.decodeSession(p)
-            val st = tm.decodeSession(p)
-            val drafts = new Array[Int](gamma)
-            val qm = new Array[Array[Double]](gamma)
-            var i = 0
-            while (i < gamma) {
-              qm(i) = probs6(sd.logits())
-              drafts(i) = pick(qm(i), draw(id, s"d${i + 1}"))
-              sd.append(drafts(i))
-              i += 1
-            }
-            // target prefix distributions p_1..p_{gamma+1}: one
-            // session, one append per draft token; the watermark
-            // bias keys on each prefix's LAST token
-            val pm = new Array[Array[Double]](gamma + 1)
-            pm(0) = probs6W(st.logits(), p(p.length - 1))
-            i = 0
-            while (i < gamma) {
-              st.append(drafts(i))
-              pm(i + 1) = probs6W(st.logits(), drafts(i))
-              i += 1
-            }
-            var n = 0
-            var rejectedAt = -1
-            while (n < gamma && rejectedAt < 0) {
-              val x = drafts(n)
-              val r6 = q6(math.min(1.0, pm(n)(x) / qm(n)(x)))
-              if (draw(id, s"a${n + 1}") < r6) n += 1
-              else rejectedAt = n
-            }
-            val out: Seq[Int] =
-              if (rejectedAt < 0)
-                drafts.toSeq :+ pick(pm(gamma), draw(id, "b1"))
-              else {
-                val k = rejectedAt
-                val resid = Array.tabulate(vocab)(j =>
-                  math.max(0.0, pm(k)(j) - qm(k)(j))) // exact grid differences
-                val corr =
-                  if (resid.forall(_ == 0.0)) drafts(k) // p == q on the grid
-                  else pick(resid, draw(id, s"r${k + 1}"))
-                drafts.take(k).toSeq :+ corr
-              }
+            val (drafts, n, out) = Spec.cycle(openSession(dm, kv, p, src),
+              openSession(tm, kv, p, src), p(p.length - 1), gamma, vocab, id, 1,
+              watermarkDelta, wmNum, wmDen)
             (drafts.toSeq, n, out)
           }
         }
@@ -1486,6 +1576,11 @@ object Torch {
    *         metric a server tracks is per-VERIFICATION-PASS yield,
    *         which truncation does not refund); null prompt/id → all
    *         null
+   * @param srcCol cross models' source tokens (see
+   *        [[speculativeSampled]]): every fork shares the once-computed
+   *        encoder k/v, so no cycle re-encodes the source; with
+   *        `nWindow` only the decoder-side caches evict. Null:
+   *        single-sequence models.
    */
   def speculativeSampledLoop(
       df: DataFrame,
@@ -1500,15 +1595,10 @@ object Torch {
       watermarkGamma: (Int, Int) = (1, 2),
       nSink: Int = -1,
       nWindow: Int = -1,
-      relPos: Boolean = false): DataFrame = {
+      relPos: Boolean = false,
+      srcCol: String = null): DataFrame = {
     require(gamma >= 1, "gamma must be >= 1")
     require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-    // relPos (q296): the bounded sessions re-index their cache slots
-    // on eviction ([[TorchScriptModel.decodeSessionRelPos]]) — the
-    // serving loop runs past the models' bias-table length with a
-    // fixed-size table; scope-checked at session open
-    require(!relPos || nWindow > 0,
-      "relPos is a dial on the bounded-KV sessions (needs nWindow >= 1)")
     // WATERMARK × SPECULATIVE SERVING (q285): the green bias rides the
     // TARGET's prefix softmaxes across EVERY cycle — the q281 cell
     // cycled, so a serving stack watermarks AND draft-accelerates AND
@@ -1518,117 +1608,50 @@ object Torch {
     require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
       "watermarkGamma must be a fraction num/den with 0 < num < den")
-    // BOUNDED-KV SERVING (q284, the StreamingLLM deployment): both
-    // models' sessions evict to nSink sinks + an nWindow sliding
-    // window ([[TorchScriptModel.decodeSessionWindowed]]) — forks
-    // inherit the knobs, so verification forks and roll-forwards stay
-    // O(nSink + nWindow) per session. nWindow <= 0 keeps the
-    // unbounded sessions (identical arithmetic; spec-pinned).
-    val windowed = nWindow > 0
-    require(!windowed || nSink >= 0,
-      "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    requireTokenDecoder(target, "speculativeSampledLoop")
-    requireTokenDecoder(draft, "speculativeSampledLoop")
+    // BOUNDED-KV SERVING (q284, the StreamingLLM deployment; q293 over
+    // cross models; q296 re-rotated): both models' sessions evict to
+    // nSink sinks + an nWindow window — forks inherit the knobs, so
+    // verification forks and roll-forwards stay O(nSink + nWindow)
+    // per session. nWindow <= 0 keeps the unbounded sessions
+    // (identical arithmetic; spec-pinned).
+    val kv = kvPolicy(df, "speculativeSampledLoop", Seq(target, draft), srcCol,
+      nSink, nWindow, relPos)
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val (wmNum, wmDen) = watermarkGamma
-    Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+    Kernel(df, LoopOut, ints = Seq(inputCol) ++ Option(srcCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def q6(x: Double): Double = Spec.q6(x)
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      // the q281 biased-target softmax (see speculativeSampledGamma)
-      def probs6W(lg: Array[Float], prev: Int): Array[Double] =
-        if (watermarkDelta == 0.0) probs6(lg)
-        else {
-          val bl = new Array[Double](vocab)
-          var mx = Double.NegativeInfinity
-          var j = 0
-          while (j < vocab) {
-            val v = lg(j).toDouble +
-              (if (Sampling.greenToken(prev, j, wmNum, wmDen)) watermarkDelta
-               else 0.0)
-            bl(j) = v
-            if (v > mx) mx = v
-            j += 1
-          }
-          var z = 0.0
-          j = 0
-          while (j < vocab) { z += math.exp(bl(j) - mx); j += 1 }
-          Array.tabulate(vocab)(k => q6(math.exp(bl(k) - mx) / z))
-        }
       rows =>
         rows.iterator.map { r =>
-          val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+          val src = kv.src(r)
+          val p: Array[Int] =
+            if (r.isNullAt(idIdx) || !kv.hasSrc(src)) null else Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
-            // target/draft @ accepted prefix (bounded caches when the
-            // serving loop runs at a KV budget)
-            var st0 = if (relPos) tm.decodeSessionRelPos(p, nSink, nWindow)
-                      else if (windowed) tm.decodeSessionWindowed(p, nSink, nWindow)
-                      else tm.decodeSession(p)
-            var sd0 = if (relPos) dm.decodeSessionRelPos(p, nSink, nWindow)
-                      else if (windowed) dm.decodeSessionWindowed(p, nSink, nWindow)
-                      else dm.decodeSession(p)
+            // target/draft @ accepted prefix
+            var st0 = openSession(tm, kv, p, src)
+            var sd0 = openSession(dm, kv, p, src)
             var lastTok = p(p.length - 1) // the green key for p_1
             val emitted = scala.collection.mutable.ArrayBuffer.empty[Int]
             var cycles = 0
             var accTotal = 0
             while (emitted.length < maxNewTokens) {
               cycles += 1
-              val base = (cycles - 1) * gamma
-              val sdV = sd0.fork()
-              val drafts = new Array[Int](gamma)
-              val qm = new Array[Array[Double]](gamma)
-              var i = 0
-              while (i < gamma) {
-                qm(i) = probs6(sdV.logits())
-                drafts(i) = pick(qm(i), draw(id, s"d${base + i + 1}"))
-                sdV.append(drafts(i))
-                i += 1
-              }
-              val stV = st0.fork()
-              val pm = new Array[Array[Double]](gamma + 1)
-              pm(0) = probs6W(stV.logits(), lastTok)
-              i = 0
-              while (i < gamma) {
-                stV.append(drafts(i))
-                pm(i + 1) = probs6W(stV.logits(), drafts(i))
-                i += 1
-              }
-              var n = 0
-              var rejectedAt = -1
-              while (n < gamma && rejectedAt < 0) {
-                val x = drafts(n)
-                val r6 = q6(math.min(1.0, pm(n)(x) / qm(n)(x)))
-                if (draw(id, s"a${base + n + 1}") < r6) n += 1
-                else rejectedAt = n
-              }
+              // verification runs on forks: rejected drafts never
+              // touch the accepted-prefix sessions
+              val (_, n, cycleOut) = Spec.cycle(sd0.fork(), st0.fork(), lastTok,
+                gamma, vocab, id, cycles, watermarkDelta, wmNum, wmDen)
               accTotal += n
-              val cycleOut: Seq[Int] =
-                if (rejectedAt < 0)
-                  drafts.toSeq :+ pick(pm(gamma), draw(id, s"b$cycles"))
-                else {
-                  val k = rejectedAt
-                  val resid = Array.tabulate(vocab)(j =>
-                    math.max(0.0, pm(k)(j) - qm(k)(j)))
-                  val corr =
-                    if (resid.forall(_ == 0.0)) drafts(k)
-                    else pick(resid, draw(id, s"r${base + k + 1}"))
-                  drafts.take(k).toSeq :+ corr
-                }
               emitted ++= cycleOut
               lastTok = cycleOut.last
               if (emitted.length < maxNewTokens) {
                 // roll forward the accepted-prefix sessions: fresh
-                // forks + the emitted tokens only (rejected drafts
-                // never touch them)
+                // forks + the emitted tokens only
                 val st1 = st0.fork(); cycleOut.foreach(st1.append); st0 = st1
                 val sd1 = sd0.fork(); cycleOut.foreach(sd1.append); sd0 = sd1
               }
@@ -2458,25 +2481,6 @@ object Torch {
   }
 
   /**
-   * Greedy autoregressive decoding — `steps` rounds of (forward pass
-   * on the whole sequence → argmax over the vocab logits → append).
-   * The model must be a token-input net whose output width IS the
-   * vocab (a causal decoder with an LM head); its position table must
-   * cover the grown length (input cap + steps) — the interpreter
-   * fails loudly past it, never wraps.
-   *
-   * Shape at scale: the k-step loop runs INSIDE one `mapPartitions`
-   * over GEMM batches — one job, no per-step plan growth, no driver
-   * round trips; each step re-runs the full prefix (the O(L²)
-   * no-KV-cache form: correct-by-construction against the oracle's
-   * per-step restatement, and the per-row L is capped). Argmax is the
-   * repo rule: FIRST max wins, NaN never wins — exactly
-   * [[graft.functions.ArgMax]] and the oracle's CASE chain.
-   *
-   * @return input columns + `outCol` = array<int> of the `steps`
-   *         generated token ids (null input → null output)
-   */
-  /**
    * ENCODER-DECODER greedy generation (the T5/BART decode loop):
    * `keyCol` is the fixed source-side sequence, `queryCol` the decoder
    * prompt; each of the `steps` rounds appends the argmax next token
@@ -2782,7 +2786,20 @@ object Torch {
    * [[generateGreedy]] — the k-step loop runs INSIDE one
    * `mapPartitions` over GEMM batches, no per-step plan growth.
    *
+   * The other knobs compose through the same [[Sampling]] kernel:
+   * the static `banned` set, the CTRL `repetitionPenalty` and
+   * `noRepeatNgram` (over prompt + generated), `minP`, `typicalP`
+   * (with topP only), the watermark (`watermarkDelta`/
+   * `watermarkGamma`, pre-temperature) and shallow fusion
+   * (`lmWeight`/`lmCounts`, with temperature/topP only); each at its
+   * neutral value reduces bit-exactly (spec-pinned).
+   *
    * @param idCol BIGINT column seeding the per-row draw chain
+   * @param srcCol a cross (encoder-decoder) model's source tokens: the
+   *        row decodes through the cross KV session (encoder leg once
+   *        per row) and the knobs read the decoder-side sequence. A
+   *        null or empty source gives a null row. Null: a
+   *        single-sequence model.
    * @return input columns + `outCol` = array<int> sampled token ids
    */
   def generateSampled(
@@ -2804,7 +2821,8 @@ object Torch {
       watermarkDelta: Double = 0.0,
       watermarkGamma: (Int, Int) = (1, 2),
       lmWeight: Double = 0.0,
-      lmCounts: Array[Array[Long]] = null): DataFrame = {
+      lmCounts: Array[Array[Long]] = null,
+      srcCol: String = null): DataFrame = {
     require(steps >= 1, "steps must be >= 1")
     require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
@@ -2843,13 +2861,12 @@ object Torch {
     // belong to the other warper chain.
     require(typicalP >= 1.0 || (topK == Int.MaxValue && minP == 0.0),
       "typicalP composes with topP only (not topK/minP)")
-    require(model.value.inDim == -1, "generateSampled needs a token-input model")
-    require(!model.value.isCross,
-      "cross-attention model: use generateGreedyPair")
+    val kv = kvPolicy(df, "generateSampled", Seq(model), srcCol, session = false)
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val plain = repetitionPenalty == 1.0 && noRepeatNgram == 0
-    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
+    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol) ++ Option(srcCol),
+        batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
       def draw(id: Long, step: Int): Double = Sampling.draw(id, step)
@@ -2886,8 +2903,10 @@ object Torch {
           fuseRows = if (bcLm == null) null else bcLm.value._2)
       }
       rows =>
+        val srcs: Array[Array[Int]] = if (kv.srcIdx < 0) null else rows.map(kv.src).toArray
         val seqs: Array[Array[Int]] =
           rows.map(r => if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)).toArray
+        if (srcs != null) seqs.indices.foreach(i => if (srcs(i) == null) seqs(i) = null)
         val ids: Array[Long] = rows.map(r =>
           if (r.isNullAt(idIdx)) 0L else r.getAs[Number](idIdx).longValue()).toArray
         val gen = Array.fill(seqs.length)(
@@ -2896,7 +2915,7 @@ object Torch {
           // KV-cache decode (bit-identical logits; see generateGreedy)
           seqs.zipWithIndex.foreach { case (s0, ri) =>
             if (s0 != null) {
-              val sess = m.decodeSession(s0)
+              val sess = openSession(m, kv, s0, if (srcs == null) null else srcs(ri))
               val full = scala.collection.mutable.ArrayBuffer.from(s0)
               var t = 1
               while (t <= steps) {
@@ -2973,7 +2992,7 @@ object Torch {
     require(topP > 0.0 && topP <= 1.0, "topP must be in (0, 1]")
     require(model.value.inDim == -1, "generateSampledK needs a token-input model")
     require(!model.value.isCross,
-      "cross-attention model: use generateSampledPair")
+      "generateSampledK: cross-attention model not supported (generateSampled takes srcCol)")
     val k = numReturnSequences
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
@@ -3038,48 +3057,6 @@ object Torch {
     }
   }
 
-  /** Anti-degeneration decoding controls (Keskar et al. 2019's CTRL
-    * penalty; Paulus et al. 2017's no-repeat n-grams — the standard
-    * `repetition_penalty` / `no_repeat_ngram_size` generation knobs):
-    *
-    *  - `repetitionPenalty` rescales the logit of every token already
-    *    PRESENT in the sequence (prompt + generated) before the
-    *    argmax: `x > 0 → x/penalty, else x·penalty`, computed in f64
-    *    from the f32 logit (IEEE division/multiplication — both
-    *    engines restate it bit-identically from the same logit);
-    *  - `noRepeatNgram = n` bans any candidate that would complete an
-    *    n-gram already present in the sequence. INTEGER-decidable (a
-    *    set-membership test, no numerics). If the ban would empty the
-    *    allowed vocabulary, it LIFTS for that step (deterministic,
-    *    restated by the oracle) — a fail-loud there would let one
-    *    pathological doc kill a 100 TB pipeline.
-    *
-    * Both default off; the default path is byte-identical to before. */
-  /** `eosId >= 0` adds EARLY STOPPING: a row that emits eos stops
-    * decoding (the eos itself is emitted; the output array is shorter
-    * than `steps`) — stopped rows leave the GEMM batch, so a corpus
-    * whose rows finish early costs proportionally less. `dfaTrans`
-    * adds GRAMMAR-CONSTRAINED decoding (the structured-output /
-    * Outlines serving shape): a `(nStates, vocab)` transition table
-    * where entry `(s, t)` is the next state or −1 = forbidden; rows
-    * start in state 0, each emitted token advances the state, and
-    * forbidden tokens never become argmax candidates. The grammar is
-    * a HARD constraint (never lifted — every state must keep at least
-    * one token reachable, checked up front); it composes with the
-    * static banned set, the repetition penalty, and the n-gram ban
-    * (which still lifts rather than contradict the grammar).
-    * `bannedPhrases` are multi-token bad-words sequences (the HF
-    * `bad_words_ids` contract): a candidate that would COMPLETE any
-    * phrase against the current generated+prompt suffix is hard-banned
-    * for that step — single-token phrases behave exactly like the
-    * static banned set. Integer-decidable; the oracle restates the
-    * suffix matches over the grown token CTE.
-    * `minNewTokens` (HF `min_new_tokens`, the summarization floor):
-    * while FEWER than that many tokens have been generated, `eosId`
-    * is hard-banned from the candidate set — the row cannot stop
-    * early, and eos first becomes decodable at generated position
-    * minNewTokens + 1. Integer-decidable; 0 (the default) reduces
-    * bit-exactly to the un-floored path (same code, empty ban). */
   /**
    * Greedy decoding over a BOUNDED-KV session
    * ([[TorchScriptModel.decodeSessionWindowed]] — the StreamingLLM
@@ -3245,6 +3222,77 @@ object Torch {
       .orderBy("nwindow")
   }
 
+  /**
+   * Greedy autoregressive decoding — `steps` rounds of (forward pass
+   * → argmax over the vocab logits → append). The model must be a
+   * token-input net whose output width IS the vocab (a causal decoder
+   * with an LM head); its position table must cover the grown length
+   * (input cap + steps) — the interpreter fails loudly past it, never
+   * wraps. Argmax is the repo rule: FIRST max wins, NaN never wins —
+   * exactly [[graft.functions.ArgMax]] and the oracle's CASE chain.
+   *
+   * Shape at scale: the k-step loop runs INSIDE one `mapPartitions`
+   * over GEMM batches — one job, no per-step plan growth, no driver
+   * round trips. A cacheable model decodes through per-row KV
+   * sessions (each step O(L·d), logits bit-identical to the
+   * recompute path — spec-pinned); any other model re-runs the full
+   * prefix per step (the O(L²) form).
+   *
+   * Anti-degeneration controls (Keskar et al. 2019's CTRL penalty;
+   * Paulus et al. 2017's no-repeat n-grams — the standard
+   * `repetition_penalty` / `no_repeat_ngram_size` knobs):
+   *  - `repetitionPenalty` rescales the logit of every token already
+   *    PRESENT in the sequence (prompt + generated) before the argmax:
+   *    `x > 0 → x/penalty, else x·penalty`, in f64 from the f32 logit;
+   *  - `noRepeatNgram = n` bans any candidate that would complete an
+   *    n-gram already present in the sequence; if the ban would empty
+   *    the allowed vocabulary it LIFTS for that step (a fail-loud there
+   *    would let one pathological doc kill a pipeline).
+   *
+   * `eosId >= 0` adds EARLY STOPPING: a row that emits eos stops (the
+   * eos itself is emitted; the array is shorter than `steps`).
+   * `dfaTrans` adds GRAMMAR-CONSTRAINED decoding: a `(nStates, vocab)`
+   * table whose entry `(s, t)` is the next state or −1 = forbidden;
+   * rows start in state 0 and forbidden tokens never become
+   * candidates (a HARD constraint, checked up front so every state
+   * keeps a token). `bannedPhrases` are multi-token bad-words
+   * sequences (HF `bad_words_ids`): a candidate that would COMPLETE
+   * one against the current suffix is hard-banned. `minNewTokens`
+   * (HF `min_new_tokens`) hard-bans eos until that many tokens are
+   * generated. `forcedTokens` (HF `forced_decoder_ids`) emits a fixed
+   * token at a step; `beginSuppress` bans tokens at the first step.
+   * The soft watermark (`watermarkDelta`/`watermarkGamma`, Kirchenbauer
+   * et al. 2023) adds +delta to the green logits keyed on the last
+   * token. Every knob defaults off; the default path is the plain
+   * first-max argmax.
+   *
+   * SHALLOW FUSION (Gulcehre et al. 2015): `lmWeight > 0` picks
+   * `argmax_j logits(j) + lmWeight · ln p_LM(j | prev)` with `p_LM`
+   * the FROZEN add-one bigram LM `(lmCounts(prev)(j) + 1) /
+   * (rowSum(prev) + vocab)` (a vocab² count artifact from the ingest
+   * corpus, broadcast once). As in [[beamSearch]], fusion needs the
+   * KV path and composes with the watermark and eos, not with the
+   * constraint knobs; `lmWeight = 0` is the plain path, bit for bit.
+   *
+   * KV budget: `nWindow > 0` decodes over BOUNDED sessions
+   * ([[TorchScriptModel.decodeSessionWindowed]], the StreamingLLM
+   * shape): every causal cache keeps `nSink` sinks + the last
+   * `nWindow` positions at ABSOLUTE positions, so the per-step cost
+   * is O((nSink + nWindow)·d), and `nWindow >=` the final length is
+   * bit-identical to the unbounded session (spec-pinned). `relPos`
+   * re-rotates the bounded caches
+   * ([[TorchScriptModel.decodeSessionRelPos]]: bias tables read at
+   * cache-slot indices, lifting the model's length limit; bias-only
+   * position models).
+   *
+   * @param srcCol a cross (encoder-decoder, T5/BART) model's source
+   *        tokens: the encoder leg and the cross k/v run once per row
+   *        at session open, and the knobs read the decoder-side
+   *        sequence. A null or empty source gives a null row. Null: a
+   *        single-sequence model.
+   * @return input columns + `outCol` = array<int> of the generated
+   *         token ids (null input → null output)
+   */
   def generateGreedy(
       df: DataFrame,
       inputCol: String,
@@ -3262,7 +3310,13 @@ object Torch {
       forcedTokens: Map[Int, Int] = Map.empty,
       beginSuppress: Set[Int] = Set.empty,
       watermarkDelta: Double = 0.0,
-      watermarkGamma: (Int, Int) = (1, 2)): DataFrame = {
+      watermarkGamma: (Int, Int) = (1, 2),
+      lmWeight: Double = 0.0,
+      lmCounts: Array[Array[Long]] = null,
+      nSink: Int = -1,
+      nWindow: Int = -1,
+      relPos: Boolean = false,
+      srcCol: String = null): DataFrame = {
     require(steps >= 1, "steps must be >= 1")
     require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
@@ -3288,9 +3342,9 @@ object Torch {
     require(forcedTokens.contains(0) ||
       (banned ++ beginSuppress).size < model.value.outDim,
       "beginSuppress + banned cover the whole vocabulary at step 0")
-    require(model.value.inDim == -1, "generateGreedy needs a token-input model")
-    require(!model.value.isCross,
-      "cross-attention model: use generateGreedyPair")
+    require(lmWeight >= 0.0, "lmWeight must be >= 0")
+    val kv = kvPolicy(df, "generateGreedy", Seq(model), srcCol, nSink, nWindow, relPos,
+      session = lmWeight != 0.0)
     require(banned.size < model.value.outDim,
       "banned set covers the whole vocabulary")
     require(repetitionPenalty > 0.0, "repetitionPenalty must be > 0")
@@ -3308,14 +3362,53 @@ object Torch {
         require(row.exists(_ != -1), s"DFA state $st allows no token")
       }
     }
+    val constrained = banned.nonEmpty || repetitionPenalty != 1.0 || noRepeatNgram != 0 ||
+      dfaTrans != null || bannedPhrases.nonEmpty || minNewTokens != 0 ||
+      forcedTokens.nonEmpty || beginSuppress.nonEmpty
+    require(lmWeight == 0.0 || !constrained,
+      "lmWeight does not compose with the constraint knobs")
+    require(lmWeight == 0.0 || (lmCounts != null &&
+      lmCounts.length == model.value.outDim &&
+      lmCounts.forall(_.length == model.value.outDim)),
+      "lmCounts must be vocab x vocab when lmWeight > 0")
+    // the frozen-ingest broadcast convention: the vocab² count matrix
+    // (and its row sums) cross the wire once per executor, never per
+    // task
+    val bcLm: Broadcast[(Array[Array[Long]], Array[Long])] =
+      if (lmWeight == 0.0) null
+      else df.sparkSession.sparkContext.broadcast((lmCounts, lmCounts.map(_.sum)))
     val inIdx = df.schema.fieldIndex(inputCol)
     val plain = repetitionPenalty == 1.0 && noRepeatNgram == 0 &&
       eosId < 0 && dfaTrans == null && bannedPhrases.isEmpty &&
       minNewTokens == 0 && forcedTokens.isEmpty && beginSuppress.isEmpty &&
-      watermarkDelta == 0.0
-    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
+      watermarkDelta == 0.0 && lmWeight == 0.0
+    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol) ++ Option(srcCol),
+        batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
+      val lm = if (bcLm == null) null else bcLm.value
+      // the fused pick: logits (+ the watermark) + lmWeight · ln((cnt+1)
+      // / (rowSum+V)) over the bigram row of `prev` — no constraint
+      // knob reaches it, so it needs no per-step candidate sets
+      def argmaxFused(out: Array[Float], off: Int, prev: Int): Int = {
+        var best = -1
+        var bv = Double.NaN
+        var j = 0
+        while (j < vocab) {
+          val x0 = out(off + j).toDouble
+          val xw =
+            if (watermarkDelta != 0.0 &&
+                Sampling.greenToken(prev, j, watermarkGamma._1, watermarkGamma._2))
+              x0 + watermarkDelta
+            else x0
+          val x = xw + lmWeight * StrictMath.log(
+            (lm._1(prev)(j) + 1L).toDouble / (lm._2(prev) + vocab.toLong).toDouble)
+          if (!x.isNaN && (best < 0 || x > bv)) { best = j; bv = x }
+          j += 1
+        }
+        require(best >= 0, "all-NaN logits")
+        best
+      }
       // banned ids are simply never candidates (constrained decoding)
       val allowed: Int => Boolean = if (banned.isEmpty) null else j => !banned.contains(j)
       // the knobbed pick: seen-token logits rescale in f64, n-gram
@@ -3390,6 +3483,8 @@ object Torch {
       }
       rows =>
         val seqs: Array[Array[Int]] = rows.map(Kernel.nonEmptyInts(_, inIdx)).toArray
+        val srcs: Array[Array[Int]] = if (kv.srcIdx < 0) null else rows.map(kv.src).toArray
+        if (srcs != null) seqs.indices.foreach(i => if (srcs(i) == null) seqs(i) = null)
         val gen = Array.fill(seqs.length)(
           scala.collection.mutable.ArrayBuffer.empty[Int])
         if (m.cacheable) {
@@ -3400,7 +3495,7 @@ object Torch {
           // doc), so trajectories and oracles are unchanged.
           seqs.zipWithIndex.foreach { case (s0, ri) =>
             if (s0 != null) {
-              val sess = m.decodeSession(s0)
+              val sess = openSession(m, kv, s0, if (srcs == null) null else srcs(ri))
               val full = scala.collection.mutable.ArrayBuffer.from(s0)
               var state = 0
               var t = 0
@@ -3414,6 +3509,7 @@ object Torch {
                   case None =>
                     val lg = sess.logits()
                     if (plain) argmaxFirst(lg, vocab, 0, allowed)
+                    else if (lm != null) argmaxFused(lg, 0, full.last)
                     else argmaxAdjusted(lg, 0, full, state, gen(ri).length)
                 }
                 gen(ri) += tid
@@ -3868,11 +3964,7 @@ object Torch {
     // (and tree forks) evict; an attention-free early-exit draft has
     // no k/v state, so its windowed sessions are identical by
     // construction. nWindow <= 0 keeps the unbounded sessions.
-    val windowed = nWindow > 0
-    require(!windowed || nSink >= 0,
-      "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    requireTokenDecoder(target, "treeDraftTypicalLoop")
-    requireTokenDecoder(draft, "treeDraftTypicalLoop")
+    val kv = kvPolicy(df, "treeDraftTypicalLoop", Seq(target, draft), null, nSink, nWindow)
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
     require(branch <= target.value.outDim, "branch exceeds the vocabulary")
@@ -3904,10 +3996,8 @@ object Torch {
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
-            val st = if (windowed) tm.decodeSessionWindowed(p, nSink, nWindow)
-                     else tm.decodeSession(p)
-            var sd = if (windowed) dm.decodeSessionWindowed(p, nSink, nWindow)
-                     else dm.decodeSession(p)
+            val st = openSession(tm, kv, p, null)
+            var sd = openSession(dm, kv, p, null)
             val out = scala.collection.mutable.ArrayBuffer.empty[Int]
             var cycles = 0
             var accTotal = 0
@@ -4004,13 +4094,8 @@ object Torch {
     // (identical arithmetic; spec-pinned). relPos (q304) switches
     // them to the re-rotation dial — the tree loop runs past the
     // models' bias-table length.
-    val windowed = nWindow > 0
-    require(!windowed || nSink >= 0,
-      "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    require(!relPos || windowed,
-      "relPos is a dial on the bounded-KV sessions (needs nWindow >= 1)")
-    requireTokenDecoder(target, "treeDraftGreedyLoop")
-    requireTokenDecoder(draft, "treeDraftGreedyLoop")
+    val kv = kvPolicy(df, "treeDraftGreedyLoop", Seq(target, draft), null,
+      nSink, nWindow, relPos)
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
     require(branch <= target.value.outDim, "branch exceeds the vocabulary")
@@ -4031,12 +4116,8 @@ object Torch {
             // the DRAFT session tracks the accepted prefix too — each
             // cycle's tree roots at a fork of it (O(L) copy), so
             // neither model ever replays the prompt
-            val st = if (relPos) tm.decodeSessionRelPos(p, nSink, nWindow)
-                     else if (windowed) tm.decodeSessionWindowed(p, nSink, nWindow)
-                     else tm.decodeSession(p)
-            var sd = if (relPos) dm.decodeSessionRelPos(p, nSink, nWindow)
-                     else if (windowed) dm.decodeSessionWindowed(p, nSink, nWindow)
-                     else dm.decodeSession(p)
+            val st = openSession(tm, kv, p, null)
+            var sd = openSession(dm, kv, p, null)
             val out = scala.collection.mutable.ArrayBuffer.empty[Int]
             var cycles = 0
             var accTotal = 0
@@ -4312,11 +4393,7 @@ object Torch {
     // composes with the tree exactly as with the greedy rollout.
     // nWindow <= 0 keeps the unbounded sessions (identical
     // arithmetic; spec-pinned).
-    val windowed = nWindow > 0
-    require(!windowed || nSink >= 0,
-      "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    requireTokenDecoder(target, "treeDraftStochasticLoop")
-    requireTokenDecoder(draft, "treeDraftStochasticLoop")
+    val kv = kvPolicy(df, "treeDraftStochasticLoop", Seq(target, draft), null, nSink, nWindow)
     require(target.value.outDim == draft.value.outDim,
       "draft and target must share the vocabulary")
     val inIdx = df.schema.fieldIndex(inputCol)
@@ -4334,10 +4411,8 @@ object Torch {
           if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
-            val sd = if (windowed) dm.decodeSessionWindowed(p, nSink, nWindow)
-                     else dm.decodeSession(p)
-            val st = if (windowed) tm.decodeSessionWindowed(p, nSink, nWindow)
-                     else tm.decodeSession(p)
+            val sd = openSession(dm, kv, p, null)
+            val st = openSession(tm, kv, p, null)
             val emitted = scala.collection.mutable.ArrayBuffer.empty[Int]
             var cycles = 0
             var accTotal = 0
@@ -4541,8 +4616,6 @@ object Torch {
     require(ngram >= 1, "ngram must be >= 1")
     require(maxDraft >= 1, "maxDraft must be >= 1")
     require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-    require(!relPos || nWindow > 0,
-      "relPos is a dial on the bounded-KV session (needs nWindow >= 1)")
     // BOUNDED-KV lookup serving (q298): the one rolling target
     // session evicts to nSink sinks + an nWindow window — the
     // LOOKUP side stays over the FULL token stream (token ids are
@@ -4551,10 +4624,7 @@ object Torch {
     // anywhere in the sequence while verification runs at
     // O(nSink + nWindow) state. nWindow <= 0 keeps the unbounded
     // session (identical arithmetic; spec-pinned).
-    val windowed = nWindow > 0
-    require(!windowed || nSink >= 0,
-      "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    requireTokenDecoder(model, "generatePromptLookupLoop")
+    val kv = kvPolicy(df, "generatePromptLookupLoop", Seq(model), null, nSink, nWindow, relPos)
     val inIdx = df.schema.fieldIndex(inputCol)
     Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
@@ -4564,9 +4634,7 @@ object Torch {
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
-            val sess = if (relPos) m.decodeSessionRelPos(p, nSink, nWindow)
-                       else if (windowed) m.decodeSessionWindowed(p, nSink, nWindow)
-                       else m.decodeSession(p)
+            val sess = openSession(m, kv, p, null)
             val full = scala.collection.mutable.ArrayBuffer.from(p)
             val out = scala.collection.mutable.ArrayBuffer.empty[Int]
             var cycles = 0
