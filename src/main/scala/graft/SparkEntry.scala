@@ -88,22 +88,26 @@ object SparkEntry {
 
   /** The shallow-fusion decoders' input: the generator's token ids and
     * the counts of its add-one bigram prior (vocab² cells, counted over
-    * the same sliced token stream). The count collect and the decode
-    * share one lazy checkpoint of the spread, tokenized documents: the
-    * collect materializes it, the decode reads it back, so the corpus
-    * is scanned and tokenized once per execution. */
-  private def fusedInput(s: SparkSession, dir: String, vocab: Int): (DataFrame, Array[Array[Long]]) = {
+    * the same sliced token stream). The count and the decode share one
+    * lazy checkpoint of the spread, tokenized documents: the count
+    * materializes it, the decode reads it back, so the corpus is
+    * scanned and tokenized once per execution. The count is one job
+    * with no exchange: each partition sums its bigrams into a vocab²
+    * array and the driver adds the arrays. */
+  private[graft] def fusedInput(s: SparkSession, dir: String,
+      vocab: Int): (DataFrame, Array[Array[Long]]) = {
     val toks = graft.operators.Checkpoints.cp(Tok.input(t(s, dir, "documents"), vocab, EncMaxLen))
-    val counts = Array.fill(vocab)(Array.fill(vocab)(0L))
-    toks.select(explode(zip_with(
-          slice(col("tok_ids"), lit(1), greatest(size(col("tok_ids")) - 1, lit(0))),
-          slice(col("tok_ids"), lit(2), greatest(size(col("tok_ids")) - 1, lit(0))),
-          (a, b) => struct(a.as("p"), b.as("c")))).as("pc"))
-      .groupBy(col("pc.p").as("p"), col("pc.c").as("c"))
-      .agg(count(lit(1)).as("n"))
-      .collect() // bounded by vocab² = 64 rows
-      .foreach(r => counts(r.getLong(0).toInt)(r.getLong(1).toInt) = r.getLong(2))
-    (toks, counts)
+    val flat = toks.select(col("tok_ids")).rdd.aggregate(new Array[Long](vocab * vocab))(
+      (c, r) => {
+        if (!r.isNullAt(0)) {
+          val ids = r.getSeq[Long](0)
+          var i = 0
+          while (i + 1 < ids.length) { c(ids(i).toInt * vocab + ids(i + 1).toInt) += 1; i += 1 }
+        }
+        c
+      },
+      (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
+    (toks, Array.tabulate(vocab)(p => flat.slice(p * vocab, (p + 1) * vocab)))
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -1475,7 +1479,7 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
       val (toks, counts) = fusedInput(s, dir, vocab)
-      Torch.generateGreedyFused(toks, "tok_ids", "gen", bc, steps = 3,
+      Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
           lmWeight = 0.5, lmCounts = counts, batchSize = 256)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
           col("gen")(1).as("gen2"), col("gen")(2).as("gen3"))
@@ -1804,8 +1808,8 @@ object SparkEntry {
       val m = crossGenModel
       val bc = s.sparkContext.broadcast(m)
       val toks = pairInput(s, dir, m)
-      Torch.generateGreedyPair(toks, "d_ids", "s_ids", "gen", bc,
-          steps = 2, batchSize = 256)
+      Torch.generateGreedy(toks, "d_ids", "gen", bc,
+          steps = 2, batchSize = 256, srcCol = "s_ids")
         .select(col("doc_id"), col("gen")(0).as("gen1"), col("gen")(1).as("gen2"))
         .orderBy("doc_id")
     },
@@ -1820,8 +1824,8 @@ object SparkEntry {
       val m = crossGenModel
       val bc = s.sparkContext.broadcast(m)
       val toks = pairInput(s, dir, m)
-      Torch.beamSearchPair(toks, "d_ids", "s_ids", "beams", bc,
-          steps = 2, width = 2, batchSize = 256)
+      Torch.beamSearch(toks, "d_ids", "beams", bc,
+          steps = 2, width = 2, batchSize = 256, srcCol = "s_ids")
         .select(col("doc_id"),
           col("beams")(0)(0).as("b1t1"), col("beams")(0)(1).as("b1t2"),
           col("beams")(1)(0).as("b2t1"), col("beams")(1)(1).as("b2t2"))
@@ -1832,7 +1836,7 @@ object SparkEntry {
     // empty cell in the decode matrix — q199's compressed-draft
     // acceptance rule over the encoder-decoder stack. The DRAFT is
     // the target pushed onto the int4 grid; it proposes 2 tokens
-    // through cross-aware KV sessions (generateGreedyPair), then the
+    // through cross-aware KV sessions (generateGreedy's srcCol), then the
     // target verifies each prefix with ITS argmax via three chained
     // inferPairBatched passes in ONE plan — accepted = longest
     // agreeing prefix, plus the target's token at the first mismatch
@@ -1846,8 +1850,8 @@ object SparkEntry {
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
       val toks = pairInput(s, dir, m)
-      val drafted = Torch.generateGreedyPair(toks, "d_ids", "s_ids", "draft",
-        bcD, steps = 2, batchSize = 256)
+      val drafted = Torch.generateGreedy(toks, "d_ids", "draft",
+        bcD, steps = 2, batchSize = 256, srcCol = "s_ids")
       val withSeqs = drafted
         .withColumn("seq1",
           concat(col("d_ids"), slice(col("draft").cast("array<bigint>"), 1, 1)))
@@ -1883,8 +1887,8 @@ object SparkEntry {
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
       val toks = pairInput(s, dir, m)
-      Torch.speculativeSampledPair(toks, "doc_id", "d_ids", "s_ids",
-          bcT, bcD, batchSize = 256)
+      Torch.speculativeSampled(toks, "doc_id", "d_ids",
+          bcT, bcD, batchSize = 256, srcCol = "s_ids")
         .select(col("doc_id"), col("draft_tok"), col("accepted"),
           col("final_tok"))
         .orderBy("doc_id")
@@ -1901,8 +1905,8 @@ object SparkEntry {
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
       val toks = pairInput(s, dir, m)
-      Torch.speculativeSampledPairGamma(toks, "doc_id", "d_ids", "s_ids",
-          bcT, bcD, gamma = 2, batchSize = 256)
+      Torch.speculativeSampledGamma(toks, "doc_id", "d_ids",
+          bcT, bcD, gamma = 2, batchSize = 256, srcCol = "s_ids")
         .select(col("doc_id"),
           col("draft_toks")(0).as("d1"), col("draft_toks")(1).as("d2"),
           col("n_accepted").as("n_acc"),
@@ -2168,8 +2172,8 @@ object SparkEntry {
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
       val toks = pairInput(s, dir, m)
-      Torch.speculativeSampledPairLoop(toks, "doc_id", "d_ids", "s_ids",
-          bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256)
+      Torch.speculativeSampledLoop(toks, "doc_id", "d_ids",
+          bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256, srcCol = "s_ids")
         .select(col("doc_id"),
           col("out_toks")(0).as("f1"), col("out_toks")(1).as("f2"),
           col("n_cycles").as("n_cyc"))
@@ -2192,8 +2196,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
       val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
-      Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc, steps = 3,
-          nSink = 1, nWindow = 4, batchSize = 256)
+      Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
+          batchSize = 256, nSink = 1, nWindow = 4)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
           col("gen")(1).as("gen2"), col("gen")(2).as("gen3"))
         .orderBy("doc_id")
@@ -2278,8 +2282,8 @@ object SparkEntry {
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
       val toks = pairInput(s, dir, m)
-      Torch.speculativeSampledPairGamma(toks, "doc_id", "d_ids", "s_ids",
-          bcT, bcD, gamma = 2, batchSize = 256)
+      Torch.speculativeSampledGamma(toks, "doc_id", "d_ids",
+          bcT, bcD, gamma = 2, batchSize = 256, srcCol = "s_ids")
         .groupBy(col("n_accepted").as("n_acc"))
         .agg(count(lit(1)).cast("long").as("n_docs"))
         .select(col("n_acc"), col("n_docs"),
@@ -2385,9 +2389,9 @@ object SparkEntry {
       val bcT = s.sparkContext.broadcast(m)
       val bcD = s.sparkContext.broadcast(graft.torch.TorchQuant.quantize(m, 7))
       val toks = pairInput(s, dir, m)
-      Torch.speculativeSampledPairLoop(toks, "doc_id", "d_ids", "s_ids",
+      Torch.speculativeSampledLoop(toks, "doc_id", "d_ids",
           bcT, bcD, gamma = 2, maxNewTokens = 2, batchSize = 256,
-          nSink = 0, nWindow = 2)
+          nSink = 0, nWindow = 2, srcCol = "s_ids")
         .select(col("doc_id"),
           col("out_toks")(0).as("f1"), col("out_toks")(1).as("f2"),
           col("n_cycles").as("n_cyc"))
@@ -2528,8 +2532,8 @@ object SparkEntry {
       val vocab = m.seqHead.get.vocab
       val bc = s.sparkContext.broadcast(m)
       val toks = Tok.input(t(s, dir, "documents"), vocab, EncMaxLen)
-      Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc, steps = 3,
-          nSink = 1, nWindow = 4, batchSize = 256, relPos = true)
+      Torch.generateGreedy(toks, "tok_ids", "gen", bc, steps = 3,
+          batchSize = 256, nSink = 1, nWindow = 4, relPos = true)
         .select(col("doc_id"), col("gen")(0).as("gen1"),
           col("gen")(1).as("gen2"), col("gen")(2).as("gen3"))
         .orderBy("doc_id")
@@ -2728,7 +2732,7 @@ object SparkEntry {
     // StreamingLLM deployment shape for the draft-model-free mode).
     // Greedy-equivalence holds per visibility: emissions are the
     // WINDOWED rollout truncated (spec-pinned against
-    // generateGreedyWindowed), so the oracle nests the q282 chain
+    // generateGreedy's nWindow), so the oracle nests the q282 chain
     // under the unchanged integer lookup arms. Completes the KV row
     // of the serving matrix alongside q284 (chain), q293 (pair),
     // q299 (tree).
@@ -2918,7 +2922,7 @@ object SparkEntry {
     // and the fused value accumulates into the running joint, so the
     // corpus prior steers both ranking and which hypotheses survive.
     // lmWeight = 0 reduces bit-exactly to plain beams and width = 1
-    // emits generateGreedyFused's exact tokens (both spec-pinned);
+    // emits fused generateGreedy's exact tokens (both spec-pinned);
     // the kept-vs-dropped joint margins get the q253 gap-floor
     // treatment.
     "q264_torch_beam_fused" -> { (s, dir) =>
@@ -2985,8 +2989,8 @@ object SparkEntry {
       val m = crossGenModel
       val bc = s.sparkContext.broadcast(m)
       val toks = pairInput(s, dir, m)
-      Torch.generateSampledPair(toks, "doc_id", "d_ids", "s_ids", "gen", bc,
-          steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256)
+      Torch.generateSampled(toks, "doc_id", "d_ids", "gen", bc,
+          steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256, srcCol = "s_ids")
         .select(col("doc_id"), col("gen")(0).as("sm1"), col("gen")(1).as("sm2"))
         .orderBy("doc_id")
     },
@@ -3001,9 +3005,9 @@ object SparkEntry {
       val m = crossGenModel
       val bc = s.sparkContext.broadcast(m)
       val toks = pairInput(s, dir, m)
-      Torch.generateSampledPair(toks, "doc_id", "d_ids", "s_ids", "gen", bc,
+      Torch.generateSampled(toks, "doc_id", "d_ids", "gen", bc,
           steps = 2, temperature = 0.5, topP = 0.9, batchSize = 256,
-          topK = 3, repetitionPenalty = 1.25, noRepeatNgram = 2)
+          topK = 3, repetitionPenalty = 1.25, noRepeatNgram = 2, srcCol = "s_ids")
         .select(col("doc_id"), col("gen")(0).as("sm1"), col("gen")(1).as("sm2"))
         .orderBy("doc_id")
     },
@@ -3016,8 +3020,8 @@ object SparkEntry {
       val m = crossGenModel
       val bc = s.sparkContext.broadcast(m)
       val toks = pairInput(s, dir, m)
-      Torch.generateGreedyPair(toks, "d_ids", "s_ids", "gen", bc,
-          steps = 2, batchSize = 256, eosId = 5)
+      Torch.generateGreedy(toks, "d_ids", "gen", bc,
+          steps = 2, batchSize = 256, eosId = 5, srcCol = "s_ids")
         .select(col("doc_id"), col("gen")(0).as("gen1"),
           try_element_at(col("gen"), lit(2)).as("gen2"))
         .orderBy("doc_id")

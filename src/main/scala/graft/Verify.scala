@@ -30,9 +30,13 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    // each query's jobs carry its name as their description, and the
+    // name goes to stderr first, so a log line it causes follows it
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      System.err.println(s"[verify] $name")
+      spark.sparkContext.setJobDescription(name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -40,6 +44,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    spark.sparkContext.setJobDescription(null)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

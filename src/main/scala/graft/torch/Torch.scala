@@ -345,6 +345,52 @@ object Torch {
         }
       (drafts, n, out)
     }
+    /** The `branch × depth` draft TREE rooted at `root` (Medusa /
+      * SpecInfer): a node's children are the draft's top-`branch`
+      * tokens by (p6 DESC, tid ASC) — the q241 top-k pick — built
+      * breadth-first with one draft logit read per node on a fork
+      * (`root` itself is only read). Children index by PATH, so two
+      * same-level nodes under different parents can share a token
+      * without clobbering each other's subtrees.
+      *
+      * @return (the children arrays in BFS node order, each node's
+      *         children by path) */
+    def draftTree(root: TorchScriptModel#DecodeSession, vocab: Int, branch: Int,
+        depth: Int): (Seq[Seq[Int]], scala.collection.Map[Vector[Int], Array[Int]]) = {
+      val tree = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
+      val childrenOf = scala.collection.mutable.Map.empty[Vector[Int], Array[Int]]
+      var frontier: Seq[(TorchScriptModel#DecodeSession, Vector[Int])] =
+        Seq((root, Vector.empty))
+      while (frontier.nonEmpty) {
+        val next = scala.collection.mutable.ArrayBuffer
+          .empty[(TorchScriptModel#DecodeSession, Vector[Int])]
+        frontier.foreach { case (sess, path) =>
+          val p6 = probs6(sess.logits(), vocab)
+          val kids = (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
+          tree += kids.toSeq
+          childrenOf(path) = kids
+          if (path.length + 1 < depth) kids.foreach { c =>
+            val child = sess.fork()
+            child.append(c)
+            next += ((child, path :+ c))
+          }
+        }
+        frontier = next.toSeq
+      }
+      (tree.toSeq, childrenOf)
+    }
+    /** Medusa's typical-acceptance threshold at a prefix:
+      * `q6(min(eps, alpha·exp(−H)))` with H = −Σ p6·ln(p6) over the
+      * positive grid masses, ascending tid. */
+    def threshold6(pp: Array[Double], eps: Double, alpha: Double): Double = {
+      var h = 0.0
+      var j = 0
+      while (j < pp.length) {
+        if (pp(j) > 0.0) h -= pp(j) * StrictMath.log(pp(j))
+        j += 1
+      }
+      q6(math.min(eps, alpha * StrictMath.exp(-h)))
+    }
   }
 
   /** The prompt-lookup draft (Saxena 2023, HF `prompt_lookup_num_
@@ -466,13 +512,10 @@ object Torch {
 
   /** The KV-session decoders' model check: token ids in, a cacheable
     * session, no cross-attention. */
-  private def requireTokenDecoder(model: Broadcast[TorchScriptModel], what: String,
-      cross: Boolean = false): Unit = {
+  private def requireTokenDecoder(model: Broadcast[TorchScriptModel], what: String): Unit = {
     val m = model.value
     require(m.inDim == -1, s"$what needs a token-input model")
-    require(m.isCross == cross,
-      if (cross) s"$what needs a cross-attention model"
-      else s"$what: cross-attention model not supported")
+    require(!m.isCross, s"$what: cross-attention model not supported")
     require(m.cacheable, s"$what needs the KV-session path (cacheable model)")
   }
 
@@ -884,19 +927,14 @@ object Torch {
    * `raw / 1.0 == raw` (spec-pinned). The knobs require the KV-session
    * path (cacheable models — the serving shapes).
    *
-   * The constraint knobs (`banned`, `repetitionPenalty`,
-   * `noRepeatNgram`, `bannedPhrases`, `minNewTokens`) act on each
-   * beam's log-softmax scores ([[Beams.expand]]); the watermark
-   * (`watermarkDelta`/`watermarkGamma`) biases the raw logits before
-   * it; shallow fusion (`lmWeight`/`lmCounts`) adds the frozen bigram
-   * prior after it. Fusion and the watermark compose with each other
-   * and with eos/length penalty, not with the constraint knobs.
+   * The constraint knobs act on each beam's log-softmax scores
+   * ([[Beams.expand]]), the watermark on the raw logits before it,
+   * shallow fusion (`lmWeight`) after it; fusion and the watermark
+   * compose with each other and eos/length penalty, not with the
+   * constraint knobs.
    *
-   * @param srcCol a cross (encoder-decoder) model's source tokens — the
-   *        encoder runs once per row and beams fork the cross session;
-   *        the constraints then read the decoder-side sequence. A null
-   *        or empty source gives a null row. Null: a single-sequence
-   *        model.
+   * @param srcCol a cross model's source tokens (see
+   *        [[generateGreedy]]); beams fork the cross session
    * @return input columns + `outCol` = array<array<int>>: the kept
    *         beams' generated tokens in rank order (a completed beam's
    *         array ends at its eos; null input → null)
@@ -1253,7 +1291,7 @@ object Torch {
       val m = model.value
       val vocab = m.outDim
       val lm = if (bcLm == null) null else bcLm.value
-      // generateGreedyFused's exact f64 prior term (0-guarded)
+      // generateGreedy's exact f64 fused prior term (0-guarded)
       def fused(prev: Int, tok: Int): Double =
         lmWeight * StrictMath.log(
           (lm._1(prev)(tok) + 1L).toDouble /
@@ -1663,301 +1701,6 @@ object Torch {
   }
 
   /**
-   * STOCHASTIC speculative sampling for CROSS (encoder-decoder)
-   * models — [[speculativeSampled]]'s distribution-preserving rule
-   * with both sessions opened against the row's fixed source
-   * encoding (q212 is the greedy/argmax cross cell; this is the
-   * sampled one): the int8 draft SAMPLES `x ~ q(· | dec, src)`, the
-   * target accepts with probability `min(1, p(x)/q(x))`, a rejection
-   * resamples from the normalized residual. Identical salts
-   * (`d1`/`a1`/`r1`), identical 6dp quantization discipline,
-   * identical pick walk — only the forward is cross-attentive (the
-   * encoder leg runs once per session, cross k/v project once).
-   *
-   * @return input columns + `draft_tok` int, `accepted` boolean,
-   *         `final_tok` int (null/empty decoder prompt, source, or
-   *         id → all null)
-   */
-  def speculativeSampledPair(
-      df: DataFrame,
-      idCol: String,
-      decCol: String,
-      encCol: String,
-      target: Broadcast[TorchScriptModel],
-      draft: Broadcast[TorchScriptModel],
-      batchSize: Int = -1): DataFrame = {
-    requireTokenDecoder(target, "speculativeSampledPair", cross = true)
-    requireTokenDecoder(draft, "speculativeSampledPair", cross = true)
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
-    val dIdx = df.schema.fieldIndex(decCol)
-    val eIdx = df.schema.fieldIndex(encCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    Kernel(df, SpecOut, ints = Seq(decCol, encCol), batchSize = batchSize) { () =>
-      val tm = target.value
-      val dm = draft.value
-      val vocab = tm.outDim
-      def q6(x: Double): Double = Spec.q6(x)
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      rows =>
-        rows.iterator.map { r =>
-          val p = Kernel.nonEmptyInts(r, dIdx)
-          val src = Kernel.nonEmptyInts(r, eIdx)
-          if (p == null || src == null || r.isNullAt(idIdx))
-            null
-          else {
-            val id = r.getAs[Number](idIdx).longValue()
-            val qp = probs6(dm.decodeSession(p, src).logits())
-            val pp = probs6(tm.decodeSession(p, src).logits())
-            val dx = pick(qp, draw(id, "d1"))
-            val r6 = q6(math.min(1.0, pp(dx) / qp(dx)))
-            val accepted = draw(id, "a1") < r6
-            val fx =
-              if (accepted) dx
-              else {
-                val resid = Array.tabulate(vocab)(j =>
-                  math.max(0.0, pp(j) - qp(j)))
-                if (resid.forall(_ == 0.0)) dx
-                else pick(resid, draw(id, "r1"))
-              }
-            (dx, accepted, fx)
-          }
-        }
-    }
-  }
-
-  /**
-   * MULTI-TOKEN stochastic speculative sampling for CROSS models —
-   * [[speculativeSampledGamma]]'s prefix-acceptance cycle with both
-   * sessions opened against the row's fixed source encoding
-   * ([[speculativeSampledPair]] is its gamma = 1 head; same
-   * position-indexed salts, so gamma = 1 replays it bit-exactly —
-   * spec-pinned). The draft autoregressively samples gamma decoder
-   * tokens, the target verifies all gamma + 1 prefix positions
-   * through one cross KV session (encoder leg runs once), and the
-   * Leviathan/Chen rule emits accepted run + residual correction or
-   * the all-accepted bonus.
-   *
-   * @return input columns + `draft_toks` array<int>, `n_accepted`
-   *         int, `out_toks` array<int> (length n_accepted + 1);
-   *         null/empty decoder prompt, source, or id → all null
-   */
-  def speculativeSampledPairGamma(
-      df: DataFrame,
-      idCol: String,
-      decCol: String,
-      encCol: String,
-      target: Broadcast[TorchScriptModel],
-      draft: Broadcast[TorchScriptModel],
-      gamma: Int,
-      batchSize: Int = -1): DataFrame = {
-    require(gamma >= 1, "gamma must be >= 1")
-    requireTokenDecoder(target, "speculativeSampledPairGamma", cross = true)
-    requireTokenDecoder(draft, "speculativeSampledPairGamma", cross = true)
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
-    val dIdx = df.schema.fieldIndex(decCol)
-    val eIdx = df.schema.fieldIndex(encCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    Kernel(df, GammaOut, ints = Seq(decCol, encCol), batchSize = batchSize) { () =>
-      val tm = target.value
-      val dm = draft.value
-      val vocab = tm.outDim
-      def q6(x: Double): Double = Spec.q6(x)
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      rows =>
-        rows.iterator.map { r =>
-          val p = Kernel.nonEmptyInts(r, dIdx)
-          val src = Kernel.nonEmptyInts(r, eIdx)
-          if (p == null || src == null || r.isNullAt(idIdx))
-            null
-          else {
-            val id = r.getAs[Number](idIdx).longValue()
-            val sd = dm.decodeSession(p, src)
-            val st = tm.decodeSession(p, src)
-            val drafts = new Array[Int](gamma)
-            val qm = new Array[Array[Double]](gamma)
-            var i = 0
-            while (i < gamma) {
-              qm(i) = probs6(sd.logits())
-              drafts(i) = pick(qm(i), draw(id, s"d${i + 1}"))
-              sd.append(drafts(i))
-              i += 1
-            }
-            val pm = new Array[Array[Double]](gamma + 1)
-            pm(0) = probs6(st.logits())
-            i = 0
-            while (i < gamma) {
-              st.append(drafts(i))
-              pm(i + 1) = probs6(st.logits())
-              i += 1
-            }
-            var n = 0
-            var rejectedAt = -1
-            while (n < gamma && rejectedAt < 0) {
-              val x = drafts(n)
-              val r6 = q6(math.min(1.0, pm(n)(x) / qm(n)(x)))
-              if (draw(id, s"a${n + 1}") < r6) n += 1
-              else rejectedAt = n
-            }
-            val out: Seq[Int] =
-              if (rejectedAt < 0)
-                drafts.toSeq :+ pick(pm(gamma), draw(id, "b1"))
-              else {
-                val k = rejectedAt
-                val resid = Array.tabulate(vocab)(j =>
-                  math.max(0.0, pm(k)(j) - qm(k)(j)))
-                val corr =
-                  if (resid.forall(_ == 0.0)) drafts(k)
-                  else pick(resid, draw(id, s"r${k + 1}"))
-                drafts.take(k).toSeq :+ corr
-              }
-            (drafts.toSeq, n, out)
-          }
-        }
-    }
-  }
-
-  /**
-   * The CROSS-PAIR speculative SERVING LOOP —
-   * [[speculativeSampledPairGamma]] cycled until `maxNewTokens`
-   * decoder tokens are emitted (then truncated), closing the pair
-   * side of the serving matrix the single-stream side has had since
-   * [[speculativeSampledLoop]] (q254): each cycle drafts gamma
-   * decoder tokens against the row's FIXED source encoding, verifies
-   * them through the target's cross KV session, emits accepted run +
-   * correction-or-bonus, and rolls both sessions forward by the
-   * emitted tokens only. Rollback is the fork discipline verbatim —
-   * verification runs on forks, the accepted-prefix sessions are
-   * fresh forks + emitted appends (O(L) pointer copy; the
-   * once-computed encoder k/v projections are SHARED by every fork,
-   * so no cycle ever re-encodes the source). Draw discipline: global
-   * position-indexed salts (`d/a/r<(c−1)·gamma+i>`, bonus `b<c>`), so
-   * cycle 1 replays [[speculativeSampledPairGamma]] bit-exactly
-   * (spec-pinned), and cycles run to completion (cycle-level
-   * `n_acc_total`, the [[speculativeSampledLoop]] convention).
-   *
-   * @return input columns + `out_toks` array<int> (exactly
-   *         maxNewTokens tokens), `n_cycles` int, `n_acc_total` int;
-   *         null/empty decoder prompt, source, or id → all null
-   */
-  def speculativeSampledPairLoop(
-      df: DataFrame,
-      idCol: String,
-      decCol: String,
-      encCol: String,
-      target: Broadcast[TorchScriptModel],
-      draft: Broadcast[TorchScriptModel],
-      gamma: Int,
-      maxNewTokens: Int,
-      batchSize: Int = -1,
-      nSink: Int = -1,
-      nWindow: Int = -1): DataFrame = {
-    require(gamma >= 1, "gamma must be >= 1")
-    require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-    // BOUNDED-KV pair serving (q293): the decoder-side causal caches
-    // of BOTH models evict to nSink sinks + an nWindow window
-    // (decodeSessionWindowed's cross leg — the once-computed encoder
-    // k/v are immutable and never evict); forks inherit the knobs.
-    // nWindow <= 0 keeps the unbounded sessions (identical
-    // arithmetic; spec-pinned).
-    val windowed = nWindow > 0
-    require(!windowed || nSink >= 0,
-      "a bounded-KV loop needs nSink >= 0 alongside nWindow >= 1")
-    requireTokenDecoder(target, "speculativeSampledPairLoop", cross = true)
-    requireTokenDecoder(draft, "speculativeSampledPairLoop", cross = true)
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
-    val dIdx = df.schema.fieldIndex(decCol)
-    val eIdx = df.schema.fieldIndex(encCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    Kernel(df, LoopOut, ints = Seq(decCol, encCol), batchSize = batchSize) { () =>
-      val tm = target.value
-      val dm = draft.value
-      val vocab = tm.outDim
-      def q6(x: Double): Double = Spec.q6(x)
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      rows =>
-        rows.iterator.map { r =>
-          val p = Kernel.nonEmptyInts(r, dIdx)
-          val src = Kernel.nonEmptyInts(r, eIdx)
-          if (p == null || src == null || r.isNullAt(idIdx))
-            null
-          else {
-            val id = r.getAs[Number](idIdx).longValue()
-            // target/draft @ accepted prefix (decoder caches bounded
-            // when the loop runs at a KV budget)
-            var st0 = if (windowed)
-                tm.decodeSessionWindowed(p, nSink, nWindow, src)
-              else tm.decodeSession(p, src)
-            var sd0 = if (windowed)
-                dm.decodeSessionWindowed(p, nSink, nWindow, src)
-              else dm.decodeSession(p, src)
-            val emitted = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var cycles = 0
-            var accTotal = 0
-            while (emitted.length < maxNewTokens) {
-              cycles += 1
-              val base = (cycles - 1) * gamma
-              val sdV = sd0.fork()
-              val drafts = new Array[Int](gamma)
-              val qm = new Array[Array[Double]](gamma)
-              var i = 0
-              while (i < gamma) {
-                qm(i) = probs6(sdV.logits())
-                drafts(i) = pick(qm(i), draw(id, s"d${base + i + 1}"))
-                sdV.append(drafts(i))
-                i += 1
-              }
-              val stV = st0.fork()
-              val pm = new Array[Array[Double]](gamma + 1)
-              pm(0) = probs6(stV.logits())
-              i = 0
-              while (i < gamma) {
-                stV.append(drafts(i))
-                pm(i + 1) = probs6(stV.logits())
-                i += 1
-              }
-              var n = 0
-              var rejectedAt = -1
-              while (n < gamma && rejectedAt < 0) {
-                val x = drafts(n)
-                val r6 = q6(math.min(1.0, pm(n)(x) / qm(n)(x)))
-                if (draw(id, s"a${base + n + 1}") < r6) n += 1
-                else rejectedAt = n
-              }
-              accTotal += n
-              val cycleOut: Seq[Int] =
-                if (rejectedAt < 0)
-                  drafts.toSeq :+ pick(pm(gamma), draw(id, s"b$cycles"))
-                else {
-                  val k = rejectedAt
-                  val resid = Array.tabulate(vocab)(j =>
-                    math.max(0.0, pm(k)(j) - qm(k)(j)))
-                  val corr =
-                    if (resid.forall(_ == 0.0)) drafts(k)
-                    else pick(resid, draw(id, s"r${base + k + 1}"))
-                  drafts.take(k).toSeq :+ corr
-                }
-              emitted ++= cycleOut
-              if (emitted.length < maxNewTokens) {
-                val st1 = st0.fork(); cycleOut.foreach(st1.append); st0 = st1
-                val sd1 = sd0.fork(); cycleOut.foreach(sd1.append); sd0 = sd1
-              }
-            }
-            (emitted.take(maxNewTokens).toSeq, cycles, accTotal)
-          }
-        }
-    }
-  }
-
-  /**
    * CONTRASTIVE DECODING (Li et al. 2023 — distinct from contrastive
    * SEARCH): each step picks, among the EXPERT's plausible candidates
    * (`p_e(j) >= alpha · max p_e` — the adaptive plausibility head),
@@ -2286,94 +2029,6 @@ object Torch {
   }
 
   /**
-   * SHALLOW FUSION greedy decoding (Gulcehre et al. 2015 — the
-   * external-LM biasing an ASR/MT/domain-adaptation stack applies at
-   * decode time): each step picks
-   * `argmax_j logits(j) + lambda · ln p_LM(j | prev)` where `p_LM`
-   * is a FROZEN add-one-smoothed token-bigram LM —
-   * `(counts(prev)(j) + 1) / (rowSum(prev) + vocab)` — derived from
-   * the ingest corpus (the frozen-ingest-artifact convention: the
-   * count table is a bounded vocab² integer artifact, broadcast-
-   * trivial). The model stays untouched; only the decode objective
-   * gains the corpus prior.
-   *
-   * Cross-engine determinism: counts are exact integers on both
-   * sides; the fused term is `dyadic lambda × ln(rational)` — ln is
-   * correctly-rounded libm on both engines, and the pick's runner-up
-   * gap is spec-pinned orders above any last-ulp disagreement (the
-   * q96 gap-floor discipline). `lambda = 0` takes the guarded branch
-   * and reduces BIT-EXACTLY to [[generateGreedy]].
-   *
-   * @param lmCounts vocab×vocab bigram counts (row = previous token)
-   * @return input columns + `outCol` = array<int> generated tokens
-   */
-  def generateGreedyFused(
-      df: DataFrame,
-      inputCol: String,
-      outCol: String,
-      model: Broadcast[TorchScriptModel],
-      steps: Int,
-      lmWeight: Double,
-      lmCounts: Array[Array[Long]],
-      batchSize: Int = -1): DataFrame = {
-    require(steps >= 1, "steps must be >= 1")
-    require(lmWeight >= 0.0, "lmWeight must be >= 0")
-    val spark = df.sparkSession
-    requireTokenDecoder(model, "generateGreedyFused")
-    val vocabN = model.value.outDim
-    require(lmCounts.length == vocabN && lmCounts.forall(_.length == vocabN),
-      "lmCounts must be vocab x vocab")
-    // the frozen-ingest broadcast convention: the vocab² count matrix
-    // (and its row sums) cross the wire once per executor, never per
-    // task — a real LM vocabulary makes the closure-capture footprint
-    // material even though the fixture vocab is 8
-    val bcLm: Broadcast[(Array[Array[Long]], Array[Long])] =
-      spark.sparkContext.broadcast((lmCounts, lmCounts.map(_.sum)))
-    val inIdx = df.schema.fieldIndex(inputCol)
-    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
-      val m = model.value
-      val vocab = m.outDim
-      val (cnts, rsums) = bcLm.value
-      def argmaxFused(out: Array[Float], prev: Int): Int = {
-        var best = -1
-        var bv = Double.NaN
-        var j = 0
-        while (j < vocab) {
-          val x0 = out(j).toDouble
-          val x =
-            if (lmWeight == 0.0) x0 // guarded: bit-exact generateGreedy
-            else x0 + lmWeight * StrictMath.log(
-              (cnts(prev)(j) + 1L).toDouble /
-                (rsums(prev) + vocab.toLong).toDouble)
-          if (!x.isNaN && (best < 0 || x > bv)) { best = j; bv = x }
-          j += 1
-        }
-        require(best >= 0, "all-NaN logits")
-        best
-      }
-      rows =>
-        rows.iterator.map { r =>
-          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
-          if (p == null) null
-          else {
-            val sess = m.decodeSession(p)
-            var prev = p.last
-            val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var t = 0
-            while (t < steps) {
-              val tid = argmaxFused(sess.logits(), prev)
-              gen += tid
-              sess.append(tid)
-              prev = tid
-              t += 1
-            }
-            gen.toSeq
-          }
-        }
-    }
-  }
-
-  /**
    * CONTRASTIVE SEARCH (Su et al. 2022 "A Contrastive Framework for
    * Neural Text Generation" — HF `penalty_alpha` + `top_k`): at each
    * step the top-k most probable candidates re-rank by
@@ -2472,279 +2127,6 @@ object Torch {
               gen += tok
               sess = child // the winner's forward is never recomputed
               hiddens += hv
-              t += 1
-            }
-            gen.toSeq
-          }
-        }
-    }
-  }
-
-  /**
-   * ENCODER-DECODER greedy generation (the T5/BART decode loop):
-   * `keyCol` is the fixed source-side sequence, `queryCol` the decoder
-   * prompt; each of the `steps` rounds appends the argmax next token
-   * (first max wins, NaN never wins — the repo rule). Scale shape:
-   * per-row incremental [[TorchScriptModel.DecodeSession]]s inside ONE
-   * `mapPartitions` — the encoder leg and the cross k/v projections
-   * run ONCE per row at session open, causal self-attention reads its
-   * per-position cache, so step t costs O(L·d + Lk·d), not a full
-   * O(L²) re-encode+recompute; logits are bit-identical to the
-   * recompute path (spec-pinned).
-   *
-   * @return input columns + `outCol` = array<int> generated tokens
-   *         (null/empty either side → null)
-   */
-  def generateGreedyPair(
-      df: DataFrame,
-      queryCol: String,
-      keyCol: String,
-      outCol: String,
-      model: Broadcast[TorchScriptModel],
-      steps: Int,
-      batchSize: Int = -1,
-      eosId: Int = -1,
-      minNewTokens: Int = 0): DataFrame = {
-    require(steps >= 1, "steps must be >= 1")
-    requireTokenDecoder(model, "generateGreedyPair", cross = true)
-    require(eosId < model.value.outDim, "eosId exceeds the vocabulary")
-    require(minNewTokens >= 0, "minNewTokens must be >= 0")
-    require(minNewTokens == 0 || eosId >= 0,
-      "minNewTokens needs an eosId to suppress")
-    val qIdx = df.schema.fieldIndex(queryCol)
-    val kIdx = df.schema.fieldIndex(keyCol)
-    Kernel(df, fields(outCol -> Ints), ints = Seq(queryCol, keyCol), batchSize = batchSize) { () =>
-      val m = model.value
-      val vocab = m.outDim
-      rows =>
-        rows.iterator.map { r =>
-          val q0 = Kernel.nonEmptyInts(r, qIdx)
-          val k0 = Kernel.nonEmptyInts(r, kIdx)
-          if (q0 == null || k0 == null) null
-          else {
-            val sess = m.decodeSession(q0, k0)
-            val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var t = 0
-            var stopped = false
-            while (t < steps && !stopped) {
-              // while fewer than minNewTokens tokens are generated, eos
-              // is never a candidate (minNewTokens = 0: no mask at all)
-              val tid = argmaxFirst(sess.logits(), vocab, allowed =
-                if (eosId >= 0 && gen.length < minNewTokens) (_ != eosId) else null)
-              gen += tid
-              // eos stops the row (the eos itself is emitted; no
-              // further session work — the serving early-exit)
-              if (tid == eosId) stopped = true else sess.append(tid)
-              t += 1
-            }
-            gen.toSeq
-          }
-        }
-    }
-  }
-
-  /**
-   * ENCODER-DECODER beam search — [[beamSearch]]'s candidate algebra
-   * (f64 log-softmax joint scores; total order joint DESC, parent
-   * rank ASC, token ASC) over [[generateGreedyPair]]'s cross-aware KV
-   * sessions: the encoder runs once per row, beams FORK their parent
-   * session in O(L) pointer copies. The T5 inference default.
-   *
-   * @return input columns + `outCol` = array<array<int>>: kept beams'
-   *         generated tokens in rank order (null/empty input → null)
-   */
-  def beamSearchPair(
-      df: DataFrame,
-      queryCol: String,
-      keyCol: String,
-      outCol: String,
-      model: Broadcast[TorchScriptModel],
-      steps: Int,
-      width: Int,
-      batchSize: Int = -1,
-      lengthPenalty: Double = 0.0,
-      eosId: Int = -1,
-      banned: Set[Int] = Set.empty,
-      repetitionPenalty: Double = 1.0,
-      noRepeatNgram: Int = 0,
-      bannedPhrases: Seq[Seq[Int]] = Nil,
-      minNewTokens: Int = 0): DataFrame = {
-    require(steps >= 1 && width >= 1, "steps and width must be >= 1")
-    requireTokenDecoder(model, "beamSearchPair", cross = true)
-    require(width <= model.value.outDim, "width exceeds the vocabulary")
-    require(lengthPenalty >= 0.0, "lengthPenalty must be >= 0")
-    require(eosId < model.value.outDim, "eosId exceeds the vocabulary")
-    require(banned.size < model.value.outDim,
-      "banned set covers the whole vocabulary")
-    require(repetitionPenalty > 0.0, "repetitionPenalty must be > 0")
-    require(noRepeatNgram == 0 || noRepeatNgram >= 2,
-      "noRepeatNgram must be 0 (off) or >= 2")
-    require(bannedPhrases.forall(_.nonEmpty), "empty banned phrase")
-    require(minNewTokens >= 0, "minNewTokens must be >= 0")
-    require(minNewTokens == 0 || eosId >= 0,
-      "minNewTokens needs an eosId to suppress")
-    val plainKnobs = banned.isEmpty && repetitionPenalty == 1.0 &&
-      noRepeatNgram == 0 && bannedPhrases.isEmpty && minNewTokens == 0
-    val qIdx = df.schema.fieldIndex(queryCol)
-    val kIdx = df.schema.fieldIndex(keyCol)
-    Kernel(df, fields(outCol -> ArrayType(Ints)),
-        ints = Seq(queryCol, keyCol), batchSize = batchSize) { () =>
-      val m = model.value
-      val vocab = m.outDim
-      def logProbs(out: Array[Float]): Array[Double] = {
-        var mx = Double.NegativeInfinity
-        var j = 0
-        while (j < vocab) {
-          val v = out(j).toDouble
-          if (v > mx) mx = v
-          j += 1
-        }
-        var z = 0.0
-        j = 0
-        while (j < vocab) { z += math.exp(out(j).toDouble - mx); j += 1 }
-        val lse = math.log(z) + mx
-        Array.tabulate(vocab)(k => out(k).toDouble - lse)
-      }
-      rows =>
-        rows.iterator.map { r =>
-          val q0 = Kernel.nonEmptyInts(r, qIdx)
-          val k0 = Kernel.nonEmptyInts(r, kIdx)
-          if (q0 == null || k0 == null) null
-          else {
-            // (generated, RAW joint log-prob, session, done) — the
-            // beamSearch variable-length rules over cross sessions
-            var beams: Seq[(Vector[Int], Double, m.DecodeSession, Boolean)] =
-              Seq((Vector.empty[Int], 0.0, m.decodeSession(q0, k0), false))
-            var t = 0
-            while (t < steps && beams.exists(!_._4)) {
-              val cands = beams.zipWithIndex.flatMap {
-                case ((g, s0, sess, true), bi) =>
-                  Seq((s0 / StrictMath.pow(g.length.toDouble, lengthPenalty),
-                    bi, -1, s0, (g, s0, sess, true)))
-                case ((g, s0, sess, false), bi) =>
-                  val lp = logProbs(sess.logits())
-                  val pen =
-                    StrictMath.pow((g.length + 1).toDouble, lengthPenalty)
-                  if (plainKnobs)
-                    (0 until vocab).map { tok =>
-                      val raw = s0 + lp(tok)
-                      (raw / pen, bi, tok, raw, (g, s0, sess, false))
-                    }
-                  else {
-                    // constraints run over the DECODER-side sequence
-                    // (prompt + generated) — the generateSampledPair
-                    // convention; the encoder side never bans
-                    val full = scala.collection.immutable.ArraySeq
-                      .unsafeWrapArray(q0) ++ g
-                    Beams.expand(lp, full, g.length, s0, pen, bi,
-                      (g, s0, sess, false), banned, repetitionPenalty,
-                      noRepeatNgram, bannedPhrases, eosId, minNewTokens)
-                  }
-              }
-              require(cands.nonEmpty,
-                "no decodable candidate: hard bans emptied every live " +
-                  "beam's vocabulary")
-              beams = cands.sortBy { case (n, bi, tok, _, _) => (-n, bi, tok) }
-                .take(width)
-                .map {
-                  case (_, _, -1, _, b) => b
-                  case (_, _, tok, raw, (g, _, sess, _)) =>
-                    if (tok == eosId) (g :+ tok, raw, sess, true)
-                    else {
-                      val child = sess.fork()
-                      child.append(tok)
-                      (g :+ tok, raw, child, false)
-                    }
-                }
-              t += 1
-            }
-            beams.map(_._1.toSeq)
-          }
-        }
-    }
-  }
-
-  /**
-   * SAMPLED encoder-decoder decoding — [[generateGreedyPair]]'s
-   * cross-aware KV sessions with [[generateSampled]]'s deterministic
-   * temperature + top-p kernel (seeded md5 draws, 6-dp quantized
-   * cutoffs — the identical `Sampling` code path, so the two compose
-   * with no new numerics).
-   */
-  /** Knob parity with [[generateSampled]]: the static banned set,
-    * top-k, the CTRL repetition penalty + no-repeat-n-gram (over the
-    * DECODER-side sequence — the generated text), and min-p all
-    * compose through the same [[Sampling]] kernel; neutral values
-    * reduce bit-exactly (spec-pinned via the single-stream specs —
-    * one shared code path). */
-  def generateSampledPair(
-      df: DataFrame,
-      idCol: String,
-      queryCol: String,
-      keyCol: String,
-      outCol: String,
-      model: Broadcast[TorchScriptModel],
-      steps: Int,
-      temperature: Double,
-      topP: Double,
-      batchSize: Int = -1,
-      banned: Set[Int] = Set.empty,
-      topK: Int = Int.MaxValue,
-      repetitionPenalty: Double = 1.0,
-      noRepeatNgram: Int = 0,
-      minP: Double = 0.0): DataFrame = {
-    require(steps >= 1, "steps must be >= 1")
-    require(temperature > 0.0, "temperature must be > 0")
-    require(topP > 0.0 && topP <= 1.0, "topP must be in (0, 1]")
-    require(banned.size < model.value.outDim,
-      "banned set covers the whole vocabulary")
-    require(topK >= 1, "topK must be >= 1")
-    require(repetitionPenalty > 0.0, "repetitionPenalty must be > 0")
-    require(noRepeatNgram == 0 || noRepeatNgram >= 2,
-      "noRepeatNgram must be 0 (off) or >= 2")
-    require(minP >= 0.0 && minP <= 1.0, "minP must be in [0, 1]")
-    requireTokenDecoder(model, "generateSampledPair", cross = true)
-    val qIdx = df.schema.fieldIndex(queryCol)
-    val kIdx = df.schema.fieldIndex(keyCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    Kernel(df, fields(outCol -> Ints), ints = Seq(queryCol, keyCol), batchSize = batchSize) { () =>
-      val m = model.value
-      val vocab = m.outDim
-      rows =>
-        rows.iterator.map { r =>
-          val q0 = Kernel.nonEmptyInts(r, qIdx)
-          val k0 = Kernel.nonEmptyInts(r, kIdx)
-          if (q0 == null || k0 == null || r.isNullAt(idIdx))
-            null
-          else {
-            val id = r.getAs[Number](idIdx).longValue()
-            val sess = m.decodeSession(q0, k0)
-            val full = scala.collection.mutable.ArrayBuffer.from(q0)
-            val gen = new Array[Int](steps)
-            var t = 1
-            while (t <= steps) {
-              val stepBanned: Set[Int] =
-                if (noRepeatNgram < 2 || full.length < noRepeatNgram - 1)
-                  banned
-                else {
-                  val n1 = noRepeatNgram - 1
-                  val suffix = full.takeRight(n1)
-                  val ng = (0 to full.length - noRepeatNgram).iterator.collect {
-                    case i if (0 until n1).forall(k => full(i + k) == suffix(k)) =>
-                      full(i + n1)
-                  }.toSet
-                  if ((0 until vocab).exists(j => !banned.contains(j) && !ng(j)))
-                    banned ++ ng
-                  else banned
-                }
-              val seen: Set[Int] =
-                if (repetitionPenalty != 1.0) full.toSet else Set.empty
-              val tid = Sampling.sampleNext(sess.logits(), 0, vocab,
-                temperature, topP, Sampling.draw(id, t),
-                stepBanned, topK, seen, repetitionPenalty, minP)
-              gen(t - 1) = tid
-              sess.append(tid)
-              full += tid
               t += 1
             }
             gen.toSeq
@@ -3058,73 +2440,6 @@ object Torch {
   }
 
   /**
-   * Greedy decoding over a BOUNDED-KV session
-   * ([[TorchScriptModel.decodeSessionWindowed]] — the StreamingLLM
-   * serving shape, VERDICT r18 item 5): every causal attention cache
-   * keeps `nSink` attention-sink positions + a sliding window of the
-   * last `nWindow`, so a serving loop's per-session state is
-   * O(nSink + nWindow) instead of O(L) — the eviction knob the
-   * q254/q266/q272/q275 loops lacked. The decode itself is the plain
-   * [[generateGreedy]] chain (first-max-wins argmax, NaN never wins);
-   * only the attention visibility changes: query position P attends
-   * over {0..nSink−1} ∪ {P−nWindow+1..P} at ABSOLUTE positions, so a
-   * batch windowed recompute restates each step exactly (the oracle's
-   * form) and `nWindow >=` the final sequence length reduces
-   * BIT-EXACTLY to [[generateGreedy]] (spec-pinned — the session walks
-   * identical cache rows in identical order when nothing evicts).
-   *
-   * Scale shape: one bounded session per row inside ONE
-   * `mapPartitions` — the per-step cost drops from O(L·d) to
-   * O((nSink + nWindow)·d), the point of the knob at serving scale.
-   *
-   * @return input columns + `outCol` = array<int> of `steps` tokens
-   */
-  /** `relPos = true` switches the bounded sessions to StreamingLLM's
-    * re-rotation dial ([[TorchScriptModel.decodeSessionRelPos]]):
-    * bias tables read at cache-slot indices, which LIFTS the model's
-    * absolute-position length limit — prompts + generations may run
-    * past `biasRows` with a fixed-size table. Scope-checked at
-    * session open (bias-only position info: no PosEmbedOp, no RoPE). */
-  def generateGreedyWindowed(
-      df: DataFrame,
-      inputCol: String,
-      outCol: String,
-      model: Broadcast[TorchScriptModel],
-      steps: Int,
-      nSink: Int,
-      nWindow: Int,
-      batchSize: Int = -1,
-      relPos: Boolean = false): DataFrame = {
-    require(steps >= 1, "steps must be >= 1")
-    require(nSink >= 0, "nSink must be >= 0")
-    require(nWindow >= 1, "nWindow must be >= 1")
-    requireTokenDecoder(model, "generateGreedyWindowed")
-    val inIdx = df.schema.fieldIndex(inputCol)
-    Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
-      val m = model.value
-      val vocab = m.outDim
-      rows =>
-        rows.iterator.map { r =>
-          val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
-          if (p == null) null
-          else {
-            val sess = if (relPos) m.decodeSessionRelPos(p, nSink, nWindow)
-                       else m.decodeSessionWindowed(p, nSink, nWindow)
-            val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var t = 0
-            while (t < steps) {
-              val tok = argmaxFirst(sess.logits(), vocab)
-              gen += tok
-              sess.append(tok)
-              t += 1
-            }
-            gen.toSeq
-          }
-        }
-    }
-  }
-
-  /**
    * AUTO-WINDOW from divergence telemetry — the KV-budget edition of
    * the auto-gamma / auto-nprobe telemetry → knob closures: given a
    * ladder of candidate `windows`, greedy-decode every row ONCE per
@@ -3174,6 +2489,7 @@ object Torch {
       StructField("nwindow", IntegerType, nullable = false),
       StructField("diff", IntegerType, nullable = false)))
     val maxW = windows.max
+    val rungs = windows.map(w => w -> Kv(-1, nSink, w, relPos = false))
     val pairs = withInts.mapPartitions { it =>
       val m = model.value
       val vocab = m.outDim
@@ -3194,8 +2510,8 @@ object Torch {
           if (p == null) Iterator.empty
           else {
             val base = gens(m.decodeSession(p))
-            windows.iterator.map { w =>
-              val g = gens(m.decodeSessionWindowed(p, nSink, w))
+            rungs.iterator.map { case (w, kv) =>
+              val g = gens(openSession(m, kv, p, null))
               Row(w, if (java.util.Arrays.equals(g, base)) 0 else 1)
             }
           }
@@ -3224,71 +2540,47 @@ object Torch {
 
   /**
    * Greedy autoregressive decoding — `steps` rounds of (forward pass
-   * → argmax over the vocab logits → append). The model must be a
-   * token-input net whose output width IS the vocab (a causal decoder
-   * with an LM head); its position table must cover the grown length
-   * (input cap + steps) — the interpreter fails loudly past it, never
-   * wraps. Argmax is the repo rule: FIRST max wins, NaN never wins —
-   * exactly [[graft.functions.ArgMax]] and the oracle's CASE chain.
+   * → argmax over the vocab logits → append) over a token-input net
+   * whose output width IS the vocab (a causal LM head); its position
+   * table must cover the grown length — the interpreter fails loudly
+   * past it, never wraps. Argmax is the repo rule: FIRST max wins,
+   * NaN never wins ([[graft.functions.ArgMax]], the oracle's CASE
+   * chain). The k-step loop runs INSIDE one `mapPartitions` — one
+   * job, no per-step plan growth. A cacheable model decodes through
+   * per-row KV sessions (logits bit-identical to the recompute path,
+   * spec-pinned); any other re-runs the full prefix per step.
    *
-   * Shape at scale: the k-step loop runs INSIDE one `mapPartitions`
-   * over GEMM batches — one job, no per-step plan growth, no driver
-   * round trips. A cacheable model decodes through per-row KV
-   * sessions (each step O(L·d), logits bit-identical to the
-   * recompute path — spec-pinned); any other model re-runs the full
-   * prefix per step (the O(L²) form).
-   *
-   * Anti-degeneration controls (Keskar et al. 2019's CTRL penalty;
-   * Paulus et al. 2017's no-repeat n-grams — the standard
-   * `repetition_penalty` / `no_repeat_ngram_size` knobs):
-   *  - `repetitionPenalty` rescales the logit of every token already
-   *    PRESENT in the sequence (prompt + generated) before the argmax:
-   *    `x > 0 → x/penalty, else x·penalty`, in f64 from the f32 logit;
-   *  - `noRepeatNgram = n` bans any candidate that would complete an
-   *    n-gram already present in the sequence; if the ban would empty
-   *    the allowed vocabulary it LIFTS for that step (a fail-loud there
-   *    would let one pathological doc kill a pipeline).
-   *
-   * `eosId >= 0` adds EARLY STOPPING: a row that emits eos stops (the
-   * eos itself is emitted; the array is shorter than `steps`).
-   * `dfaTrans` adds GRAMMAR-CONSTRAINED decoding: a `(nStates, vocab)`
-   * table whose entry `(s, t)` is the next state or −1 = forbidden;
-   * rows start in state 0 and forbidden tokens never become
-   * candidates (a HARD constraint, checked up front so every state
-   * keeps a token). `bannedPhrases` are multi-token bad-words
-   * sequences (HF `bad_words_ids`): a candidate that would COMPLETE
-   * one against the current suffix is hard-banned. `minNewTokens`
-   * (HF `min_new_tokens`) hard-bans eos until that many tokens are
-   * generated. `forcedTokens` (HF `forced_decoder_ids`) emits a fixed
-   * token at a step; `beginSuppress` bans tokens at the first step.
-   * The soft watermark (`watermarkDelta`/`watermarkGamma`, Kirchenbauer
-   * et al. 2023) adds +delta to the green logits keyed on the last
-   * token. Every knob defaults off; the default path is the plain
-   * first-max argmax.
+   * Knobs, each off by default (the default path is the plain
+   * argmax): `repetitionPenalty` (CTRL: seen logits `x > 0 → x/p else
+   * x·p` in f64); `noRepeatNgram` (bans n-gram completions, LIFTING
+   * the ban when it would empty the vocabulary); `eosId` (early stop,
+   * the eos emitted); `dfaTrans` (a `(nStates, vocab)` grammar, −1 =
+   * forbidden, a HARD constraint validated up front); `bannedPhrases`
+   * (HF `bad_words_ids`, hard); `minNewTokens` (no eos before that
+   * many tokens); `forcedTokens` (a token emitted at a step);
+   * `beginSuppress` (banned at step 0); the soft watermark
+   * (`watermarkDelta`/`watermarkGamma`, Kirchenbauer et al. 2023:
+   * +delta on the green logits keyed on the last token).
    *
    * SHALLOW FUSION (Gulcehre et al. 2015): `lmWeight > 0` picks
-   * `argmax_j logits(j) + lmWeight · ln p_LM(j | prev)` with `p_LM`
-   * the FROZEN add-one bigram LM `(lmCounts(prev)(j) + 1) /
-   * (rowSum(prev) + vocab)` (a vocab² count artifact from the ingest
-   * corpus, broadcast once). As in [[beamSearch]], fusion needs the
-   * KV path and composes with the watermark and eos, not with the
-   * constraint knobs; `lmWeight = 0` is the plain path, bit for bit.
+   * `argmax_j logits(j) + lmWeight · ln((lmCounts(prev)(j) + 1) /
+   * (rowSum(prev) + vocab))`, the frozen add-one bigram prior of the
+   * ingest corpus (broadcast once). As in [[beamSearch]], fusion needs
+   * the KV path and composes with the watermark and eos, not with the
+   * constraint knobs.
    *
-   * KV budget: `nWindow > 0` decodes over BOUNDED sessions
-   * ([[TorchScriptModel.decodeSessionWindowed]], the StreamingLLM
-   * shape): every causal cache keeps `nSink` sinks + the last
-   * `nWindow` positions at ABSOLUTE positions, so the per-step cost
-   * is O((nSink + nWindow)·d), and `nWindow >=` the final length is
-   * bit-identical to the unbounded session (spec-pinned). `relPos`
-   * re-rotates the bounded caches
-   * ([[TorchScriptModel.decodeSessionRelPos]]: bias tables read at
-   * cache-slot indices, lifting the model's length limit; bias-only
-   * position models).
+   * KV budget: `nWindow > 0` bounds every causal cache to `nSink`
+   * sinks + the last `nWindow` positions at ABSOLUTE positions
+   * ([[TorchScriptModel.decodeSessionWindowed]], StreamingLLM); a
+   * window covering the final length is bit-identical to the
+   * unbounded session (spec-pinned). `relPos` re-rotates the bounded
+   * caches ([[TorchScriptModel.decodeSessionRelPos]]), lifting a
+   * bias-position model's length limit.
    *
    * @param srcCol a cross (encoder-decoder, T5/BART) model's source
-   *        tokens: the encoder leg and the cross k/v run once per row
-   *        at session open, and the knobs read the decoder-side
-   *        sequence. A null or empty source gives a null row. Null: a
+   *        tokens: the encoder leg and cross k/v run once per row at
+   *        session open; the knobs read the decoder-side sequence. A
+   *        null or empty source gives a null row. Null: a
    *        single-sequence model.
    * @return input columns + `outCol` = array<int> of the generated
    *         token ids (null input → null output)
@@ -3851,49 +3143,12 @@ object Torch {
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def q6(x: Double): Double = Spec.q6(x)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def topBranch(lg: Array[Float]): Array[Int] = {
-        val p6 = probs6(lg)
-        (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
-      }
-      // the typical threshold at a prefix: q6(min(ε, δ·exp(−H))) with
-      // H = −Σ p6·ln(p6) over positive grid masses, ascending tid
-      def threshold6(pp: Array[Double]): Double = {
-        var h = 0.0
-        var j = 0
-        while (j < vocab) {
-          if (pp(j) > 0.0) h -= pp(j) * StrictMath.log(pp(j))
-          j += 1
-        }
-        q6(math.min(posteriorEps, posteriorAlpha * StrictMath.exp(-h)))
-      }
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
-            // the draft tree: treeDraftGreedy's BFS build verbatim
-            val tree = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
-            val childrenOf =
-              scala.collection.mutable.Map.empty[Vector[Int], Array[Int]]
-            var frontier: Seq[(dm.DecodeSession, Vector[Int])] =
-              Seq((dm.decodeSession(p), Vector.empty))
-            while (frontier.nonEmpty) {
-              val next = scala.collection.mutable.ArrayBuffer
-                .empty[(dm.DecodeSession, Vector[Int])]
-              frontier.foreach { case (sess, path) =>
-                val kids = topBranch(sess.logits())
-                tree += kids.toSeq
-                childrenOf(path) = kids
-                if (path.length + 1 < depth) kids.foreach { c =>
-                  val child = sess.fork()
-                  child.append(c)
-                  next += ((child, path :+ c))
-                }
-              }
-              frontier = next.toSeq
-            }
+            val (tree, childrenOf) = Spec.draftTree(dm.decodeSession(p), vocab, branch, depth)
             // typical walk: accepted = children clearing the
             // entropy-scaled threshold; descend the max-p6 accepted
             // (tid tiebreak); stop at the first empty level
@@ -3903,8 +3158,8 @@ object Torch {
             var n = 0
             var stopped = false
             while (n < depth && !stopped) {
-              val pp = probs6(st.logits())
-              val thr = threshold6(pp)
+              val pp = Spec.probs6(st.logits(), vocab)
+              val thr = Spec.threshold6(pp, posteriorEps, posteriorAlpha)
               val acc = childrenOf(path).filter(c => pp(c) >= thr)
               if (acc.isEmpty) stopped = true
               else {
@@ -3916,7 +3171,7 @@ object Torch {
               }
             }
             out += argmaxFirst(st.logits(), vocab) // the deterministic continuation
-            (tree.toSeq, n, out.toSeq)
+            (tree, n, out.toSeq)
           }
         }
     }
@@ -3973,24 +3228,6 @@ object Torch {
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def q6(x: Double): Double = Spec.q6(x)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def topBranch(lg: Array[Float]): Array[Int] = {
-        val p6 = probs6(lg)
-        (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
-      }
-      // treeDraftTypical's threshold verbatim (one copy of the rule
-      // would be nicer, but the cell's is a closure over its own
-      // knobs — the spec pins cycle-1 bit-equality instead)
-      def threshold6(pp: Array[Double]): Double = {
-        var h = 0.0
-        var j = 0
-        while (j < vocab) {
-          if (pp(j) > 0.0) h -= pp(j) * StrictMath.log(pp(j))
-          j += 1
-        }
-        q6(math.min(posteriorEps, posteriorAlpha * StrictMath.exp(-h)))
-      }
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
@@ -4004,24 +3241,7 @@ object Torch {
             while (out.length < maxNewTokens) {
               cycles += 1
               // this cycle's tree on forks of the draft session
-              val childrenOf =
-                scala.collection.mutable.Map.empty[Vector[Int], Array[Int]]
-              var frontier: Seq[(dm.DecodeSession, Vector[Int])] =
-                Seq((sd, Vector.empty))
-              while (frontier.nonEmpty) {
-                val next = scala.collection.mutable.ArrayBuffer
-                  .empty[(dm.DecodeSession, Vector[Int])]
-                frontier.foreach { case (sess, path) =>
-                  val kids = topBranch(sess.logits())
-                  childrenOf(path) = kids
-                  if (path.length + 1 < depth) kids.foreach { c =>
-                    val child = sess.fork()
-                    child.append(c)
-                    next += ((child, path :+ c))
-                  }
-                }
-                frontier = next.toSeq
-              }
+              val childrenOf = Spec.draftTree(sd, vocab, branch, depth)._2
               // the typical walk; emitted tokens extend BOTH sessions
               def emit(t: Int): Unit = {
                 out += t
@@ -4032,8 +3252,8 @@ object Torch {
               var n = 0
               var stopped = false
               while (n < depth && !stopped) {
-                val pp = probs6(st.logits())
-                val thr = threshold6(pp)
+                val pp = Spec.probs6(st.logits(), vocab)
+                val thr = Spec.threshold6(pp, posteriorEps, posteriorAlpha)
                 val acc = childrenOf(path).filter(c => pp(c) >= thr)
                 if (acc.isEmpty) stopped = true
                 else {
@@ -4104,10 +3324,6 @@ object Torch {
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def topBranch(lg: Array[Float]): Array[Int] = {
-        val p6 = Spec.probs6(lg, vocab)
-        (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
-      }
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
@@ -4124,24 +3340,7 @@ object Torch {
             while (out.length < maxNewTokens) {
               cycles += 1
               // build this cycle's tree on forks of the draft session
-              val childrenOf =
-                scala.collection.mutable.Map.empty[Vector[Int], Array[Int]]
-              var frontier: Seq[(dm.DecodeSession, Vector[Int])] =
-                Seq((sd, Vector.empty))
-              while (frontier.nonEmpty) {
-                val next = scala.collection.mutable.ArrayBuffer
-                  .empty[(dm.DecodeSession, Vector[Int])]
-                frontier.foreach { case (sess, path) =>
-                  val kids = topBranch(sess.logits())
-                  childrenOf(path) = kids
-                  if (path.length + 1 < depth) kids.foreach { c =>
-                    val child = sess.fork()
-                    child.append(c)
-                    next += ((child, path :+ c))
-                  }
-                }
-                frontier = next.toSeq
-              }
+              val childrenOf = Spec.draftTree(sd, vocab, branch, depth)._2
               // greedy verify; every emitted token extends BOTH
               // accepted-prefix sessions
               var path = Vector.empty[Int]
@@ -4722,39 +3921,12 @@ object Torch {
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def topBranch(lg: Array[Float]): Array[Int] = {
-        val p6 = Spec.probs6(lg, vocab)
-        (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
-      }
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
-            // BFS tree build: each internal node costs one draft logit
-            // read on a fork. Children index by PATH (not token —
-            // two same-level nodes under different parents can share
-            // a token without clobbering each other's subtrees).
-            val tree = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
-            val childrenOf =
-              scala.collection.mutable.Map.empty[Vector[Int], Array[Int]]
-            var frontier: Seq[(dm.DecodeSession, Vector[Int])] =
-              Seq((dm.decodeSession(p), Vector.empty))
-            while (frontier.nonEmpty) {
-              val next = scala.collection.mutable.ArrayBuffer
-                .empty[(dm.DecodeSession, Vector[Int])]
-              frontier.foreach { case (sess, path) =>
-                val kids = topBranch(sess.logits())
-                tree += kids.toSeq
-                childrenOf(path) = kids
-                if (path.length + 1 < depth) kids.foreach { c =>
-                  val child = sess.fork()
-                  child.append(c)
-                  next += ((child, path :+ c))
-                }
-              }
-              frontier = next.toSeq
-            }
+            val (tree, childrenOf) = Spec.draftTree(dm.decodeSession(p), vocab, branch, depth)
             // greedy verify along the (unique) target path
             val st = tm.decodeSession(p)
             val out = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -4769,7 +3941,7 @@ object Torch {
               } else rejected = true // the argmax IS the correction
             }
             if (!rejected) out += argmaxFirst(st.logits(), vocab) // bonus
-            (tree.toSeq, n, out.toSeq)
+            (tree, n, out.toSeq)
           }
         }
     }

@@ -146,12 +146,15 @@ class KernelContractSpec extends AnyFunSuite {
     Torch.speculativeSampledGamma(_, "doc_id", "a", gen, genQ, gamma = 2))
   onGen("speculativeSampledLoop", "null,null,null,value,value,value,value,value")(
     Torch.speculativeSampledLoop(_, "doc_id", "a", gen, genQ, gamma = 2, maxNewTokens = 2))
+  // the "...Pair" labels are the base decoders over a cross model
+  // (srcCol), "generateGreedyWindowed" generateGreedy's bounded KV
+  // (nWindow) and "generateGreedyFused" its shallow fusion (lmWeight)
   onCross("speculativeSampledPair", "null,null,null,value,value,null,null,null")(
-    Torch.speculativeSampledPair(_, "doc_id", "a", "b", cross, crossQ))
+    Torch.speculativeSampled(_, "doc_id", "a", cross, crossQ, srcCol = "b"))
   onCross("speculativeSampledPairGamma", "null,null,null,value,value,null,null,null")(
-    Torch.speculativeSampledPairGamma(_, "doc_id", "a", "b", cross, crossQ, gamma = 2))
-  onCross("speculativeSampledPairLoop", "null,null,null,value,value,null,null,null")(Torch.speculativeSampledPairLoop(
-    _, "doc_id", "a", "b", cross, crossQ, gamma = 2, maxNewTokens = 2))
+    Torch.speculativeSampledGamma(_, "doc_id", "a", cross, crossQ, gamma = 2, srcCol = "b"))
+  onCross("speculativeSampledPairLoop", "null,null,null,value,value,null,null,null")(Torch.speculativeSampledLoop(
+    _, "doc_id", "a", cross, crossQ, gamma = 2, maxNewTokens = 2, srcCol = "b"))
   onGen("generateContrastiveDecoding", "null,null,null,value,value,value,value,value")(Torch.generateContrastiveDecoding(
     _, "a", "o", gen, genQ, steps = 2, plausibilityAlpha = 0.125))
   onGen("beamSearchContrastiveDecoding", "null,null,null,value,value,value,value,value")(Torch.beamSearchContrastiveDecoding(
@@ -159,21 +162,23 @@ class KernelContractSpec extends AnyFunSuite {
   onGen("scoreContinuationBatched", "null,null,null,value,value,null,null,null")(Torch.scoreContinuationBatched(_, "a", "b", "o", gen))
   onGen("generateGreedySharedPrefix", "null,null,value,value,value,null,null,value")(
     Torch.generateGreedySharedPrefix(_, "b", "a", "o", gen, steps = 1))
-  onGen("generateGreedyFused", "null,null,null,value,value,value,value,value")(Torch.generateGreedyFused(_, "a", "o", gen, steps = 3,
+  onGen("generateGreedyFused", "null,null,null,value,value,value,value,value")(Torch.generateGreedy(_, "a", "o", gen, steps = 3,
     lmWeight = 0.5, lmCounts = Array.tabulate(genVocab, genVocab)((i, j) => (i + 2L * j) % 5)))
   onGen("generateContrastive", "null,null,null,value,value,value,value,value")(
     Torch.generateContrastive(_, "a", "o", gen, steps = 2, topK = 3, alpha = 0.5))
-  onCross("generateGreedyPair", "null,null,null,value,value,null,null,null")(Torch.generateGreedyPair(_, "a", "b", "o", cross, steps = 2))
-  onCross("beamSearchPair", "null,null,null,value,value,null,null,null")(Torch.beamSearchPair(_, "a", "b", "o", cross, steps = 2, width = 2))
-  onCross("generateSampledPair", "null,null,null,value,value,null,null,null")(Torch.generateSampledPair(_, "doc_id", "a", "b", "o", cross,
-    steps = 2, temperature = 0.5, topP = 0.9))
+  onCross("generateGreedyPair", "null,null,null,value,value,null,null,null")(
+    Torch.generateGreedy(_, "a", "o", cross, steps = 2, srcCol = "b"))
+  onCross("beamSearchPair", "null,null,null,value,value,null,null,null")(
+    Torch.beamSearch(_, "a", "o", cross, steps = 2, width = 2, srcCol = "b"))
+  onCross("generateSampledPair", "null,null,null,value,value,null,null,null")(Torch.generateSampled(_, "doc_id", "a", "o", cross,
+    steps = 2, temperature = 0.5, topP = 0.9, srcCol = "b"))
   onGen("generateSampled", "null,null,null,value,value,value,value,value")(Torch.generateSampled(_, "doc_id", "a", "o", gen,
     steps = 2, temperature = 0.5, topP = 0.9))
   onGen("generateSampledK", "null,null,null,value,value,value,value,value")(Torch.generateSampledK(_, "doc_id", "a", "o", gen,
     steps = 2, temperature = 0.5, topP = 0.9, numReturnSequences = 3))
   test("generateGreedyWindowed: null/empty contract") {
     val v = SparkEntry.alibiLmModel.seqHead.get.vocab
-    val got = outcomes(tokRows(v, v), tokSchema)(Torch.generateGreedyWindowed(
+    val got = outcomes(tokRows(v, v), tokSchema)(Torch.generateGreedy(
       _, "a", "o", bc(SparkEntry.alibiLmModel), steps = 3, nSink = 1, nWindow = 4))
     assert(got.mkString(",") == "null,null,null,value,value,value,value,value")
   }

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * `it.grouped(`, `Encoders.row(`, `Row.fromSeq(r.toSeq :+`) may appear
  * only in the five kernels whose output is not one row per input row,
  * and the null-safe `java.lang.Number` array decode only in Kernel's
- * shared decoders.
+ * shared decoders. [[graft.torch.Torch]] opens bounded or re-rotated KV
+ * sessions only in its one opener, and keeps no cross-pair, windowed or
+ * fused copy of a generator: those are arguments of the base decoders.
  */
 class KernelStructureSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala/graft")
@@ -18,9 +20,12 @@ class KernelStructureSpec extends AnyFunSuite {
       if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     }
 
-  /** (file name, enclosing method) of every code line matching `pattern`;
-    * comment lines do not count. */
-  private def sites(pattern: String): Set[(String, String)] =
+  /** (file name, enclosing method) of every code line containing
+    * `pattern` ([[sitesWhere]]: every one that `matches`); comment lines
+    * do not count. */
+  private def sites(pattern: String): Set[(String, String)] = sitesWhere(_.contains(pattern))
+
+  private def sitesWhere(matches: String => Boolean): Set[(String, String)] =
     sources(root).flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       val lines = try src.getLines().toVector finally src.close()
@@ -30,7 +35,7 @@ class KernelStructureSpec extends AnyFunSuite {
         "^\\s{2}(?:private(?:\\[\\w+\\])? )?def (\\w+)".r.findFirstMatchIn(line)
           .foreach(m => method = m.group(1))
         val code = t.split("//", 2)(0)
-        if (!t.startsWith("*") && !t.startsWith("/*") && code.contains(pattern)) Some(f.getName -> method)
+        if (!t.startsWith("*") && !t.startsWith("/*") && matches(code)) Some(f.getName -> method)
         else None
       }
     }.toSet
@@ -52,6 +57,23 @@ class KernelStructureSpec extends AnyFunSuite {
     assert(sites("it.grouped(") == Set("Kernel.scala" -> "apply", "Torch.scala" -> "autoKvWindow"))
     assert(sites("Encoders.row(").subsetOf(kept))
     assert(sites("Row.fromSeq(r.toSeq").isEmpty)
+  }
+
+  test("Torch opens bounded and re-rotated KV sessions only through its one opener") {
+    def inTorch(pattern: String) = sites(pattern).filter(_._1 == "Torch.scala")
+    val opener = Set("Torch.scala" -> "openSession")
+    assert(inTorch("decodeSessionWindowed(") == opener)
+    assert(inTorch("decodeSessionRelPos(") == opener)
+    val branch = "if \\([^)]*\\b(relPos|windowed|nWindow > 0)".r
+    assert(sitesWhere(branch.findFirstIn(_).isDefined).filter(_._1 == "Torch.scala") == opener,
+      "a bounded or re-rotated KV branch outside the opener")
+  }
+
+  test("Torch defines no cross-pair, windowed or fused copy of a generator") {
+    val src = scala.io.Source.fromFile(new java.io.File(root, "torch/Torch.scala"), "UTF-8")
+    val copies = try src.getLines().flatMap("^  def (\\w+(?:Pair|Windowed|Fused))\\(".r.findFirstMatchIn(_))
+      .map(_.group(1)).toList finally src.close()
+    assert(copies.isEmpty, copies)
   }
 
   test("the null-safe array decode lives only in Kernel's shared decoders") {

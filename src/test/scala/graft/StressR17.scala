@@ -48,31 +48,31 @@ object StressR17 {
       transform(sequence(lit(0), lit(11)),
         i => pmod(col("id") * 131L + i * 37L, lit(kvocab.toLong))).as("s_ids"))
 
-    val greedy = graft.torch.Torch.generateGreedyPair(toks, "d_ids", "s_ids",
-        "gen", bc, steps = 2, batchSize = 512)
+    val greedy = graft.torch.Torch.generateGreedy(toks, "d_ids",
+        "gen", bc, steps = 2, batchSize = 512, srcCol = "s_ids")
       .select(col("doc_id"), col("gen")).cache()
     val nG = timed("greedy cross decode, 500k x (2 + 12) tokens")(greedy.count())
     require(nG == 500000L, s"greedy cross dropped rows: $nG")
     require(greedy.filter(size(col("gen")) =!= 2).count() == 0, "short generations")
 
-    val sampled = graft.torch.Torch.generateSampledPair(toks, "doc_id",
-        "d_ids", "s_ids", "gen", bc, steps = 2,
-        temperature = 0.5, topP = 0.9, batchSize = 512)
+    val sampled = graft.torch.Torch.generateSampled(toks, "doc_id",
+        "d_ids", "gen", bc, steps = 2,
+        temperature = 0.5, topP = 0.9, batchSize = 512, srcCol = "s_ids")
       .select(col("doc_id"), col("gen")).cache()
     require(timed("sampled cross decode, 500k rows")(sampled.count()) == 500000L,
       "sampled cross dropped rows")
     // seeded determinism: a repartitioned 1% slice reproduces exactly
     val slice = toks.filter(col("doc_id") % 100 === 0).repartition(8)
-    val again = graft.torch.Torch.generateSampledPair(slice, "doc_id",
-        "d_ids", "s_ids", "gen", bc, steps = 2,
-        temperature = 0.5, topP = 0.9, batchSize = 512)
+    val again = graft.torch.Torch.generateSampled(slice, "doc_id",
+        "d_ids", "gen", bc, steps = 2,
+        temperature = 0.5, topP = 0.9, batchSize = 512, srcCol = "s_ids")
       .select(col("doc_id"), col("gen").as("gen2"))
     val diff = sampled.join(again, "doc_id")
       .filter(col("gen") =!= col("gen2")).count()
     require(diff == 0, s"sampled cross decode not reproducible on $diff rows")
 
-    val beams = graft.torch.Torch.beamSearchPair(toks, "d_ids", "s_ids",
-        "beams", bc, steps = 2, width = 2, batchSize = 512)
+    val beams = graft.torch.Torch.beamSearch(toks, "d_ids",
+        "beams", bc, steps = 2, width = 2, batchSize = 512, srcCol = "s_ids")
       .select(col("doc_id"), col("beams")).cache()
     require(timed("cross beam search 2x2, 500k rows")(beams.count()) == 500000L,
       "cross beams dropped rows")

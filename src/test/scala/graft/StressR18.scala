@@ -77,8 +77,8 @@ object StressR18 {
         i => pmod(col("id") * 17L + i * 5L, lit(dvocab.toLong))).as("d_ids"),
       transform(sequence(lit(0), lit(11)),
         i => pmod(col("id") * 131L + i * 37L, lit(kvocab.toLong))).as("s_ids"))
-    val drafted = graft.torch.Torch.generateGreedyPair(toks2, "d_ids", "s_ids",
-      "draft", bcD, steps = 2, batchSize = 512)
+    val drafted = graft.torch.Torch.generateGreedy(toks2, "d_ids",
+      "draft", bcD, steps = 2, batchSize = 512, srcCol = "s_ids")
     val withSeqs = drafted
       .withColumn("seq1",
         concat(col("d_ids"), org.apache.spark.sql.functions.slice(
@@ -101,8 +101,8 @@ object StressR18 {
     // its own greedy first token (session logits == full forward),
     // and where the draft's first token was accepted, t2 must equal
     // the greedy second token — the q212 spec property, distributed
-    val tg = graft.torch.Torch.generateGreedyPair(toks2, "d_ids", "s_ids",
-        "tg", bcC, steps = 2, batchSize = 512)
+    val tg = graft.torch.Torch.generateGreedy(toks2, "d_ids",
+        "tg", bcC, steps = 2, batchSize = 512, srcCol = "s_ids")
       .select(col("doc_id"), col("tg"))
     val joined = spec.join(tg, "doc_id").cache()
     val viol = joined.filter(col("t1") =!= col("tg")(0)).count() +

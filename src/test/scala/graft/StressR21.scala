@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
  *     draft's rank-1 child when draft eq target).
  *  4. fused beams (q264) at 100k rows: lmWeight = 0 bit-identical to
  *     plain beamSearch on every row; width = 1 fused beams ==
- *     generateGreedyFused on every row; the prior moves SOME row.
+ *     fused generateGreedy on every row; the prior moves SOME row.
  *  5. watermarked diverse beams (q265) at 100k rows: group 0
  *     bit-identical to watermarked plain beamSearch on every row;
  *     delta = 0 bit-identical to the unwatermarked diverse path.
@@ -203,11 +203,11 @@ object StressR21 {
         steps = 2, width = 1, batchSize = 1024,
         lmWeight = 0.5, lmCounts = counts)
       .select(col("doc_id"), col("beams")(0).as("w1"))
-    val gf = graft.torch.Torch.generateGreedyFused(prompts, "tok_ids", "gen",
+    val gf = graft.torch.Torch.generateGreedy(prompts, "tok_ids", "gen",
         bcT, steps = 2, lmWeight = 0.5, lmCounts = counts, batchSize = 1024)
       .select(col("doc_id"), col("gen"))
     require(w1B.join(gf, "doc_id").filter(col("w1") =!= col("gen")).count() == 0L,
-      "width=1 fused beams diverged from generateGreedyFused")
+      "width=1 fused beams diverged from fused generateGreedy")
     fusedB.unpersist()
 
     // ---- 5. watermarked diverse beams at 100k ------------------------

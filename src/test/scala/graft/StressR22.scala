@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
  *     volume.
  *  3. the cross-pair speculative serving loop (q279, gamma=2,
  *     maxNew=2) at 100k rows: exactly 2 decoder tokens emitted and
- *     cycle 1 bit-identical to speculativeSampledPairGamma on every
+ *     cycle 1 bit-identical to cross speculativeSampledGamma on every
  *     row; both cycle arms live.
  *  4. bounded-KV greedy decoding (q282) at 100k rows: a
  *     never-evicting window is bit-identical to generateGreedy on
@@ -163,16 +163,16 @@ object StressR22 {
           j => pmod(xxhash64(col("id"), j, lit(11L)), lit(kvocab.toLong)).cast("int"))
           .as("s_ids"))
       .transform(graft.operators.Checkpoints.cp)
-    val pairLoop = timed("speculativeSampledPairLoop(gamma=2, maxNew=2) 100k rows") {
-      graft.torch.Torch.speculativeSampledPairLoop(cross, "doc_id", "d_ids",
-          "s_ids", bcCT, bcCD, gamma = 2, maxNewTokens = 2, batchSize = 1024)
+    val pairLoop = timed("cross speculativeSampledLoop(gamma=2, maxNew=2) 100k rows") {
+      graft.torch.Torch.speculativeSampledLoop(cross, "doc_id", "d_ids",
+          bcCT, bcCD, gamma = 2, maxNewTokens = 2, batchSize = 1024, srcCol = "s_ids")
         .select(col("doc_id"), col("out_toks"), col("n_cycles")).cache()
         .transform { d => d.count(); d }
     }
     require(pairLoop.filter(size(col("out_toks")) =!= 2).count() == 0L,
       "a pair-loop row missed its emission budget")
-    val pairCell = graft.torch.Torch.speculativeSampledPairGamma(cross,
-        "doc_id", "d_ids", "s_ids", bcCT, bcCD, gamma = 2, batchSize = 1024)
+    val pairCell = graft.torch.Torch.speculativeSampledGamma(cross,
+        "doc_id", "d_ids", bcCT, bcCD, gamma = 2, batchSize = 1024, srcCol = "s_ids")
       .select(col("doc_id"), col("n_accepted").as("cn"),
         col("out_toks").as("co"))
     val badPair = pairLoop.join(pairCell, "doc_id").filter(
@@ -199,15 +199,15 @@ object StressR22 {
     val aPlain = graft.torch.Torch.generateGreedy(aPrompts, "tok_ids", "gen",
         bcA, steps = 3, batchSize = 1024)
       .select(col("doc_id"), col("gen").as("gp"))
-    val wide = timed("generateGreedyWindowed(window>=len) 100k rows") {
-      graft.torch.Torch.generateGreedyWindowed(aPrompts, "tok_ids", "gen",
+    val wide = timed("generateGreedy(nWindow>=len) 100k rows") {
+      graft.torch.Torch.generateGreedy(aPrompts, "tok_ids", "gen",
           bcA, steps = 3, nSink = 0, nWindow = 16, batchSize = 1024)
         .select(col("doc_id"), col("gen").as("gw"))
     }
     require(wide.join(aPlain, "doc_id").filter(col("gw") =!= col("gp"))
       .count() == 0L, "a never-evicting window diverged from generateGreedy")
-    val tight = timed("generateGreedyWindowed(sink=1, window=4) 100k rows") {
-      graft.torch.Torch.generateGreedyWindowed(aPrompts, "tok_ids", "gen",
+    val tight = timed("generateGreedy(nSink=1, nWindow=4) 100k rows") {
+      graft.torch.Torch.generateGreedy(aPrompts, "tok_ids", "gen",
           bcA, steps = 3, nSink = 1, nWindow = 4, batchSize = 1024)
         .select(col("doc_id"), col("gen").as("gt"))
     }

@@ -121,8 +121,8 @@ object StressR23 {
           j => pmod(xxhash64(col("id"), j, lit(31L)), lit(relVocab.toLong)).cast("int"))
         .as("tok_ids"))
       .transform(graft.operators.Checkpoints.cp)
-    val relGen = timed("generateGreedyWindowed(relPos) 100k rows") {
-      val d = graft.torch.Torch.generateGreedyWindowed(prompts, "tok_ids",
+    val relGen = timed("generateGreedy(relPos) 100k rows") {
+      val d = graft.torch.Torch.generateGreedy(prompts, "tok_ids",
           "gen", bcR, steps = 3, nSink = 1, nWindow = 4, batchSize = 1024,
           relPos = true).cache()
       d.count(); d
@@ -167,7 +167,7 @@ object StressR23 {
         bcA, steps = 3, batchSize = 1024)
       .select(col("doc_id"), col("g"))
     for (w <- Seq(wLadder.head, wLadder.last)) {
-      val hand = graft.torch.Torch.generateGreedyWindowed(prompts,
+      val hand = graft.torch.Torch.generateGreedy(prompts,
           "tok_ids", "g", bcA, steps = 3, nSink = 1, nWindow = w,
           batchSize = 1024)
         .select(col("doc_id"), col("g").as("gw"))

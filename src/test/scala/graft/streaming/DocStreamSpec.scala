@@ -393,7 +393,7 @@ class DocStreamSpec extends AnyFunSuite {
         tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % vocab),
         1, 12).as("tok_ids"))
       .filter(size(col("tok_ids")) >= 1)
-    val q = graft.torch.Torch.generateGreedyWindowed(toks, "tok_ids",
+    val q = graft.torch.Torch.generateGreedy(toks, "tok_ids",
         "gen", bc, steps = 3, nSink = 1, nWindow = 4, batchSize = 64,
         relPos = true)
       .select(col("doc_id"), col("gen")(0).as("gen1"),

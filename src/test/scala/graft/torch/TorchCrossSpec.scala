@@ -431,8 +431,8 @@ class TorchCrossSpec extends AnyFunSuite {
           tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab),
           1, 12).as("s_ids"))
       .filter(size(col("d_ids")) >= 1)
-    val out = graft.torch.Torch.speculativeSampledPair(df, "doc_id",
-        "d_ids", "s_ids", bcT, bcD)
+    val out = graft.torch.Torch.speculativeSampled(df, "doc_id",
+        "d_ids", bcT, bcD, srcCol = "s_ids")
       .select("doc_id", "draft_tok", "accepted", "final_tok")
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getBoolean(2), r.getInt(3)))).toMap
@@ -490,8 +490,8 @@ class TorchCrossSpec extends AnyFunSuite {
       assert(fx == expFx, s"doc $id cross final $fx != replay $expFx")
     }
     // identity draft: ratio quantizes to exactly 1 — always accepts
-    val self = graft.torch.Torch.speculativeSampledPair(df, "doc_id",
-        "d_ids", "s_ids", bcT, bcT)
+    val self = graft.torch.Torch.speculativeSampled(df, "doc_id",
+        "d_ids", bcT, bcT, srcCol = "s_ids")
       .select("doc_id", "draft_tok", "accepted", "final_tok").collect()
     assert(self.forall(r => r.getBoolean(2) && r.getInt(1) == r.getInt(3)),
       "identity cross draft must always accept")
@@ -514,13 +514,13 @@ class TorchCrossSpec extends AnyFunSuite {
           tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab),
           1, 12).as("s_ids"))
       .filter(size(col("d_ids")) >= 1)
-    val g1 = graft.torch.Torch.speculativeSampledPairGamma(df, "doc_id",
-        "d_ids", "s_ids", bcT, bcD, gamma = 1)
+    val g1 = graft.torch.Torch.speculativeSampledGamma(df, "doc_id",
+        "d_ids", bcT, bcD, gamma = 1, srcCol = "s_ids")
       .select("doc_id", "draft_toks", "n_accepted", "out_toks")
       .collect().map(r => r.getLong(0) ->
         ((r.getSeq[Int](1), r.getInt(2), r.getSeq[Int](3)))).toMap
-    val pair = graft.torch.Torch.speculativeSampledPair(df, "doc_id",
-        "d_ids", "s_ids", bcT, bcD)
+    val pair = graft.torch.Torch.speculativeSampled(df, "doc_id",
+        "d_ids", bcT, bcD, srcCol = "s_ids")
       .select("doc_id", "draft_tok", "accepted", "final_tok")
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getBoolean(2), r.getInt(3)))).toMap
@@ -533,16 +533,16 @@ class TorchCrossSpec extends AnyFunSuite {
       else assert(out == Seq(fx), s"doc $id correction $out != q258 $fx")
     }
     // identity draft at gamma = 2: every position accepts, bonus emits
-    val self = graft.torch.Torch.speculativeSampledPairGamma(df, "doc_id",
-        "d_ids", "s_ids", bcT, bcT, gamma = 2)
+    val self = graft.torch.Torch.speculativeSampledGamma(df, "doc_id",
+        "d_ids", bcT, bcT, gamma = 2, srcCol = "s_ids")
       .select("doc_id", "draft_toks", "n_accepted", "out_toks").collect()
     assert(self.forall(r => r.getInt(2) == 2 &&
       r.getSeq[Int](3).length == 3 &&
       r.getSeq[Int](3).take(2) == r.getSeq[Int](1)),
       "identity cross draft must accept every drafted position")
     // acceptance arms live at gamma = 2 with the int8 draft
-    val g2 = graft.torch.Torch.speculativeSampledPairGamma(df, "doc_id",
-        "d_ids", "s_ids", bcT, bcD, gamma = 2)
+    val g2 = graft.torch.Torch.speculativeSampledGamma(df, "doc_id",
+        "d_ids", bcT, bcD, gamma = 2, srcCol = "s_ids")
       .select("n_accepted").collect().map(_.getInt(0))
     info(s"q261 sf0.001 n_accepted histogram: " +
       (0 to 2).map(k => s"$k:${g2.count(_ == k)}").mkString(" "))
@@ -571,23 +571,23 @@ class TorchCrossSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     // sampled: neutral knob values must be BIT-IDENTICAL to the bare
     // q207 path (one shared kernel, identical f64 term order)
-    val bare = collectGen(Torch.generateSampledPair(df, "doc_id", "d_ids",
-      "s_ids", "gen", bc, steps = 2, temperature = 0.5, topP = 0.9))
-    val neutral = collectGen(Torch.generateSampledPair(df, "doc_id", "d_ids",
-      "s_ids", "gen", bc, steps = 2, temperature = 0.5, topP = 0.9,
-      topK = dvocab, repetitionPenalty = 1.0, noRepeatNgram = 0, minP = 0.0))
+    val bare = collectGen(Torch.generateSampled(df, "doc_id", "d_ids",
+      "gen", bc, steps = 2, temperature = 0.5, topP = 0.9, srcCol = "s_ids"))
+    val neutral = collectGen(Torch.generateSampled(df, "doc_id", "d_ids",
+      "gen", bc, steps = 2, temperature = 0.5, topP = 0.9,
+      topK = dvocab, repetitionPenalty = 1.0, noRepeatNgram = 0, minP = 0.0, srcCol = "s_ids"))
     assert(neutral == bare, "neutral cross knobs must reduce bit-exactly")
     // the q220 combination must actually move picks
-    val knobbed = collectGen(Torch.generateSampledPair(df, "doc_id", "d_ids",
-      "s_ids", "gen", bc, steps = 2, temperature = 0.5, topP = 0.9,
-      topK = 3, repetitionPenalty = 1.25, noRepeatNgram = 2))
+    val knobbed = collectGen(Torch.generateSampled(df, "doc_id", "d_ids",
+      "gen", bc, steps = 2, temperature = 0.5, topP = 0.9,
+      topK = 3, repetitionPenalty = 1.25, noRepeatNgram = 2, srcCol = "s_ids"))
     assert(knobbed.count { case (k, v) => bare(k) != v } > 0,
       "the cross knob combination never changed a pick")
     // greedy eos: greedy-with-eos == plain greedy truncated at eos
-    val plain = collectGen(Torch.generateGreedyPair(df, "d_ids", "s_ids",
-      "gen", bc, steps = 2))
-    val eosed = collectGen(Torch.generateGreedyPair(df, "d_ids", "s_ids",
-      "gen", bc, steps = 2, eosId = 5))
+    val plain = collectGen(Torch.generateGreedy(df, "d_ids",
+      "gen", bc, steps = 2, srcCol = "s_ids"))
+    val eosed = collectGen(Torch.generateGreedy(df, "d_ids",
+      "gen", bc, steps = 2, eosId = 5, srcCol = "s_ids"))
     for ((id, g) <- plain) {
       val cut = g.indexOf(5)
       val expect = if (cut < 0) g else g.take(cut + 1)
@@ -640,11 +640,11 @@ class TorchCrossSpec extends AnyFunSuite {
           tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long") % kvocab),
           1, 12).as("s_ids"))
       .filter(size(c("d_ids")) >= 1)
-    val beams = Torch.beamSearchPair(df, "d_ids", "s_ids", "beams", bc,
-        steps = 2, width = 2)
+    val beams = Torch.beamSearch(df, "d_ids", "beams", bc,
+        steps = 2, width = 2, srcCol = "s_ids")
       .select("doc_id", "beams").collect()
       .map(r => r.getLong(0) -> r.getSeq[Seq[Int]](1)).toMap
-    val greedy = Torch.generateGreedyPair(df, "d_ids", "s_ids", "gen", bc, steps = 2)
+    val greedy = Torch.generateGreedy(df, "d_ids", "gen", bc, steps = 2, srcCol = "s_ids")
       .select("doc_id", "gen").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(beams.nonEmpty && beams.keySet == greedy.keySet)
@@ -704,13 +704,13 @@ class TorchCrossSpec extends AnyFunSuite {
     def collectGen(d: org.apache.spark.sql.DataFrame) =
       d.select("doc_id", "gen").collect()
         .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val greedy = collectGen(Torch.generateGreedyPair(df, "d_ids", "s_ids", "gen",
-      bc, steps = 2))
-    val reduced = collectGen(Torch.generateSampledPair(df, "doc_id", "d_ids",
-      "s_ids", "gen", bc, steps = 2, temperature = 0.5, topP = 1e-6))
+    val greedy = collectGen(Torch.generateGreedy(df, "d_ids", "gen",
+      bc, steps = 2, srcCol = "s_ids"))
+    val reduced = collectGen(Torch.generateSampled(df, "doc_id", "d_ids",
+      "gen", bc, steps = 2, temperature = 0.5, topP = 1e-6, srcCol = "s_ids"))
     assert(reduced == greedy, "topP -> 0 must equal greedy cross decode")
-    val sampled = collectGen(Torch.generateSampledPair(df, "doc_id", "d_ids",
-      "s_ids", "gen", bc, steps = 2, temperature = 0.5, topP = 0.9))
+    val sampled = collectGen(Torch.generateSampled(df, "doc_id", "d_ids",
+      "gen", bc, steps = 2, temperature = 0.5, topP = 0.9, srcCol = "s_ids"))
     val moved = sampled.count { case (k, v) => greedy(k) != v }
     assert(moved > sampled.size / 10,
       s"only $moved/${sampled.size} rows left the greedy trajectory")
@@ -774,6 +774,47 @@ class TorchCrossSpec extends AnyFunSuite {
       val sumPre = pre * (d0.length - 2)
       assert(sumFull > sumPre - 1e-12, "prefix NLL sum exceeds the full sum")
     }
+  }
+
+  test("cross greedy with banned phrases + watermark == a direct argmax over the cross session") {
+    // srcCol makes every generateGreedy knob reach a cross model; the
+    // picks must be the per-step argmax over decodeSession(p, src)
+    // logits with the same bias and bans, first max winning
+    val m = graft.SparkEntry.crossGenModel
+    val dvocab = m.seqHead.get.vocab
+    val bc = spark.sparkContext.broadcast(m)
+    val df = graft.Tok.spread(spark.read.parquet("graftbench/data/sf0.01/documents.parquet"))
+      .select(col("doc_id"), graft.Tok.ids(col("text"), dvocab, 2).as("d_ids"),
+        graft.Tok.ids(col("text"), m.encHead.get.vocab, 12).as("s_ids"))
+    val phrases = Seq.tabulate(dvocab)(t => Seq(t, t)) // no immediate repeat
+    val (steps, delta) = (3, 1.0)
+    def green(prev: Int, j: Int): Boolean = {
+      val md = java.security.MessageDigest.getInstance("MD5").digest(s"$prev:$j".getBytes("UTF-8"))
+      java.lang.Long.parseLong(md.take(4).map(b => f"$b%02x").mkString, 16) % 2 < 1
+    }
+    def gen(knobs: Boolean) = Torch.generateGreedy(df, "d_ids", "gen", bc, steps = steps,
+        bannedPhrases = if (knobs) phrases else Nil, watermarkDelta = if (knobs) delta else 0.0,
+        srcCol = "s_ids")
+      .select("doc_id", "d_ids", "s_ids", "gen").collect()
+    val got = gen(knobs = true)
+    assert(got.length > 10)
+    for (r <- got) {
+      val p = r.getSeq[Int](1).toArray
+      val sess = m.decodeSession(p, r.getSeq[Int](2).toArray)
+      val full = scala.collection.mutable.ArrayBuffer.from(p)
+      for (_ <- 0 until steps) {
+        val lg = sess.logits()
+        val ok = (0 until dvocab).filterNot(j => phrases.exists(ph =>
+          ph.last == j && full.takeRight(ph.length - 1) == ph.init))
+        val tok = ok.maxBy(j => (lg(j).toDouble + (if (green(full.last, j)) delta else 0.0), -j))
+        full += tok
+        sess.append(tok)
+      }
+      assert(r.getSeq[Int](3) == full.drop(p.length), s"doc ${r.getLong(0)}")
+    }
+    val plain = gen(knobs = false).map(r => r.getLong(0) -> r.getSeq[Int](3)).toMap
+    assert(got.count(r => plain(r.getLong(0)) != r.getSeq[Int](3)) > 0,
+      "the bans and the watermark never moved a cross pick")
   }
 
   test("loud failure: distinct key/value sequences") {

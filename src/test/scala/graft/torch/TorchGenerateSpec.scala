@@ -1141,7 +1141,7 @@ class TorchGenerateSpec extends AnyFunSuite {
       counts(p(i))(p(i + 1)) += 1L
     val rowSums = counts.map(_.sum)
     def collectGen(lam: Double) =
-      Torch.generateGreedyFused(df, "tok_ids", "gen", bc, steps = 3,
+      Torch.generateGreedy(df, "tok_ids", "gen", bc, steps = 3,
           lmWeight = lam, lmCounts = counts)
         .select("doc_id", "gen")
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
@@ -1983,15 +1983,15 @@ class TorchGenerateSpec extends AnyFunSuite {
     assert(fusedBeams.exists { case (d, beams) => beams != plainBeams(d) },
       "lambda = 0.5 changed nothing — vacuous fusion")
     // width = 1: the per-step pick maximizes lp + fused = logits −
-    // lse + fused — the same argmax generateGreedyFused takes over
+    // lse + fused — the same argmax fused generateGreedy takes over
     // logits + fused (lse is constant per step)
-    val g = Torch.generateGreedyFused(df, "tok_ids", "gen", bc, steps = 2,
+    val g = Torch.generateGreedy(df, "tok_ids", "gen", bc, steps = 2,
         lmWeight = lam, lmCounts = counts)
       .select("doc_id", "gen").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
     val w1 = run(1, lam)
     assert(w1.forall { case (d, beams) => beams == Seq(g(d)) },
-      "width-1 fused beams diverged from generateGreedyFused")
+      "width-1 fused beams diverged from fused generateGreedy")
     // full f64 recompute of the 2x2 fused expansion + margin floors
     def logProbs(ids: Array[Int]): Array[Double] = {
       val lg = f64Logits(m, ids)

@@ -82,13 +82,13 @@ class TorchServeSpec extends AnyFunSuite {
     val bcT = spark.sparkContext.broadcast(m)
     val bcD = spark.sparkContext.broadcast(dm)
     val df = crossPrompts(m)
-    val loop = Torch.speculativeSampledPairLoop(df, "doc_id", "d_ids",
-        "s_ids", bcT, bcD, gamma = 2, maxNewTokens = 2)
+    val loop = Torch.speculativeSampledLoop(df, "doc_id", "d_ids",
+        bcT, bcD, gamma = 2, maxNewTokens = 2, srcCol = "s_ids")
       .select("doc_id", "out_toks", "n_cycles", "n_acc_total").collect()
       .map(r => r.getLong(0) ->
         ((r.getSeq[Int](1), r.getInt(2), r.getInt(3)))).toMap
-    val cell = Torch.speculativeSampledPairGamma(df, "doc_id", "d_ids",
-        "s_ids", bcT, bcD, gamma = 2)
+    val cell = Torch.speculativeSampledGamma(df, "doc_id", "d_ids",
+        bcT, bcD, gamma = 2, srcCol = "s_ids")
       .select("doc_id", "n_accepted", "out_toks").collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getSeq[Int](2)))).toMap
     assert(loop.nonEmpty && loop.keySet == cell.keySet)
@@ -251,7 +251,7 @@ class TorchServeSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
     // nWindow >= final length (12 prompt + 3 generated) never evicts:
     // the score loop walks the same cached rows in the same order
-    val wide = Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc,
+    val wide = Torch.generateGreedy(toks, "tok_ids", "gen", bc,
         steps = 3, nSink = 0, nWindow = 16)
       .select("doc_id", "gen").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
@@ -259,7 +259,7 @@ class TorchServeSpec extends AnyFunSuite {
       "a never-evicting window diverged from the unbounded session")
     // the serving config (sink 1 + window 4) must actually change
     // rollouts on the fixture — otherwise the gate is vacuous
-    val tight = Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc,
+    val tight = Torch.generateGreedy(toks, "tok_ids", "gen", bc,
         steps = 3, nSink = 1, nWindow = 4)
       .select("doc_id", "gen").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
@@ -269,7 +269,7 @@ class TorchServeSpec extends AnyFunSuite {
       "bounded-KV decoding is degenerate on the fixture")
     // the sink is load-bearing: dropping it (pure sliding window)
     // changes some rollout — position 0 really was being attended
-    val noSink = Torch.generateGreedyWindowed(toks, "tok_ids", "gen", bc,
+    val noSink = Torch.generateGreedy(toks, "tok_ids", "gen", bc,
         steps = 3, nSink = 0, nWindow = 4)
       .select("doc_id", "gen").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
@@ -324,9 +324,9 @@ class TorchServeSpec extends AnyFunSuite {
     val bcD = spark.sparkContext.broadcast(TorchQuant.quantize(m, 7))
     val df = crossPrompts(m)
     def run(nSink: Int = -1, nWindow: Int = -1) =
-      Torch.speculativeSampledPairLoop(df, "doc_id", "d_ids", "s_ids",
+      Torch.speculativeSampledLoop(df, "doc_id", "d_ids",
           bcT, bcD, gamma = 2, maxNewTokens = 2, nSink = nSink,
-          nWindow = nWindow)
+          nWindow = nWindow, srcCol = "s_ids")
         .select("doc_id", "out_toks", "n_cycles").collect()
         .map(r => r.getLong(0) -> ((r.getSeq[Int](1).toSeq, r.getInt(2))))
         .toMap
@@ -793,7 +793,7 @@ class TorchServeSpec extends AnyFunSuite {
       .select("doc_id", "g").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
     for ((w, nD, diff, _, _) <- sweep) {
-      val wg = graft.torch.Torch.generateGreedyWindowed(toks, "tok_ids",
+      val wg = graft.torch.Torch.generateGreedy(toks, "tok_ids",
           "g", bc, steps = 3, nSink = 1, nWindow = w, batchSize = 256)
         .select("doc_id", "g").collect()
         .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
@@ -851,7 +851,7 @@ class TorchServeSpec extends AnyFunSuite {
     assert(lkMoved > 0, "q298 KV budget moved nothing — vacuous knob")
     // greedy-equivalence under visibility: emissions == the WINDOWED
     // greedy rollout truncated to maxNewTokens, on every row
-    val wg = graft.torch.Torch.generateGreedyWindowed(toks, "tok_ids",
+    val wg = graft.torch.Torch.generateGreedy(toks, "tok_ids",
         "g", bcT, steps = 2, nSink = 1, nWindow = 4, batchSize = 256)
       .select("doc_id", "g").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
@@ -904,7 +904,7 @@ class TorchServeSpec extends AnyFunSuite {
     val gMoved = gW.count { case (id, v) => v != gUnb(id) }
     assert(gMoved > 0, "q301 KV budget moved nothing — vacuous knob")
     // greedy-equivalence per visibility: emissions == windowed rollout
-    val wg = graft.torch.Torch.generateGreedyWindowed(toks, "tok_ids",
+    val wg = graft.torch.Torch.generateGreedy(toks, "tok_ids",
         "g", bcT, steps = 2, nSink = 1, nWindow = 4, batchSize = 256)
       .select("doc_id", "g").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
@@ -956,7 +956,7 @@ class TorchServeSpec extends AnyFunSuite {
     assert(q303.size == toks.count())
     // greedy-equivalence under re-rotation: emissions == the relPos
     // rollout truncated, on every row
-    val wg = graft.torch.Torch.generateGreedyWindowed(toks, "tok_ids",
+    val wg = graft.torch.Torch.generateGreedy(toks, "tok_ids",
         "g", bcT, steps = 2, nSink = 1, nWindow = 4, batchSize = 256,
         relPos = true)
       .select("doc_id", "g").collect()
