@@ -19,19 +19,28 @@ import org.apache.spark.sql.types._
  */
 object Torch {
 
+  /** The 6-dp HALF_UP grid every sampled, speculative and contrastive
+    * decision is made on. */
+  private def q6(x: Double): Double =
+    BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** MD5's leading 32 bits of `key`'s UTF-8 bytes, read as an unsigned
+    * big-endian int: the SQL side's `CAST('0x' || substring(md5(key), 1,
+    * 8) AS BIGINT)`. */
+  private def md5Lead32(key: String): Long = {
+    val d = java.security.MessageDigest.getInstance("MD5").digest(key.getBytes("UTF-8"))
+    (d(0) & 0xffL) << 24 | (d(1) & 0xffL) << 16 | (d(2) & 0xffL) << 8 | (d(3) & 0xffL)
+  }
+
+  /** The seeded uniform draw on the 1e-6 grid keyed by `key`. */
+  private def unitDraw(key: String): Double = (md5Lead32(key) % 1000000L) / 1e6
+
   /** The deterministic sampling kernel shared by [[generateSampled]]
     * and [[generateSampledK]] — see generateSampled's scaladoc for
     * the full cross-engine contract (seeded md5 draws, 6-dp HALF_UP
     * quantization, order-defined running sums). */
   private object Sampling {
-    def q6(x: Double): Double =
-      BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    def draw(id: Long, step: Int): Double = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$id:$step".getBytes("UTF-8"))
-      val hex = md.take(4).map(b => f"$b%02x").mkString
-      (java.lang.Long.parseLong(hex, 16) % 1000000L) / 1e6
-    }
+    def draw(id: Long, step: Int): Double = unitDraw(s"$id:$step")
     /** The watermark green-list membership (Kirchenbauer et al. 2023,
       * general gamma = num/den): token `j` is GREEN after `prev` iff
       * md5("<prev>:<j>")'s leading 32 bits mod `den` fall below `num`
@@ -40,12 +49,8 @@ object Torch {
       * detection share one function at ANY rational green fraction.
       * (num, den) = (1, 2) is the original parity rule: `% 2 < 1`
       * ⟺ `% 2 == 0`, bit-for-bit the pre-gamma behavior. */
-    def greenToken(prev: Int, j: Int, num: Int, den: Int): Boolean = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$prev:$j".getBytes("UTF-8"))
-      val hex = md.take(4).map(b => f"$b%02x").mkString
-      java.lang.Long.parseLong(hex, 16) % den < num
-    }
+    def greenToken(prev: Int, j: Int, num: Int, den: Int): Boolean =
+      md5Lead32(s"$prev:$j") % den < num
     def greenToken(prev: Int, j: Int): Boolean = greenToken(prev, j, 1, 2)
     /** The multi-return draw (`num_return_sequences`): sequence 0
       * keeps the single-return key `"<id>:<step>"` — so k = 1 and the
@@ -53,13 +58,7 @@ object Torch {
       * — and every extra sequence salts the key with its index,
       * `"<id>:<seq>:<step>"`. */
     def draw(id: Long, seq: Int, step: Int): Double =
-      if (seq == 0) draw(id, step)
-      else {
-        val md = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"$id:$seq:$step".getBytes("UTF-8"))
-        val hex = md.take(4).map(b => f"$b%02x").mkString
-        (java.lang.Long.parseLong(hex, 16) % 1000000L) / 1e6
-      }
+      if (seq == 0) draw(id, step) else unitDraw(s"$id:$seq:$step")
     def sampleNext(out: Array[Float], off: Int, vocab: Int,
         temperature: Double, topP: Double, u: Double,
         banned: Set[Int] = Set.empty, topK: Int = Int.MaxValue,
@@ -180,14 +179,7 @@ object Torch {
     * the order-defined renormalized-cumulative walk over
     * (mass DESC, tid ASC). */
   private object Spec extends Serializable {
-    def q6(x: Double): Double =
-      BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    def draw(id: Long, salt: String): Double = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$id:spec:$salt".getBytes("UTF-8"))
-      val hex = md.take(4).map(b => f"$b%02x").mkString
-      (java.lang.Long.parseLong(hex, 16) % 1000000L) / 1e6
-    }
+    def draw(id: Long, salt: String): Double = unitDraw(s"$id:spec:$salt")
     def probs6(lg: Array[Float], vocab: Int): Array[Double] = {
       var mx = Double.NegativeInfinity
       var j = 0
@@ -391,6 +383,147 @@ object Torch {
       }
       q6(math.min(eps, alpha * StrictMath.exp(-h)))
     }
+
+    /** An acceptance rule of [[walk]]: given the target's logits at the
+      * accepted prefix and the proposal's children there, the child
+      * the walk descends into, or −1 to stop. */
+    type Rule = (Array[Float], Array[Int]) => Int
+    /** Exact match: the target's argmax, when it is a child. */
+    def exact(vocab: Int): Rule = { (lg, kids) =>
+      val t = argmaxFirst(lg, vocab)
+      if (kids.contains(t)) t else -1
+    }
+    /** Medusa's typical acceptance: the children whose p6 clears
+      * [[threshold6]]; the highest-p6 one (tid tiebreak) descends. */
+    def typical(vocab: Int, eps: Double, alpha: Double): Rule = { (lg, kids) =>
+      val pp = probs6(lg, vocab)
+      val thr = threshold6(pp, eps, alpha)
+      val acc = kids.filter(c => pp(c) >= thr)
+      if (acc.isEmpty) -1 else acc.minBy(x => (-pp(x), x))
+    }
+    /** The DETERMINISTIC draft walk: from the target session `st`, each
+      * level lets `accept` pick among the children of the accepted path
+      * (`kids`, a proposal given by path, at most `depth` levels deep)
+      * and appends the pick to `st`; the walk stops at the first level
+      * without a pick, and the final token is the target's argmax at
+      * that prefix (the correction, or the bonus after `depth` levels).
+      * One logit read per level visited; the final token is not
+      * appended — a serving loop rolls it forward.
+      *
+      * @return (the accepted count, the accepted path + final token) */
+    def walk(st: TorchScriptModel#DecodeSession, kids: Vector[Int] => Array[Int],
+        depth: Int, vocab: Int, accept: Rule): (Int, Seq[Int]) = {
+      var path = Vector.empty[Int]
+      var lg = st.logits()
+      var next = if (depth > 0) accept(lg, kids(path)) else -1
+      while (next >= 0) {
+        path :+= next
+        st.append(next)
+        lg = st.logits()
+        next = if (path.length < depth) accept(lg, kids(path)) else -1
+      }
+      (path.length, path :+ argmaxFirst(lg, vocab))
+    }
+    /** A tree cycle ([[treeDraftGreedy]], [[treeDraftTypical]] and their
+      * loops): the draft's `branch × depth` tree rooted at `sd` (only
+      * read), walked on `st` under `accept`.
+      *
+      * @return (the tree in BFS order, the accepted count, the emitted
+      *         tokens) */
+    def treeWalk(sd: TorchScriptModel#DecodeSession, st: TorchScriptModel#DecodeSession,
+        branch: Int, depth: Int, vocab: Int, accept: Rule): (Seq[Seq[Int]], Int, Seq[Int]) = {
+      val (tree, kids) = draftTree(sd, vocab, branch, depth)
+      val (n, out) = walk(st, kids, depth, vocab, accept)
+      (tree, n, out)
+    }
+    /** A prompt-lookup cycle ([[generatePromptLookup]] and its loop):
+      * the lookup drafts over `full` enter [[walk]] as a branch-1
+      * chain under exact match.
+      *
+      * @return (the drafts, the accepted count, the emitted tokens) */
+    def lookupWalk(st: TorchScriptModel#DecodeSession, full: scala.collection.IndexedSeq[Int],
+        ngram: Int, maxDraft: Int, vocab: Int): (Array[Int], Int, Seq[Int]) = {
+      val drafts = lookupDraft(full, ngram, maxDraft)
+      val (n, out) = walk(st, path => Array(drafts(path.length)), drafts.length, vocab, exact(vocab))
+      (drafts, n, out)
+    }
+    /** ONE STOCHASTIC LEVEL: `branch` draft samples from the draft's
+      * grid distribution `qp` (salts `d<off+i>`), then
+      * [[multiRoundWalk]] against the target's distribution at `st`.
+      *
+      * @return (the drafts, the accepted round (0: residual-sampled),
+      *         the emitted token) */
+    def level(qp: Array[Double], st: TorchScriptModel#DecodeSession, branch: Int,
+        vocab: Int, id: Long, off: Int): (Array[Int], Int, Int) = {
+      val drafts = Array.tabulate(branch)(i => pick(qp, draw(id, s"d${off + i + 1}")))
+      val (acc, tok) = multiRoundWalk(drafts, qp, probs6(st.logits(), vocab), vocab, id, off)
+      (drafts, acc, tok)
+    }
+    /** The STOCHASTIC walk of cycle `c`: [[level]]s down the accepted
+      * path, level ℓ drawing at offset `((c−1)·depth + ℓ−1)·branch` from
+      * `q(ℓ−1)`. An accepted draft is appended to every session in
+      * `grow` and descends; a residual pick stops; `depth` accepted
+      * levels earn the bonus sample `b<c>` at the target's prefix. The
+      * final token is not appended.
+      *
+      * @return (each level's drafts, each level's accepted round, the
+      *         emitted tokens) */
+    def stochasticWalk(st: TorchScriptModel#DecodeSession, grow: Seq[TorchScriptModel#DecodeSession],
+        q: Int => Array[Double], depth: Int, branch: Int, vocab: Int, id: Long,
+        c: Int): (Seq[Seq[Int]], Seq[Int], Seq[Int]) = {
+      val tree = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
+      val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+      var stopped = false
+      while (rounds.length < depth && !stopped) {
+        val (drafts, acc, tok) = level(q(rounds.length), st, branch, vocab, id,
+          ((c - 1) * depth + rounds.length) * branch)
+        tree += drafts.toSeq
+        rounds += acc
+        out += tok
+        if (acc == 0) stopped = true else grow.foreach(_.append(tok))
+      }
+      if (!stopped) out += pick(probs6(st.logits(), vocab), draw(id, s"b$c"))
+      (tree.toSeq, rounds.toSeq, out.toSeq)
+    }
+    /** A stochastic tree cycle ([[treeDraftStochastic]] and its loop):
+      * the lazy tree, q read from the draft session `sd` at the
+      * accepted prefix. */
+    def treeSampledWalk(sd: TorchScriptModel#DecodeSession, st: TorchScriptModel#DecodeSession,
+        branch: Int, depth: Int, vocab: Int, id: Long, c: Int): (Seq[Seq[Int]], Seq[Int], Seq[Int]) =
+      stochasticWalk(st, Seq(sd, st), _ => probs6(sd.logits(), vocab), depth, branch, vocab, id, c)
+    /** The sampled prompt-lookup walk ([[promptLookupSampled]]): each
+      * lookup draft is a one-draft level with the point mass q = δ_x.
+      *
+      * @return (the drafts, the accepted count, the emitted tokens) */
+    def lookupSampledWalk(st: TorchScriptModel#DecodeSession, full: scala.collection.IndexedSeq[Int],
+        ngram: Int, maxDraft: Int, vocab: Int, id: Long): (Array[Int], Int, Seq[Int]) = {
+      val drafts = lookupDraft(full, ngram, maxDraft)
+      val (_, rounds, out) = stochasticWalk(st, Seq(st),
+        n => Array.tabulate(vocab)(j => if (j == drafts(n)) 1.0 else 0.0),
+        drafts.length, 1, vocab, id, 1)
+      (drafts, rounds.count(_ > 0), out)
+    }
+    /** The SERVING DRIVER of every speculative loop: runs `cycle(c)` for
+      * c = 1, 2, … until `maxNewTokens` tokens are emitted and keeps the
+      * first `maxNewTokens`. Each cycle returns (its count, its emitted
+      * tokens); `advance` rolls the sessions forward over a cycle's
+      * tokens only when another cycle follows. A cycle runs to
+      * completion even when it overshoots, so counts are cycle-level.
+      *
+      * @return (the emitted tokens, each cycle's count) */
+    def serve(maxNewTokens: Int)(cycle: Int => (Int, Seq[Int]))(
+        advance: Seq[Int] => Unit): (Seq[Int], Seq[Int]) = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val counts = scala.collection.mutable.ArrayBuffer.empty[Int]
+      while (out.length < maxNewTokens) {
+        val (n, toks) = cycle(counts.length + 1)
+        counts += n
+        out ++= toks
+        if (out.length < maxNewTokens) advance(toks)
+      }
+      (out.take(maxNewTokens).toSeq, counts.toSeq)
+    }
   }
 
   /** The prompt-lookup draft (Saxena 2023, HF `prompt_lookup_num_
@@ -558,6 +691,18 @@ object Torch {
         s"$what needs the KV-session path (cacheable model)")
     }
     Kv(if (cross) df.schema.fieldIndex(srcCol) else -1, nSink, nWindow, relPos)
+  }
+
+  /** The speculative decoders' model check: [[kvPolicy]] over the
+    * target and the draft, which must share the vocabulary; a
+    * deterministic tree's top-`branch` children must fit in it. */
+  private def draftPair(df: DataFrame, what: String, target: Broadcast[TorchScriptModel],
+      draft: Broadcast[TorchScriptModel], srcCol: String = null, nSink: Int = -1,
+      nWindow: Int = -1, relPos: Boolean = false, branch: Int = 0): Kv = {
+    val kv = kvPolicy(df, what, Seq(target, draft), srcCol, nSink, nWindow, relPos)
+    require(target.value.outDim == draft.value.outDim, "draft and target must share the vocabulary")
+    require(branch <= target.value.outDim, "branch exceeds the vocabulary")
+    kv
   }
 
   /** The one decode-session opener: a row's session, plain, over the
@@ -1441,22 +1586,13 @@ object Torch {
       draft: Broadcast[TorchScriptModel],
       batchSize: Int = -1,
       srcCol: String = null): DataFrame = {
-    val kv = kvPolicy(df, "speculativeSampled", Seq(target, draft), srcCol)
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
+    val kv = draftPair(df, "speculativeSampled", target, draft, srcCol)
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
     Kernel(df, SpecOut, ints = Seq(inputCol) ++ Option(srcCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def q6(x: Double): Double = Spec.q6(x)
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      // the engine's order-defined renormalized-cumulative pick over
-      // (mass DESC, tid ASC) — exactly the q203 nucleus walk at
-      // topP = 1 (so every positive-mass candidate is kept)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       rows =>
         rows.iterator.map { r =>
           val src = kv.src(r)
@@ -1465,20 +1601,10 @@ object Torch {
           if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
-            val qp = probs6(openSession(dm, kv, p, src).logits())
-            val pp = probs6(openSession(tm, kv, p, src).logits())
-            val dx = pick(qp, draw(id, "d1"))
-            val r6 = q6(math.min(1.0, pp(dx) / qp(dx)))
-            val accepted = draw(id, "a1") < r6
-            val fx =
-              if (accepted) dx
-              else {
-                val resid = Array.tabulate(vocab)(j =>
-                  math.max(0.0, pp(j) - qp(j))) // exact grid differences
-                if (resid.forall(_ == 0.0)) dx // p == q on the grid
-                else pick(resid, draw(id, "r1"))
-              }
-            (dx, accepted, fx)
+            // one draft: the multi-draft level at b = 1
+            val (drafts, acc, tok) = Spec.level(Spec.probs6(openSession(dm, kv, p, src).logits(), vocab),
+              openSession(tm, kv, p, src), 1, vocab, id, 0)
+            (drafts(0), acc == 1, tok)
           }
         }
     }
@@ -1552,9 +1678,7 @@ object Torch {
     require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
     require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
       "watermarkGamma must be a fraction num/den with 0 < num < den")
-    val kv = kvPolicy(df, "speculativeSampledGamma", Seq(target, draft), srcCol)
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
+    val kv = draftPair(df, "speculativeSampledGamma", target, draft, srcCol)
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val (wmNum, wmDen) = watermarkGamma
@@ -1652,10 +1776,7 @@ object Torch {
     // verification forks and roll-forwards stay O(nSink + nWindow)
     // per session. nWindow <= 0 keeps the unbounded sessions
     // (identical arithmetic; spec-pinned).
-    val kv = kvPolicy(df, "speculativeSampledLoop", Seq(target, draft), srcCol,
-      nSink, nWindow, relPos)
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
+    val kv = draftPair(df, "speculativeSampledLoop", target, draft, srcCol, nSink, nWindow, relPos)
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val (wmNum, wmDen) = watermarkGamma
@@ -1671,30 +1792,17 @@ object Torch {
           if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
-            // target/draft @ accepted prefix
-            var st0 = openSession(tm, kv, p, src)
-            var sd0 = openSession(dm, kv, p, src)
-            var lastTok = p(p.length - 1) // the green key for p_1
-            val emitted = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var cycles = 0
-            var accTotal = 0
-            while (emitted.length < maxNewTokens) {
-              cycles += 1
-              // verification runs on forks: rejected drafts never
-              // touch the accepted-prefix sessions
-              val (_, n, cycleOut) = Spec.cycle(sd0.fork(), st0.fork(), lastTok,
-                gamma, vocab, id, cycles, watermarkDelta, wmNum, wmDen)
-              accTotal += n
-              emitted ++= cycleOut
-              lastTok = cycleOut.last
-              if (emitted.length < maxNewTokens) {
-                // roll forward the accepted-prefix sessions: fresh
-                // forks + the emitted tokens only
-                val st1 = st0.fork(); cycleOut.foreach(st1.append); st0 = st1
-                val sd1 = sd0.fork(); cycleOut.foreach(sd1.append); sd0 = sd1
-              }
-            }
-            (emitted.take(maxNewTokens).toSeq, cycles, accTotal)
+            // target/draft @ accepted prefix; each cycle verifies on
+            // forks, so rejected drafts never touch them
+            val st = openSession(tm, kv, p, src)
+            val sd = openSession(dm, kv, p, src)
+            var prev = p(p.length - 1) // the green key for p_1
+            val (out, n) = Spec.serve(maxNewTokens) { c =>
+              val (_, acc, toks) = Spec.cycle(sd.fork(), st.fork(), prev, gamma, vocab, id, c,
+                watermarkDelta, wmNum, wmDen)
+              (acc, toks)
+            } { toks => toks.foreach(st.append); toks.foreach(sd.append); prev = toks.last }
+            (out, n.length, n.sum)
           }
         }
     }
@@ -1739,8 +1847,6 @@ object Torch {
       val em = expert.value
       val am = amateur.value
       val vocab = em.outDim
-      def q6(x: Double): Double =
-        BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
       // (p6 masses, 6dp log-probs) from one logits read
       def dists(lg: Array[Float]): (Array[Double], Array[Double]) = {
         var mx = Double.NegativeInfinity
@@ -1839,8 +1945,6 @@ object Torch {
       val em = expert.value
       val am = amateur.value
       val vocab = em.outDim
-      def q6(x: Double): Double =
-        BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
       def dists(lg: Array[Float]): (Array[Double], Array[Double]) = {
         var mx = Double.NegativeInfinity
         var j = 0
@@ -2070,8 +2174,6 @@ object Torch {
     Kernel(df, fields(outCol -> Ints), ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      def q6(x: Double): Double =
-        BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
       def cos6(a: Array[Float], b: Array[Float]): Double = {
         var dot = 0.0; var na = 0.0; var nb = 0.0
         var j = 0
@@ -2914,21 +3016,9 @@ object Torch {
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
-            val drafts = lookupDraft(
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(p),
-              ngram, maxDraft)
-            val sess = m.decodeSession(p)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var n = 0
-            var rejected = false
-            while (n < drafts.length && !rejected) {
-              val t = argmaxFirst(sess.logits(), vocab)
-              out += t
-              if (t == drafts(n)) { sess.append(t); n += 1 }
-              else rejected = true // the argmax IS the correction
-            }
-            if (!rejected) out += argmaxFirst(sess.logits(), vocab) // bonus
-            (drafts.toSeq, drafts.length, n, out.toSeq)
+            val (drafts, n, out) = Spec.lookupWalk(m.decodeSession(p),
+              scala.collection.immutable.ArraySeq.unsafeWrapArray(p), ngram, maxDraft, vocab)
+            (drafts.toSeq, drafts.length, n, out)
           }
         }
     }
@@ -2963,10 +3053,7 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(numDrafts >= 1, "numDrafts must be >= 1")
     require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-    requireTokenDecoder(target, "speculativeSampledMultiDraftLoop")
-    requireTokenDecoder(draft, "speculativeSampledMultiDraftLoop")
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
+    val kv = draftPair(df, "speculativeSampledMultiDraftLoop", target, draft)
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
     Kernel(df, fields("out_toks" -> Ints, "acc_rounds" -> Ints),
@@ -2974,36 +3061,19 @@ object Torch {
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def q6(x: Double): Double = Spec.q6(x)
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
-            val st = tm.decodeSession(p)
-            val sd = dm.decodeSession(p)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-            val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var c = 0
-            while (c < maxNewTokens) {
-              val off = c * numDrafts
-              val qp = probs6(sd.logits())
-              val pp = probs6(st.logits())
-              val drafts = Array.tabulate(numDrafts)(i =>
-                pick(qp, draw(id, s"d${off + i + 1}")))
-              val (accRound, finalTok) =
-                Spec.multiRoundWalk(drafts, qp, pp, vocab, id, off)
-              out += finalTok
-              rounds += accRound
-              st.append(finalTok)
-              sd.append(finalTok)
-              c += 1
-            }
-            (out.toSeq, rounds.toSeq)
+            val st = openSession(tm, kv, p, null)
+            val sd = openSession(dm, kv, p, null)
+            Spec.serve(maxNewTokens) { c =>
+              val (_, acc, tok) = Spec.level(Spec.probs6(sd.logits(), vocab), st, numDrafts,
+                vocab, id, (c - 1) * numDrafts)
+              (acc, Seq(tok))
+            } { toks => sd.append(toks.last); st.append(toks.last) }
           }
         }
     }
@@ -3046,42 +3116,15 @@ object Torch {
     Kernel(df, LookupOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      def q6(x: Double): Double = Spec.q6(x)
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
-            val drafts = lookupDraft(
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(p),
-              ngram, maxDraft)
-            val sess = m.decodeSession(p)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var n = 0
-            var rejected = false
-            while (n < drafts.length && !rejected) {
-              val x = drafts(n)
-              val pp = probs6(sess.logits())
-              // point-mass draft: min(1, p(x)/1) = p(x), already on
-              // the grid
-              if (draw(id, s"a${n + 1}") < pp(x)) {
-                out += x; sess.append(x); n += 1
-              } else {
-                // residual max(0, p − δ_x) ∝ p with x zeroed
-                val mres = pp.clone()
-                mres(x) = 0.0
-                out += (if (mres.forall(_ == 0.0)) x
-                        else pick(mres, draw(id, s"r${n + 1}")))
-                rejected = true
-              }
-            }
-            if (!rejected) // no drafts, or all accepted → bonus sample
-              out += pick(probs6(sess.logits()), draw(id, "b1"))
-            (drafts.toSeq, drafts.length, n, out.toSeq)
+            val (drafts, n, out) = Spec.lookupSampledWalk(m.decodeSession(p),
+              scala.collection.immutable.ArraySeq.unsafeWrapArray(p), ngram, maxDraft, vocab, id)
+            (drafts.toSeq, drafts.length, n, out)
           }
         }
     }
@@ -3133,46 +3176,19 @@ object Torch {
     require(posteriorEps > 0.0 && posteriorEps <= 1.0,
       "posteriorEps must be in (0, 1]")
     require(posteriorAlpha > 0.0, "posteriorAlpha must be > 0")
-    requireTokenDecoder(target, "treeDraftTypical")
-    requireTokenDecoder(draft, "treeDraftTypical")
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
-    require(branch <= target.value.outDim, "branch exceeds the vocabulary")
+    val kv = draftPair(df, "treeDraftTypical", target, draft, branch = branch)
     val inIdx = df.schema.fieldIndex(inputCol)
     Kernel(df, TreeOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
+      val rule = Spec.typical(vocab, posteriorEps, posteriorAlpha)
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
-          else {
-            val (tree, childrenOf) = Spec.draftTree(dm.decodeSession(p), vocab, branch, depth)
-            // typical walk: accepted = children clearing the
-            // entropy-scaled threshold; descend the max-p6 accepted
-            // (tid tiebreak); stop at the first empty level
-            val st = tm.decodeSession(p)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var path = Vector.empty[Int]
-            var n = 0
-            var stopped = false
-            while (n < depth && !stopped) {
-              val pp = Spec.probs6(st.logits(), vocab)
-              val thr = Spec.threshold6(pp, posteriorEps, posteriorAlpha)
-              val acc = childrenOf(path).filter(c => pp(c) >= thr)
-              if (acc.isEmpty) stopped = true
-              else {
-                val c = acc.minBy(x => (-pp(x), x))
-                out += c
-                st.append(c)
-                path :+= c
-                n += 1
-              }
-            }
-            out += argmaxFirst(st.logits(), vocab) // the deterministic continuation
-            (tree, n, out.toSeq)
-          }
+          else Spec.treeWalk(openSession(dm, kv, p, null), openSession(tm, kv, p, null),
+            branch, depth, vocab, rule)
         }
     }
   }
@@ -3219,54 +3235,26 @@ object Torch {
     // (and tree forks) evict; an attention-free early-exit draft has
     // no k/v state, so its windowed sessions are identical by
     // construction. nWindow <= 0 keeps the unbounded sessions.
-    val kv = kvPolicy(df, "treeDraftTypicalLoop", Seq(target, draft), null, nSink, nWindow)
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
-    require(branch <= target.value.outDim, "branch exceeds the vocabulary")
+    val kv = draftPair(df, "treeDraftTypicalLoop", target, draft, null, nSink, nWindow,
+      branch = branch)
     val inIdx = df.schema.fieldIndex(inputCol)
     Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
+      val rule = Spec.typical(vocab, posteriorEps, posteriorAlpha)
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
             val st = openSession(tm, kv, p, null)
-            var sd = openSession(dm, kv, p, null)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var cycles = 0
-            var accTotal = 0
-            while (out.length < maxNewTokens) {
-              cycles += 1
-              // this cycle's tree on forks of the draft session
-              val childrenOf = Spec.draftTree(sd, vocab, branch, depth)._2
-              // the typical walk; emitted tokens extend BOTH sessions
-              def emit(t: Int): Unit = {
-                out += t
-                st.append(t)
-                val nd = sd.fork(); nd.append(t); sd = nd
-              }
-              var path = Vector.empty[Int]
-              var n = 0
-              var stopped = false
-              while (n < depth && !stopped) {
-                val pp = Spec.probs6(st.logits(), vocab)
-                val thr = Spec.threshold6(pp, posteriorEps, posteriorAlpha)
-                val acc = childrenOf(path).filter(c => pp(c) >= thr)
-                if (acc.isEmpty) stopped = true
-                else {
-                  val c = acc.minBy(x => (-pp(x), x))
-                  emit(c)
-                  path :+= c
-                  n += 1
-                  accTotal += 1
-                }
-              }
-              emit(argmaxFirst(st.logits(), vocab)) // the argmax continuation
-            }
-            (out.take(maxNewTokens).toSeq, cycles, accTotal)
+            val sd = openSession(dm, kv, p, null)
+            val (out, n) = Spec.serve(maxNewTokens) { _ =>
+              val (_, acc, toks) = Spec.treeWalk(sd, st, branch, depth, vocab, rule)
+              (acc, toks)
+            } { toks => st.append(toks.last); toks.foreach(sd.append) }
+            (out, n.length, n.sum)
           }
         }
     }
@@ -3314,53 +3302,29 @@ object Torch {
     // (identical arithmetic; spec-pinned). relPos (q304) switches
     // them to the re-rotation dial — the tree loop runs past the
     // models' bias-table length.
-    val kv = kvPolicy(df, "treeDraftGreedyLoop", Seq(target, draft), null,
-      nSink, nWindow, relPos)
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
-    require(branch <= target.value.outDim, "branch exceeds the vocabulary")
+    val kv = draftPair(df, "treeDraftGreedyLoop", target, draft, null, nSink, nWindow, relPos,
+      branch)
     val inIdx = df.schema.fieldIndex(inputCol)
     Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
+      val rule = Spec.exact(vocab)
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
             // the DRAFT session tracks the accepted prefix too — each
-            // cycle's tree roots at a fork of it (O(L) copy), so
-            // neither model ever replays the prompt
+            // cycle's tree roots at it, so neither model ever replays
+            // the prompt
             val st = openSession(tm, kv, p, null)
-            var sd = openSession(dm, kv, p, null)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var cycles = 0
-            var accTotal = 0
-            while (out.length < maxNewTokens) {
-              cycles += 1
-              // build this cycle's tree on forks of the draft session
-              val childrenOf = Spec.draftTree(sd, vocab, branch, depth)._2
-              // greedy verify; every emitted token extends BOTH
-              // accepted-prefix sessions
-              var path = Vector.empty[Int]
-              var n = 0
-              var rejected = false
-              def emit(t: Int): Unit = {
-                out += t
-                st.append(t)
-                val nd = sd.fork(); nd.append(t); sd = nd
-              }
-              while (n < depth && !rejected) {
-                val t = argmaxFirst(st.logits(), vocab)
-                emit(t)
-                if (childrenOf(path).contains(t)) {
-                  path :+= t; n += 1; accTotal += 1
-                } else rejected = true
-              }
-              if (!rejected) emit(argmaxFirst(st.logits(), vocab)) // bonus
-            }
-            (out.take(maxNewTokens).toSeq, cycles, accTotal)
+            val sd = openSession(dm, kv, p, null)
+            val (out, n) = Spec.serve(maxNewTokens) { _ =>
+              val (_, acc, toks) = Spec.treeWalk(sd, st, branch, depth, vocab, rule)
+              (acc, toks)
+            } { toks => st.append(toks.last); toks.foreach(sd.append) }
+            (out, n.length, n.sum)
           }
         }
     }
@@ -3408,10 +3372,7 @@ object Torch {
       numDrafts: Int,
       batchSize: Int = -1): DataFrame = {
     require(numDrafts >= 1, "numDrafts must be >= 1")
-    requireTokenDecoder(target, "speculativeSampledMultiDraft")
-    requireTokenDecoder(draft, "speculativeSampledMultiDraft")
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
+    val kv = draftPair(df, "speculativeSampledMultiDraft", target, draft)
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
     Kernel(df, fields("draft_toks" -> Ints, "acc_round" -> IntegerType, "final_tok" -> IntegerType),
@@ -3419,25 +3380,15 @@ object Torch {
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-      // residual/normalization discipline lives in Spec.multiRoundWalk
-      // (normalize ONLY where a later round's ratio needs it; the
-      // final pick walks the RAW masses — numDrafts = 1 IS q247)
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
-            val qp = probs6(dm.decodeSession(p).logits())
-            val pp = probs6(tm.decodeSession(p).logits())
-            val drafts = Array.tabulate(numDrafts)(i =>
-              pick(qp, draw(id, s"d${i + 1}")))
-            val (accRound, finalTok) =
-              Spec.multiRoundWalk(drafts, qp, pp, vocab, id, 0)
-            (drafts.toSeq, accRound, finalTok)
+            val (drafts, acc, tok) = Spec.level(Spec.probs6(openSession(dm, kv, p, null).logits(), vocab),
+              openSession(tm, kv, p, null), numDrafts, vocab, id, 0)
+            (drafts.toSeq, acc, tok)
           }
         }
     }
@@ -3497,10 +3448,7 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(branch >= 1, "branch must be >= 1")
     require(depth >= 1, "depth must be >= 1")
-    requireTokenDecoder(target, "treeDraftStochastic")
-    requireTokenDecoder(draft, "treeDraftStochastic")
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
+    val kv = draftPair(df, "treeDraftStochastic", target, draft)
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
     Kernel(df, fields("tree" -> ArrayType(Ints), "acc_rounds" -> Ints, "n_accepted" -> IntegerType,
@@ -3509,40 +3457,15 @@ object Torch {
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
           else {
             val id = r.getAs[Number](idIdx).longValue()
-            val sd = dm.decodeSession(p)
-            val st = tm.decodeSession(p)
-            val tree = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
-            val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
-            val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var level = 1
-            var stopped = false
-            while (level <= depth && !stopped) {
-              val off = (level - 1) * branch
-              val qp = probs6(sd.logits())
-              val pp = probs6(st.logits())
-              val drafts = Array.tabulate(branch)(i =>
-                pick(qp, draw(id, s"d${off + i + 1}")))
-              tree += drafts.toSeq
-              val (accRound, finalTok) =
-                Spec.multiRoundWalk(drafts, qp, pp, vocab, id, off)
-              rounds += accRound
-              out += finalTok
-              if (accRound == 0) stopped = true
-              else { sd.append(finalTok); st.append(finalTok) }
-              level += 1
-            }
-            if (!stopped) out += pick(probs6(st.logits()), draw(id, "b1"))
-            val nAcc = rounds.count(_ > 0)
-            (tree.toSeq, rounds.toSeq, nAcc, out.toSeq)
+            val (tree, rounds, out) = Spec.treeSampledWalk(openSession(dm, kv, p, null),
+              openSession(tm, kv, p, null), branch, depth, vocab, id, 1)
+            (tree, rounds, rounds.count(_ > 0), out)
           }
         }
     }
@@ -3592,18 +3515,13 @@ object Torch {
     // composes with the tree exactly as with the greedy rollout.
     // nWindow <= 0 keeps the unbounded sessions (identical
     // arithmetic; spec-pinned).
-    val kv = kvPolicy(df, "treeDraftStochasticLoop", Seq(target, draft), null, nSink, nWindow)
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
+    val kv = draftPair(df, "treeDraftStochasticLoop", target, draft, null, nSink, nWindow)
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
     Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
-      def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-      def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-      def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
@@ -3612,35 +3530,11 @@ object Torch {
             val id = r.getAs[Number](idIdx).longValue()
             val sd = openSession(dm, kv, p, null)
             val st = openSession(tm, kv, p, null)
-            val emitted = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var cycles = 0
-            var accTotal = 0
-            while (emitted.length < maxNewTokens) {
-              cycles += 1
-              var level = 1
-              var stopped = false
-              while (level <= depth && !stopped) {
-                val off = ((cycles - 1) * depth + (level - 1)) * branch
-                val qp = probs6(sd.logits())
-                val pp = probs6(st.logits())
-                val drafts = Array.tabulate(branch)(i =>
-                  pick(qp, draw(id, s"d${off + i + 1}")))
-                val (accRound, finalTok) =
-                  Spec.multiRoundWalk(drafts, qp, pp, vocab, id, off)
-                emitted += finalTok
-                sd.append(finalTok)
-                st.append(finalTok)
-                if (accRound == 0) stopped = true
-                else { accTotal += 1; level += 1 }
-              }
-              if (!stopped) {
-                val bonus = pick(probs6(st.logits()), draw(id, s"b$cycles"))
-                emitted += bonus
-                sd.append(bonus)
-                st.append(bonus)
-              }
-            }
-            (emitted.take(maxNewTokens).toSeq, cycles, accTotal)
+            val (out, n) = Spec.serve(maxNewTokens) { c =>
+              val (_, rounds, toks) = Spec.treeSampledWalk(sd, st, branch, depth, vocab, id, c)
+              (rounds.count(_ > 0), toks)
+            } { toks => sd.append(toks.last); st.append(toks.last) }
+            (out, n.length, n.sum)
           }
         }
     }
@@ -3835,26 +3729,11 @@ object Torch {
           else {
             val sess = openSession(m, kv, p, null)
             val full = scala.collection.mutable.ArrayBuffer.from(p)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var cycles = 0
-            var accTotal = 0
-            while (out.length < maxNewTokens) {
-              cycles += 1
-              val drafts = lookupDraft(full, ngram, maxDraft)
-              var n = 0
-              var rejected = false
-              while (n < drafts.length && !rejected) {
-                val t = argmaxFirst(sess.logits(), vocab)
-                out += t; sess.append(t); full += t
-                if (t == drafts(n)) { n += 1; accTotal += 1 }
-                else rejected = true // the argmax IS the correction
-              }
-              if (!rejected) { // no drafts, or all accepted → bonus
-                val t = argmaxFirst(sess.logits(), vocab)
-                out += t; sess.append(t); full += t
-              }
-            }
-            (out.take(maxNewTokens).toSeq, cycles, accTotal)
+            val (out, n) = Spec.serve(maxNewTokens) { _ =>
+              val (_, acc, toks) = Spec.lookupWalk(sess, full, ngram, maxDraft, vocab)
+              (acc, toks)
+            } { toks => sess.append(toks.last); full ++= toks }
+            (out, n.length, n.sum)
           }
         }
     }
@@ -3911,39 +3790,859 @@ object Torch {
       batchSize: Int = -1): DataFrame = {
     require(branch >= 1, "branch must be >= 1")
     require(depth >= 1, "depth must be >= 1")
-    requireTokenDecoder(target, "treeDraftGreedy")
-    requireTokenDecoder(draft, "treeDraftGreedy")
-    require(target.value.outDim == draft.value.outDim,
-      "draft and target must share the vocabulary")
-    require(branch <= target.value.outDim, "branch exceeds the vocabulary")
+    val kv = draftPair(df, "treeDraftGreedy", target, draft, branch = branch)
     val inIdx = df.schema.fieldIndex(inputCol)
     Kernel(df, TreeOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
       val tm = target.value
       val dm = draft.value
       val vocab = tm.outDim
+      val rule = Spec.exact(vocab)
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
           if (p == null) null
-          else {
-            val (tree, childrenOf) = Spec.draftTree(dm.decodeSession(p), vocab, branch, depth)
-            // greedy verify along the (unique) target path
-            val st = tm.decodeSession(p)
-            val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-            var path = Vector.empty[Int]
-            var n = 0
-            var rejected = false
-            while (n < depth && !rejected) {
-              val t = argmaxFirst(st.logits(), vocab)
-              out += t
-              if (childrenOf(path).contains(t)) {
-                st.append(t); path :+= t; n += 1
-              } else rejected = true // the argmax IS the correction
-            }
-            if (!rejected) out += argmaxFirst(st.logits(), vocab) // bonus
-            (tree, n, out.toSeq)
-          }
+          else Spec.treeWalk(openSession(dm, kv, p, null), openSession(tm, kv, p, null),
+            branch, depth, vocab, rule)
         }
+    }
+  }
+
+  /** The previous speculative bodies, kept beside their rewrites for
+    * the `ProbeWalks` A/B; deleted once it shows them identical. */
+  private[graft] object Old {
+    /** The previous hex-string read of MD5's leading 32 bits, beside the byte read. */
+    def lead32(key: String): (Long, Long) = {
+      val md = java.security.MessageDigest.getInstance("MD5").digest(key.getBytes("UTF-8"))
+      val hex = md.take(4).map(b => f"$b%02x").mkString
+      (java.lang.Long.parseLong(hex, 16), md5Lead32(key))
+    }
+    def speculativeSampled(
+        df: DataFrame,
+        idCol: String,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        batchSize: Int = -1,
+        srcCol: String = null): DataFrame = {
+      val kv = kvPolicy(df, "speculativeSampled", Seq(target, draft), srcCol)
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      val idIdx = df.schema.fieldIndex(idCol)
+      Kernel(df, SpecOut, ints = Seq(inputCol) ++ Option(srcCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+          def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
+        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
+        // the engine's order-defined renormalized-cumulative pick over
+        // (mass DESC, tid ASC) — exactly the q203 nucleus walk at
+        // topP = 1 (so every positive-mass candidate is kept)
+        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
+        rows =>
+          rows.iterator.map { r =>
+            val src = kv.src(r)
+            val p: Array[Int] =
+              if (r.isNullAt(idIdx) || !kv.hasSrc(src)) null else Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val id = r.getAs[Number](idIdx).longValue()
+              val qp = probs6(openSession(dm, kv, p, src).logits())
+              val pp = probs6(openSession(tm, kv, p, src).logits())
+              val dx = pick(qp, draw(id, "d1"))
+              val r6 = q6(math.min(1.0, pp(dx) / qp(dx)))
+              val accepted = draw(id, "a1") < r6
+              val fx =
+                if (accepted) dx
+                else {
+                  val resid = Array.tabulate(vocab)(j =>
+                    math.max(0.0, pp(j) - qp(j))) // exact grid differences
+                  if (resid.forall(_ == 0.0)) dx // p == q on the grid
+                  else pick(resid, draw(id, "r1"))
+                }
+              (dx, accepted, fx)
+            }
+          }
+      }
+    }
+
+    def speculativeSampledGamma(
+        df: DataFrame,
+        idCol: String,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        gamma: Int,
+        batchSize: Int = -1,
+        watermarkDelta: Double = 0.0,
+        watermarkGamma: (Int, Int) = (1, 2),
+        srcCol: String = null): DataFrame = {
+      require(gamma >= 1, "gamma must be >= 1")
+      // WATERMARK × SPECULATIVE (Kirchenbauer 2023 × Leviathan 2023):
+      // the green-list bias +delta lands on the TARGET's raw logits
+      // before each of its gamma+1 prefix softmaxes (green membership
+      // keyed on the prefix's last token — prompt tail for p_1, draft
+      // i for p_{i+1}; q239's deployment order). The acceptance/
+      // residual rule preserves WHATEVER target distribution it is
+      // given, so the emitted tokens are provably watermarked-target
+      // distributed while the (watermark-oblivious) draft stays
+      // unbiased — exactly the deployment where a serving stack both
+      // watermarks and draft-accelerates. delta = 0 keeps the
+      // unwatermarked code path bit-exactly (guarded branch;
+      // spec-pinned).
+      require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
+      require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
+        "watermarkGamma must be a fraction num/den with 0 < num < den")
+      val kv = kvPolicy(df, "speculativeSampledGamma", Seq(target, draft), srcCol)
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      val idIdx = df.schema.fieldIndex(idCol)
+      val (wmNum, wmDen) = watermarkGamma
+      Kernel(df, GammaOut, ints = Seq(inputCol) ++ Option(srcCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+        rows =>
+          rows.iterator.map { r =>
+            val src = kv.src(r)
+            val p: Array[Int] =
+              if (r.isNullAt(idIdx) || !kv.hasSrc(src)) null else Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val id = r.getAs[Number](idIdx).longValue()
+              val (drafts, n, out) = Spec.cycle(openSession(dm, kv, p, src),
+                openSession(tm, kv, p, src), p(p.length - 1), gamma, vocab, id, 1,
+                watermarkDelta, wmNum, wmDen)
+              (drafts.toSeq, n, out)
+            }
+          }
+      }
+    }
+
+    def speculativeSampledLoop(
+        df: DataFrame,
+        idCol: String,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        gamma: Int,
+        maxNewTokens: Int,
+        batchSize: Int = -1,
+        watermarkDelta: Double = 0.0,
+        watermarkGamma: (Int, Int) = (1, 2),
+        nSink: Int = -1,
+        nWindow: Int = -1,
+        relPos: Boolean = false,
+        srcCol: String = null): DataFrame = {
+      require(gamma >= 1, "gamma must be >= 1")
+      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
+      // WATERMARK × SPECULATIVE SERVING (q285): the green bias rides the
+      // TARGET's prefix softmaxes across EVERY cycle — the q281 cell
+      // cycled, so a serving stack watermarks AND draft-accelerates AND
+      // rolls its KV forward. delta = 0 keeps the unwatermarked path
+      // bit-exactly (guarded; spec-pinned), cycle 1 replays the q281
+      // cell's draws.
+      require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
+      require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
+        "watermarkGamma must be a fraction num/den with 0 < num < den")
+      // BOUNDED-KV SERVING (q284, the StreamingLLM deployment; q293 over
+      // cross models; q296 re-rotated): both models' sessions evict to
+      // nSink sinks + an nWindow window — forks inherit the knobs, so
+      // verification forks and roll-forwards stay O(nSink + nWindow)
+      // per session. nWindow <= 0 keeps the unbounded sessions
+      // (identical arithmetic; spec-pinned).
+      val kv = kvPolicy(df, "speculativeSampledLoop", Seq(target, draft), srcCol,
+        nSink, nWindow, relPos)
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      val idIdx = df.schema.fieldIndex(idCol)
+      val (wmNum, wmDen) = watermarkGamma
+      Kernel(df, LoopOut, ints = Seq(inputCol) ++ Option(srcCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+        rows =>
+          rows.iterator.map { r =>
+            val src = kv.src(r)
+            val p: Array[Int] =
+              if (r.isNullAt(idIdx) || !kv.hasSrc(src)) null else Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val id = r.getAs[Number](idIdx).longValue()
+              // target/draft @ accepted prefix
+              var st0 = openSession(tm, kv, p, src)
+              var sd0 = openSession(dm, kv, p, src)
+              var lastTok = p(p.length - 1) // the green key for p_1
+              val emitted = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var cycles = 0
+              var accTotal = 0
+              while (emitted.length < maxNewTokens) {
+                cycles += 1
+                // verification runs on forks: rejected drafts never
+                // touch the accepted-prefix sessions
+                val (_, n, cycleOut) = Spec.cycle(sd0.fork(), st0.fork(), lastTok,
+                  gamma, vocab, id, cycles, watermarkDelta, wmNum, wmDen)
+                accTotal += n
+                emitted ++= cycleOut
+                lastTok = cycleOut.last
+                if (emitted.length < maxNewTokens) {
+                  // roll forward the accepted-prefix sessions: fresh
+                  // forks + the emitted tokens only
+                  val st1 = st0.fork(); cycleOut.foreach(st1.append); st0 = st1
+                  val sd1 = sd0.fork(); cycleOut.foreach(sd1.append); sd0 = sd1
+                }
+              }
+              (emitted.take(maxNewTokens).toSeq, cycles, accTotal)
+            }
+          }
+      }
+    }
+
+    def generatePromptLookup(
+        df: DataFrame,
+        inputCol: String,
+        model: Broadcast[TorchScriptModel],
+        ngram: Int,
+        maxDraft: Int,
+        batchSize: Int = -1): DataFrame = {
+      require(ngram >= 1, "ngram must be >= 1")
+      require(maxDraft >= 1, "maxDraft must be >= 1")
+      requireTokenDecoder(model, "generatePromptLookup")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      Kernel(df, LookupOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val m = model.value
+        val vocab = m.outDim
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val drafts = lookupDraft(
+                scala.collection.immutable.ArraySeq.unsafeWrapArray(p),
+                ngram, maxDraft)
+              val sess = m.decodeSession(p)
+              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var n = 0
+              var rejected = false
+              while (n < drafts.length && !rejected) {
+                val t = argmaxFirst(sess.logits(), vocab)
+                out += t
+                if (t == drafts(n)) { sess.append(t); n += 1 }
+                else rejected = true // the argmax IS the correction
+              }
+              if (!rejected) out += argmaxFirst(sess.logits(), vocab) // bonus
+              (drafts.toSeq, drafts.length, n, out.toSeq)
+            }
+          }
+      }
+    }
+
+    def speculativeSampledMultiDraftLoop(
+        df: DataFrame,
+        idCol: String,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        numDrafts: Int,
+        maxNewTokens: Int,
+        batchSize: Int = -1): DataFrame = {
+      require(numDrafts >= 1, "numDrafts must be >= 1")
+      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
+      requireTokenDecoder(target, "speculativeSampledMultiDraftLoop")
+      requireTokenDecoder(draft, "speculativeSampledMultiDraftLoop")
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      val idIdx = df.schema.fieldIndex(idCol)
+      Kernel(df, fields("out_toks" -> Ints, "acc_rounds" -> Ints),
+          ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+          def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
+        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
+        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val id = r.getAs[Number](idIdx).longValue()
+              val st = tm.decodeSession(p)
+              val sd = dm.decodeSession(p)
+              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+              val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var c = 0
+              while (c < maxNewTokens) {
+                val off = c * numDrafts
+                val qp = probs6(sd.logits())
+                val pp = probs6(st.logits())
+                val drafts = Array.tabulate(numDrafts)(i =>
+                  pick(qp, draw(id, s"d${off + i + 1}")))
+                val (accRound, finalTok) =
+                  Spec.multiRoundWalk(drafts, qp, pp, vocab, id, off)
+                out += finalTok
+                rounds += accRound
+                st.append(finalTok)
+                sd.append(finalTok)
+                c += 1
+              }
+              (out.toSeq, rounds.toSeq)
+            }
+          }
+      }
+    }
+
+    def promptLookupSampled(
+        df: DataFrame,
+        idCol: String,
+        inputCol: String,
+        model: Broadcast[TorchScriptModel],
+        ngram: Int,
+        maxDraft: Int,
+        batchSize: Int = -1): DataFrame = {
+      require(ngram >= 1, "ngram must be >= 1")
+      require(maxDraft >= 1, "maxDraft must be >= 1")
+      requireTokenDecoder(model, "promptLookupSampled")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      val idIdx = df.schema.fieldIndex(idCol)
+      Kernel(df, LookupOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val m = model.value
+        val vocab = m.outDim
+          def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
+        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
+        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val id = r.getAs[Number](idIdx).longValue()
+              val drafts = lookupDraft(
+                scala.collection.immutable.ArraySeq.unsafeWrapArray(p),
+                ngram, maxDraft)
+              val sess = m.decodeSession(p)
+              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var n = 0
+              var rejected = false
+              while (n < drafts.length && !rejected) {
+                val x = drafts(n)
+                val pp = probs6(sess.logits())
+                // point-mass draft: min(1, p(x)/1) = p(x), already on
+                // the grid
+                if (draw(id, s"a${n + 1}") < pp(x)) {
+                  out += x; sess.append(x); n += 1
+                } else {
+                  // residual max(0, p − δ_x) ∝ p with x zeroed
+                  val mres = pp.clone()
+                  mres(x) = 0.0
+                  out += (if (mres.forall(_ == 0.0)) x
+                          else pick(mres, draw(id, s"r${n + 1}")))
+                  rejected = true
+                }
+              }
+              if (!rejected) // no drafts, or all accepted → bonus sample
+                out += pick(probs6(sess.logits()), draw(id, "b1"))
+              (drafts.toSeq, drafts.length, n, out.toSeq)
+            }
+          }
+      }
+    }
+
+    def treeDraftTypical(
+        df: DataFrame,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        branch: Int,
+        depth: Int,
+        posteriorEps: Double,
+        posteriorAlpha: Double,
+        batchSize: Int = -1): DataFrame = {
+      require(branch >= 1, "branch must be >= 1")
+      require(depth >= 1, "depth must be >= 1")
+      require(posteriorEps > 0.0 && posteriorEps <= 1.0,
+        "posteriorEps must be in (0, 1]")
+      require(posteriorAlpha > 0.0, "posteriorAlpha must be > 0")
+      requireTokenDecoder(target, "treeDraftTypical")
+      requireTokenDecoder(draft, "treeDraftTypical")
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      require(branch <= target.value.outDim, "branch exceeds the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      Kernel(df, TreeOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val (tree, childrenOf) = Spec.draftTree(dm.decodeSession(p), vocab, branch, depth)
+              // typical walk: accepted = children clearing the
+              // entropy-scaled threshold; descend the max-p6 accepted
+              // (tid tiebreak); stop at the first empty level
+              val st = tm.decodeSession(p)
+              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var path = Vector.empty[Int]
+              var n = 0
+              var stopped = false
+              while (n < depth && !stopped) {
+                val pp = Spec.probs6(st.logits(), vocab)
+                val thr = Spec.threshold6(pp, posteriorEps, posteriorAlpha)
+                val acc = childrenOf(path).filter(c => pp(c) >= thr)
+                if (acc.isEmpty) stopped = true
+                else {
+                  val c = acc.minBy(x => (-pp(x), x))
+                  out += c
+                  st.append(c)
+                  path :+= c
+                  n += 1
+                }
+              }
+              out += argmaxFirst(st.logits(), vocab) // the deterministic continuation
+              (tree, n, out.toSeq)
+            }
+          }
+      }
+    }
+
+    def treeDraftTypicalLoop(
+        df: DataFrame,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        branch: Int,
+        depth: Int,
+        posteriorEps: Double,
+        posteriorAlpha: Double,
+        maxNewTokens: Int,
+        batchSize: Int = -1,
+        nSink: Int = -1,
+        nWindow: Int = -1): DataFrame = {
+      require(branch >= 1, "branch must be >= 1")
+      require(depth >= 1, "depth must be >= 1")
+      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
+      require(posteriorEps > 0.0 && posteriorEps <= 1.0,
+        "posteriorEps must be in (0, 1]")
+      require(posteriorAlpha > 0.0, "posteriorAlpha must be > 0")
+      // BOUNDED-KV typical-tree serving (q302): the target sessions
+      // (and tree forks) evict; an attention-free early-exit draft has
+      // no k/v state, so its windowed sessions are identical by
+      // construction. nWindow <= 0 keeps the unbounded sessions.
+      val kv = kvPolicy(df, "treeDraftTypicalLoop", Seq(target, draft), null, nSink, nWindow)
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      require(branch <= target.value.outDim, "branch exceeds the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val st = openSession(tm, kv, p, null)
+              var sd = openSession(dm, kv, p, null)
+              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var cycles = 0
+              var accTotal = 0
+              while (out.length < maxNewTokens) {
+                cycles += 1
+                // this cycle's tree on forks of the draft session
+                val childrenOf = Spec.draftTree(sd, vocab, branch, depth)._2
+                // the typical walk; emitted tokens extend BOTH sessions
+                def emit(t: Int): Unit = {
+                  out += t
+                  st.append(t)
+                  val nd = sd.fork(); nd.append(t); sd = nd
+                }
+                var path = Vector.empty[Int]
+                var n = 0
+                var stopped = false
+                while (n < depth && !stopped) {
+                  val pp = Spec.probs6(st.logits(), vocab)
+                  val thr = Spec.threshold6(pp, posteriorEps, posteriorAlpha)
+                  val acc = childrenOf(path).filter(c => pp(c) >= thr)
+                  if (acc.isEmpty) stopped = true
+                  else {
+                    val c = acc.minBy(x => (-pp(x), x))
+                    emit(c)
+                    path :+= c
+                    n += 1
+                    accTotal += 1
+                  }
+                }
+                emit(argmaxFirst(st.logits(), vocab)) // the argmax continuation
+              }
+              (out.take(maxNewTokens).toSeq, cycles, accTotal)
+            }
+          }
+      }
+    }
+
+    def treeDraftGreedyLoop(
+        df: DataFrame,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        branch: Int,
+        depth: Int,
+        maxNewTokens: Int,
+        batchSize: Int = -1,
+        nSink: Int = -1,
+        nWindow: Int = -1,
+        relPos: Boolean = false): DataFrame = {
+      require(branch >= 1, "branch must be >= 1")
+      require(depth >= 1, "depth must be >= 1")
+      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
+      // BOUNDED-KV tree serving (q301): both accepted-prefix sessions
+      // (and every tree-node fork rooted at them) evict to nSink sinks
+      // + an nWindow window. nWindow <= 0 keeps the unbounded sessions
+      // (identical arithmetic; spec-pinned). relPos (q304) switches
+      // them to the re-rotation dial — the tree loop runs past the
+      // models' bias-table length.
+      val kv = kvPolicy(df, "treeDraftGreedyLoop", Seq(target, draft), null,
+        nSink, nWindow, relPos)
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      require(branch <= target.value.outDim, "branch exceeds the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              // the DRAFT session tracks the accepted prefix too — each
+              // cycle's tree roots at a fork of it (O(L) copy), so
+              // neither model ever replays the prompt
+              val st = openSession(tm, kv, p, null)
+              var sd = openSession(dm, kv, p, null)
+              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var cycles = 0
+              var accTotal = 0
+              while (out.length < maxNewTokens) {
+                cycles += 1
+                // build this cycle's tree on forks of the draft session
+                val childrenOf = Spec.draftTree(sd, vocab, branch, depth)._2
+                // greedy verify; every emitted token extends BOTH
+                // accepted-prefix sessions
+                var path = Vector.empty[Int]
+                var n = 0
+                var rejected = false
+                def emit(t: Int): Unit = {
+                  out += t
+                  st.append(t)
+                  val nd = sd.fork(); nd.append(t); sd = nd
+                }
+                while (n < depth && !rejected) {
+                  val t = argmaxFirst(st.logits(), vocab)
+                  emit(t)
+                  if (childrenOf(path).contains(t)) {
+                    path :+= t; n += 1; accTotal += 1
+                  } else rejected = true
+                }
+                if (!rejected) emit(argmaxFirst(st.logits(), vocab)) // bonus
+              }
+              (out.take(maxNewTokens).toSeq, cycles, accTotal)
+            }
+          }
+      }
+    }
+
+    def speculativeSampledMultiDraft(
+        df: DataFrame,
+        idCol: String,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        numDrafts: Int,
+        batchSize: Int = -1): DataFrame = {
+      require(numDrafts >= 1, "numDrafts must be >= 1")
+      requireTokenDecoder(target, "speculativeSampledMultiDraft")
+      requireTokenDecoder(draft, "speculativeSampledMultiDraft")
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      val idIdx = df.schema.fieldIndex(idCol)
+      Kernel(df, fields("draft_toks" -> Ints, "acc_round" -> IntegerType, "final_tok" -> IntegerType),
+          ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+        def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
+        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
+        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
+        // residual/normalization discipline lives in Spec.multiRoundWalk
+        // (normalize ONLY where a later round's ratio needs it; the
+        // final pick walks the RAW masses — numDrafts = 1 IS q247)
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val id = r.getAs[Number](idIdx).longValue()
+              val qp = probs6(dm.decodeSession(p).logits())
+              val pp = probs6(tm.decodeSession(p).logits())
+              val drafts = Array.tabulate(numDrafts)(i =>
+                pick(qp, draw(id, s"d${i + 1}")))
+              val (accRound, finalTok) =
+                Spec.multiRoundWalk(drafts, qp, pp, vocab, id, 0)
+              (drafts.toSeq, accRound, finalTok)
+            }
+          }
+      }
+    }
+
+    def treeDraftStochastic(
+        df: DataFrame,
+        idCol: String,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        branch: Int,
+        depth: Int,
+        batchSize: Int = -1): DataFrame = {
+      require(branch >= 1, "branch must be >= 1")
+      require(depth >= 1, "depth must be >= 1")
+      requireTokenDecoder(target, "treeDraftStochastic")
+      requireTokenDecoder(draft, "treeDraftStochastic")
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      val idIdx = df.schema.fieldIndex(idCol)
+      Kernel(df, fields("tree" -> ArrayType(Ints), "acc_rounds" -> Ints, "n_accepted" -> IntegerType,
+          "out_toks" -> Ints),
+          ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+        def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
+        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
+        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val id = r.getAs[Number](idIdx).longValue()
+              val sd = dm.decodeSession(p)
+              val st = tm.decodeSession(p)
+              val tree = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
+              val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
+              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var level = 1
+              var stopped = false
+              while (level <= depth && !stopped) {
+                val off = (level - 1) * branch
+                val qp = probs6(sd.logits())
+                val pp = probs6(st.logits())
+                val drafts = Array.tabulate(branch)(i =>
+                  pick(qp, draw(id, s"d${off + i + 1}")))
+                tree += drafts.toSeq
+                val (accRound, finalTok) =
+                  Spec.multiRoundWalk(drafts, qp, pp, vocab, id, off)
+                rounds += accRound
+                out += finalTok
+                if (accRound == 0) stopped = true
+                else { sd.append(finalTok); st.append(finalTok) }
+                level += 1
+              }
+              if (!stopped) out += pick(probs6(st.logits()), draw(id, "b1"))
+              val nAcc = rounds.count(_ > 0)
+              (tree.toSeq, rounds.toSeq, nAcc, out.toSeq)
+            }
+          }
+      }
+    }
+
+    def treeDraftStochasticLoop(
+        df: DataFrame,
+        idCol: String,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        branch: Int,
+        depth: Int,
+        maxNewTokens: Int,
+        batchSize: Int = -1,
+        nSink: Int = -1,
+        nWindow: Int = -1): DataFrame = {
+      require(branch >= 1, "branch must be >= 1")
+      require(depth >= 1, "depth must be >= 1")
+      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
+      // BOUNDED-KV tree serving (q299): both rolling sessions evict to
+      // nSink sinks + an nWindow window — the lazy stochastic walk only
+      // ever APPENDS (no forks, no rollback), so the eviction knob
+      // composes with the tree exactly as with the greedy rollout.
+      // nWindow <= 0 keeps the unbounded sessions (identical
+      // arithmetic; spec-pinned).
+      val kv = kvPolicy(df, "treeDraftStochasticLoop", Seq(target, draft), null, nSink, nWindow)
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      val idIdx = df.schema.fieldIndex(idCol)
+      Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+        def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
+        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
+        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val id = r.getAs[Number](idIdx).longValue()
+              val sd = openSession(dm, kv, p, null)
+              val st = openSession(tm, kv, p, null)
+              val emitted = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var cycles = 0
+              var accTotal = 0
+              while (emitted.length < maxNewTokens) {
+                cycles += 1
+                var level = 1
+                var stopped = false
+                while (level <= depth && !stopped) {
+                  val off = ((cycles - 1) * depth + (level - 1)) * branch
+                  val qp = probs6(sd.logits())
+                  val pp = probs6(st.logits())
+                  val drafts = Array.tabulate(branch)(i =>
+                    pick(qp, draw(id, s"d${off + i + 1}")))
+                  val (accRound, finalTok) =
+                    Spec.multiRoundWalk(drafts, qp, pp, vocab, id, off)
+                  emitted += finalTok
+                  sd.append(finalTok)
+                  st.append(finalTok)
+                  if (accRound == 0) stopped = true
+                  else { accTotal += 1; level += 1 }
+                }
+                if (!stopped) {
+                  val bonus = pick(probs6(st.logits()), draw(id, s"b$cycles"))
+                  emitted += bonus
+                  sd.append(bonus)
+                  st.append(bonus)
+                }
+              }
+              (emitted.take(maxNewTokens).toSeq, cycles, accTotal)
+            }
+          }
+      }
+    }
+
+    def generatePromptLookupLoop(
+        df: DataFrame,
+        inputCol: String,
+        model: Broadcast[TorchScriptModel],
+        ngram: Int,
+        maxDraft: Int,
+        maxNewTokens: Int,
+        batchSize: Int = -1,
+        nSink: Int = -1,
+        nWindow: Int = -1,
+        relPos: Boolean = false): DataFrame = {
+      require(ngram >= 1, "ngram must be >= 1")
+      require(maxDraft >= 1, "maxDraft must be >= 1")
+      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
+      // BOUNDED-KV lookup serving (q298): the one rolling target
+      // session evicts to nSink sinks + an nWindow window — the
+      // LOOKUP side stays over the FULL token stream (token ids are
+      // cheap; only k/v state is bounded — the StreamingLLM deployment
+      // keeps the text, evicts the cache), so drafts still come from
+      // anywhere in the sequence while verification runs at
+      // O(nSink + nWindow) state. nWindow <= 0 keeps the unbounded
+      // session (identical arithmetic; spec-pinned).
+      val kv = kvPolicy(df, "generatePromptLookupLoop", Seq(model), null, nSink, nWindow, relPos)
+      val inIdx = df.schema.fieldIndex(inputCol)
+      Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val m = model.value
+        val vocab = m.outDim
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val sess = openSession(m, kv, p, null)
+              val full = scala.collection.mutable.ArrayBuffer.from(p)
+              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var cycles = 0
+              var accTotal = 0
+              while (out.length < maxNewTokens) {
+                cycles += 1
+                val drafts = lookupDraft(full, ngram, maxDraft)
+                var n = 0
+                var rejected = false
+                while (n < drafts.length && !rejected) {
+                  val t = argmaxFirst(sess.logits(), vocab)
+                  out += t; sess.append(t); full += t
+                  if (t == drafts(n)) { n += 1; accTotal += 1 }
+                  else rejected = true // the argmax IS the correction
+                }
+                if (!rejected) { // no drafts, or all accepted → bonus
+                  val t = argmaxFirst(sess.logits(), vocab)
+                  out += t; sess.append(t); full += t
+                }
+              }
+              (out.take(maxNewTokens).toSeq, cycles, accTotal)
+            }
+          }
+      }
+    }
+
+    def treeDraftGreedy(
+        df: DataFrame,
+        inputCol: String,
+        target: Broadcast[TorchScriptModel],
+        draft: Broadcast[TorchScriptModel],
+        branch: Int,
+        depth: Int,
+        batchSize: Int = -1): DataFrame = {
+      require(branch >= 1, "branch must be >= 1")
+      require(depth >= 1, "depth must be >= 1")
+      requireTokenDecoder(target, "treeDraftGreedy")
+      requireTokenDecoder(draft, "treeDraftGreedy")
+      require(target.value.outDim == draft.value.outDim,
+        "draft and target must share the vocabulary")
+      require(branch <= target.value.outDim, "branch exceeds the vocabulary")
+      val inIdx = df.schema.fieldIndex(inputCol)
+      Kernel(df, TreeOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
+        val tm = target.value
+        val dm = draft.value
+        val vocab = tm.outDim
+        rows =>
+          rows.iterator.map { r =>
+            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
+            if (p == null) null
+            else {
+              val (tree, childrenOf) = Spec.draftTree(dm.decodeSession(p), vocab, branch, depth)
+              // greedy verify along the (unique) target path
+              val st = tm.decodeSession(p)
+              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+              var path = Vector.empty[Int]
+              var n = 0
+              var rejected = false
+              while (n < depth && !rejected) {
+                val t = argmaxFirst(st.logits(), vocab)
+                out += t
+                if (childrenOf(path).contains(t)) {
+                  st.append(t); path :+= t; n += 1
+                } else rejected = true // the argmax IS the correction
+              }
+              if (!rejected) out += argmaxFirst(st.logits(), vocab) // bonus
+              (tree, n, out.toSeq)
+            }
+          }
+      }
     }
   }
 }
