@@ -35,6 +35,26 @@ object Torch {
   /** The seeded uniform draw on the 1e-6 grid keyed by `key`. */
   private def unitDraw(key: String): Double = (md5Lead32(key) % 1000000L) / 1e6
 
+  /** (max, Σ exp(x − max)) over `x` in ascending index order: the f64
+    * softmax normaliser of [[logSoftmax]] and [[Spec.grid6]]. */
+  private def expSum(x: Array[Double]): (Double, Double) = {
+    var mx = Double.NegativeInfinity
+    var j = 0
+    while (j < x.length) { if (x(j) > mx) mx = x(j); j += 1 }
+    var z = 0.0
+    j = 0
+    while (j < x.length) { z += math.exp(x(j) - mx); j += 1 }
+    (mx, z)
+  }
+
+  /** The f64 log-softmax of `x` (the beam, contrastive and
+    * continuation scores). */
+  private def logSoftmax(x: Array[Double]): Array[Double] = {
+    val (mx, z) = expSum(x)
+    val lse = math.log(z) + mx
+    x.map(_ - lse)
+  }
+
   /** The deterministic sampling kernel shared by [[generateSampled]]
     * and [[generateSampledK]] — see generateSampled's scaladoc for
     * the full cross-engine contract (seeded md5 draws, 6-dp HALF_UP
@@ -167,31 +187,28 @@ object Torch {
     }
   }
 
-  /** The SPECULATIVE-decoding kernels shared by every spec* method
-    * ([[speculativeSampled]], [[speculativeSampledGamma]],
-    * [[speculativeSampledLoop]], the multi-draft and tree modes) —
-    * hoisted so a fix to the pick walk, the salt format or the draft/
-    * verify cycle lands in ONE place and the gamma=1-replays-q247 /
-    * cycle-1-replays-q249 spec pins cannot silently diverge. Contract (see
-    * speculativeSampled's scaladoc): distributions are full-vocab
-    * softmaxes quantized to the 6dp grid; draws are independent md5
-    * draws keyed `"<id>:spec:<salt>"` on the 1e-6 grid; the pick is
-    * the order-defined renormalized-cumulative walk over
+  /** The SPECULATIVE-decoding core every spec* and tree decoder runs
+    * through: the draft-verify walks (the chain [[cycle]], the
+    * deterministic [[walk]] under an acceptance [[Rule]], the stochastic
+    * [[level]] and [[stochasticWalk]]), the proposers they walk
+    * ([[draftTree]], [[lookupDraft]]) and the one serving driver
+    * [[serve]]. Every cell is cycle 1 of the function its serving loop
+    * runs, so a new mode is a proposer or an acceptance rule, never a
+    * copied loop. Contract (see speculativeSampled's scaladoc):
+    * distributions are full-vocab softmaxes quantized to the 6dp grid;
+    * draws are independent md5 draws keyed `"<id>:spec:<salt>"` on the
+    * 1e-6 grid, salted by global position; the pick is the
+    * order-defined renormalized-cumulative walk over
     * (mass DESC, tid ASC). */
   private object Spec extends Serializable {
+    type Sess = TorchScriptModel#DecodeSession
     def draw(id: Long, salt: String): Double = unitDraw(s"$id:spec:$salt")
-    def probs6(lg: Array[Float], vocab: Int): Array[Double] = {
-      var mx = Double.NegativeInfinity
-      var j = 0
-      while (j < vocab) {
-        val v = lg(j).toDouble
-        if (v > mx) mx = v
-        j += 1
-      }
-      var z = 0.0
-      j = 0
-      while (j < vocab) { z += math.exp(lg(j).toDouble - mx); j += 1 }
-      Array.tabulate(vocab)(k => q6(math.exp(lg(k).toDouble - mx) / z))
+    def probs6(lg: Array[Float], vocab: Int): Array[Double] =
+      grid6(Array.tabulate(vocab)(lg(_).toDouble))
+    /** The f64 softmax of `x`, each mass quantized to the 6dp grid. */
+    def grid6(x: Array[Double]): Array[Double] = {
+      val (mx, z) = expSum(x)
+      x.map(v => q6(math.exp(v - mx) / z))
     }
     /** The order-defined renormalized-cumulative pick over
       * (mass DESC, tid ASC) — exactly the q203 nucleus walk at
@@ -209,12 +226,8 @@ object Torch {
       chosen
     }
     /** The MULTI-ROUND b-way verification walk (SpecInfer's recursive
-      * rejection at ONE position) shared by
-      * [[speculativeSampledMultiDraft]], its serving loop, and the
-      * stochastic tree's per-level verification — hoisted per the
-      * same rationale as the quartet above: a fix to the walk lands
-      * in ONE place, so the cycle-1/branch-1 replay spec pins cannot
-      * silently diverge. Round i accepts draft `x_i` w.p.
+      * rejection at ONE position) of every [[level]] and of each chain
+      * position of [[cycle]] (b = 1). Round i accepts draft `x_i` w.p.
       * `min(1, p_i(x_i)/q(x_i))` (p_1 = the target's grid
       * distribution); a rejection updates `p_{i+1} = q6-normalized
       * max(0, p_i − q)` ONLY when a later round needs the ratio —
@@ -264,22 +277,8 @@ object Torch {
     def probs6W(lg: Array[Float], vocab: Int, prev: Int, delta: Double,
         num: Int, den: Int): Array[Double] =
       if (delta == 0.0) probs6(lg, vocab)
-      else {
-        val bl = new Array[Double](vocab)
-        var mx = Double.NegativeInfinity
-        var j = 0
-        while (j < vocab) {
-          val v = lg(j).toDouble +
-            (if (Sampling.greenToken(prev, j, num, den)) delta else 0.0)
-          bl(j) = v
-          if (v > mx) mx = v
-          j += 1
-        }
-        var z = 0.0
-        j = 0
-        while (j < vocab) { z += math.exp(bl(j) - mx); j += 1 }
-        Array.tabulate(vocab)(k => q6(math.exp(bl(k) - mx) / z))
-      }
+      else grid6(Array.tabulate(vocab)(j =>
+        lg(j).toDouble + (if (Sampling.greenToken(prev, j, num, den)) delta else 0.0)))
     /** One chain draft-verify cycle (Leviathan/Chen 2023): the draft
       * session `sd` samples `gamma` tokens, the target session `st`
       * scores all `gamma + 1` prefixes (one append per draft; the
@@ -294,8 +293,7 @@ object Torch {
       *
       * @return (the drafts, the accepted count, the emitted tokens:
       *         the accepted run + correction-or-bonus) */
-    def cycle(sd: TorchScriptModel#DecodeSession, st: TorchScriptModel#DecodeSession,
-        prev: Int, gamma: Int, vocab: Int, id: Long, c: Int,
+    def cycle(sd: Sess, st: Sess, prev: Int, gamma: Int, vocab: Int, id: Long, c: Int,
         wmDelta: Double, wmNum: Int, wmDen: Int): (Array[Int], Int, Seq[Int]) = {
       val base = (c - 1) * gamma
       val drafts = new Array[Int](gamma)
@@ -315,27 +313,14 @@ object Torch {
         pm(i + 1) = probs6W(st.logits(), vocab, drafts(i), wmDelta, wmNum, wmDen)
         i += 1
       }
+      // the prefix walk: position n is a one-draft multi-round walk
       var n = 0
-      var rejectedAt = -1
-      while (n < gamma && rejectedAt < 0) {
-        val x = drafts(n)
-        val r6 = q6(math.min(1.0, pm(n)(x) / qm(n)(x)))
-        if (draw(id, s"a${base + n + 1}") < r6) n += 1
-        else rejectedAt = n
+      var corr = -1
+      while (n < gamma && corr < 0) {
+        val (acc, tok) = multiRoundWalk(Array(drafts(n)), qm(n), pm(n), vocab, id, base + n)
+        if (acc == 1) n += 1 else corr = tok
       }
-      val out: Seq[Int] =
-        if (rejectedAt < 0)
-          drafts.toSeq :+ pick(pm(gamma), draw(id, s"b$c"))
-        else {
-          val k = rejectedAt
-          val resid = Array.tabulate(vocab)(j =>
-            math.max(0.0, pm(k)(j) - qm(k)(j))) // exact grid differences
-          val corr =
-            if (resid.forall(_ == 0.0)) drafts(k) // p == q on the grid
-            else pick(resid, draw(id, s"r${base + k + 1}"))
-          drafts.take(k).toSeq :+ corr
-        }
-      (drafts, n, out)
+      (drafts, n, drafts.take(n).toSeq :+ (if (corr >= 0) corr else pick(pm(gamma), draw(id, s"b$c"))))
     }
     /** The `branch × depth` draft TREE rooted at `root` (Medusa /
       * SpecInfer): a node's children are the draft's top-`branch`
@@ -347,15 +332,13 @@ object Torch {
       *
       * @return (the children arrays in BFS node order, each node's
       *         children by path) */
-    def draftTree(root: TorchScriptModel#DecodeSession, vocab: Int, branch: Int,
+    def draftTree(root: Sess, vocab: Int, branch: Int,
         depth: Int): (Seq[Seq[Int]], scala.collection.Map[Vector[Int], Array[Int]]) = {
       val tree = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
       val childrenOf = scala.collection.mutable.Map.empty[Vector[Int], Array[Int]]
-      var frontier: Seq[(TorchScriptModel#DecodeSession, Vector[Int])] =
-        Seq((root, Vector.empty))
+      var frontier: Seq[(Sess, Vector[Int])] = Seq((root, Vector.empty))
       while (frontier.nonEmpty) {
-        val next = scala.collection.mutable.ArrayBuffer
-          .empty[(TorchScriptModel#DecodeSession, Vector[Int])]
+        val next = scala.collection.mutable.ArrayBuffer.empty[(Sess, Vector[Int])]
         frontier.foreach { case (sess, path) =>
           val p6 = probs6(sess.logits(), vocab)
           val kids = (0 until vocab).sortBy(j => (-p6(j), j)).take(branch).toArray
@@ -383,7 +366,6 @@ object Torch {
       }
       q6(math.min(eps, alpha * StrictMath.exp(-h)))
     }
-
     /** An acceptance rule of [[walk]]: given the target's logits at the
       * accepted prefix and the proposal's children there, the child
       * the walk descends into, or −1 to stop. */
@@ -411,8 +393,8 @@ object Torch {
       * appended — a serving loop rolls it forward.
       *
       * @return (the accepted count, the accepted path + final token) */
-    def walk(st: TorchScriptModel#DecodeSession, kids: Vector[Int] => Array[Int],
-        depth: Int, vocab: Int, accept: Rule): (Int, Seq[Int]) = {
+    def walk(st: Sess, kids: Vector[Int] => Array[Int], depth: Int, vocab: Int,
+        accept: Rule): (Int, Seq[Int]) = {
       var path = Vector.empty[Int]
       var lg = st.logits()
       var next = if (depth > 0) accept(lg, kids(path)) else -1
@@ -430,8 +412,8 @@ object Torch {
       *
       * @return (the tree in BFS order, the accepted count, the emitted
       *         tokens) */
-    def treeWalk(sd: TorchScriptModel#DecodeSession, st: TorchScriptModel#DecodeSession,
-        branch: Int, depth: Int, vocab: Int, accept: Rule): (Seq[Seq[Int]], Int, Seq[Int]) = {
+    def treeWalk(sd: Sess, st: Sess, branch: Int, depth: Int, vocab: Int,
+        accept: Rule): (Seq[Seq[Int]], Int, Seq[Int]) = {
       val (tree, kids) = draftTree(sd, vocab, branch, depth)
       val (n, out) = walk(st, kids, depth, vocab, accept)
       (tree, n, out)
@@ -441,7 +423,7 @@ object Torch {
       * chain under exact match.
       *
       * @return (the drafts, the accepted count, the emitted tokens) */
-    def lookupWalk(st: TorchScriptModel#DecodeSession, full: scala.collection.IndexedSeq[Int],
+    def lookupWalk(st: Sess, full: scala.collection.IndexedSeq[Int],
         ngram: Int, maxDraft: Int, vocab: Int): (Array[Int], Int, Seq[Int]) = {
       val drafts = lookupDraft(full, ngram, maxDraft)
       val (n, out) = walk(st, path => Array(drafts(path.length)), drafts.length, vocab, exact(vocab))
@@ -453,7 +435,7 @@ object Torch {
       *
       * @return (the drafts, the accepted round (0: residual-sampled),
       *         the emitted token) */
-    def level(qp: Array[Double], st: TorchScriptModel#DecodeSession, branch: Int,
+    def level(qp: Array[Double], st: Sess, branch: Int,
         vocab: Int, id: Long, off: Int): (Array[Int], Int, Int) = {
       val drafts = Array.tabulate(branch)(i => pick(qp, draw(id, s"d${off + i + 1}")))
       val (acc, tok) = multiRoundWalk(drafts, qp, probs6(st.logits(), vocab), vocab, id, off)
@@ -468,9 +450,8 @@ object Torch {
       *
       * @return (each level's drafts, each level's accepted round, the
       *         emitted tokens) */
-    def stochasticWalk(st: TorchScriptModel#DecodeSession, grow: Seq[TorchScriptModel#DecodeSession],
-        q: Int => Array[Double], depth: Int, branch: Int, vocab: Int, id: Long,
-        c: Int): (Seq[Seq[Int]], Seq[Int], Seq[Int]) = {
+    def stochasticWalk(st: Sess, grow: Seq[Sess], q: Int => Array[Double], depth: Int,
+        branch: Int, vocab: Int, id: Long, c: Int): (Seq[Seq[Int]], Seq[Int], Seq[Int]) = {
       val tree = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
       val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
       val out = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -489,14 +470,14 @@ object Torch {
     /** A stochastic tree cycle ([[treeDraftStochastic]] and its loop):
       * the lazy tree, q read from the draft session `sd` at the
       * accepted prefix. */
-    def treeSampledWalk(sd: TorchScriptModel#DecodeSession, st: TorchScriptModel#DecodeSession,
-        branch: Int, depth: Int, vocab: Int, id: Long, c: Int): (Seq[Seq[Int]], Seq[Int], Seq[Int]) =
+    def treeSampledWalk(sd: Sess, st: Sess, branch: Int, depth: Int, vocab: Int, id: Long,
+        c: Int): (Seq[Seq[Int]], Seq[Int], Seq[Int]) =
       stochasticWalk(st, Seq(sd, st), _ => probs6(sd.logits(), vocab), depth, branch, vocab, id, c)
     /** The sampled prompt-lookup walk ([[promptLookupSampled]]): each
       * lookup draft is a one-draft level with the point mass q = δ_x.
       *
       * @return (the drafts, the accepted count, the emitted tokens) */
-    def lookupSampledWalk(st: TorchScriptModel#DecodeSession, full: scala.collection.IndexedSeq[Int],
+    def lookupSampledWalk(st: Sess, full: scala.collection.IndexedSeq[Int],
         ngram: Int, maxDraft: Int, vocab: Int, id: Long): (Array[Int], Int, Seq[Int]) = {
       val drafts = lookupDraft(full, ngram, maxDraft)
       val (_, rounds, out) = stochasticWalk(st, Seq(st),
@@ -506,18 +487,19 @@ object Torch {
     }
     /** The SERVING DRIVER of every speculative loop: runs `cycle(c)` for
       * c = 1, 2, … until `maxNewTokens` tokens are emitted and keeps the
-      * first `maxNewTokens`. Each cycle returns (its count, its emitted
-      * tokens); `advance` rolls the sessions forward over a cycle's
-      * tokens only when another cycle follows. A cycle runs to
-      * completion even when it overshoots, so counts are cycle-level.
+      * first `maxNewTokens`. Each cycle returns (its proposal, its count,
+      * its emitted tokens) — a cell's own result; `advance` rolls the
+      * sessions forward over a cycle's tokens only when another cycle
+      * follows. A cycle runs to completion even when it overshoots, so
+      * counts are cycle-level.
       *
       * @return (the emitted tokens, each cycle's count) */
-    def serve(maxNewTokens: Int)(cycle: Int => (Int, Seq[Int]))(
+    def serve[A](maxNewTokens: Int)(cycle: Int => (A, Int, Seq[Int]))(
         advance: Seq[Int] => Unit): (Seq[Int], Seq[Int]) = {
       val out = scala.collection.mutable.ArrayBuffer.empty[Int]
       val counts = scala.collection.mutable.ArrayBuffer.empty[Int]
       while (out.length < maxNewTokens) {
-        val (n, toks) = cycle(counts.length + 1)
+        val (_, n, toks) = cycle(counts.length + 1)
         counts += n
         out ++= toks
         if (out.length < maxNewTokens) advance(toks)
@@ -527,13 +509,10 @@ object Torch {
   }
 
   /** The prompt-lookup draft (Saxena 2023, HF `prompt_lookup_num_
-    * tokens`) shared by [[generatePromptLookup]],
-    * [[promptLookupSampled]], and [[generatePromptLookupLoop]] —
-    * hoisted so the match discipline (EARLIEST earlier occurrence of
-    * the final `ngram` wins, the pattern occurrence itself never
-    * matches — strict `start + ngram − 1 < L − ngram + ...` bound via
-    * `i < patStart` — and the draft slice clamps to `maxDraft`) is
-    * single-sourced across the three decode modes. */
+    * tokens`), the proposer of [[Spec.lookupWalk]] and
+    * [[Spec.lookupSampledWalk]]: the EARLIEST earlier occurrence of the
+    * final `ngram` wins, the pattern occurrence itself never matches
+    * (`i < patStart`), and the draft slice clamps to `maxDraft`. */
   private def lookupDraft(full: scala.collection.IndexedSeq[Int],
       ngram: Int, maxDraft: Int): Array[Int] = {
     val L = full.length
@@ -691,6 +670,14 @@ object Torch {
         s"$what needs the KV-session path (cacheable model)")
     }
     Kv(if (cross) df.schema.fieldIndex(srcCol) else -1, nSink, nWindow, relPos)
+  }
+
+  /** The green-list knobs: a bias `delta >= 0` at a green fraction
+    * `num/den` strictly between 0 and 1. */
+  private def requireWatermark(delta: Double, gamma: (Int, Int)): Unit = {
+    require(delta >= 0.0, "watermarkDelta must be >= 0")
+    require(gamma._1 >= 1 && gamma._1 < gamma._2,
+      "watermarkGamma must be a fraction num/den with 0 < num < den")
   }
 
   /** The speculative decoders' model check: [[kvPolicy]] over the
@@ -1105,10 +1092,8 @@ object Torch {
       lmCounts: Array[Array[Long]] = null,
       srcCol: String = null): DataFrame = {
     require(steps >= 1 && width >= 1, "steps and width must be >= 1")
-    require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
+    requireWatermark(watermarkDelta, watermarkGamma)
     require(lmWeight >= 0.0, "lmWeight must be >= 0")
-    require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
-      "watermarkGamma must be a fraction num/den with 0 < num < den")
     val spark = df.sparkSession
     val kv = kvPolicy(df, "beamSearch", Seq(model), srcCol, session = false)
     require(width <= model.value.outDim, "width exceeds the vocabulary")
@@ -1172,41 +1157,20 @@ object Torch {
         lmWeight * StrictMath.log(
           (lm._1(prev)(tok) + 1L).toDouble /
             (lm._2(prev) + vocab.toLong).toDouble)
-      def logProbs(out: Array[Float], off: Int): Array[Double] = {
-        var mx = Double.NegativeInfinity
-        var j = 0
-        while (j < vocab) {
-          val v = out(off + j).toDouble
-          if (v > mx) mx = v
-          j += 1
-        }
-        var z = 0.0
-        j = 0
-        while (j < vocab) { z += math.exp(out(off + j).toDouble - mx); j += 1 }
-        val lse = math.log(z) + mx
-        Array.tabulate(vocab)(k => out(off + k).toDouble - lse)
-      }
+      def logProbs(out: Array[Float], off: Int): Array[Double] =
+        logSoftmax(Array.tabulate(vocab)(j => out(off + j).toDouble))
       // watermarked scores: green logits (membership keyed on the
       // BEAM's last token) gain +delta BEFORE the log-softmax — the
       // lse shifts with the bias, exactly the greedy watermark's
       // deployment order lifted to per-beam distributions. The
       // guarded delta = 0 call path keeps the unwatermarked beams
       // bit-exact.
-      def logProbsBiased(out: Array[Float], prev: Int): Array[Double] = {
-        val adj = Array.tabulate(vocab) { j =>
+      def logProbsBiased(out: Array[Float], prev: Int): Array[Double] =
+        logSoftmax(Array.tabulate(vocab) { j =>
           if (Sampling.greenToken(prev, j, watermarkGamma._1, watermarkGamma._2))
             out(j).toDouble + watermarkDelta
           else out(j).toDouble
-        }
-        var mx = Double.NegativeInfinity
-        var j = 0
-        while (j < vocab) { if (adj(j) > mx) mx = adj(j); j += 1 }
-        var z = 0.0
-        j = 0
-        while (j < vocab) { z += math.exp(adj(j) - mx); j += 1 }
-        val lse = math.log(z) + mx
-        Array.tabulate(vocab)(k => adj(k) - lse)
-      }
+        })
       rows =>
         if (m.cacheable) {
           // KV-cache beams: each beam owns a decode session; expansion
@@ -1425,9 +1389,7 @@ object Torch {
     // stays bit-identical to watermarked plain beamSearch and
     // delta = 0 reduces bit-exactly to the unwatermarked path (the
     // guarded branch; both spec-pinned).
-    require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
-    require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
-      "watermarkGamma must be a fraction num/den with 0 < num < den")
+    requireWatermark(watermarkDelta, watermarkGamma)
     requireTokenDecoder(model, "beamSearchDiverse")
     require(width <= model.value.outDim, "width exceeds the vocabulary")
     val inIdx = df.schema.fieldIndex(inputCol)
@@ -1441,37 +1403,16 @@ object Torch {
         lmWeight * StrictMath.log(
           (lm._1(prev)(tok) + 1L).toDouble /
             (lm._2(prev) + vocab.toLong).toDouble)
-      def logProbs(out: Array[Float]): Array[Double] = {
-        var mx = Double.NegativeInfinity
-        var j = 0
-        while (j < vocab) {
-          val v = out(j).toDouble
-          if (v > mx) mx = v
-          j += 1
-        }
-        var z = 0.0
-        j = 0
-        while (j < vocab) { z += math.exp(out(j).toDouble - mx); j += 1 }
-        val lse = math.log(z) + mx
-        Array.tabulate(vocab)(k => out(k).toDouble - lse)
-      }
+      def logProbs(out: Array[Float]): Array[Double] =
+        logSoftmax(Array.tabulate(vocab)(j => out(j).toDouble))
       // beamSearch's logProbsBiased verbatim: green logits (keyed on
       // the beam's last token) gain +delta BEFORE the log-softmax
-      def logProbsBiased(out: Array[Float], prev: Int): Array[Double] = {
-        val adj = Array.tabulate(vocab) { j =>
+      def logProbsBiased(out: Array[Float], prev: Int): Array[Double] =
+        logSoftmax(Array.tabulate(vocab) { j =>
           if (Sampling.greenToken(prev, j, watermarkGamma._1, watermarkGamma._2))
             out(j).toDouble + watermarkDelta
           else out(j).toDouble
-        }
-        var mx = Double.NegativeInfinity
-        var j = 0
-        while (j < vocab) { if (adj(j) > mx) mx = adj(j); j += 1 }
-        var z = 0.0
-        j = 0
-        while (j < vocab) { z += math.exp(adj(j) - mx); j += 1 }
-        val lse = math.log(z) + mx
-        Array.tabulate(vocab)(k => adj(k) - lse)
-      }
+        })
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
@@ -1568,6 +1509,7 @@ object Torch {
    * engine's order-defined renormalized cumulative. An all-zero
    * residual (p == q on the grid) keeps the draft token.
    *
+   * It is [[speculativeSampledMultiDraft]]'s level at one draft.
    * Scale shape: two KV sessions per row (draft + target prefix),
    * one step each, inside ONE `mapPartitions`.
    *
@@ -1675,9 +1617,7 @@ object Torch {
     // watermarks and draft-accelerates. delta = 0 keeps the
     // unwatermarked code path bit-exactly (guarded branch;
     // spec-pinned).
-    require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
-    require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
-      "watermarkGamma must be a fraction num/den with 0 < num < den")
+    requireWatermark(watermarkDelta, watermarkGamma)
     val kv = draftPair(df, "speculativeSampledGamma", target, draft, srcCol)
     val inIdx = df.schema.fieldIndex(inputCol)
     val idIdx = df.schema.fieldIndex(idCol)
@@ -1709,13 +1649,11 @@ object Torch {
    * shape a draft-accelerated inference server actually runs: each
    * cycle drafts gamma tokens, verifies them against the target's
    * prefix distributions, emits accepted run + correction-or-bonus,
-   * and ROLLS BACK both KV sessions to the emitted prefix before the
-   * next cycle. Rollback here is the fork discipline — the
-   * accepted-prefix sessions are never polluted by rejected drafts:
-   * each cycle VERIFIES on forks (`st0.fork()` / `sd0.fork()`), and
-   * the new accepted-prefix sessions are fresh forks of the old ones
-   * with only the EMITTED tokens appended (O(L) pointer copy + O(E)
-   * appends — no prompt replay, no un-append needed).
+   * and rolls both KV sessions forward to the emitted prefix before
+   * the next cycle: each cycle VERIFIES on forks, so rejected drafts
+   * never touch the accepted-prefix sessions, which take only the
+   * EMITTED tokens (O(E) appends — no prompt replay, no un-append).
+   * The cycles run through [[Spec.serve]].
    *
    * Draw discipline: salts are GLOBAL position indices — cycle c
    * draft i uses `"d<(c−1)·gamma + i>"` (likewise a/r), bonus
@@ -1767,9 +1705,7 @@ object Torch {
     // rolls its KV forward. delta = 0 keeps the unwatermarked path
     // bit-exactly (guarded; spec-pinned), cycle 1 replays the q281
     // cell's draws.
-    require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
-    require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
-      "watermarkGamma must be a fraction num/den with 0 < num < den")
+    requireWatermark(watermarkDelta, watermarkGamma)
     // BOUNDED-KV SERVING (q284, the StreamingLLM deployment; q293 over
     // cross models; q296 re-rotated): both models' sessions evict to
     // nSink sinks + an nWindow window — forks inherit the knobs, so
@@ -1797,11 +1733,9 @@ object Torch {
             val st = openSession(tm, kv, p, src)
             val sd = openSession(dm, kv, p, src)
             var prev = p(p.length - 1) // the green key for p_1
-            val (out, n) = Spec.serve(maxNewTokens) { c =>
-              val (_, acc, toks) = Spec.cycle(sd.fork(), st.fork(), prev, gamma, vocab, id, c,
-                watermarkDelta, wmNum, wmDen)
-              (acc, toks)
-            } { toks => toks.foreach(st.append); toks.foreach(sd.append); prev = toks.last }
+            val (out, n) = Spec.serve(maxNewTokens)(c => Spec.cycle(sd.fork(), st.fork(), prev,
+              gamma, vocab, id, c, watermarkDelta, wmNum, wmDen)
+            ) { toks => toks.foreach(st.append); toks.foreach(sd.append); prev = toks.last }
             (out, n.length, n.sum)
           }
         }
@@ -1848,21 +1782,8 @@ object Torch {
       val am = amateur.value
       val vocab = em.outDim
       // (p6 masses, 6dp log-probs) from one logits read
-      def dists(lg: Array[Float]): (Array[Double], Array[Double]) = {
-        var mx = Double.NegativeInfinity
-        var j = 0
-        while (j < vocab) {
-          val v = lg(j).toDouble
-          if (v > mx) mx = v
-          j += 1
-        }
-        var z = 0.0
-        j = 0
-        while (j < vocab) { z += math.exp(lg(j).toDouble - mx); j += 1 }
-        val lse = math.log(z) + mx
-        (Array.tabulate(vocab)(k => q6(math.exp(lg(k).toDouble - mx) / z)),
-          Array.tabulate(vocab)(k => q6(lg(k).toDouble - lse)))
-      }
+      def dists(lg: Array[Float]): (Array[Double], Array[Double]) =
+        (Spec.probs6(lg, vocab), logSoftmax(Array.tabulate(vocab)(lg(_).toDouble)).map(q6))
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
@@ -1945,21 +1866,8 @@ object Torch {
       val em = expert.value
       val am = amateur.value
       val vocab = em.outDim
-      def dists(lg: Array[Float]): (Array[Double], Array[Double]) = {
-        var mx = Double.NegativeInfinity
-        var j = 0
-        while (j < vocab) {
-          val v = lg(j).toDouble
-          if (v > mx) mx = v
-          j += 1
-        }
-        var z = 0.0
-        j = 0
-        while (j < vocab) { z += math.exp(lg(j).toDouble - mx); j += 1 }
-        val lse = math.log(z) + mx
-        (Array.tabulate(vocab)(k => q6(math.exp(lg(k).toDouble - mx) / z)),
-          Array.tabulate(vocab)(k => q6(lg(k).toDouble - lse)))
-      }
+      def dists(lg: Array[Float]): (Array[Double], Array[Double]) =
+        (Spec.probs6(lg, vocab), logSoftmax(Array.tabulate(vocab)(lg(_).toDouble)).map(q6))
       rows =>
         rows.iterator.map { r =>
           val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
@@ -2041,17 +1949,7 @@ object Torch {
             var sum = 0.0
             c.foreach { tok =>
               val lg = sess.logits()
-              var mx = Double.NegativeInfinity
-              var j = 0
-              while (j < vocab) {
-                val v = lg(j).toDouble
-                if (v > mx) mx = v
-                j += 1
-              }
-              var z = 0.0
-              j = 0
-              while (j < vocab) { z += math.exp(lg(j).toDouble - mx); j += 1 }
-              sum += lg(tok).toDouble - (math.log(z) + mx)
+              sum += logSoftmax(Array.tabulate(vocab)(lg(_).toDouble))(tok)
               sess.append(tok)
             }
             (-sum / c.length)
@@ -2199,18 +2097,7 @@ object Torch {
             val gen = scala.collection.mutable.ArrayBuffer.empty[Int]
             var t = 0
             while (t < steps) {
-              val lg = sess.logits()
-              var mx = Double.NegativeInfinity
-              var j = 0
-              while (j < vocab) {
-                val v = lg(j).toDouble
-                if (v > mx) mx = v
-                j += 1
-              }
-              var z = 0.0
-              j = 0
-              while (j < vocab) { z += math.exp(lg(j).toDouble - mx); j += 1 }
-              val p6 = Array.tabulate(vocab)(k => q6(math.exp(lg(k).toDouble - mx) / z))
+              val p6 = Spec.probs6(sess.logits(), vocab)
               val cands = (0 until vocab).sortBy(k => (-p6(k), k)).take(topK)
               val scored = cands.map { v =>
                 val child = sess.fork()
@@ -2308,9 +2195,7 @@ object Torch {
       lmCounts: Array[Array[Long]] = null,
       srcCol: String = null): DataFrame = {
     require(steps >= 1, "steps must be >= 1")
-    require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
-    require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
-      "watermarkGamma must be a fraction num/den with 0 < num < den")
+    requireWatermark(watermarkDelta, watermarkGamma)
     require(banned.size < model.value.outDim,
       "banned set covers the whole vocabulary")
     // SHALLOW FUSION under sampling: the frozen bigram prior adds to
@@ -2353,7 +2238,6 @@ object Torch {
         batchSize = batchSize) { () =>
       val m = model.value
       val vocab = m.outDim
-      def draw(id: Long, step: Int): Double = Sampling.draw(id, step)
       // per-step banned set: static bans plus n-gram completions of
       // the CURRENT sequence, LIFTING the n-gram arm when it would
       // empty the allowed vocabulary (generateGreedy's rule); the
@@ -2403,7 +2287,7 @@ object Torch {
               val full = scala.collection.mutable.ArrayBuffer.from(s0)
               var t = 1
               while (t <= steps) {
-                val tid = sampleNext(sess.logits(), 0, draw(ids(ri), t), full)
+                val tid = sampleNext(sess.logits(), 0, Sampling.draw(ids(ri), t), full)
                 gen(ri) += tid
                 sess.append(tid)
                 full += tid
@@ -2420,7 +2304,7 @@ object Torch {
               val out = m.forwardTokensBatch(liveIdx.map(cur(_)).toArray)
               val next = cur.clone()
               liveIdx.zipWithIndex.foreach { case (ri, k) =>
-                val tid = sampleNext(out, k * vocab, draw(ids(ri), t),
+                val tid = sampleNext(out, k * vocab, Sampling.draw(ids(ri), t),
                   scala.collection.immutable.ArraySeq.unsafeWrapArray(cur(ri)))
                 gen(ri) += tid
                 next(ri) = cur(ri) :+ tid
@@ -2712,9 +2596,7 @@ object Torch {
       relPos: Boolean = false,
       srcCol: String = null): DataFrame = {
     require(steps >= 1, "steps must be >= 1")
-    require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
-    require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
-      "watermarkGamma must be a fraction num/den with 0 < num < den")
+    requireWatermark(watermarkDelta, watermarkGamma)
     require(bannedPhrases.forall(_.nonEmpty), "empty banned phrase")
     require(minNewTokens >= 0, "minNewTokens must be >= 0")
     require(minNewTokens == 0 || eosId >= 0,
@@ -2975,7 +2857,8 @@ object Torch {
    * prefix. Emitted tokens are therefore ALWAYS a prefix of the
    * plain [[generateGreedy]] rollout of length `n_accepted + 1`
    * (spec-pinned) — the lookup only decides how many greedy tokens
-   * one verification pass yields.
+   * one verification pass yields. The drafts enter [[Spec.walk]] as a
+   * branch-1 chain (a path of length n has the one child `drafts(n)`).
    *
    * Match discipline (all integer decisions — nothing numeric):
    * pattern = the final `ngram` tokens of the (sliced) prompt; a
@@ -3027,9 +2910,9 @@ object Torch {
   /**
    * The MULTI-DRAFT SERVING LOOP — [[speculativeSampledMultiDraft]]
    * cycled for `maxNewTokens` positions: each cycle runs one b-way
-   * multi-round verification cell at the current prefix and emits
-   * exactly ONE target-distributed token (an accepted draft or the
-   * residual sample), which extends both sessions. Completes the
+   * [[Spec.level]] at the current prefix and emits exactly ONE
+   * target-distributed token (an accepted draft or the residual
+   * sample), which extends both sessions. Completes the
    * {cell, loop} pair for the multi-draft mode; per-position
    * `acc_rounds` is the serving telemetry (which try depth pays).
    *
@@ -3070,9 +2953,9 @@ object Torch {
             val st = openSession(tm, kv, p, null)
             val sd = openSession(dm, kv, p, null)
             Spec.serve(maxNewTokens) { c =>
-              val (_, acc, tok) = Spec.level(Spec.probs6(sd.logits(), vocab), st, numDrafts,
+              val (drafts, acc, tok) = Spec.level(Spec.probs6(sd.logits(), vocab), st, numDrafts,
                 vocab, id, (c - 1) * numDrafts)
-              (acc, Seq(tok))
+              (drafts, acc, Seq(tok))
             } { toks => sd.append(toks.last); st.append(toks.last) }
           }
         }
@@ -3091,10 +2974,11 @@ object Torch {
    * deterministic rollout. All-accepted walks emit a bonus sample
    * from the target at the fully-drafted prefix.
    *
-   * Determinism discipline is [[speculativeSampled]]'s: 6dp-grid
-   * distributions, md5 draws with position-indexed salts
-   * (acceptance `"a<i>"`, residual `"r<i>"`, bonus `"b1"` — no
-   * draft-pick draws: the lookup IS the draft).
+   * Each draft runs as a one-draft [[Spec.level]] with q = δ_x down
+   * [[Spec.stochasticWalk]], so the determinism discipline is
+   * [[speculativeSampled]]'s: 6dp-grid distributions, md5 draws with
+   * position-indexed salts (acceptance `"a<i>"`, residual `"r<i>"`,
+   * bonus `"b1"`; the draft pick from δ_x is x whatever its draw).
    *
    * @return input columns + `draft_toks` array<int>, `n_drafted`
    *         int, `n_accepted` int, `out_toks` array<int> (length
@@ -3146,7 +3030,8 @@ object Torch {
    * continuation). Unlike greedy equivalence, the emitted tokens
    * are NOT a greedy rollout — accepted drafts are tokens the
    * target merely tolerates — which is exactly the speed-vs-
-   * fidelity dial Medusa ships.
+   * fidelity dial Medusa ships. The cell is [[Spec.treeWalk]] under
+   * the [[Spec.typical]] rule.
    *
    * Determinism discipline: the decision compares 6dp-grid values —
    * p6(x) against `thr6 = q6(min(ε, δ·exp(−H6)))` where H6 =
@@ -3203,10 +3088,11 @@ object Torch {
    * rule (`p6(x) ≥ q6(min(ε, δ·e^{−H}))` per level, highest-p6
    * accepted child descends), and the emitted tokens (accepted path +
    * the argmax continuation) extend BOTH sessions. The whole mode is
-   * DRAW-FREE — cycles are pure functions of the prefix — so cycle 1
-   * replays [[treeDraftTypical]] verbatim (spec-pinned) with no salt
-   * bookkeeping at all. Cycles run to completion (cycle-level
-   * `n_acc_total`, the [[speculativeSampledLoop]] convention).
+   * DRAW-FREE — cycles are pure functions of the prefix. Each cycle is
+   * the cell's [[Spec.treeWalk]], run by [[Spec.serve]], so cycle 1 is
+   * [[treeDraftTypical]] (spec-pinned). Cycles run to completion
+   * (cycle-level `n_acc_total`, the [[speculativeSampledLoop]]
+   * convention).
    *
    * @return input columns + `out_toks` array<int> (exactly
    *         maxNewTokens tokens), `n_cycles` int, `n_acc_total` int;
@@ -3250,10 +3136,9 @@ object Torch {
           else {
             val st = openSession(tm, kv, p, null)
             val sd = openSession(dm, kv, p, null)
-            val (out, n) = Spec.serve(maxNewTokens) { _ =>
-              val (_, acc, toks) = Spec.treeWalk(sd, st, branch, depth, vocab, rule)
-              (acc, toks)
-            } { toks => st.append(toks.last); toks.foreach(sd.append) }
+            val (out, n) = Spec.serve(maxNewTokens)(_ =>
+              Spec.treeWalk(sd, st, branch, depth, vocab, rule)
+            ) { toks => st.append(toks.last); toks.foreach(sd.append) }
             (out, n.length, n.sum)
           }
         }
@@ -3274,8 +3159,9 @@ object Torch {
    * and the emission IS the plain [[generateGreedy]] rollout
    * truncated to `maxNewTokens` (spec-pinned); the outputs add the
    * serving telemetry. Cycles run to completion (cycle-level
-   * `n_acc_total`, the [[speculativeSampledLoop]] convention); cycle
-   * 1 replays [[treeDraftGreedy]] exactly.
+   * `n_acc_total`, the [[speculativeSampledLoop]] convention); each is
+   * the cell's [[Spec.treeWalk]], run by [[Spec.serve]], so cycle 1 is
+   * [[treeDraftGreedy]].
    *
    * @return input columns + `out_toks` array<int> (exactly
    *         maxNewTokens tokens), `n_cycles` int, `n_acc_total` int;
@@ -3320,10 +3206,9 @@ object Torch {
             // the prompt
             val st = openSession(tm, kv, p, null)
             val sd = openSession(dm, kv, p, null)
-            val (out, n) = Spec.serve(maxNewTokens) { _ =>
-              val (_, acc, toks) = Spec.treeWalk(sd, st, branch, depth, vocab, rule)
-              (acc, toks)
-            } { toks => st.append(toks.last); toks.foreach(sd.append) }
+            val (out, n) = Spec.serve(maxNewTokens)(_ =>
+              Spec.treeWalk(sd, st, branch, depth, vocab, rule)
+            ) { toks => st.append(toks.last); toks.foreach(sd.append) }
             (out, n.length, n.sum)
           }
         }
@@ -3348,7 +3233,8 @@ object Torch {
    * distributions on the 6dp grid; draft picks salt `"d<i>"`,
    * acceptances `"a<i>"`, the final residual pick `"r<b>"` — so
    * `numDrafts = 1` replays q247 BIT-EXACTLY (same draft token, same
-   * acceptance draw, same residual walk; spec-pinned). Round-2+
+   * acceptance draw, same residual walk; spec-pinned): both are one
+   * [[Spec.level]]. Round-2+
    * residuals NORMALIZE on the grid (`n_i(j) = q6(m_i(j)/Σm_i)`,
    * the Σ an ascending-tid f64 sum both engines restate) because the
    * acceptance RATIO needs a normalized numerator — the final pick
@@ -3401,9 +3287,10 @@ object Torch {
    * [[speculativeSampledMultiDraft]]'s multi-round rejection applied
    * PER LEVEL over a node's children, so the emitted tokens are
    * provably target-distributed even though the draft proposed a
-   * TREE. At each level the draft samples `branch` i.i.d. children
-   * from q(· | prefix) (they may repeat — q269's convention) and the
-   * walk runs [[Spec.multiRoundWalk]] against the target's
+   * TREE. At each level ([[Spec.level]], down [[Spec.stochasticWalk]])
+   * the draft samples `branch` i.i.d. children from q(· | prefix)
+   * (they may repeat — q269's convention) and the walk runs
+   * [[Spec.multiRoundWalk]] against the target's
    * distribution at the accepted prefix: an accepted round's child
    * becomes the descent (both sessions append it); a residual-sampled
    * round (accRound = 0) emits the correction and STOPS — the
@@ -3484,8 +3371,9 @@ object Torch {
    *
    * Salt discipline: cycle c level ℓ uses offset
    * `((c−1)·depth + (ℓ−1))·branch` for d/a (residual at
-   * `offset + branch`), bonus `b<c>` — so cycle 1 replays
-   * [[treeDraftStochastic]] bit-exactly (spec-pinned), and every
+   * `offset + branch`), bonus `b<c>`; every cycle is the cell's
+   * [[Spec.treeSampledWalk]], run by [[Spec.serve]], so cycle 1 is
+   * [[treeDraftStochastic]] (spec-pinned), and every
    * cycle's draws stay independent of partition layout. Cycles run
    * to completion (cycle-level `n_acc_total`, the
    * [[speculativeSampledLoop]] convention).
@@ -3531,8 +3419,8 @@ object Torch {
             val sd = openSession(dm, kv, p, null)
             val st = openSession(tm, kv, p, null)
             val (out, n) = Spec.serve(maxNewTokens) { c =>
-              val (_, rounds, toks) = Spec.treeSampledWalk(sd, st, branch, depth, vocab, id, c)
-              (rounds.count(_ > 0), toks)
+              val (tree, rounds, toks) = Spec.treeSampledWalk(sd, st, branch, depth, vocab, id, c)
+              (tree, rounds.count(_ > 0), toks)
             } { toks => sd.append(toks.last); st.append(toks.last) }
             (out, n.length, n.sum)
           }
@@ -3687,9 +3575,9 @@ object Torch {
    * A cycle always runs to completion (its full accept walk + bonus)
    * even when it overshoots `maxNewTokens` — the server truncates
    * output, not the cycle — so `n_acc_total` is CYCLE-LEVEL like
-   * [[speculativeSampledLoop]]'s. Cycle 1 replays
-   * [[generatePromptLookup]] exactly (same lookup, same walk —
-   * spec-pinned).
+   * [[speculativeSampledLoop]]'s. Every cycle is the cell's
+   * [[Spec.lookupWalk]] over the grown stream, run by [[Spec.serve]],
+   * so cycle 1 is [[generatePromptLookup]] (spec-pinned).
    *
    * @return input columns + `out_toks` array<int> (exactly
    *         maxNewTokens tokens), `n_cycles` int, `n_acc_total` int;
@@ -3729,10 +3617,9 @@ object Torch {
           else {
             val sess = openSession(m, kv, p, null)
             val full = scala.collection.mutable.ArrayBuffer.from(p)
-            val (out, n) = Spec.serve(maxNewTokens) { _ =>
-              val (_, acc, toks) = Spec.lookupWalk(sess, full, ngram, maxDraft, vocab)
-              (acc, toks)
-            } { toks => sess.append(toks.last); full ++= toks }
+            val (out, n) = Spec.serve(maxNewTokens)(_ =>
+              Spec.lookupWalk(sess, full, ngram, maxDraft, vocab)
+            ) { toks => sess.append(toks.last); full ++= toks }
             (out, n.length, n.sum)
           }
         }
@@ -3767,7 +3654,8 @@ object Torch {
    * Draft sessions FORK per node (O(L) pointer copy), so building
    * the `(branch^depth − 1)/(branch − 1)` internal nodes costs one
    * draft logit read each — the tree-attention batching a GPU server
-   * does in one kernel, restated as KV-shared incremental reads.
+   * does in one kernel, restated as KV-shared incremental reads. The
+   * cell is [[Spec.treeWalk]] under the [[Spec.exact]] rule.
    *
    * Scale shape: one draft session + forks and one target session
    * per row, inside ONE `mapPartitions` — no shuffle, no per-step
@@ -3804,845 +3692,6 @@ object Torch {
           else Spec.treeWalk(openSession(dm, kv, p, null), openSession(tm, kv, p, null),
             branch, depth, vocab, rule)
         }
-    }
-  }
-
-  /** The previous speculative bodies, kept beside their rewrites for
-    * the `ProbeWalks` A/B; deleted once it shows them identical. */
-  private[graft] object Old {
-    /** The previous hex-string read of MD5's leading 32 bits, beside the byte read. */
-    def lead32(key: String): (Long, Long) = {
-      val md = java.security.MessageDigest.getInstance("MD5").digest(key.getBytes("UTF-8"))
-      val hex = md.take(4).map(b => f"$b%02x").mkString
-      (java.lang.Long.parseLong(hex, 16), md5Lead32(key))
-    }
-    def speculativeSampled(
-        df: DataFrame,
-        idCol: String,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        batchSize: Int = -1,
-        srcCol: String = null): DataFrame = {
-      val kv = kvPolicy(df, "speculativeSampled", Seq(target, draft), srcCol)
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      val idIdx = df.schema.fieldIndex(idCol)
-      Kernel(df, SpecOut, ints = Seq(inputCol) ++ Option(srcCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-          def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-        // the engine's order-defined renormalized-cumulative pick over
-        // (mass DESC, tid ASC) — exactly the q203 nucleus walk at
-        // topP = 1 (so every positive-mass candidate is kept)
-        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-        rows =>
-          rows.iterator.map { r =>
-            val src = kv.src(r)
-            val p: Array[Int] =
-              if (r.isNullAt(idIdx) || !kv.hasSrc(src)) null else Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val id = r.getAs[Number](idIdx).longValue()
-              val qp = probs6(openSession(dm, kv, p, src).logits())
-              val pp = probs6(openSession(tm, kv, p, src).logits())
-              val dx = pick(qp, draw(id, "d1"))
-              val r6 = q6(math.min(1.0, pp(dx) / qp(dx)))
-              val accepted = draw(id, "a1") < r6
-              val fx =
-                if (accepted) dx
-                else {
-                  val resid = Array.tabulate(vocab)(j =>
-                    math.max(0.0, pp(j) - qp(j))) // exact grid differences
-                  if (resid.forall(_ == 0.0)) dx // p == q on the grid
-                  else pick(resid, draw(id, "r1"))
-                }
-              (dx, accepted, fx)
-            }
-          }
-      }
-    }
-
-    def speculativeSampledGamma(
-        df: DataFrame,
-        idCol: String,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        gamma: Int,
-        batchSize: Int = -1,
-        watermarkDelta: Double = 0.0,
-        watermarkGamma: (Int, Int) = (1, 2),
-        srcCol: String = null): DataFrame = {
-      require(gamma >= 1, "gamma must be >= 1")
-      // WATERMARK × SPECULATIVE (Kirchenbauer 2023 × Leviathan 2023):
-      // the green-list bias +delta lands on the TARGET's raw logits
-      // before each of its gamma+1 prefix softmaxes (green membership
-      // keyed on the prefix's last token — prompt tail for p_1, draft
-      // i for p_{i+1}; q239's deployment order). The acceptance/
-      // residual rule preserves WHATEVER target distribution it is
-      // given, so the emitted tokens are provably watermarked-target
-      // distributed while the (watermark-oblivious) draft stays
-      // unbiased — exactly the deployment where a serving stack both
-      // watermarks and draft-accelerates. delta = 0 keeps the
-      // unwatermarked code path bit-exactly (guarded branch;
-      // spec-pinned).
-      require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
-      require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
-        "watermarkGamma must be a fraction num/den with 0 < num < den")
-      val kv = kvPolicy(df, "speculativeSampledGamma", Seq(target, draft), srcCol)
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      val idIdx = df.schema.fieldIndex(idCol)
-      val (wmNum, wmDen) = watermarkGamma
-      Kernel(df, GammaOut, ints = Seq(inputCol) ++ Option(srcCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-        rows =>
-          rows.iterator.map { r =>
-            val src = kv.src(r)
-            val p: Array[Int] =
-              if (r.isNullAt(idIdx) || !kv.hasSrc(src)) null else Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val id = r.getAs[Number](idIdx).longValue()
-              val (drafts, n, out) = Spec.cycle(openSession(dm, kv, p, src),
-                openSession(tm, kv, p, src), p(p.length - 1), gamma, vocab, id, 1,
-                watermarkDelta, wmNum, wmDen)
-              (drafts.toSeq, n, out)
-            }
-          }
-      }
-    }
-
-    def speculativeSampledLoop(
-        df: DataFrame,
-        idCol: String,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        gamma: Int,
-        maxNewTokens: Int,
-        batchSize: Int = -1,
-        watermarkDelta: Double = 0.0,
-        watermarkGamma: (Int, Int) = (1, 2),
-        nSink: Int = -1,
-        nWindow: Int = -1,
-        relPos: Boolean = false,
-        srcCol: String = null): DataFrame = {
-      require(gamma >= 1, "gamma must be >= 1")
-      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-      // WATERMARK × SPECULATIVE SERVING (q285): the green bias rides the
-      // TARGET's prefix softmaxes across EVERY cycle — the q281 cell
-      // cycled, so a serving stack watermarks AND draft-accelerates AND
-      // rolls its KV forward. delta = 0 keeps the unwatermarked path
-      // bit-exactly (guarded; spec-pinned), cycle 1 replays the q281
-      // cell's draws.
-      require(watermarkDelta >= 0.0, "watermarkDelta must be >= 0")
-      require(watermarkGamma._1 >= 1 && watermarkGamma._1 < watermarkGamma._2,
-        "watermarkGamma must be a fraction num/den with 0 < num < den")
-      // BOUNDED-KV SERVING (q284, the StreamingLLM deployment; q293 over
-      // cross models; q296 re-rotated): both models' sessions evict to
-      // nSink sinks + an nWindow window — forks inherit the knobs, so
-      // verification forks and roll-forwards stay O(nSink + nWindow)
-      // per session. nWindow <= 0 keeps the unbounded sessions
-      // (identical arithmetic; spec-pinned).
-      val kv = kvPolicy(df, "speculativeSampledLoop", Seq(target, draft), srcCol,
-        nSink, nWindow, relPos)
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      val idIdx = df.schema.fieldIndex(idCol)
-      val (wmNum, wmDen) = watermarkGamma
-      Kernel(df, LoopOut, ints = Seq(inputCol) ++ Option(srcCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-        rows =>
-          rows.iterator.map { r =>
-            val src = kv.src(r)
-            val p: Array[Int] =
-              if (r.isNullAt(idIdx) || !kv.hasSrc(src)) null else Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val id = r.getAs[Number](idIdx).longValue()
-              // target/draft @ accepted prefix
-              var st0 = openSession(tm, kv, p, src)
-              var sd0 = openSession(dm, kv, p, src)
-              var lastTok = p(p.length - 1) // the green key for p_1
-              val emitted = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var cycles = 0
-              var accTotal = 0
-              while (emitted.length < maxNewTokens) {
-                cycles += 1
-                // verification runs on forks: rejected drafts never
-                // touch the accepted-prefix sessions
-                val (_, n, cycleOut) = Spec.cycle(sd0.fork(), st0.fork(), lastTok,
-                  gamma, vocab, id, cycles, watermarkDelta, wmNum, wmDen)
-                accTotal += n
-                emitted ++= cycleOut
-                lastTok = cycleOut.last
-                if (emitted.length < maxNewTokens) {
-                  // roll forward the accepted-prefix sessions: fresh
-                  // forks + the emitted tokens only
-                  val st1 = st0.fork(); cycleOut.foreach(st1.append); st0 = st1
-                  val sd1 = sd0.fork(); cycleOut.foreach(sd1.append); sd0 = sd1
-                }
-              }
-              (emitted.take(maxNewTokens).toSeq, cycles, accTotal)
-            }
-          }
-      }
-    }
-
-    def generatePromptLookup(
-        df: DataFrame,
-        inputCol: String,
-        model: Broadcast[TorchScriptModel],
-        ngram: Int,
-        maxDraft: Int,
-        batchSize: Int = -1): DataFrame = {
-      require(ngram >= 1, "ngram must be >= 1")
-      require(maxDraft >= 1, "maxDraft must be >= 1")
-      requireTokenDecoder(model, "generatePromptLookup")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      Kernel(df, LookupOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val m = model.value
-        val vocab = m.outDim
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val drafts = lookupDraft(
-                scala.collection.immutable.ArraySeq.unsafeWrapArray(p),
-                ngram, maxDraft)
-              val sess = m.decodeSession(p)
-              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var n = 0
-              var rejected = false
-              while (n < drafts.length && !rejected) {
-                val t = argmaxFirst(sess.logits(), vocab)
-                out += t
-                if (t == drafts(n)) { sess.append(t); n += 1 }
-                else rejected = true // the argmax IS the correction
-              }
-              if (!rejected) out += argmaxFirst(sess.logits(), vocab) // bonus
-              (drafts.toSeq, drafts.length, n, out.toSeq)
-            }
-          }
-      }
-    }
-
-    def speculativeSampledMultiDraftLoop(
-        df: DataFrame,
-        idCol: String,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        numDrafts: Int,
-        maxNewTokens: Int,
-        batchSize: Int = -1): DataFrame = {
-      require(numDrafts >= 1, "numDrafts must be >= 1")
-      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-      requireTokenDecoder(target, "speculativeSampledMultiDraftLoop")
-      requireTokenDecoder(draft, "speculativeSampledMultiDraftLoop")
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      val idIdx = df.schema.fieldIndex(idCol)
-      Kernel(df, fields("out_toks" -> Ints, "acc_rounds" -> Ints),
-          ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-          def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val id = r.getAs[Number](idIdx).longValue()
-              val st = tm.decodeSession(p)
-              val sd = dm.decodeSession(p)
-              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-              val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var c = 0
-              while (c < maxNewTokens) {
-                val off = c * numDrafts
-                val qp = probs6(sd.logits())
-                val pp = probs6(st.logits())
-                val drafts = Array.tabulate(numDrafts)(i =>
-                  pick(qp, draw(id, s"d${off + i + 1}")))
-                val (accRound, finalTok) =
-                  Spec.multiRoundWalk(drafts, qp, pp, vocab, id, off)
-                out += finalTok
-                rounds += accRound
-                st.append(finalTok)
-                sd.append(finalTok)
-                c += 1
-              }
-              (out.toSeq, rounds.toSeq)
-            }
-          }
-      }
-    }
-
-    def promptLookupSampled(
-        df: DataFrame,
-        idCol: String,
-        inputCol: String,
-        model: Broadcast[TorchScriptModel],
-        ngram: Int,
-        maxDraft: Int,
-        batchSize: Int = -1): DataFrame = {
-      require(ngram >= 1, "ngram must be >= 1")
-      require(maxDraft >= 1, "maxDraft must be >= 1")
-      requireTokenDecoder(model, "promptLookupSampled")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      val idIdx = df.schema.fieldIndex(idCol)
-      Kernel(df, LookupOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val m = model.value
-        val vocab = m.outDim
-          def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val id = r.getAs[Number](idIdx).longValue()
-              val drafts = lookupDraft(
-                scala.collection.immutable.ArraySeq.unsafeWrapArray(p),
-                ngram, maxDraft)
-              val sess = m.decodeSession(p)
-              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var n = 0
-              var rejected = false
-              while (n < drafts.length && !rejected) {
-                val x = drafts(n)
-                val pp = probs6(sess.logits())
-                // point-mass draft: min(1, p(x)/1) = p(x), already on
-                // the grid
-                if (draw(id, s"a${n + 1}") < pp(x)) {
-                  out += x; sess.append(x); n += 1
-                } else {
-                  // residual max(0, p − δ_x) ∝ p with x zeroed
-                  val mres = pp.clone()
-                  mres(x) = 0.0
-                  out += (if (mres.forall(_ == 0.0)) x
-                          else pick(mres, draw(id, s"r${n + 1}")))
-                  rejected = true
-                }
-              }
-              if (!rejected) // no drafts, or all accepted → bonus sample
-                out += pick(probs6(sess.logits()), draw(id, "b1"))
-              (drafts.toSeq, drafts.length, n, out.toSeq)
-            }
-          }
-      }
-    }
-
-    def treeDraftTypical(
-        df: DataFrame,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        branch: Int,
-        depth: Int,
-        posteriorEps: Double,
-        posteriorAlpha: Double,
-        batchSize: Int = -1): DataFrame = {
-      require(branch >= 1, "branch must be >= 1")
-      require(depth >= 1, "depth must be >= 1")
-      require(posteriorEps > 0.0 && posteriorEps <= 1.0,
-        "posteriorEps must be in (0, 1]")
-      require(posteriorAlpha > 0.0, "posteriorAlpha must be > 0")
-      requireTokenDecoder(target, "treeDraftTypical")
-      requireTokenDecoder(draft, "treeDraftTypical")
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      require(branch <= target.value.outDim, "branch exceeds the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      Kernel(df, TreeOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val (tree, childrenOf) = Spec.draftTree(dm.decodeSession(p), vocab, branch, depth)
-              // typical walk: accepted = children clearing the
-              // entropy-scaled threshold; descend the max-p6 accepted
-              // (tid tiebreak); stop at the first empty level
-              val st = tm.decodeSession(p)
-              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var path = Vector.empty[Int]
-              var n = 0
-              var stopped = false
-              while (n < depth && !stopped) {
-                val pp = Spec.probs6(st.logits(), vocab)
-                val thr = Spec.threshold6(pp, posteriorEps, posteriorAlpha)
-                val acc = childrenOf(path).filter(c => pp(c) >= thr)
-                if (acc.isEmpty) stopped = true
-                else {
-                  val c = acc.minBy(x => (-pp(x), x))
-                  out += c
-                  st.append(c)
-                  path :+= c
-                  n += 1
-                }
-              }
-              out += argmaxFirst(st.logits(), vocab) // the deterministic continuation
-              (tree, n, out.toSeq)
-            }
-          }
-      }
-    }
-
-    def treeDraftTypicalLoop(
-        df: DataFrame,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        branch: Int,
-        depth: Int,
-        posteriorEps: Double,
-        posteriorAlpha: Double,
-        maxNewTokens: Int,
-        batchSize: Int = -1,
-        nSink: Int = -1,
-        nWindow: Int = -1): DataFrame = {
-      require(branch >= 1, "branch must be >= 1")
-      require(depth >= 1, "depth must be >= 1")
-      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-      require(posteriorEps > 0.0 && posteriorEps <= 1.0,
-        "posteriorEps must be in (0, 1]")
-      require(posteriorAlpha > 0.0, "posteriorAlpha must be > 0")
-      // BOUNDED-KV typical-tree serving (q302): the target sessions
-      // (and tree forks) evict; an attention-free early-exit draft has
-      // no k/v state, so its windowed sessions are identical by
-      // construction. nWindow <= 0 keeps the unbounded sessions.
-      val kv = kvPolicy(df, "treeDraftTypicalLoop", Seq(target, draft), null, nSink, nWindow)
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      require(branch <= target.value.outDim, "branch exceeds the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val st = openSession(tm, kv, p, null)
-              var sd = openSession(dm, kv, p, null)
-              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var cycles = 0
-              var accTotal = 0
-              while (out.length < maxNewTokens) {
-                cycles += 1
-                // this cycle's tree on forks of the draft session
-                val childrenOf = Spec.draftTree(sd, vocab, branch, depth)._2
-                // the typical walk; emitted tokens extend BOTH sessions
-                def emit(t: Int): Unit = {
-                  out += t
-                  st.append(t)
-                  val nd = sd.fork(); nd.append(t); sd = nd
-                }
-                var path = Vector.empty[Int]
-                var n = 0
-                var stopped = false
-                while (n < depth && !stopped) {
-                  val pp = Spec.probs6(st.logits(), vocab)
-                  val thr = Spec.threshold6(pp, posteriorEps, posteriorAlpha)
-                  val acc = childrenOf(path).filter(c => pp(c) >= thr)
-                  if (acc.isEmpty) stopped = true
-                  else {
-                    val c = acc.minBy(x => (-pp(x), x))
-                    emit(c)
-                    path :+= c
-                    n += 1
-                    accTotal += 1
-                  }
-                }
-                emit(argmaxFirst(st.logits(), vocab)) // the argmax continuation
-              }
-              (out.take(maxNewTokens).toSeq, cycles, accTotal)
-            }
-          }
-      }
-    }
-
-    def treeDraftGreedyLoop(
-        df: DataFrame,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        branch: Int,
-        depth: Int,
-        maxNewTokens: Int,
-        batchSize: Int = -1,
-        nSink: Int = -1,
-        nWindow: Int = -1,
-        relPos: Boolean = false): DataFrame = {
-      require(branch >= 1, "branch must be >= 1")
-      require(depth >= 1, "depth must be >= 1")
-      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-      // BOUNDED-KV tree serving (q301): both accepted-prefix sessions
-      // (and every tree-node fork rooted at them) evict to nSink sinks
-      // + an nWindow window. nWindow <= 0 keeps the unbounded sessions
-      // (identical arithmetic; spec-pinned). relPos (q304) switches
-      // them to the re-rotation dial — the tree loop runs past the
-      // models' bias-table length.
-      val kv = kvPolicy(df, "treeDraftGreedyLoop", Seq(target, draft), null,
-        nSink, nWindow, relPos)
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      require(branch <= target.value.outDim, "branch exceeds the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              // the DRAFT session tracks the accepted prefix too — each
-              // cycle's tree roots at a fork of it (O(L) copy), so
-              // neither model ever replays the prompt
-              val st = openSession(tm, kv, p, null)
-              var sd = openSession(dm, kv, p, null)
-              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var cycles = 0
-              var accTotal = 0
-              while (out.length < maxNewTokens) {
-                cycles += 1
-                // build this cycle's tree on forks of the draft session
-                val childrenOf = Spec.draftTree(sd, vocab, branch, depth)._2
-                // greedy verify; every emitted token extends BOTH
-                // accepted-prefix sessions
-                var path = Vector.empty[Int]
-                var n = 0
-                var rejected = false
-                def emit(t: Int): Unit = {
-                  out += t
-                  st.append(t)
-                  val nd = sd.fork(); nd.append(t); sd = nd
-                }
-                while (n < depth && !rejected) {
-                  val t = argmaxFirst(st.logits(), vocab)
-                  emit(t)
-                  if (childrenOf(path).contains(t)) {
-                    path :+= t; n += 1; accTotal += 1
-                  } else rejected = true
-                }
-                if (!rejected) emit(argmaxFirst(st.logits(), vocab)) // bonus
-              }
-              (out.take(maxNewTokens).toSeq, cycles, accTotal)
-            }
-          }
-      }
-    }
-
-    def speculativeSampledMultiDraft(
-        df: DataFrame,
-        idCol: String,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        numDrafts: Int,
-        batchSize: Int = -1): DataFrame = {
-      require(numDrafts >= 1, "numDrafts must be >= 1")
-      requireTokenDecoder(target, "speculativeSampledMultiDraft")
-      requireTokenDecoder(draft, "speculativeSampledMultiDraft")
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      val idIdx = df.schema.fieldIndex(idCol)
-      Kernel(df, fields("draft_toks" -> Ints, "acc_round" -> IntegerType, "final_tok" -> IntegerType),
-          ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-        def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-        // residual/normalization discipline lives in Spec.multiRoundWalk
-        // (normalize ONLY where a later round's ratio needs it; the
-        // final pick walks the RAW masses — numDrafts = 1 IS q247)
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val id = r.getAs[Number](idIdx).longValue()
-              val qp = probs6(dm.decodeSession(p).logits())
-              val pp = probs6(tm.decodeSession(p).logits())
-              val drafts = Array.tabulate(numDrafts)(i =>
-                pick(qp, draw(id, s"d${i + 1}")))
-              val (accRound, finalTok) =
-                Spec.multiRoundWalk(drafts, qp, pp, vocab, id, 0)
-              (drafts.toSeq, accRound, finalTok)
-            }
-          }
-      }
-    }
-
-    def treeDraftStochastic(
-        df: DataFrame,
-        idCol: String,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        branch: Int,
-        depth: Int,
-        batchSize: Int = -1): DataFrame = {
-      require(branch >= 1, "branch must be >= 1")
-      require(depth >= 1, "depth must be >= 1")
-      requireTokenDecoder(target, "treeDraftStochastic")
-      requireTokenDecoder(draft, "treeDraftStochastic")
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      val idIdx = df.schema.fieldIndex(idCol)
-      Kernel(df, fields("tree" -> ArrayType(Ints), "acc_rounds" -> Ints, "n_accepted" -> IntegerType,
-          "out_toks" -> Ints),
-          ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-        def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val id = r.getAs[Number](idIdx).longValue()
-              val sd = dm.decodeSession(p)
-              val st = tm.decodeSession(p)
-              val tree = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
-              val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
-              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var level = 1
-              var stopped = false
-              while (level <= depth && !stopped) {
-                val off = (level - 1) * branch
-                val qp = probs6(sd.logits())
-                val pp = probs6(st.logits())
-                val drafts = Array.tabulate(branch)(i =>
-                  pick(qp, draw(id, s"d${off + i + 1}")))
-                tree += drafts.toSeq
-                val (accRound, finalTok) =
-                  Spec.multiRoundWalk(drafts, qp, pp, vocab, id, off)
-                rounds += accRound
-                out += finalTok
-                if (accRound == 0) stopped = true
-                else { sd.append(finalTok); st.append(finalTok) }
-                level += 1
-              }
-              if (!stopped) out += pick(probs6(st.logits()), draw(id, "b1"))
-              val nAcc = rounds.count(_ > 0)
-              (tree.toSeq, rounds.toSeq, nAcc, out.toSeq)
-            }
-          }
-      }
-    }
-
-    def treeDraftStochasticLoop(
-        df: DataFrame,
-        idCol: String,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        branch: Int,
-        depth: Int,
-        maxNewTokens: Int,
-        batchSize: Int = -1,
-        nSink: Int = -1,
-        nWindow: Int = -1): DataFrame = {
-      require(branch >= 1, "branch must be >= 1")
-      require(depth >= 1, "depth must be >= 1")
-      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-      // BOUNDED-KV tree serving (q299): both rolling sessions evict to
-      // nSink sinks + an nWindow window — the lazy stochastic walk only
-      // ever APPENDS (no forks, no rollback), so the eviction knob
-      // composes with the tree exactly as with the greedy rollout.
-      // nWindow <= 0 keeps the unbounded sessions (identical
-      // arithmetic; spec-pinned).
-      val kv = kvPolicy(df, "treeDraftStochasticLoop", Seq(target, draft), null, nSink, nWindow)
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      val idIdx = df.schema.fieldIndex(idCol)
-      Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-        def draw(id: Long, salt: String): Double = Spec.draw(id, salt)
-        def probs6(lg: Array[Float]): Array[Double] = Spec.probs6(lg, vocab)
-        def pick(mass: Array[Double], u: Double): Int = Spec.pick(mass, u)
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = if (r.isNullAt(idIdx)) null else Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val id = r.getAs[Number](idIdx).longValue()
-              val sd = openSession(dm, kv, p, null)
-              val st = openSession(tm, kv, p, null)
-              val emitted = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var cycles = 0
-              var accTotal = 0
-              while (emitted.length < maxNewTokens) {
-                cycles += 1
-                var level = 1
-                var stopped = false
-                while (level <= depth && !stopped) {
-                  val off = ((cycles - 1) * depth + (level - 1)) * branch
-                  val qp = probs6(sd.logits())
-                  val pp = probs6(st.logits())
-                  val drafts = Array.tabulate(branch)(i =>
-                    pick(qp, draw(id, s"d${off + i + 1}")))
-                  val (accRound, finalTok) =
-                    Spec.multiRoundWalk(drafts, qp, pp, vocab, id, off)
-                  emitted += finalTok
-                  sd.append(finalTok)
-                  st.append(finalTok)
-                  if (accRound == 0) stopped = true
-                  else { accTotal += 1; level += 1 }
-                }
-                if (!stopped) {
-                  val bonus = pick(probs6(st.logits()), draw(id, s"b$cycles"))
-                  emitted += bonus
-                  sd.append(bonus)
-                  st.append(bonus)
-                }
-              }
-              (emitted.take(maxNewTokens).toSeq, cycles, accTotal)
-            }
-          }
-      }
-    }
-
-    def generatePromptLookupLoop(
-        df: DataFrame,
-        inputCol: String,
-        model: Broadcast[TorchScriptModel],
-        ngram: Int,
-        maxDraft: Int,
-        maxNewTokens: Int,
-        batchSize: Int = -1,
-        nSink: Int = -1,
-        nWindow: Int = -1,
-        relPos: Boolean = false): DataFrame = {
-      require(ngram >= 1, "ngram must be >= 1")
-      require(maxDraft >= 1, "maxDraft must be >= 1")
-      require(maxNewTokens >= 1, "maxNewTokens must be >= 1")
-      // BOUNDED-KV lookup serving (q298): the one rolling target
-      // session evicts to nSink sinks + an nWindow window — the
-      // LOOKUP side stays over the FULL token stream (token ids are
-      // cheap; only k/v state is bounded — the StreamingLLM deployment
-      // keeps the text, evicts the cache), so drafts still come from
-      // anywhere in the sequence while verification runs at
-      // O(nSink + nWindow) state. nWindow <= 0 keeps the unbounded
-      // session (identical arithmetic; spec-pinned).
-      val kv = kvPolicy(df, "generatePromptLookupLoop", Seq(model), null, nSink, nWindow, relPos)
-      val inIdx = df.schema.fieldIndex(inputCol)
-      Kernel(df, LoopOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val m = model.value
-        val vocab = m.outDim
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val sess = openSession(m, kv, p, null)
-              val full = scala.collection.mutable.ArrayBuffer.from(p)
-              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var cycles = 0
-              var accTotal = 0
-              while (out.length < maxNewTokens) {
-                cycles += 1
-                val drafts = lookupDraft(full, ngram, maxDraft)
-                var n = 0
-                var rejected = false
-                while (n < drafts.length && !rejected) {
-                  val t = argmaxFirst(sess.logits(), vocab)
-                  out += t; sess.append(t); full += t
-                  if (t == drafts(n)) { n += 1; accTotal += 1 }
-                  else rejected = true // the argmax IS the correction
-                }
-                if (!rejected) { // no drafts, or all accepted → bonus
-                  val t = argmaxFirst(sess.logits(), vocab)
-                  out += t; sess.append(t); full += t
-                }
-              }
-              (out.take(maxNewTokens).toSeq, cycles, accTotal)
-            }
-          }
-      }
-    }
-
-    def treeDraftGreedy(
-        df: DataFrame,
-        inputCol: String,
-        target: Broadcast[TorchScriptModel],
-        draft: Broadcast[TorchScriptModel],
-        branch: Int,
-        depth: Int,
-        batchSize: Int = -1): DataFrame = {
-      require(branch >= 1, "branch must be >= 1")
-      require(depth >= 1, "depth must be >= 1")
-      requireTokenDecoder(target, "treeDraftGreedy")
-      requireTokenDecoder(draft, "treeDraftGreedy")
-      require(target.value.outDim == draft.value.outDim,
-        "draft and target must share the vocabulary")
-      require(branch <= target.value.outDim, "branch exceeds the vocabulary")
-      val inIdx = df.schema.fieldIndex(inputCol)
-      Kernel(df, TreeOut, ints = Seq(inputCol), batchSize = batchSize) { () =>
-        val tm = target.value
-        val dm = draft.value
-        val vocab = tm.outDim
-        rows =>
-          rows.iterator.map { r =>
-            val p: Array[Int] = Kernel.nonEmptyInts(r, inIdx)
-            if (p == null) null
-            else {
-              val (tree, childrenOf) = Spec.draftTree(dm.decodeSession(p), vocab, branch, depth)
-              // greedy verify along the (unique) target path
-              val st = tm.decodeSession(p)
-              val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-              var path = Vector.empty[Int]
-              var n = 0
-              var rejected = false
-              while (n < depth && !rejected) {
-                val t = argmaxFirst(st.logits(), vocab)
-                out += t
-                if (childrenOf(path).contains(t)) {
-                  st.append(t); path :+= t; n += 1
-                } else rejected = true // the argmax IS the correction
-              }
-              if (!rejected) out += argmaxFirst(st.logits(), vocab) // bonus
-              (tree, n, out.toSeq)
-            }
-          }
-      }
     }
   }
 }

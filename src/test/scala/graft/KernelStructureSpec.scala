@@ -11,6 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * shared decoders. [[graft.torch.Torch]] opens bounded or re-rotated KV
  * sessions only in its one opener, and keeps no cross-pair, windowed or
  * fused copy of a generator: those are arguments of the base decoders.
+ * Its speculative cells and serving loops run through the shared walks
+ * of `Torch.Spec` and its one serving driver, and it defines `q6` once.
  */
 class KernelStructureSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala/graft")
@@ -22,18 +24,22 @@ class KernelStructureSpec extends AnyFunSuite {
 
   /** (file name, enclosing method) of every code line containing
     * `pattern` ([[sitesWhere]]: every one that `matches`); comment lines
-    * do not count. */
+    * do not count. A method of an object nested at the top level of a
+    * file's object is named `Object.method`. */
   private def sites(pattern: String): Set[(String, String)] = sitesWhere(_.contains(pattern))
 
   private def sitesWhere(matches: String => Boolean): Set[(String, String)] =
     sources(root).flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       val lines = try src.getLines().toVector finally src.close()
+      var obj = ""
       var method = ""
       lines.flatMap { line =>
         val t = line.trim
-        "^\\s{2}(?:private(?:\\[\\w+\\])? )?def (\\w+)".r.findFirstMatchIn(line)
-          .foreach(m => method = m.group(1))
+        "^\\s{2}(?:private(?:\\[\\w+\\])? )?(def|object) (\\w+)".r.findFirstMatchIn(line)
+          .foreach { m => obj = if (m.group(1) == "object") m.group(2) else ""; method = m.group(2) }
+        if (obj.nonEmpty)
+          "^\\s{4}def (\\w+)".r.findFirstMatchIn(line).foreach(m => method = s"$obj.${m.group(1)}")
         val code = t.split("//", 2)(0)
         if (!t.startsWith("*") && !t.startsWith("/*") && matches(code)) Some(f.getName -> method)
         else None
@@ -60,10 +66,9 @@ class KernelStructureSpec extends AnyFunSuite {
   }
 
   test("Torch opens bounded and re-rotated KV sessions only through its one opener") {
-    def inTorch(pattern: String) = sites(pattern).filter(_._1 == "Torch.scala")
     val opener = Set("Torch.scala" -> "openSession")
-    assert(inTorch("decodeSessionWindowed(") == opener)
-    assert(inTorch("decodeSessionRelPos(") == opener)
+    assert(inTorch("decodeSessionWindowed(") == Set("openSession"))
+    assert(inTorch("decodeSessionRelPos(") == Set("openSession"))
     val branch = "if \\([^)]*\\b(relPos|windowed|nWindow > 0)".r
     assert(sitesWhere(branch.findFirstIn(_).isDefined).filter(_._1 == "Torch.scala") == opener,
       "a bounded or re-rotated KV branch outside the opener")
@@ -74,6 +79,44 @@ class KernelStructureSpec extends AnyFunSuite {
     val copies = try src.getLines().flatMap("^  def (\\w+(?:Pair|Windowed|Fused))\\(".r.findFirstMatchIn(_))
       .map(_.group(1)).toList finally src.close()
     assert(copies.isEmpty, copies)
+  }
+
+  private def inTorch(pattern: String) = sites(pattern).filter(_._1 == "Torch.scala").map(_._2)
+
+  /** The Torch methods that call `name` (its definition excluded). */
+  private def callers(name: String) =
+    sitesWhere(c => c.contains(s"$name(") && !c.contains(s"def $name("))
+      .filter(_._1 == "Torch.scala").map(_._2)
+
+  test("the speculative proposers and the multi-round walk are called only from the shared walks") {
+    assert(callers("draftTree") == Set("Spec.treeWalk"))
+    assert(callers("multiRoundWalk") == Set("Spec.cycle", "Spec.level"))
+    assert(callers("lookupDraft") == Set("Spec.lookupWalk", "Spec.lookupSampledWalk"))
+    assert(callers("level") == Set("Spec.stochasticWalk", "speculativeSampled",
+      "speculativeSampledMultiDraft", "speculativeSampledMultiDraftLoop"))
+  }
+
+  test("every speculative cell and serving loop runs through a shared walk or the driver") {
+    assert(inTorch("Spec.treeWalk(") == Set("treeDraftGreedy", "treeDraftTypical",
+      "treeDraftGreedyLoop", "treeDraftTypicalLoop"))
+    assert(inTorch("Spec.treeSampledWalk(") == Set("treeDraftStochastic", "treeDraftStochasticLoop"))
+    assert(inTorch("Spec.lookupWalk(") == Set("generatePromptLookup", "generatePromptLookupLoop"))
+    assert(inTorch("Spec.lookupSampledWalk(") == Set("promptLookupSampled"))
+    assert(inTorch("Spec.cycle(") == Set("speculativeSampledGamma", "speculativeSampledLoop"))
+    assert(inTorch("Spec.serve(") == Set("speculativeSampledLoop", "generatePromptLookupLoop",
+      "treeDraftGreedyLoop", "treeDraftTypicalLoop", "treeDraftStochasticLoop",
+      "speculativeSampledMultiDraftLoop"))
+  }
+
+  test("a maxNewTokens cycle loop runs only in the serving driver") {
+    assert(inTorch("< maxNewTokens") == Set("Spec.serve"))
+  }
+
+  test("Torch defines q6 once") {
+    assert(inTorch("def q6(") == Set("q6"))
+    val src = scala.io.Source.fromFile(new java.io.File(root, "torch/Torch.scala"), "UTF-8")
+    val defs = try src.getLines().count(_.contains("def q6(")) finally src.close()
+    assert(defs == 1)
   }
 
   test("the null-safe array decode lives only in Kernel's shared decoders") {
